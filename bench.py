@@ -15,6 +15,11 @@ Environment knobs:
   SPARK_GRAFT_SF_DIR   parquet dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS     local[] parallelism (default 32)
   BENCH_FEEDS          synthetic crawl corpus size (default 500000 * sf)
+  BENCH_REPEATS        fresh-state epochs, fastest kept (default 3)
+  BENCH_CORPUS_DIR     shared corpus + bucketed-table dir (reused if present)
+  BENCH_GEN_ONLY       materialize the corpus and exit
+  BENCH_SKIP_QUERIES   crawl epoch only, no headline queries
+  BENCH_DRIVER_MEM     spark.driver.memory (default 16g)
 
 Output: {"metric": ..., "value": <total bench sec>, "unit": "sec",
 "queries": {name: sec}, "sf": <sf>, "crawl": {...}, "cpus": N}
@@ -232,11 +237,7 @@ def main() -> None:
         # this box (par 7.50/8.46 vs g1 8.12/7.45 — era noise).  Kept as
         # the conventional stop-the-world throughput collector for a
         # batch engine; measured NEUTRAL here, not a claimed win.
-        # BENCH_GC overrides (e.g. BENCH_GC=-XX:+UseG1GC).
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("BENCH_GC", "-XX:+UseParallelGC"),
-        )
+        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.local.dir", local_dir)
@@ -266,7 +267,6 @@ def main() -> None:
     results: dict[str, float] = {}
 
     # ---- crawl-epoch throughput ------------------------------------------
-    cfg = CrawlConfig(per_host_budget=10**9, num_partitions=2 * CPUS)
     # BENCH_CORPUS_DIR lets the scaling harness share one generated corpus
     # across parallelism levels (same input, two cluster sizes)
     corpus_dir = os.environ.get("BENCH_CORPUS_DIR")
@@ -291,46 +291,37 @@ def main() -> None:
         seeds = spark.read.parquet(seeds_path)
         robots = gen_robots(spark, n_feeds, partitions=2 * CPUS)
 
-        # Bucketed fetch layout is the DEFAULT (BENCH_SHUFFLE=1 opts
-        # out): the epoch reads html in place from a url-bucketed pages
-        # table (J3 production layout, sources/bucketed.py) instead of
-        # the shuffled join.  On local tmpfs the two are wall-equal
-        # (equality proven in test_plans; the shuffle is hidden by
-        # page-cache bandwidth) but at 100 TB over a real network the
-        # bucketed layout is the correct one — html bytes never cross
-        # an exchange — so the bench measures the layout production
-        # would run.  Ingest is one-time setup (untimed), like the
-        # corpus generation; the bucket count is a fixed table property
-        # so every parallelism leg shares one layout.
-        use_bucketed = not os.environ.get("BENCH_SHUFFLE")
-        if use_bucketed:
-            from podcast_crawler_spark.sources.bucketed import (
-                register_bucketed_pages,
-                write_bucketed_pages,
-            )
+        # The epoch reads html in place from a url-bucketed pages table
+        # (J3 production layout, sources/bucketed.py): at 100 TB over a
+        # real network html bytes must never cross an exchange, so the
+        # bench measures the layout production would run.  Ingest is
+        # one-time setup (untimed), like the corpus generation; the
+        # bucket count is a fixed table property so every parallelism
+        # leg shares one layout.
+        from podcast_crawler_spark.sources.bucketed import (
+            register_bucketed_pages,
+            write_bucketed_pages,
+        )
 
-            buckets = 64
-            wh = spark.conf.get("spark.sql.warehouse.dir")
-            # size-keyed location: a shared corpus dir serves several
-            # BENCH_FEEDS values, and reusing a bucketed table built
-            # from a smaller corpus silently drops html for every url
-            # beyond it (parsed collapses while scheduled stays full)
-            btable = f"pages_bucketed_{n_feeds}"
-            loc = os.path.join(wh.removeprefix("file:"), btable)
-            if os.path.exists(os.path.join(loc, "_SUCCESS")):
-                register_bucketed_pages(
-                    spark, loc, btable, buckets=buckets
-                )
-            else:
-                write_bucketed_pages(
-                    pages, btable, buckets=buckets,
-                    one_file_per_bucket=True,
-                )
-            cfg = CrawlConfig(
-                per_host_budget=10**9,
-                num_partitions=2 * CPUS,
-                pages_bucketed_table=btable,
+        buckets = 64
+        wh = spark.conf.get("spark.sql.warehouse.dir")
+        # size-keyed location: a shared corpus dir serves several
+        # BENCH_FEEDS values, and reusing a bucketed table built from a
+        # smaller corpus silently drops html for every url beyond it
+        # (parsed collapses while scheduled stays full)
+        btable = f"pages_bucketed_{n_feeds}"
+        loc = os.path.join(wh.removeprefix("file:"), btable)
+        if os.path.exists(os.path.join(loc, "_SUCCESS")):
+            register_bucketed_pages(spark, loc, btable, buckets=buckets)
+        else:
+            write_bucketed_pages(
+                pages, btable, buckets=buckets, one_file_per_bucket=True
             )
+        cfg = CrawlConfig(
+            per_host_budget=10**9,
+            num_partitions=2 * CPUS,
+            pages_bucketed_table=btable,
+        )
 
         # frontier build is one-time setup, not epoch work — init untimed.
         # BENCH_REPEATS>1 reruns the epoch on fresh state and keeps the
@@ -387,8 +378,6 @@ def main() -> None:
         "parsed": parsed,
         "wall_s": round(crawl_wall, 3),
         "urls_per_sec": urls_per_sec,
-        "fetch_layout": "shuffle" if os.environ.get("BENCH_SHUFFLE")
-        else "bucketed",
     }
     detail = {
         "metric": (

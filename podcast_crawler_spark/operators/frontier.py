@@ -24,10 +24,12 @@ This is the Spark re-expression of the reference's scheduling machinery
 
 Scale notes (10^10 frontier): the frontier lives partitioned by
 ``pmod(host_hash, P)`` — all per-host windowing shuffles once on that key
-and AQE handles residual skew; the *parse* stage doesn't need host
-locality, so hot hosts are salted (X6) with ``pmod(xxhash64(url), K)``
-before parsing and the politeness window is computed on the unsalted key
-beforehand.  Nothing here ever collects URLs to the driver.
+and AQE handles residual skew.  A hot host's due rows are split across
+``salt_buckets`` tasks by a ``pmod(xxhash64(url), K)`` pre-rank before
+the per-host politeness rank (X6, :func:`schedule_epoch`); the fetch
+join needs no host locality and spreads rows by url hash, so the parse
+stage inherits a uniform distribution.  Nothing here ever collects URLs
+to the driver.
 """
 
 from __future__ import annotations
@@ -60,7 +62,7 @@ class CrawlConfig:
     fetch_interval_s: int = 3600  # re-crawl cadence (config/crawler.rs:55-63)
     max_retries: int = 3  # legacy retry macro (error/macros.rs:253-277)
     backoff_s: float = 1.0  # refactor TimerQueue backoff (worker.rs:151-155)
-    salt_buckets: int = 8  # X6 hot-host salting (parse stage + skew-safe window)
+    salt_buckets: int = 8  # X6 hot-host salting (skew-safe politeness pre-rank)
     # two-phase politeness selection kicks in when budget·salt_buckets is
     # at most this (above it, phase 1 prunes nothing worth an extra shuffle)
     skew_safe_max_budget: int = 100_000
@@ -73,11 +75,6 @@ class CrawlConfig:
     # view) once a table accumulates this many delta segments — bounds
     # read amplification while keeping steady-state epochs O(delta)
     compact_segments: int = 8
-    # epoch scratch strategy: False (default) = pruned columnar persist at
-    # DISK_ONLY (spark.local.dir; the memory tier anti-scales under high
-    # task parallelism — see plans/epoch.py scratch notes); True = explicit
-    # lz4 parquet dataset for epochs far larger than cluster local storage
-    scratch_parquet: bool = False
     # persisted seen-shard index (D3): bloom bits are sized ONCE at
     # bootstrap for the crawl's target key count — set this to the
     # expected final corpus (e.g. 10^10); None = 8× the bootstrap-time
@@ -87,23 +84,16 @@ class CrawlConfig:
     # verify via broadcast-semi against the frontier scan (frontier never
     # shuffled); beyond it, fall back to a plain shuffled anti-join
     verify_broadcast_max_rows: int = 4_000_000
-    # broadcast the scheduled slice into the fetch join (streams the pages
-    # scan; html never shuffles) when the frontier is at most this many
-    # rows.  0 = disabled (default): A/B at 500k rows showed no reliable
-    # win over the shuffled join (the broadcast collect + duplicated
-    # schedule subplan offsets the saved html exchange); enable it when an
-    # epoch slice is orders of magnitude smaller than the pages table and
-    # the pages side isn't bucketed by url.
-    broadcast_fetch_max_rows: int = 0
     # name of a url-bucketed pages table in the session catalog
     # (sources/bucketed.py): when set, the fetch join reads html IN PLACE
     # from the bucket files (build-left SHJ; only the narrow scheduled
     # side shuffles) — the production layout at 10^10 pages, where the
     # html column must never cross the network.  None = plain shuffled
     # join against the `pages` DataFrame argument (same local wall time —
-    # tools/parse_stage_experiment.py measured 45.5 vs 45.1 s at 1.2M
-    # feeds/local[32], tmpfs shuffle being nearly free — but the shuffle
-    # becomes the bottleneck once an exchange means real network).
+    # `git show bf15243:tools/parse_stage_experiment.py` measured 45.5 vs
+    # 45.1 s at 1.2M feeds/local[32], tmpfs shuffle being nearly free — but
+    # the shuffle becomes the bottleneck once an exchange means real
+    # network).
     pages_bucketed_table: Optional[str] = None
     # scoped AQE override for the epoch's commit writes: the delta/
     # frontier writers are shuffle-final jobs over O(delta) bytes, and
@@ -273,43 +263,18 @@ def schedule_epoch(
     )
 
 
-def salted(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """X6: spread hot hosts across partitions for the fetch/parse stage.
-    Politeness was already enforced on the unsalted host key."""
-    return df.repartition(
-        cfg.num_partitions,
-        F.col("host_hash"),
-        F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets)),
-    )
-
-
-def fetch_join(
-    scheduled: DataFrame, pages: DataFrame, broadcast_scheduled: bool = False
-) -> DataFrame:
+def fetch_join(scheduled: DataFrame, pages: DataFrame) -> DataFrame:
     """J3/S2: "fetch" = left equi-join of the scheduled frontier against the
     pages table on url; a missing page (null html) is a fetch failure that
     feeds the retry path.
 
-    Default: plain left join — the one big shuffle of the epoch (AQE's
-    skew-join handles hot-host residuals).  ``broadcast_scheduled``: when
-    the scheduled slice is small (size-gated by the caller), broadcast it
-    into an inner join that *streams* the pages scan — the multi-KB html
-    column never crosses an exchange; misses (fetch failures) come from a
-    url-column-only anti join.  At 10^10-page scale the production answer
-    is a pages table bucketed by url (co-located join, no shuffle of
-    either side); the broadcast mode is the same idea for epoch-sized
-    slices."""
+    Against a plain pages DataFrame this is the one big shuffle of the
+    epoch (AQE's skew-join handles hot-host residuals).  At 10^10-page
+    scale the pages table is bucketed by url so the html side is read in
+    place and only the scheduled side shuffles
+    (``sources/bucketed.fetch_join_bucketed``, which reuses this body)."""
     pg = pages.select("url", "html", "warc_ts")
-    if broadcast_scheduled:
-        hit = pg.join(F.broadcast(scheduled), "url", "inner")
-        miss = scheduled.join(pg.select("url"), "url", "left_anti").select(
-            "*",
-            F.lit(None).cast("binary").alias("html"),
-            F.lit(None).cast("timestamp").alias("warc_ts"),
-        )
-        joined = hit.unionByName(miss)
-    else:
-        joined = scheduled.join(pg, "url", "left")
+    joined = scheduled.join(pg, "url", "left")
     return joined.withColumn("fetch_ok", F.col("html").isNotNull())
 
 

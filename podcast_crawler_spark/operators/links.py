@@ -100,28 +100,6 @@ def extract_links(
     )
 
 
-def resolve_case_sql(href_expr: str, base_expr: str) -> str:
-    """DuckDB CASE chain mirroring :func:`resolve_href` bit-for-bit
-    (RE2 patterns are written to match Java-regex behavior here)."""
-    h = (
-        f"string_split(trim(replace({href_expr}, '&amp;', '&')), '#')[1]"
-    )
-    scheme = f"regexp_extract({base_expr}, '^([A-Za-z][A-Za-z0-9+.-]*):', 1)"
-    origin = f"regexp_extract({base_expr}, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*')"
-    dirm = f"regexp_extract({base_expr}, '^[A-Za-z][A-Za-z0-9+.-]*://[^?#]*/')"
-    return f"""
-        CASE
-          WHEN {h} = '' THEN NULL
-          WHEN regexp_matches({h}, '(?i)^https?://') THEN {h}
-          WHEN regexp_matches({h}, '{_SCHEME_RE}') THEN NULL
-          WHEN {h} LIKE '//%' THEN {scheme} || ':' || {h}
-          WHEN {h} LIKE '/%' THEN {origin} || {h}
-          ELSE (CASE WHEN {dirm} <> '' THEN {dirm}
-                     ELSE {origin} || '/' END) || {h}
-        END
-    """
-
-
 _TAG_META = "(?i)<meta[^>]*>"
 _TAG_LINK = "(?i)<link[^>]*>"
 _TAG_A = "(?i)<a[\\s][^>]*>"

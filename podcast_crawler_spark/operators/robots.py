@@ -153,20 +153,6 @@ def sitemap_directives(
     )
 
 
-def _pattern_to_like(pat_col):
-    """robots pattern → SQL LIKE pattern: escape LIKE metachars, ``*``
-    → ``%``, trailing ``$`` anchors (no trailing ``%``)."""
-    p = F.replace(pat_col, F.lit("\\"), F.lit("\\\\"))
-    p = F.replace(p, F.lit("%"), F.lit("\\%"))
-    p = F.replace(p, F.lit("_"), F.lit("\\_"))
-    p = F.replace(p, F.lit("*"), F.lit("%"))
-    anchored = pat_col.endswith("$")
-    like = F.when(
-        anchored, F.expr("substring(_like_tmp, 1, length(_like_tmp) - 1)")
-    ).otherwise(F.concat(F.col("_like_tmp"), F.lit("%")))
-    return p, anchored, like
-
-
 def match_rfc9309(
     paths: DataFrame,
     rules: DataFrame,

@@ -446,29 +446,6 @@ def kmv_sketch(
     )
 
 
-def kmv_union_estimate(sketch: DataFrame, k: int) -> DataFrame:
-    """Distinct-count estimate from a bottom-k sketch: with h_k the
-    k-th smallest hash in a space of size M, est = (k-1)·M // h_k
-    (the unbiased KMV estimator, floored to BIGINT so the oracle's
-    integer division replays it exactly).  One row: ``(k_used, h_k,
-    est)``; when the set has fewer than k distinct keys the sketch IS
-    the set and est = k_used (exact)."""
-    agg = sketch.agg(
-        F.count(F.lit(1)).alias("k_used"), F.max("h").alias("h_k")
-    )
-    exact = F.col("k_used") < F.lit(k)
-    return agg.select(
-        "k_used",
-        "h_k",
-        F.when(exact, F.col("k_used"))
-        .otherwise(
-            F.expr(f"(k_used - 1) * {KMV_HASH_SPACE}L div h_k")
-        )
-        .cast("long")
-        .alias("est"),
-    )
-
-
 def kmv_set_ops(
     a: DataFrame, b: DataFrame, key_col: str, k: int = 256,
     audit: bool = True,

@@ -34,7 +34,10 @@ from pyspark.sql import functions as F
 def resolve_lww(df: DataFrame, key: str, order_col: str) -> DataFrame:
     """Last-write-wins resolution on *key*: argmax per key over *order_col*
     as a ``max_by(struct(*), order)`` hash aggregation — one exchange with
-    map-side partial aggregation, no sort (see epoch.py upsert notes)."""
+    map-side partial aggregation collapsing duplicate keys before the
+    shuffle, no sort (a window ``row_number`` would shuffle everything
+    and then sort every partition; at 10^10-row tables the sort is the
+    dominant cost)."""
     row = F.struct(*[F.col(c) for c in df.columns])
     return (
         df.groupBy(key)
@@ -75,24 +78,17 @@ class SnapshotTable:
 
     # -- commit / read -------------------------------------------------------
 
-    def prepare(self, df: DataFrame) -> Dict:
-        """Phase 1 of a two-phase commit: write the data files and gather
-        per-partition lineage, WITHOUT publishing a manifest.  Readers see
-        nothing until ``publish`` renames the manifest in — so a prepare
-        can safely overlap other tables' commits even when the commit
-        *protocol* orders this table's publication after theirs (the epoch
-        loop overlaps the frontier's big parquet write with the output
-        commits and publishes its manifest last).  A crash between prepare
-        and publish leaves only an orphan data dir that the idempotent
-        retry overwrites."""
+    def _write_data(self, df: DataFrame) -> Dict:
+        """Write *df* as the next snapshot's data dir and return its staged
+        manifest fields.  Per-partition lineage comes from the parquet
+        footers — no extra Spark job; row counts come from file metadata
+        (cheap local reads)."""
+        import pyarrow.parquet as pq
+
         parent = self.current_snapshot_id()
         snap_id = (parent or 0) + 1
         data_dir = os.path.join(self.dir, "data", f"snap-{snap_id}")
         df.write.mode("overwrite").parquet(data_dir)
-        # per-partition lineage from the parquet footers — no extra Spark
-        # job; row counts come from file metadata (cheap local reads)
-        import pyarrow.parquet as pq
-
         files = []
         for f in sorted(os.listdir(data_dir)):
             if f.endswith(".parquet"):
@@ -112,6 +108,28 @@ class SnapshotTable:
             "files": files,
         }
 
+    def _write_manifest(self, man: Dict) -> int:
+        """The commit point: write-tmp + atomic rename of the manifest
+        into ``_snapshots/``."""
+        snap_id = man["snapshot_id"]
+        tmp = os.path.join(self.snap_dir, f".{snap_id}.json.tmp")
+        with open(tmp, "w") as fh:
+            json.dump(man, fh, indent=1)
+        os.rename(tmp, os.path.join(self.snap_dir, f"{snap_id}.json"))
+        return snap_id
+
+    def prepare(self, df: DataFrame) -> Dict:
+        """Phase 1 of a two-phase commit: write the data files and gather
+        per-partition lineage, WITHOUT publishing a manifest.  Readers see
+        nothing until ``publish`` renames the manifest in — so a prepare
+        can safely overlap other tables' commits even when the commit
+        *protocol* orders this table's publication after theirs (the epoch
+        loop overlaps the frontier's big parquet write with the output
+        commits and publishes its manifest last).  A crash between prepare
+        and publish leaves only an orphan data dir that the idempotent
+        retry overwrites."""
+        return self._write_data(df)
+
     def publish(self, staged: Dict, metrics: Optional[Dict] = None) -> int:
         """Phase 2: atomically publish a prepared snapshot (write-tmp +
         rename — the commit point).  Refuses if another snapshot committed
@@ -125,17 +143,15 @@ class SnapshotTable:
         man = dict(staged)
         man["committed_at_unix"] = time.time()
         man["metrics"] = metrics or {}
-        tmp = os.path.join(self.snap_dir, f".{snap_id}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(man, fh, indent=1)
-        os.rename(tmp, os.path.join(self.snap_dir, f"{snap_id}.json"))
-        return snap_id
+        return self._write_manifest(man)
 
     def commit(self, df: DataFrame, metrics: Optional[Dict] = None) -> int:
         """Write *df* as the next snapshot; returns the new snapshot id.
         The manifest lands via write-tmp + atomic rename **after** the data
         files are fully written — a crash mid-write is invisible to
-        readers (exact-resume property, tested in test_checkpoint.py)."""
+        readers (exact-resume property, tested by
+        ``tests/test_epoch.py::test_resume_byte_identical`` and
+        ``test_crash_between_prepare_and_publish_is_invisible``)."""
         return self.publish(self.prepare(df), metrics=metrics)
 
     def commit_local(
@@ -180,20 +196,17 @@ class SnapshotTable:
                 "rows": table.num_rows,
             }
         ]
-        man = {
-            "snapshot_id": snap_id,
-            "parent_id": parent,
-            "committed_at_unix": time.time(),
-            "data_dir": data_dir,
-            "row_count": table.num_rows,
-            "files": files,
-            "metrics": metrics or {},
-        }
-        tmp = os.path.join(self.snap_dir, f".{snap_id}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(man, fh, indent=1)
-        os.rename(tmp, os.path.join(self.snap_dir, f"{snap_id}.json"))
-        return snap_id
+        return self._write_manifest(
+            {
+                "snapshot_id": snap_id,
+                "parent_id": parent,
+                "committed_at_unix": time.time(),
+                "data_dir": data_dir,
+                "row_count": table.num_rows,
+                "files": files,
+                "metrics": metrics or {},
+            }
+        )
 
     def commit_delta(
         self,
@@ -211,26 +224,15 @@ class SnapshotTable:
         delete/equality files; ``compact`` below is the rewrite).
 
         If no base snapshot exists this degrades to a plain ``commit``
-        (with resolve metadata recorded so later deltas know the key)."""
-        parent = self.current_snapshot_id()
+        (with resolve metadata recorded so later deltas know the key).
+        Calls the private writers, not the public ``prepare``/``publish``,
+        so instrumentation wrapping those two sees a delta commit as one
+        commit, not a nested prepare + publish."""
+        staged = self._write_data(updates)
+        parent = staged["parent_id"]
         parent_man = self.manifest(parent) if parent is not None else None
-        snap_id = (parent or 0) + 1
-        data_dir = os.path.join(self.dir, "data", f"snap-{snap_id}")
-        updates.write.mode("overwrite").parquet(data_dir)
-        import pyarrow.parquet as pq
-
-        files = []
-        for f in sorted(os.listdir(data_dir)):
-            if f.endswith(".parquet"):
-                p = os.path.join(data_dir, f)
-                files.append(
-                    {
-                        "file": f,
-                        "bytes": os.path.getsize(p),
-                        "rows": pq.ParquetFile(p).metadata.num_rows,
-                    }
-                )
-        delta_rows = sum(f["rows"] for f in files)
+        data_dir = staged["data_dir"]
+        delta_rows = staged["row_count"]
         if parent_man is None:
             segments = [data_dir]
             raw_rows = delta_rows
@@ -239,25 +241,22 @@ class SnapshotTable:
                 parent_man.get("segments") or [parent_man["data_dir"]]
             ) + [data_dir]
             raw_rows = parent_man["row_count"] + delta_rows
-        man = {
-            "snapshot_id": snap_id,
-            "parent_id": parent,
-            "committed_at_unix": time.time(),
-            "data_dir": data_dir,
-            "segments": segments,
-            "resolve": {"key": key, "order_col": order_col},
-            # raw (pre-resolve) rows across segments — an upper bound on
-            # the resolved count, like Iceberg's file-level stats
-            "row_count": raw_rows,
-            "delta_rows": delta_rows,
-            "files": files,
-            "metrics": metrics or {},
-        }
-        tmp = os.path.join(self.snap_dir, f".{snap_id}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(man, fh, indent=1)
-        os.rename(tmp, os.path.join(self.snap_dir, f"{snap_id}.json"))
-        return snap_id
+        return self._write_manifest(
+            {
+                "snapshot_id": staged["snapshot_id"],
+                "parent_id": parent,
+                "committed_at_unix": time.time(),
+                "data_dir": data_dir,
+                "segments": segments,
+                "resolve": {"key": key, "order_col": order_col},
+                # raw (pre-resolve) rows across segments — an upper bound
+                # on the resolved count, like Iceberg's file-level stats
+                "row_count": raw_rows,
+                "delta_rows": delta_rows,
+                "files": staged["files"],
+                "metrics": metrics or {},
+            }
+        )
 
     def expire(
         self,

@@ -19,18 +19,18 @@ Upsert semantics (D1/D2): podcast identity = ``rss_feed_url``, episode
 identity = ``guid`` — the batch-path conflict keys of
 ``/root/reference/src/infrastructure/persistence/repositories/
 podcast_repository.rs:178-183,212-218``; ``DO UPDATE`` = last-write-wins,
-implemented as union + per-key ``row_number`` keeping the newest epoch.
+implemented as merge-on-read delta commits resolved per key by
+``checkpoint.resolve_lww`` (the newest ``_epoch`` wins).
 In production these two become Iceberg ``MERGE INTO``; the snapshot-table
 rewrite here has identical semantics at sandbox scale.
 """
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 from datetime import datetime, timedelta
-from typing import Dict, Optional
+from typing import Dict
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -49,7 +49,6 @@ from ..operators.frontier import (
     apply_epoch_results,
     build_frontier,
     fetch_join,
-    salted,
     schedule_epoch,
 )
 from ..operators.stats import ERROR_TYPES, categorize_error
@@ -126,29 +125,6 @@ def init_crawl(
     return state
 
 
-def _upsert(
-    existing: Optional[DataFrame],
-    updates: DataFrame,
-    key: str,
-    order_col: str = "_epoch",
-) -> DataFrame:
-    """Last-write-wins merge on *key* (ON CONFLICT ... DO UPDATE parity).
-
-    LWW is an argmax per key, so it runs as ``max_by(struct(*), order)``
-    hash aggregation — one exchange, no sort, and map-side partial
-    aggregation collapses duplicate keys before the shuffle (a window
-    ``row_number`` would shuffle everything and then sort every
-    partition; at 10^10-row tables the sort is the dominant cost).
-
-    The epoch loop itself no longer materializes this merge per commit —
-    output tables use merge-on-read delta commits
-    (``SnapshotTable.commit_delta``; same resolution applied at read) so
-    a steady-state epoch writes O(delta), not O(table).  This helper
-    remains the within-epoch dedup + the semantic reference."""
-    merged = updates if existing is None else existing.unionByName(updates)
-    return resolve_lww(merged, key, order_col)
-
-
 def run_epoch(
     spark: SparkSession,
     state: CrawlState,
@@ -171,12 +147,6 @@ def run_epoch(
     t0 = time.time()
     epoch_no = state.completed_epochs() + 1
     frontier = state.frontier.read(spark)
-    debug = os.environ.get("EPOCH_DEBUG_TIMING")
-
-    def _tick(name, t):
-        if debug:
-            print(f"[epoch-{epoch_no}] {name}: {round(time.time() - t, 1)}s")
-        return time.time()
 
     # 1-2. due selection + politeness priority queue (W4/W5) + robots (J4).
     # Prune the frontier to the scheduling columns first: the politeness
@@ -195,11 +165,9 @@ def run_epoch(
     # uniformly (url hashes are uniform even when hosts are not), so a
     # salted repartition after the join would re-shuffle the multi-KB html
     # payloads purely to reproduce a distribution the join just gave us —
-    # measured ~60s/1.5M rows of pure waste.  ``salted`` (X6) remains the
-    # tool for host-keyed stages that inherit a skewed host partitioning.
-    # Epoch-sized slices take the broadcast fetch path (html never
-    # shuffles); the gate uses the frontier row count as a cheap upper
-    # bound on the scheduled slice.
+    # measured ~60s/1.5M rows of pure waste.  With a url-bucketed pages
+    # table (the production layout) html is read in place and never
+    # shuffles at all.
     if fetcher is not None:
         fetched = fetcher(scheduled)
     elif cfg.pages_bucketed_table:
@@ -207,13 +175,7 @@ def run_epoch(
 
         fetched = fetch_join_bucketed(scheduled, spark, cfg.pages_bucketed_table)
     else:
-        man = state.frontier.manifest()
-        frontier_rows = (man or {}).get("row_count") or 0
-        fetched = fetch_join(
-            scheduled,
-            pages,
-            broadcast_scheduled=0 < frontier_rows <= cfg.broadcast_fetch_max_rows,
-        )
+        fetched = fetch_join(scheduled, pages)
 
     # 4. parse stage (P1-P12) — Arrow-batched, frontier bookkeeping passes
     # through so no re-join afterwards.  All scalar epoch metrics (A3/A4/A7)
@@ -224,33 +186,28 @@ def run_epoch(
     #
     # The parse output materializes ONCE — it has three downstream
     # consumers (podcast upsert, episode explode, frontier update) and must
-    # never be parsed twice.  Two scratch strategies, both columnar with
-    # column pruning on re-read:
-    #   * persist (default): Spark's columnar cache at DISK_ONLY, over a
-    #     column subset pruned to exactly what the three consumers read.
-    #     DISK_ONLY (not MEMORY_AND_DISK) is a measured choice: building
-    #     the in-memory cache contends on the unified storage pool under
-    #     32 concurrent tasks (+3.7 s over the bare parse at local[32],
-    #     +0 at local[8] — tools/persist_experiment.py), i.e. the memory
-    #     tier ANTI-SCALES with parallelism, while DISK_ONLY writes
-    #     straight to spark.local.dir with zero pool accounting and
-    #     measured ZERO overhead over the uncached parse.  On a real
-    #     cluster local dirs are node-local SSD/tmpfs and the same
-    #     reasoning holds per-executor.  The pruned select drops
-    #     extracted_text + politeness bookkeeping (heavy, never read
-    #     after the parse) so the scratch bytes are output-sized, not
-    #     parse-sized; pruning below the cache is impossible for a
-    #     mapInPandas stage (Python emits the full schema), so the
-    #     select above it is what keeps those bytes out of the scratch.
-    #   * parquet (cfg.scratch_parquet / huge epochs): an explicit lz4
-    #     dataset — the natural choice when one epoch is far larger than
-    #     cluster local storage and block eviction would thrash.
+    # never be parsed twice.  The scratch is Spark's columnar cache at
+    # DISK_ONLY, over a column subset pruned to exactly what the three
+    # consumers read.  DISK_ONLY (not MEMORY_AND_DISK) is a measured
+    # choice: building the in-memory cache contends on the unified
+    # storage pool under 32 concurrent tasks (+3.7 s over the bare parse
+    # at local[32], +0 at local[8] —
+    # `git show bf15243:tools/persist_experiment.py`), i.e. the memory
+    # tier ANTI-SCALES with parallelism, while DISK_ONLY writes straight
+    # to spark.local.dir with zero pool accounting and measured ZERO
+    # overhead over the uncached parse.  On a real cluster local dirs are
+    # node-local SSD/tmpfs and the same reasoning holds per-executor.  The
+    # pruned select drops extracted_text + politeness bookkeeping (heavy,
+    # never read after the parse) so the scratch bytes are output-sized,
+    # not parse-sized; pruning below the cache is impossible for a
+    # mapInPandas stage (Python emits the full schema), so the select
+    # above it is what keeps those bytes out of the scratch.
+    from pyspark import StorageLevel
     from pyspark.sql import Observation
 
     obs = Observation(f"epoch-{epoch_no}")
     err_type = categorize_error(F.col("parse_error_message"))
     parse_ok_c = F.col("fetch_ok") & F.col("parse_error_kind").isNull()
-    scratch_dir = os.path.join(state.root, "_scratch", f"epoch-{epoch_no}")
     observed = parse_pages(fetched, passthrough=PASSTHROUGH).observe(
         obs,
         F.count(F.lit(1)).alias("total"),
@@ -279,19 +236,10 @@ def run_epoch(
         "parse_error_kind",
         "parse_error_message",
     ]
-    if cfg.scratch_parquet:
-        observed.select(*scratch_cols).write.mode("overwrite").option(
-            "compression", "lz4"
-        ).parquet(scratch_dir)
-        parsed = spark.read.parquet(scratch_dir)
-    else:
-        from pyspark import StorageLevel
-
-        parsed = observed.select(*scratch_cols).persist(StorageLevel.DISK_ONLY)
-        # materialize now so the Observation is complete and every consumer
-        # below hits the cache instead of re-running the parse
-        parsed.write.format("noop").mode("overwrite").save()
-    t = _tick("schedule+fetch+parse scratch", t0)
+    parsed = observed.select(*scratch_cols).persist(StorageLevel.DISK_ONLY)
+    # materialize now so the Observation is complete and every consumer
+    # below hits the cache instead of re-running the parse
+    parsed.write.format("noop").mode("overwrite").save()
     # the scratch write (the epoch's first action) has completed, so the
     # observed metrics are already available
     m = obs.get
@@ -369,8 +317,12 @@ def run_epoch(
     # Scoped AQE override (see CrawlConfig.commit_advisory_bytes): the
     # commit writers are shuffle-final jobs over O(delta) bytes; size-
     # based coalescing keeps their file count proportional to delta
-    # bytes instead of cluster parallelism.  Only the commit jobs plan
-    # under these values — restored before any other work runs.
+    # bytes instead of cluster parallelism.  Everything submitted inside
+    # the scope plans under these values: the podcasts/episodes commits
+    # (and any compaction they trigger) AND the frontier prepare.  The
+    # values are restored before the metrics commit runs.  spark.conf is
+    # session-global, so any other query planned concurrently in this
+    # session during the commit window sees the override too.
     _scoped = {}
     if cfg.commit_advisory_bytes:
         for k, v in (
@@ -404,7 +356,6 @@ def run_epoch(
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, old)
-    t = _tick("podcasts+episodes commit + frontier prepare", t)
     pod_man = state.podcasts.manifest() or {}
     ep_man = state.episodes.manifest() or {}
     # manifest row_count is the RAW segment total (delta segments include
@@ -464,7 +415,6 @@ def run_epoch(
         metrics_arrow_schema,
         metrics={"epoch": epoch_no},
     )
-    t = _tick("metrics commit", t)
     metrics["wall_s"] = round(time.time() - t0, 3)
     # Layout note (decision made before the overlapped write above): when
     # the outcome join was broadcast the whole frontier-update plan is
@@ -475,13 +425,7 @@ def run_epoch(
     # production bucketed-table contract) actually disturbed the layout.
     # The epoch boundary = this manifest publish (outputs are durable).
     state.frontier.publish(frontier_staged, metrics=metrics)
-    _tick("frontier publish", t)
-    if cfg.scratch_parquet:
-        import shutil
-
-        shutil.rmtree(scratch_dir, ignore_errors=True)
-    else:
-        parsed.unpersist()
+    parsed.unpersist()
     return metrics
 
 

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.frontier import fetch_join
+
 
 def write_bucketed_pages(
     pages: DataFrame,
@@ -82,18 +84,16 @@ def fetch_join_bucketed(
 ) -> DataFrame:
     """J3 against the bucketed pages table: the scheduled (narrow) side
     shuffles into the pages bucketing; the html side is read in place.
-    Output schema matches ``operators/frontier.fetch_join``.
 
     The ``SHUFFLE_HASH`` hint on the *scheduled* side pins the hash-map
     build there (build-left left-outer SHJ): without it the planner
     builds on the right leg, i.e. copies every html blob into a hash
     map before probing — measured 59 s vs 45 s for the whole
     join+parse prefix at 1.2M feeds/local[32]
-    (tools/parse_stage_experiment.py).  With build-left the html side
-    STREAMS from the bucket files straight into the parse."""
-    pg = spark.table(table).select("url", "html", "warc_ts")
-    joined = scheduled.hint("shuffle_hash").join(pg, "url", "left")
-    return joined.withColumn("fetch_ok", F.col("html").isNotNull())
+    (`git show bf15243:tools/parse_stage_experiment.py`).  With
+    build-left the html side STREAMS from the bucket files straight into
+    the parse."""
+    return fetch_join(scheduled.hint("shuffle_hash"), spark.table(table))
 
 
 def z_order_key(a, b, bits: int = 16):

@@ -82,3 +82,23 @@ def test_correctness_artifacts_parse():
             with open(os.path.join(ROOT, name)) as fh:
                 data = json.load(fh)
             assert isinstance(data, dict) and data
+
+
+def test_cited_tool_scripts_exist():
+    """Every ``tools/<name>.py`` a doc or module cites must exist, so
+    deleting a tool cannot leave dangling citations.  Scripts kept only
+    in git history are cited as ``<sha>:tools/<name>.py`` and exempt."""
+    import glob
+
+    sources = ["README.md", "COVERAGE.md", "bench.py", "run.py"]
+    sources += glob.glob(os.path.join(ROOT, "tools", "*.py"))
+    sources += glob.glob(
+        os.path.join(ROOT, "podcast_crawler_spark", "**", "*.py"), recursive=True
+    )
+    cite = re.compile(r"(?<![0-9a-f]:)(?<![\w/])tools/(\w+\.py)")
+    missing = []
+    for src in sources:
+        for m in cite.finditer(_read(src)):
+            if not os.path.exists(os.path.join(ROOT, "tools", m.group(1))):
+                missing.append(f"{os.path.relpath(src, ROOT)}: tools/{m.group(1)}")
+    assert not missing, missing

@@ -187,9 +187,10 @@ def test_live_fetch_real_socket_end_to_end(spark, tmp_path):
     try:
         base = f"http://127.0.0.1:{port}"
         rows = []
+        host_hash = {"a": 0, "b": 1}  # fixed, not PYTHONHASHSEED-dependent
         for h in ("a", "b"):
             for i in range(3):
-                rows.append((f"{base}/feed/{h}/{i}", h, hash(h) & 7, i))
+                rows.append((f"{base}/feed/{h}/{i}", h, host_hash[h], i))
         rows.append((f"{base}/missing/x", "c", 2, 0))
         rows.append((f"{base}/slow/y", "d", 3, 0))
         rows.append(("file:///etc/hostname", "e", 4, 0))  # scheme gate

@@ -178,26 +178,6 @@ def test_retries_reset_on_success(spark):
     assert r.state == "parsed" and r.retries == 0
 
 
-def test_fetch_join_broadcast_mode_equivalent(spark):
-    """The broadcast fetch path (streamed pages scan + anti-join misses)
-    returns exactly the shuffled left join's rows, fetch_ok included."""
-    seeds = gen_seeds(spark, N, partitions=4)
-    robots = gen_robots(spark, N)
-    pages = gen_pages(spark, N, partitions=4)
-    frontier = build_frontier(seeds, EPOCH0)
-    sched = schedule_epoch(frontier, robots, EPOCH0, CFG)
-    cols = ["url", "url_hash", "fetch_ok"]
-    plain = {tuple(r) for r in fetch_join(sched, pages).select(*cols).collect()}
-    bcast = {
-        tuple(r)
-        for r in fetch_join(sched, pages, broadcast_scheduled=True)
-        .select(*cols)
-        .collect()
-    }
-    assert plain == bcast
-    assert any(not ok for (_, _, ok) in plain)  # misses exist and survive
-
-
 def test_skew_safe_two_phase_schedule_identical(spark):
     """The two-phase (salted pre-rank) politeness selection returns exactly
     the single-window result — same scheduled set, same host_seq — on a

@@ -7,6 +7,8 @@ These tests read the executed plan string; they fail if a future change
 silently regresses the plan (e.g. a UDF blocks pushdown, or a join side
 stops broadcasting)."""
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -136,6 +138,17 @@ def test_frontier_update_broadcasts_outcomes(spark, tmp_path):
     assert f.count() == f.select("url_hash").distinct().count()
 
 
+def _assert_manifest_files(table, man, rows_key="row_count"):
+    """Per-file lineage agrees with the manifest and the disk: file rows
+    sum to *rows_key*, every listed file exists with its recorded bytes,
+    and the tmp+rename left no ``.tmp`` behind in ``_snapshots/``."""
+    assert sum(f["rows"] for f in man["files"]) == man[rows_key]
+    for f in man["files"]:
+        p = os.path.join(man["data_dir"], f["file"])
+        assert os.path.getsize(p) == f["bytes"], p
+    assert not [n for n in os.listdir(table.snap_dir) if n.endswith(".tmp")]
+
+
 def test_commit_local_driver_side_snapshots(spark, tmp_path):
     """SnapshotTable.commit_local: pyarrow-only commits (no Spark job) with
     append-carry semantics, readable by Spark, time-travelable."""
@@ -155,11 +168,15 @@ def test_commit_local_driver_side_snapshots(spark, tmp_path):
         (1, 10)
     ]
     assert t.manifest()["parent_id"] == 1
+    for sid in (s1, s2):
+        _assert_manifest_files(t, t.manifest(sid))
+    assert t.manifest(s2)["row_count"] == 2
     # no-carry commit replaces instead of appending
     t2 = SnapshotTable(str(tmp_path / "wh"), "latest_only")
     t2.commit_local([(1, 1)], schema)
     t2.commit_local([(2, 2)], schema, carry_previous=False)
     assert [(r.epoch, r.n) for r in t2.read(spark).collect()] == [(2, 2)]
+    _assert_manifest_files(t2, t2.manifest())
 
 
 def test_delta_commit_merge_on_read(spark, tmp_path):
@@ -173,7 +190,9 @@ def test_delta_commit_merge_on_read(spark, tmp_path):
         [("g1", "old1", 1), ("g2", "old2", 1), ("g3", "old3", 1)],
         "guid string, title string, _epoch int",
     )
-    t.commit(base)
+    s1 = t.commit(base)
+    _assert_manifest_files(t, t.manifest(s1))
+    assert t.manifest(s1)["row_count"] == 3
     delta = spark.createDataFrame(
         [("g2", "new2", 2), ("g4", "new4", 2)],
         "guid string, title string, _epoch int",
@@ -182,17 +201,22 @@ def test_delta_commit_merge_on_read(spark, tmp_path):
     want = {("g1", "old1"), ("g2", "new2"), ("g3", "old3"), ("g4", "new4")}
     got = {(r.guid, r.title) for r in t.read(spark).collect()}
     assert got == want
-    # delta snapshot wrote only the delta rows
+    # delta snapshot wrote only the delta rows; row_count stays the raw
+    # total across segments
     assert t.manifest(s2)["delta_rows"] == 2
+    assert t.manifest(s2)["row_count"] == 5
+    _assert_manifest_files(t, t.manifest(s2), rows_key="delta_rows")
     assert t.num_segments() == 2
     # time travel to the base snapshot
     assert {(r.guid, r.title) for r in t.read(spark, snapshot_id=1).collect()} == {
         ("g1", "old1"), ("g2", "old2"), ("g3", "old3")
     }
     # compaction: single segment, same resolved rows
-    t.compact(spark)
+    s3 = t.compact(spark)
     assert t.num_segments() == 1
     assert {(r.guid, r.title) for r in t.read(spark).collect()} == want
+    _assert_manifest_files(t, t.manifest(s3))
+    assert t.manifest(s3)["row_count"] == 4
 
 
 def test_epoch_delta_commits_and_empty_skip(spark, tmp_path):

@@ -74,7 +74,8 @@ def hardware_ceiling(corpus_pages: str, n: int = 8, four_n: int = 32) -> dict:
     than this probe, so BENCH.md reports engine efficiency both raw and
     normalized by this ceiling.
 
-    Probe v2 (round 4): the earlier ``parse_scaling_probe.py`` spawned
+    Probe v2 (round 4): the earlier probe
+    (``git show bf15243:tools/parse_scaling_probe.py``) spawned
     fresh interpreters that each parsed only a few hundred feeds, so its
     measured time was dominated by process spawn + imports — which
     scale near-perfectly with processes — and the reported ceiling was
@@ -288,12 +289,12 @@ box's memory bandwidth saturates the parse kernel near ~31k feeds/s: the
 kernel itself scales 8→32 at only E_hw ≈ 0.68 (per-proc throughput falls
 1,450 → 980 f/s as occupancy grows), so no engine can scale a
 parse-dominated epoch past that here.  **Probe correction (w24+):**
-windows ≤ w23 used `parse_scaling_probe.py`, whose fresh-interpreter
+windows ≤ w23 used `git show bf15243:tools/parse_scaling_probe.py`, whose fresh-interpreter
 processes each parsed only a few hundred feeds — import/spawn time
 (which scales ~perfectly) dominated, OVERSTATING E_hw (0.944 in w23 vs
 the true kernel 0.676) and therefore understating E/E_hw; the
 "engine-side 8→32 gap" that implied does not exist —
-`tools/parse_stage_experiment.py` shows the engine's scan→Arrow→parse
+`git show bf15243:tools/parse_stage_experiment.py` shows the engine's scan→Arrow→parse
 path within 2–5% of the bare kernel at BOTH 8 and 32 cores.  On a real
 N→4N *executor* scale-out (separate machines — BASELINE.md: cores stand
 in for executors) per-core resources are constant, so E_hw ≈ 1 there and
@@ -357,8 +358,8 @@ the cross-window signal.
   uncontended, `parse_kernel_probe`) ⇒ ~7 core-days per 10^9 feeds per
   epoch — embarrassingly parallel; the fetch join's
   hash(url) exchange already spreads hot podcast-network hosts uniformly
-  (url hashes are uniform even when hosts are not), and `salted()` (X6)
-  remains available for host-keyed stages that inherit a skewed layout.
+  (url hashes are uniform even when hosts are not); the politeness
+  window splits a hot host across tasks with its salted pre-rank (X6).
 - **Shuffle volumes**: the only wide exchanges per epoch are the fetch
   join (scheduled slice × pages, pruned to url+html by pushdown + pruned
   to the scheduled slice by the runtime bloom filter) and the LWW upsert

@@ -1,10 +1,11 @@
 """TRUE hardware-scaling curve of the parse kernel.
 
-tools/parse_scaling_probe.py spawns fresh processes that each pay
-interpreter start + imports before parsing a few hundred feeds — at
-that sample size the measured "throughput" is import-dominated and its
-N->4N ratio reflects process-spawn scaling, not parse scaling.  This
-probe removes every such artifact:
+The earlier probe (`git show bf15243:tools/parse_scaling_probe.py`)
+spawned fresh processes that each paid interpreter start + imports
+before parsing a few hundred feeds — at that sample size the measured
+"throughput" is import-dominated and its N->4N ratio reflects
+process-spawn scaling, not parse scaling.  This probe removes every
+such artifact:
 
   * real corpus htmls (a sample read from the bench parquet), in memory
   * workers are forked AFTER imports and after the sample is loaded
