@@ -4,15 +4,18 @@ as DataFrame operations over the engine's output tables (SURVEY.md §2.12).
 Route → method mapping (handlers at ``/root/reference/src/metrics.rs:30-43,
 138-230``, routes ``metrics.rs:232-257``, ``docs/API.md:1-80``):
 
-| Route                                        | Method                  |
-|----------------------------------------------|-------------------------|
-| GET /metrics                                 | ``metrics()``           |
-| POST /add_task {rss_url}                     | ``add_task()``          |
-| GET /podcasts/search?q=                      | ``search()``            |
-| GET /podcasts?include_episodes=              | ``podcasts()``          |
-| GET /podcasts/page/{page}/{per_page}         | ``podcasts_page()``     |
-| GET /podcasts/by-title/{title}               | ``podcast_by_title()``  |
-| GET /podcasts/{id}/episodes/{page}/{per_page}| ``episodes_page()``     |
+| Route                                         | Method                          |
+|-----------------------------------------------|---------------------------------|
+| GET /metrics                                  | ``metrics()``                   |
+| POST /add_task {rss_url}                      | ``add_task()`` → ``admit_urls`` |
+| GET /podcasts/search?q=                       | ``search()``                    |
+| GET /podcasts?include_episodes=               | ``podcasts()``                  |
+| GET /podcasts/page/{page}/{per_page}          | ``podcasts_page()``             |
+| GET /podcasts/by-title/{title}                | ``podcast_by_title()``          |
+| GET /podcasts/{id}/episodes/{page}/{per_page} | ``episodes_page()``             |
+
+The one write route, ``add_task``, admits through ``plans.epoch.admit_urls``
+(the frontier's only growth path), so its url also enters the seen index.
 
 Pagination is LIMIT/OFFSET parity (``podcast_repository.rs:59-65,
 300-307``) via ``row_number`` (W1/W2) — on a cluster the window is
@@ -29,9 +32,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.urlfns import canonicalize_url, host_hash, url_hash, url_host
-from ..operators.frontier import PENDING, CrawlConfig
-from ..plans.epoch import CrawlState
+from ..operators.frontier import CrawlConfig
+from ..plans.epoch import CrawlState, admit_urls
 
 
 def page_slice(
@@ -148,47 +150,16 @@ class PodcastQueryAPI:
     def add_task(self, rss_url: str, priority: int = 0,
                  epoch_ts: Optional[datetime] = None,
                  cfg: CrawlConfig = CrawlConfig()) -> int:
-        """POST /add_task — append a frontier row (SURVEY.md §3.2): next
-        epoch picks it up.  No-op if the canonical URL is already present
-        (frontier is keyed by canonical_url).  Returns the new snapshot id.
-        """
-        spark = self.spark
+        """POST /add_task — admit one url to the frontier (SURVEY.md §3.2)
+        through ``admit_urls``, which also folds it into the seen index;
+        the next epoch due at or after *epoch_ts* picks it up.  No-op if
+        the canonical URL is already present, and invalid urls are dropped.
+        Returns the new frontier snapshot id."""
         ts = epoch_ts or datetime(1970, 1, 1, tzinfo=timezone.utc)
-        frontier = self.state.frontier.read(spark)
-        row = (
-            spark.createDataFrame([(rss_url, int(priority))], "url string, priority int")
-            .select(
-                "url",
-                canonicalize_url(F.col("url")).alias("canonical_url"),
-                url_hash(canonicalize_url(F.col("url"))).alias("url_hash"),
-                url_host(F.col("url")).alias("host"),
-                host_hash(url_host(F.col("url"))).alias("host_hash"),
-                "priority",
-                F.lit(ts).cast("timestamp").alias("next_fetch_ts"),
-                F.lit(0).cast("int").alias("retries"),
-                F.lit(cfg.max_retries).cast("int").alias("max_retries"),
-                F.lit(PENDING).alias("state"),
-                F.lit(None).cast("string").alias("last_error"),
-                F.lit(None).cast("string").alias("error_kind"),
-                F.lit(None)
-                .cast(
-                    "array<struct<name:string,status:string,start_ts:timestamp,"
-                    "end_ts:timestamp,error:string>>"
-                )
-                .alias("stages"),
-            )
+        row = self.spark.createDataFrame(
+            [(rss_url, int(priority))], "url string, priority int"
         )
-        fresh = row.join(
-            frontier.select("canonical_url"), "canonical_url", "left_anti"
-        ).select(*frontier.columns)
-        # carry the epoch counter like admit_urls/run_crawl_stream do:
-        # without it, completed_epochs() falls back to snapshot_id-1 and
-        # over-counts after any admission commit (epochs then get skipped
-        # and stamped with wrong numbers on resume)
-        return self.state.frontier.commit(
-            frontier.unionByName(fresh),
-            metrics={"epoch": self.state.completed_epochs(), "add_task": rss_url},
-        )
+        return admit_urls(self.spark, self.state, row, ts, cfg)
 
     def search(self, q: str) -> DataFrame:
         """GET /podcasts/search?q= — F6 ``title ILIKE '%q%'``

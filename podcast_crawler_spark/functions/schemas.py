@@ -113,6 +113,7 @@ STAGE_STRUCT = StructType(
     ]
 )
 
+# the frontier table; its rows are built only by operators.frontier.frontier_rows
 FRONTIER_SCHEMA = StructType(
     [
         _f("url", S, False),

@@ -40,7 +40,9 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
+from ..functions.schemas import STAGE_STRUCT
 from ..functions.urlfns import (
     canonicalize_url,
     host_hash,
@@ -95,18 +97,6 @@ class CrawlConfig:
     # the shuffle becomes the bottleneck once an exchange means real
     # network).
     pages_bucketed_table: Optional[str] = None
-    # scoped AQE override for the epoch's commit writes: the delta/
-    # frontier writers are shuffle-final jobs over O(delta) bytes, and
-    # AQE's default parallelism-first coalescing leaves them as dozens
-    # of sub-MB files whose task+file overhead IS the commit phase's
-    # fixed constant (measured 46 files for a 35 MB episodes delta at
-    # local[32]; overlap wall 3.4 s cold / 1.7 s warm → 1.5 s with the
-    # override, 12 right-sized files).  Size-based coalescing
-    # (parallelismFirst=false + this advisory size) makes file count
-    # track delta BYTES, so the same setting yields full write
-    # parallelism on a 100 GB cluster delta and a handful of files on
-    # a small one.  None disables the scoped override.
-    commit_advisory_bytes: Optional[str] = "8m"
 
 
 def seed_scan(seeds: DataFrame) -> DataFrame:
@@ -125,40 +115,44 @@ def seed_scan(seeds: DataFrame) -> DataFrame:
     )
 
 
-def build_frontier(
-    seeds: DataFrame, epoch0: datetime, cfg: CrawlConfig = CrawlConfig()
+def frontier_rows(
+    urls: DataFrame, next_fetch_ts: datetime, cfg: CrawlConfig = CrawlConfig()
 ) -> DataFrame:
-    """Frontier rows from the seed list (FIXTURES.md §4 schema).  Duplicate
-    seed URLs collapse to the best (lowest-rank) row — the frontier is
-    keyed by canonical_url."""
-    urls = seed_scan(seeds)
+    """The one builder of frontier rows (``schemas.FRONTIER_SCHEMA``,
+    FIXTURES.md §4): ``(url, priority)`` rows → pending rows due at
+    *next_fetch_ts*.  Invalid urls are dropped, and duplicates collapse to
+    the best ``(priority, url)`` row — the frontier is keyed by
+    canonical_url."""
     w = Window.partitionBy("canonical_url").orderBy("priority", "url")
+    host = url_host(F.col("url"))
     return (
-        urls.withColumn("canonical_url", canonicalize_url(F.col("url")))
+        urls.filter(is_valid_url(F.col("url")))
+        .withColumn("canonical_url", canonicalize_url(F.col("url")))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .drop("rn")
         .select(
             "url",
             "canonical_url",
             url_hash(F.col("canonical_url")).alias("url_hash"),
-            url_host(F.col("url")).alias("host"),
-            host_hash(url_host(F.col("url"))).alias("host_hash"),
+            host.alias("host"),
+            host_hash(host).alias("host_hash"),
             F.col("priority").cast("int"),
-            F.lit(epoch0).cast("timestamp").alias("next_fetch_ts"),
+            F.lit(next_fetch_ts).cast("timestamp").alias("next_fetch_ts"),
             F.lit(0).cast("int").alias("retries"),
             F.lit(cfg.max_retries).cast("int").alias("max_retries"),
             F.lit(PENDING).alias("state"),
             F.lit(None).cast("string").alias("last_error"),
             F.lit(None).cast("string").alias("error_kind"),
-            F.lit(None)
-            .cast(
-                "array<struct<name:string,status:string,start_ts:timestamp,"
-                "end_ts:timestamp,error:string>>"
-            )
-            .alias("stages"),
+            F.lit(None).cast(ArrayType(STAGE_STRUCT)).alias("stages"),
         )
     )
+
+
+def build_frontier(
+    seeds: DataFrame, epoch0: datetime, cfg: CrawlConfig = CrawlConfig()
+) -> DataFrame:
+    """Frontier rows from the seed list, each seed's rank as its priority."""
+    return frontier_rows(seed_scan(seeds), epoch0, cfg)
 
 
 def robots_filter(frontier: DataFrame, robots: DataFrame) -> DataFrame:

@@ -32,23 +32,18 @@ from dataclasses import dataclass
 from datetime import datetime, timedelta
 from typing import Dict
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import explode_episodes, parse_pages
-from ..functions.urlfns import (
-    canonicalize_url,
-    host_hash,
-    is_valid_url,
-    url_hash,
-    url_host,
-)
+from ..functions.urlfns import canonicalize_url, url_hash
 from ..operators.frontier import (
     PARSED,
     CrawlConfig,
     apply_epoch_results,
     build_frontier,
     fetch_join,
+    frontier_rows,
     schedule_epoch,
 )
 from ..operators.stats import ERROR_TYPES, categorize_error
@@ -65,6 +60,22 @@ PASSTHROUGH = [
     "fetch_ok",
 ]
 
+# Scoped AQE override for the epoch's commit writes: the delta/frontier
+# writers are shuffle-final jobs over O(delta) bytes, and AQE's default
+# parallelism-first coalescing leaves them as dozens of sub-MB files whose
+# task+file overhead IS the commit phase's fixed constant (measured 46
+# files for a 35 MB episodes delta at local[32]; overlap wall 3.4 s cold /
+# 1.7 s warm → 1.5 s with the override, 12 right-sized files).  Size-based
+# coalescing (parallelismFirst=false + this advisory size) makes file
+# count track delta BYTES, so the same setting yields full write
+# parallelism on a 100 GB cluster delta and a handful of files on a small
+# one.
+COMMIT_ADVISORY_BYTES = "8m"
+_COMMIT_CONFS = {
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": COMMIT_ADVISORY_BYTES,
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+}
+
 
 @dataclass
 class CrawlState:
@@ -79,10 +90,12 @@ class CrawlState:
     # cross-epoch seen set the reference keeps implicitly in Postgres
     # unique indexes (podcast_repository.rs:178-183,212-218).  INVARIANT:
     # frontier membership only ever grows through ``init_crawl`` (seeds,
-    # pre-bootstrap) and ``admit_urls`` (which folds what it admits), so
-    # the shard bits always cover every frontier key — a Bloom false
-    # negative (the one failure the exact-verify join can't catch) cannot
-    # occur unless a caller writes frontier rows out-of-band.
+    # pre-bootstrap) and, once initialized, through ``admit_urls`` alone
+    # (which folds what it admits) — ``PodcastQueryAPI.add_task`` and the
+    # stream's seed batches both call it.  The shard bits therefore cover
+    # every frontier key, so a Bloom false negative (the one failure the
+    # exact-verify join can't catch) cannot occur.  tests/test_doclint.py
+    # fails if any module but this one commits the frontier.
     seen_shards: SnapshotTable
 
     @classmethod
@@ -98,8 +111,8 @@ class CrawlState:
 
     def completed_epochs(self) -> int:
         """Epochs committed so far — read from the frontier manifest's
-        ``epoch`` metric (snapshot ids can't be used directly: streaming
-        admission commits extra frontier snapshots between epochs)."""
+        ``epoch`` metric (snapshot ids can't be used directly: each
+        ``admit_urls`` call commits an extra frontier snapshot)."""
         man = self.frontier.manifest()
         if man is None:
             return 0
@@ -314,29 +327,16 @@ def run_epoch(
         if table.num_segments() >= cfg.compact_segments:
             table.compact(spark, metrics={"epoch": epoch_no})
 
-    # Scoped AQE override (see CrawlConfig.commit_advisory_bytes): the
-    # commit writers are shuffle-final jobs over O(delta) bytes; size-
-    # based coalescing keeps their file count proportional to delta
-    # bytes instead of cluster parallelism.  Everything submitted inside
-    # the scope plans under these values: the podcasts/episodes commits
-    # (and any compaction they trigger) AND the frontier prepare.  The
-    # values are restored before the metrics commit runs.  spark.conf is
-    # session-global, so any other query planned concurrently in this
-    # session during the commit window sees the override too.
-    _scoped = {}
-    if cfg.commit_advisory_bytes:
-        for k, v in (
-            (
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                cfg.commit_advisory_bytes,
-            ),
-            (
-                "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                "false",
-            ),
-        ):
-            _scoped[k] = spark.conf.get(k, None)
-            spark.conf.set(k, v)
+    # Scoped AQE override (see COMMIT_ADVISORY_BYTES).  Everything
+    # submitted inside the scope plans under these values: the
+    # podcasts/episodes commits (and any compaction they trigger) AND the
+    # frontier prepare.  The values are restored before the metrics
+    # commit runs.  spark.conf is session-global, so any other query
+    # planned concurrently in this session during the commit window sees
+    # the override too.
+    _scoped = {k: spark.conf.get(k, None) for k in _COMMIT_CONFS}
+    for k, v in _COMMIT_CONFS.items():
+        spark.conf.set(k, v)
     try:
         with ThreadPoolExecutor(max_workers=3) as pool:
             f_front = pool.submit(state.frontier.prepare, new_frontier)
@@ -556,8 +556,10 @@ def admit_urls(
     priority: int = 1_000_000,
     use_bloom: bool = True,
 ) -> int:
-    """Frontier growth: admit discovered URLs (e.g. episode links found by
-    parsing — ``discovered_urls``) that are NOT already in the frontier.
+    """Frontier growth: admit URLs that are NOT already in the frontier —
+    discovered episode links (``discovered_urls``), ``add_task`` urls and
+    stream seed batches.  This is the only path that grows an initialized
+    frontier (see ``CrawlState``).
 
     The seen check is the D3 discipline over the PERSISTED shard index
     (``state.seen_shards`` — bootstrapped once, folded incrementally):
@@ -584,20 +586,20 @@ def admit_urls(
       per admission.
 
     *urls* needs a ``url`` column; returns the new frontier snapshot id.
-    Discovered URLs get a low priority (crawled after all seeds at equal
-    due-time) and the standard retry budget.
+    Rows are built by ``frontier.frontier_rows``, due at *epoch_ts*.  A
+    ``priority`` column in *urls* gives each url its own priority (stream
+    seed batches carry the seed rank); otherwise every url gets
+    *priority* — by default a low one, so discovered urls are crawled
+    after all seeds at equal due-time.
+
+    ``use_bloom=False`` skips the probe for a plain anti-join against the
+    frontier; it is kept as the exact reference the bloom path is tested
+    against (tests/test_discovery.py).
     """
     frontier = state.frontier.read(spark)
-    cand = (
-        urls.select("url")
-        .filter(is_valid_url(F.col("url")))
-        .withColumn("canonical_url", canonicalize_url(F.col("url")))
-        .withColumn("url_hash", url_hash(F.col("canonical_url")))
-    )
-    w = Window.partitionBy("canonical_url").orderBy("url")
-    cand = cand.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") == 1
-    ).drop("_rn")
+    if "priority" not in urls.columns:
+        urls = urls.withColumn("priority", F.lit(priority))
+    cand = frontier_rows(urls.select("url", "priority"), epoch_ts, cfg)
 
     if use_bloom:
         shards = seen_shards_current(spark, state, cfg)
@@ -605,14 +607,12 @@ def admit_urls(
             frontier, cand, shards, cfg, num_shards=_seen_num_shards(state, cfg)
         )
         try:
-            snap = _commit_admission(
-                state, frontier, cand, fresh, epoch_ts, cfg, priority
-            )
+            snap = _commit_admission(state, frontier, cand, fresh, cfg)
         finally:
             probed.unpersist()
         return snap
     fresh = cand.join(frontier.select("url_hash"), "url_hash", "left_anti")
-    return _commit_admission(state, frontier, cand, fresh, epoch_ts, cfg, priority)
+    return _commit_admission(state, frontier, cand, fresh, cfg)
 
 
 def _unseen_via_shards(
@@ -659,32 +659,10 @@ def _commit_admission(
     frontier: DataFrame,
     cand: DataFrame,
     fresh: DataFrame,
-    epoch_ts: datetime,
     cfg: CrawlConfig,
-    priority: int,
 ) -> int:
     from ..operators.seen import update_bloom_shards
 
-    rows = fresh.select(
-        "url",
-        "canonical_url",
-        "url_hash",
-        url_host(F.col("url")).alias("host"),
-        host_hash(url_host(F.col("url"))).alias("host_hash"),
-        F.lit(priority).cast("int").alias("priority"),
-        F.lit(epoch_ts).cast("timestamp").alias("next_fetch_ts"),
-        F.lit(0).cast("int").alias("retries"),
-        F.lit(cfg.max_retries).cast("int").alias("max_retries"),
-        F.lit("pending").alias("state"),
-        F.lit(None).cast("string").alias("last_error"),
-        F.lit(None).cast("string").alias("error_kind"),
-        F.lit(None)
-        .cast(
-            "array<struct<name:string,status:string,start_ts:timestamp,"
-            "end_ts:timestamp,error:string>>"
-        )
-        .alias("stages"),
-    )
     # Fold the admission's keys into the persisted shard index so the next
     # admission probes a complete seen set.  Folding ALL candidate keys
     # (not just the admitted subset) is equivalent and cheaper: a
@@ -722,10 +700,10 @@ def _commit_admission(
             },
         )
     return state.frontier.commit(
-        frontier.unionByName(rows.select(*frontier.columns)).repartition(
+        frontier.unionByName(fresh.select(*frontier.columns)).repartition(
             cfg.num_partitions, "host_hash"
         ),
-        metrics={"epoch": state.completed_epochs(), "op": "admit_discovered"},
+        metrics={"epoch": state.completed_epochs(), "op": "admit"},
     )
 
 

@@ -7,10 +7,11 @@ the same machinery:
 
 1. ``run_crawl_stream`` — the epoch loop as ``foreachBatch``: a file
    stream of seed batches (the streaming analog of ``POST /add_task``,
-   SURVEY.md §3.2) drives frontier admission + one crawl epoch per
-   micro-batch.  The epoch body is ``run_epoch`` **unchanged** — the
-   checkpointed snapshot tables make each batch idempotent, which is
-   exactly the contract ``foreachBatch`` requires for exactly-once.
+   SURVEY.md §3.2) drives frontier admission (``admit_urls``, the same
+   path as ``add_task``) + one crawl epoch per micro-batch.  The epoch
+   body is ``run_epoch`` **unchanged** — the checkpointed snapshot tables
+   make each batch idempotent, which is exactly the contract
+   ``foreachBatch`` requires for exactly-once.
 2. ``stage_metrics_stream`` — A7's Prometheus counters as a watermarked
    event-time windowed aggregation over stage events (late data dropped
    past the watermark, matching counter-scrape semantics).
@@ -39,8 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.frontier import CrawlConfig, build_frontier
-from ..plans.epoch import CrawlState, init_crawl, run_epoch
+from ..operators.frontier import CrawlConfig, seed_scan
+from ..plans.epoch import CrawlState, admit_urls, init_crawl, run_epoch
 
 
 def run_crawl_stream(
@@ -55,9 +56,11 @@ def run_crawl_stream(
     available_now: bool = True,
 ):
     """Run the crawl as a Structured Streaming query over a parquet stream
-    of seed batches (schema = seeds table).  Each micro-batch: admit the
-    batch's new URLs to the frontier (anti-join on canonical_url — the
-    add_task idempotence), then run one deterministic epoch.
+    of seed batches (schema = seeds table).  The first micro-batch seeds
+    the frontier (``init_crawl``); each later one admits the batch's new
+    URLs through ``admit_urls`` (seed rank as priority, due at *epoch0*;
+    already-present canonical URLs are skipped and the seen index is
+    folded).  Every micro-batch then runs one deterministic epoch.
 
     Returns the StreamingQuery (caller awaits termination; with
     ``available_now`` the query drains pending files and stops).
@@ -75,22 +78,7 @@ def run_crawl_stream(
         if state.frontier.current_snapshot_id() is None:
             init_crawl(spark, batch_df, state_dir, epoch0, cfg)
         else:
-            frontier = state.frontier.read(spark)
-            add = build_frontier(batch_df, epoch0, cfg)
-            fresh = add.join(
-                frontier.select("canonical_url"), "canonical_url", "left_anti"
-            ).select(*frontier.columns)
-            state.frontier.commit(
-                frontier.unionByName(fresh).repartition(
-                    cfg.num_partitions, "host_hash"
-                ),
-                # carry the epoch counter forward — admission is not an epoch
-                metrics={
-                    "epoch": state.completed_epochs(),
-                    "stream_batch": batch_id,
-                    "op": "admit",
-                },
-            )
+            admit_urls(spark, state, seed_scan(batch_df), epoch0, cfg)
         epoch_no = state.completed_epochs()
         epoch_ts = epoch0 + timedelta(seconds=epoch_no * epoch_interval_s)
         run_epoch(spark, state, pages, robots, epoch_ts, cfg)

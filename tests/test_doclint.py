@@ -102,3 +102,26 @@ def test_cited_tool_scripts_exist():
             if not os.path.exists(os.path.join(ROOT, "tools", m.group(1))):
                 missing.append(f"{os.path.relpath(src, ROOT)}: tools/{m.group(1)}")
     assert not missing, missing
+
+
+def test_only_the_epoch_plan_commits_the_frontier():
+    """``CrawlState``'s seen-index invariant: after init, the frontier
+    grows only through ``admit_urls``, which folds what it admits.  So
+    no program module but ``plans/epoch.py`` may commit, prepare or
+    publish the frontier table.  Tests are exempt (they inject crashes)."""
+    import glob
+
+    sources = ["__spark_entry__.py", "run.py", "bench.py"]
+    sources += glob.glob(os.path.join(ROOT, "tools", "**", "*.py"), recursive=True)
+    sources += glob.glob(
+        os.path.join(ROOT, "podcast_crawler_spark", "**", "*.py"), recursive=True
+    )
+    allowed = os.path.join("podcast_crawler_spark", "plans", "epoch.py")
+    write = re.compile(r"\bfrontier\.(commit|prepare|publish)\(")
+    offenders = []
+    for src in sources:
+        rel = os.path.relpath(os.path.join(ROOT, src), ROOT)
+        for n, line in enumerate(_read(src).splitlines(), 1):
+            if rel != allowed and write.search(line):
+                offenders.append(f"{rel}:{n}")
+    assert not offenders, offenders

@@ -9,8 +9,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from podcast_crawler_spark.functions.schemas import FRONTIER_SCHEMA
 from podcast_crawler_spark.operators.frontier import CrawlConfig
-from podcast_crawler_spark.plans.epoch import CrawlState
+from podcast_crawler_spark.plans.epoch import (
+    CrawlState,
+    admit_urls,
+    seen_shards_current,
+)
 from podcast_crawler_spark.sources.pagesgen import (
     EPOCH0,
     gen_pages,
@@ -54,7 +59,7 @@ def test_crawl_stream_foreachbatch(spark, tmp_path):
     robots = gen_robots(spark, N, partitions=4)
 
     # batch 1: first half of the seed list; batch 2: full list (overlap
-    # exercises the anti-join admission idempotence)
+    # exercises admit_urls' idempotence: already-admitted urls are skipped)
     drop_batch(seeds.filter(F.col("rank") <= N // 2), tmp_path, stream_dir, "b1")
     q = run_crawl_stream(
         spark, state_dir, stream_dir, pages, robots, EPOCH0, cfg=CFG
@@ -74,6 +79,61 @@ def test_crawl_stream_foreachbatch(spark, tmp_path):
     assert pods.count() > N * 0.8
     frontier = state.frontier.read(spark)
     assert frontier.count() == frontier.select("canonical_url").distinct().count()
+
+
+def test_stream_batch_folds_into_seen_index(spark, tmp_path):
+    """A seed batch admitted after the seen index exists goes through
+    ``admit_urls``: its keys are folded into ``seen_shards``, so offering
+    the same urls again admits nothing (no duplicate crawl)."""
+    n = 30
+    stream_dir = str(tmp_path / "seeds_stream")
+    os.makedirs(stream_dir)
+    state_dir = str(tmp_path / "state")
+    seeds = gen_seeds(spark, n, partitions=2).cache()
+    pages = gen_pages(spark, n, partitions=2)
+    robots = gen_robots(spark, n, partitions=2)
+
+    def run_stream():
+        q = run_crawl_stream(
+            spark, state_dir, stream_dir, pages, robots, EPOCH0, cfg=CFG
+        )
+        q.awaitTermination(120)
+
+    def admissions(state):
+        return [
+            s
+            for s in state.frontier.snapshot_ids()
+            if (state.frontier.manifest(s).get("metrics") or {}).get("op")
+        ]
+
+    drop_batch(seeds.filter(F.col("rank") <= n // 2), tmp_path, stream_dir, "b1")
+    run_stream()
+    state = CrawlState.open(state_dir)
+    seen_shards_current(spark, state, CFG)
+    seen_before = state.seen_shards.current_snapshot_id()
+    n_admissions = len(admissions(state))
+
+    late = seeds.filter(F.col("rank") > n // 2)
+    drop_batch(late, tmp_path, stream_dir, "b2")
+    run_stream()
+    assert state.seen_shards.current_snapshot_id() > seen_before
+    admitted = admissions(state)
+    assert len(admitted) == n_admissions + 1
+    got = state.frontier.read(spark, admitted[-1]).schema
+    assert [(f.name, f.dataType) for f in got] == [
+        (f.name, f.dataType) for f in FRONTIER_SCHEMA
+    ]
+
+    rows = state.frontier.read(spark).count()
+    late_urls = (
+        late.select(F.explode("links").alias("l"))
+        .filter(F.col("l.name") == "rss")
+        .select(F.col("l.url").alias("url"))
+    )
+    admit_urls(spark, state, late_urls, EPOCH0, CFG)
+    f = state.frontier.read(spark)
+    assert f.count() == rows
+    assert f.count() == f.select("canonical_url").distinct().count()
 
 
 def test_stage_metrics_stream_windowed(spark, tmp_path):
