@@ -13,20 +13,22 @@ Measures:
 
 Environment knobs:
   SPARK_GRAFT_SF_DIR   parquet dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[] parallelism (default 32)
+  SPARK_GRAFT_CPUS     local[] parallelism (default: cores this process
+                       may run on); sizes engine_conf (operators/frontier.py)
   BENCH_FEEDS          synthetic crawl corpus size (default 500000 * sf)
   BENCH_REPEATS        fresh-state epochs, fastest kept (default 3)
   BENCH_CORPUS_DIR     shared corpus + bucketed-table dir (reused if present)
   BENCH_GEN_ONLY       materialize the corpus and exit
   BENCH_SKIP_QUERIES   crawl epoch only, no headline queries
-  BENCH_DRIVER_MEM     spark.driver.memory (default 16g)
+  BENCH_DRIVER_MEM     spark.driver.memory (default: half of physical RAM,
+                       at most 16g)
 
 Output: {"metric": ..., "value": <total bench sec>, "unit": "sec",
 "queries": {name: sec}, "sf": <sf>, "crawl": {...}, "cpus": N}
 
 Scaling-efficiency evidence (north rule: ≥0.8 from N to 4N) is produced
-by ``tools/bench_scaling.py``, which runs this file at local[8] and
-local[32] on the same input and writes BENCH.md.
+by ``tools/bench_scaling.py``, which runs this file at local[N] and
+local[4N] (4N = the core count) on the same input and writes BENCH.md.
 """
 
 from __future__ import annotations
@@ -41,7 +43,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+_HALF_RAM_MB = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21
+DRIVER_MEM = os.environ.get("BENCH_DRIVER_MEM", f"{min(16384, _HALF_RAM_MB)}m")
 
 BENCH_QUERIES = [
     "flagship_priority_queue",
@@ -218,28 +222,13 @@ def main() -> None:
     fast_tmp = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
     local_dir = os.path.join(fast_tmp, "spark-bench-local")
 
+    from podcast_crawler_spark.operators.frontier import CrawlConfig, engine_conf
+
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("podcast_crawler_spark_bench")
-        .config("spark.sql.shuffle.partitions", str(2 * CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # fetch join: shuffled-hash beats sort-merge (no sort of the pages
-        # side); runtime bloom filter prunes the pages scan down to the
-        # scheduled slice — the at-scale lever when the frontier slice is
-        # tiny next to a 10^10-row pages table
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        # GC choice: an initial sequential A/B suggested ParallelGC won
-        # −17% at local[32], but a proper INTERLEAVED A/B (same minute,
-        # alternating collectors) showed no consistent difference on
-        # this box (par 7.50/8.46 vs g1 8.12/7.45 — era noise).  Kept as
-        # the conventional stop-the-world throughput collector for a
-        # batch engine; measured NEUTRAL here, not a claimed win.
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
+        .config(map=engine_conf(CPUS))
         .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.local.dir", local_dir)
         .config(
             "spark.sql.warehouse.dir",
@@ -247,13 +236,12 @@ def main() -> None:
                 os.environ.get("BENCH_CORPUS_DIR") or fast_tmp, "spark-bench-wh"
             ),
         )
-        .config("spark.driver.memory", os.environ.get("BENCH_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", DRIVER_MEM)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry_mod
-    from podcast_crawler_spark.operators.frontier import CrawlConfig
     from podcast_crawler_spark.plans.epoch import init_crawl, run_crawl
     from podcast_crawler_spark.sources.pagesgen import (
         EPOCH0,

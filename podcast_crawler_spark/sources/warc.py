@@ -699,7 +699,8 @@ def wet_export(
     which the oracle rebuilds from field values, checking writer and
     prefix-sum fold in one gate.  Scale notes as in
     :func:`warc_export` (text rides two exchanges; the write
-    dominates at archive scale).
+    dominates at archive scale).  Raises ``ValueError`` on a null id
+    or text.
     """
     import hashlib
     import os
@@ -710,12 +711,7 @@ def wet_export(
 
     if shard_rows <= 0:
         raise ValueError(f"shard_rows must be positive, got {shard_rows}")
-    # Fail fast on null body: a null reaching the writer would surface
-    # as an opaque planned-offset mismatch deep in applyInPandas (the
-    # planned rec_length is NULL while the writer would emit "None").
-    staged = docs.filter(
-        F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
-    ).select(
+    staged = docs.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(url_col).alias("url"),
         F.col(ts_col).alias("ts"),
@@ -727,7 +723,18 @@ def wet_export(
         num_partitions = int(
             docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
-    lo, hi = staged.agg(F.min("id"), F.max("id")).first()
+    # Fail fast on a null id or body (in the id-range pass): a null body
+    # reaching the writer would surface as an opaque planned-offset
+    # mismatch deep in applyInPandas (the planned rec_length is NULL while
+    # the writer would emit "None"); dropping it would lose a document.
+    lo, hi, n_null = staged.agg(
+        F.min("id"), F.max("id"),
+        F.count(F.when(F.col("id").isNull() | F.col("body").isNull(), 1)),
+    ).first()
+    if n_null:
+        raise ValueError(
+            f"wet_export: {n_null} rows with a null {id_col} or {text_col}"
+        )
     if lo is None:
         lo, width = 0, 1
     else:
@@ -769,7 +776,7 @@ def wet_export(
                     f"planned offset {r.rec_offset} != actual {buf.tell()}"
                     f" for {r.url} in shard {sid}"
                 )
-            # body is null-filtered + string-cast at staging; a non-str
+            # body is null-checked + string-cast at staging; a non-str
             # here is a real bug and should fail loudly, not be masked
             # by str() coercion.
             rec = _format_wet_record(r.url, r.ts, r.body.encode())

@@ -7,16 +7,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+from podcast_crawler_spark.operators.frontier import engine_conf
+
 
 @pytest.fixture(scope="session")
 def spark():
     session = (
         SparkSession.builder.master("local[4]")
         .appName("podcast_crawler_spark_tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(map=engine_conf(4))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "6g")
         .getOrCreate()

@@ -125,3 +125,69 @@ def test_only_the_epoch_plan_commits_the_frontier():
             if rel != allowed and write.search(line):
                 offenders.append(f"{rel}:{n}")
     assert not offenders, offenders
+
+
+def _engine_keys():
+    """Every ``engine_conf`` key but the two that other code may name:
+    shuffle partitions (``run.py`` sizes ``CrawlConfig`` from it) and the
+    driver JVM options (perfbench extends them with its own flags)."""
+    from podcast_crawler_spark.operators.frontier import engine_conf
+
+    engine = engine_conf(1)
+    shared = {"spark.sql.shuffle.partitions", "spark.driver.extraJavaOptions"}
+    return {k: v for k, v in engine.items() if k not in shared}
+
+
+def test_engine_keys_are_spelled_only_in_engine_conf():
+    """One session profile: no builder, tool or module repeats an engine
+    conf by hand, so every session plans the engine the bench measures."""
+    import ast
+    import glob
+
+    keys = _engine_keys()
+    home = os.path.join("podcast_crawler_spark", "operators", "frontier.py")
+    sources = ["__spark_entry__.py", "run.py", "bench.py", "tests/conftest.py"]
+    sources += glob.glob(os.path.join(ROOT, "tools", "**", "*.py"), recursive=True)
+    sources += glob.glob(
+        os.path.join(ROOT, "podcast_crawler_spark", "**", "*.py"), recursive=True
+    )
+    offenders = []
+    for src in sources:
+        rel = os.path.relpath(os.path.join(ROOT, src), ROOT)
+        tree = ast.parse(_read(src))
+        allowed = set()
+        if rel == home:
+            fn = next(
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "engine_conf"
+            )
+            allowed = {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in allowed
+                and any(k in node.value for k in keys)
+            ):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, offenders
+
+
+def test_perfbench_session_matches_engine_conf():
+    """perfbench builds its own session: read its source and check it
+    sets the engine keys to ``engine_conf``'s values, and no other literal
+    conf but ``spark.ui.enabled``."""
+    import ast
+
+    tree = ast.parse(_read(os.path.join("perfbench", "session.py")))
+    literal = {
+        n.args[0].value: n.args[1].value
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "config"
+        and len(n.args) == 2
+        and all(isinstance(a, ast.Constant) for a in n.args)
+    }
+    literal.pop("spark.ui.enabled")
+    assert literal == _engine_keys()

@@ -4,9 +4,12 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
+import pytest
+
 from podcast_crawler_spark.sources.warc import (
     parse_warc_bytes,
     read_warc,
+    wet_export,
     write_warc_file,
 )
 
@@ -225,6 +228,19 @@ def test_revisit_records_first_capture_rule(spark):
     assert str(out[4]["refers_to_ts"]) == "2024-01-01"
     assert out[5]["rec_type"] == "response"
     assert out[1]["refers_to_ts"] is None
+
+
+def test_wet_export_rejects_null_body(spark, tmp_path):
+    """A null text row fails the export loudly instead of vanishing from
+    the archive and its manifest."""
+    docs = spark.createDataFrame(
+        [(1, "https://h1.example/t/1", "body"), (2, "https://h2.example/t/2", None)],
+        "doc_id long, url string, text string",
+    ).selectExpr(
+        "doc_id", "url", "timestamp '2024-01-01 00:00:00' AS warc_ts", "text"
+    )
+    with pytest.raises(ValueError, match="1 rows with a null doc_id or text"):
+        wet_export(docs, str(tmp_path / "wet"), shard_rows=3)
 
 
 def test_wet_export_roundtrip_layout_and_md5(spark, tmp_path):

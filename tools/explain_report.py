@@ -19,13 +19,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def main() -> None:
     from pyspark.sql import SparkSession
 
+    from podcast_crawler_spark.operators.frontier import engine_conf
+
     spark = (
         SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config(map=engine_conf(4))
         .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

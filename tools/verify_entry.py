@@ -9,6 +9,7 @@ Usage: python tools/verify_entry.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 from datetime import datetime
 
@@ -155,13 +156,13 @@ def main():
 
     from pyspark.sql import SparkSession
 
+    from podcast_crawler_spark.operators.frontier import engine_conf
+
+    cpus = len(os.sched_getaffinity(0))
     spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config(map=engine_conf(cpus))
         .config("spark.driver.memory", "8g")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
