@@ -324,8 +324,8 @@ _BLOOM_AUDIT_PROBE_SQL = (
 
 def _bloom_fpp_audit(spark, sf_dir):
     # D3 observability: the seen-bloom's OBSERVED false-positive rate
-    # against a disjoint probe set, through the production numpy bit
-    # path (mapInPandas partial bitmaps, OR-merge, vectorized probe).
+    # against a disjoint probe set, through the bit path admission runs
+    # (one-shard applyInPandas build, cogroup probe).
     # The oracle re-derives every bit decision — splitmix64 h2 via
     # HUGEINT limb multiplication (mod-2^64 wrap that SQL lacks), the
     # k double-hash indices, set-bit membership — so a drift anywhere

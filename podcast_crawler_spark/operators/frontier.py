@@ -24,12 +24,14 @@ This is the Spark re-expression of the reference's scheduling machinery
 
 Scale notes (10^10 frontier): the frontier lives partitioned by
 ``pmod(host_hash, P)`` — all per-host windowing shuffles once on that key
-and AQE handles residual skew.  A hot host's due rows are split across
-``salt_buckets`` tasks by a ``pmod(xxhash64(url), K)`` pre-rank before
-the per-host politeness rank (X6, :func:`schedule_epoch`); the fetch
-join needs no host locality and spreads rows by url hash, so the parse
-stage inherits a uniform distribution.  Nothing here ever collects URLs
-to the driver.
+and AQE handles residual skew.  Under a bounded budget a hot host's due
+rows are split across ``SALT_BUCKETS`` tasks by a
+``pmod(xxhash64(url), SALT_BUCKETS)`` pre-rank before the per-host
+politeness rank (X6: ``_top_k_per_key``, the one per-key top-k, which
+:func:`schedule_epoch` runs per host and :func:`ip_politeness` per
+address queue).  The fetch join needs no host locality and spreads
+rows by url hash, so the parse stage inherits a uniform distribution.
+Nothing here ever collects URLs to the driver.
 """
 
 from __future__ import annotations
@@ -57,22 +59,19 @@ USER_AGENT = "PodcastCrawler/1.0"  # rss_fetcher.rs:20
 
 @dataclass
 class CrawlConfig:
-    """Reference configuration envelope (BASELINE.md)."""
+    """Crawl policy (budget, delays, cadence, retries) and deployment
+    values (partitions, seen-index sizing, pages table).  The engine's
+    tuning thresholds are module constants beside the function that reads
+    each one: ``SALT_BUCKETS`` / ``SKEW_SAFE_MAX_BUDGET`` here,
+    ``plans.epoch.BROADCAST_OUTCOMES_MAX_ROWS`` and
+    ``seen.VERIFY_BROADCAST_MAX_ROWS``."""
 
     per_host_budget: int = 5  # max_concurrent_tasks default (config/crawler.rs:55-63)
     default_crawl_delay_s: float = 0.5  # 2 req/s governor default (rate_limiter.rs:34-41)
     fetch_interval_s: int = 3600  # re-crawl cadence (config/crawler.rs:55-63)
     max_retries: int = 3  # legacy retry macro (error/macros.rs:253-277)
     backoff_s: float = 1.0  # refactor TimerQueue backoff (worker.rs:151-155)
-    salt_buckets: int = 8  # X6 hot-host salting (skew-safe politeness pre-rank)
-    # two-phase politeness selection kicks in when budget·salt_buckets is
-    # at most this (above it, phase 1 prunes nothing worth an extra shuffle)
-    skew_safe_max_budget: int = 100_000
     num_partitions: int = 32
-    # broadcast the epoch-outcome side of the frontier-update join when the
-    # epoch is below this many rows (outcomes are 4 narrow columns; 2M rows
-    # ≈ 60 MB serialized — safe to broadcast, saves shuffling the frontier)
-    broadcast_outcomes_max_rows: int = 2_000_000
     # merge-on-read output tables: compact (full rewrite of the resolved
     # view) once a table accumulates this many delta segments — bounds
     # read amplification while keeping steady-state epochs O(delta)
@@ -82,10 +81,6 @@ class CrawlConfig:
     # expected final corpus (e.g. 10^10); None = 8× the bootstrap-time
     # frontier as growth headroom (sandbox default)
     seen_expected_keys: Optional[int] = None
-    # admission exact-verify strategy: bloom-maybe sets at most this big
-    # verify via broadcast-semi against the frontier scan (frontier never
-    # shuffled); beyond it, fall back to a plain shuffled anti-join
-    verify_broadcast_max_rows: int = 4_000_000
     # name of a url-bucketed pages table in the session catalog
     # (sources/bucketed.py): when set, the fetch join reads html IN PLACE
     # from the bucket files (build-left SHJ; only the narrow scheduled
@@ -207,6 +202,43 @@ def robots_filter(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     )
 
 
+# Per-key top-k under hot-key skew (X6).  A window partitioned by key puts
+# the whole key in one task, and AQE cannot split a window partition: one
+# podcast network with 10^7 due urls (or one CDN address fronting 10^6
+# hosts) would stall the stage.  While k·SALT_BUCKETS is at most
+# SKEW_SAFE_MAX_BUDGET, a pre-rank per (key, pmod(xxhash64(url), SALT_BUCKETS))
+# first keeps at most k rows per salt bucket, so the hot key splits into
+# SALT_BUCKETS tasks; the union of per-bucket top-k contains the global
+# top-k, so the result equals the single window (equality-tested).  Above
+# the bound phase 1 prunes too little to pay for its extra shuffle, and the
+# single window runs (the bench's drain workload, budget 10^9).
+SALT_BUCKETS = 8
+SKEW_SAFE_MAX_BUDGET = 100_000
+
+
+def _top_k_per_key(
+    df: DataFrame,
+    key: str,
+    order_cols: list,
+    k: int,
+    rank_col: str,
+    url_col: str = "url",
+) -> DataFrame:
+    """Rows of *df* whose 1-based rank per *key* in *order_cols* order
+    (emitted as *rank_col*) is at most *k*.  *url_col* salts the
+    pre-rank; *order_cols* must order each key's rows totally."""
+    if k * SALT_BUCKETS <= SKEW_SAFE_MAX_BUDGET:
+        salt = F.pmod(F.xxhash64(url_col), F.lit(SALT_BUCKETS))
+        w1 = Window.partitionBy(key, salt).orderBy(*order_cols)
+        df = df.withColumn("_pre", F.row_number().over(w1)).filter(
+            F.col("_pre") <= k
+        ).drop("_pre")
+    w = Window.partitionBy(key).orderBy(*order_cols)
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= k
+    )
+
+
 def schedule_epoch(
     frontier: DataFrame,
     robots: DataFrame,
@@ -220,18 +252,14 @@ def schedule_epoch(
     spaced by the host's crawl delay — the deterministic crawl ordering the
     north rule asks to match (SURVEY.md §7.2).
 
-    **Hot-host skew (X6)**: a window partitioned by host_hash puts a whole
-    host in one task, and AQE cannot split a window partition — at web
-    scale one podcast network with 10^7 due URLs would stall the stage.
-    When the budget is bounded (``per_host_budget * salt_buckets`` under
-    the skew threshold), selection runs in two exact phases: a per-(host,
-    salt) pre-rank keeps at most ``budget`` rows per salt bucket (bounded
-    partitions — the hot host splits into ``salt_buckets`` tasks), then
-    the final per-host rank runs over ≤ budget·salt_buckets survivors per
-    host.  The union of per-bucket top-k contains the global top-k, so
-    the result is IDENTICAL to the single-window plan (equality-tested).
-    Unbounded budgets (bench drain-the-frontier mode) use the single
-    window — nothing is pruned, so there is nothing to salt."""
+    **Hot-host skew (X6)**: the per-host rank is ``_top_k_per_key``.
+    A bounded budget (``per_host_budget * SALT_BUCKETS`` at most
+    ``SKEW_SAFE_MAX_BUDGET``; the default 5, the bench's polite_steady)
+    ranks in two exact phases: a per-(host, salt) pre-rank splits a hot
+    host into ``SALT_BUCKETS`` tasks, then the final per-host rank runs
+    over at most budget·SALT_BUCKETS survivors per host.  An unbounded
+    budget (the bench's drain, 10^9) prunes nothing in phase 1, so it runs
+    the single window.  Both plans select the same rows (equality-tested)."""
     # due = any non-failed row whose fetch slot has arrived: pending rows
     # (fresh or backing off) AND parsed rows rescheduled by the re-crawl
     # cadence (apply_epoch_results sets next_fetch_ts += fetch_interval on
@@ -254,24 +282,15 @@ def schedule_epoch(
         )
     allowed = robots_filter(due, robots).filter(~F.col("robots_denied"))
 
-    order_cols = ["next_fetch_ts", "priority", "url_hash"]
-    two_phase = (
-        cfg.per_host_budget * cfg.salt_buckets <= cfg.skew_safe_max_budget
-        and cfg.salt_buckets > 1
-    )
-    if two_phase:
-        w1 = Window.partitionBy(
-            "host_hash", F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets))
-        ).orderBy(*order_cols)
-        allowed = allowed.withColumn("_pre", F.row_number().over(w1)).filter(
-            F.col("_pre") <= cfg.per_host_budget
-        ).drop("_pre")
-
     delay = F.coalesce(F.col("crawl_delay_s"), F.lit(cfg.default_crawl_delay_s))
-    w = Window.partitionBy("host_hash").orderBy(*order_cols)
     return (
-        allowed.withColumn("host_seq", F.row_number().over(w))
-        .filter(F.col("host_seq") <= cfg.per_host_budget)
+        _top_k_per_key(
+            allowed,
+            "host_hash",
+            ["next_fetch_ts", "priority", "url_hash"],
+            cfg.per_host_budget,
+            "host_seq",
+        )
         .withColumn(
             "planned_fetch_ts",
             F.lit(epoch_ts).cast("timestamp")
@@ -378,8 +397,6 @@ def ip_politeness(
     per_queue_budget: int = 8,
     host_col: str = "host",
     url_col: str = "url",
-    salt_buckets: int = 16,
-    skew_safe_max_budget: int = 4096,
 ) -> DataFrame:
     """Queue-by-IP politeness (Heritrix's IpAddressQueueAssignmentPolicy;
     the host-keyed scheduler in :func:`schedule_epoch` is queue-by-host):
@@ -397,11 +414,10 @@ def ip_politeness(
     queue ≤ budget by construction, which IS the shared-server
     politeness guarantee.
 
-    Scale shape: one broadcast join (resolver dim), the bounded-budget
-    two-phase rank of :func:`schedule_epoch` (a CDN address fronting
-    10^6 hosts is the skew case — the pre-rank splits it across
-    *salt_buckets* tasks, and the union of per-bucket top-k contains
-    the global top-k, so results are identical to the single window),
+    Scale shape: one broadcast join (resolver dim), the per-queue
+    top-k that :func:`schedule_epoch` uses per host (``_top_k_per_key``:
+    a CDN address fronting 10^6 hosts is the skew case, and the salted
+    pre-rank splits it across ``SALT_BUCKETS`` tasks),
     then map-side-combined aggregates per (queue, host) on both the
     full frame and the ≤budget-per-queue survivors, joined
     aggregate-to-aggregate — no corpus row crosses more than the
@@ -417,20 +433,8 @@ def ip_politeness(
         "queue_key",
         F.coalesce(F.col("ip"), F.concat(F.lit("host:"), F.col(host_col))),
     )
-    order_cols = [url_col]
-    if per_queue_budget * salt_buckets <= skew_safe_max_budget:
-        w1 = Window.partitionBy(
-            "queue_key", F.pmod(F.xxhash64(url_col), F.lit(salt_buckets))
-        ).orderBy(*order_cols)
-        pre = q.withColumn("_pre", F.row_number().over(w1)).filter(
-            F.col("_pre") <= per_queue_budget
-        ).drop("_pre")
-    else:
-        pre = q
-    w = Window.partitionBy("queue_key").orderBy(*order_cols)
     sel = (
-        pre.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= per_queue_budget)
+        _top_k_per_key(q, "queue_key", [url_col], per_queue_budget, "rn", url_col)
         .groupBy("queue_key", host_col)
         .agg(F.count(F.lit(1)).alias("n_selected_host"))
     )
@@ -885,7 +889,6 @@ def blocklist_gate(
     blocklist: DataFrame,
     host_col: str = "host",
     max_labels: int = 8,
-    url_col: str = "url",
 ) -> DataFrame:
     """UT1/squidGuard-style domain blocklist gate with subdomain
     inheritance — the category deny-list every production crawl runs at
@@ -894,30 +897,28 @@ def blocklist_gate(
     entry punches holes (``good.example.com`` with action ``allow``
     overrides the shorter block) — longest-suffix-match precedence,
     the domain-label analogue of robots' longest-path rule
-    (:mod:`operators.robots`).  Distinct from :func:`gate_frontier`'s
-    trap/circuit denials: this is policy (externally curated
-    categories), not observed behavior.
+    (:mod:`operators.robots`).  Distinct from :func:`schedule_epoch`'s
+    ``deny_hosts`` (trap/circuit denials): this is policy (externally
+    curated categories), not observed behavior.
 
     *blocklist* columns: ``(pattern, action, category)`` — pattern is
     a domain suffix on label boundaries, action ``block`` | ``allow``.
     Output: one row per input row with ``verdict`` (``blocked`` /
     ``allowed``), ``matched_pattern`` / ``category`` (NULL when no
-    entry matched; unmatched hosts default to ``allowed``).
+    entry matched; unmatched hosts default to ``allowed``).  The verdict
+    depends only on the row's host, so any other column (a NULL or
+    repeated url included) is passed through untouched.
 
     Scale shape: each host explodes into its ≤ *max_labels* ancestor
     label-suffixes (built with ``transform`` over ``split(host,'.')``
     — pure codegen, narrow), inner-joined against the BROADCAST
     blocklist (a curated list is thousands of rows), so only matching
-    suffix rows survive the join; the per-url longest-match argmax is
+    suffix rows survive the join; the per-host longest-match argmax is
     a ``max_by`` over struct (pattern length wins; suffixes of one
     host have distinct lengths, so the order is total) whose exchange
-    carries only MATCHED urls.  Verdicts join back to the corpus on
-    *url_col* — a DETERMINISTIC key the caller must keep distinct
-    (frontiers are url-keyed already; a synthetic
-    monotonically_increasing_id here would be recomputed differently
-    per plan branch under task retry / AQE re-partitioning and silently
-    attach verdicts to the wrong rows).  The join back is bounded by
-    the blocklist hit rate, broadcast under AQE at real-world rates.
+    carries only MATCHED rows.  Verdicts join back to the corpus on
+    host; that side is one row per matched host, bounded by the
+    blocklist hit rate and broadcast under AQE at real-world rates.
     A clean URL never crosses an exchange.
     """
     parts = F.split(F.col(host_col), r"\.")
@@ -928,14 +929,14 @@ def blocklist_gate(
         lambda i: F.array_join(F.slice(parts, n - i + 1, i), "."),
     )
     exploded = urls.select(
-        F.col(url_col).alias("__k"), F.explode(suffixes).alias("suffix")
+        F.col(host_col).alias("__h"), F.explode(suffixes).alias("suffix")
     )
     matched = exploded.join(
         F.broadcast(blocklist),
         exploded["suffix"] == blocklist["pattern"],
         "inner",
     )
-    best = matched.groupBy("__k").agg(
+    best = matched.groupBy("__h").agg(
         F.max_by(
             F.struct("pattern", "action", "category"),
             # suffixes of one host have distinct lengths; the pattern
@@ -944,7 +945,7 @@ def blocklist_gate(
                      F.col("pattern").alias("p")),
         ).alias("m")
     )
-    out = urls.join(best, urls[url_col] == best["__k"], "left")
+    out = urls.join(best, urls[host_col] == best["__h"], "left")
     return out.select(
         *[urls[c] for c in urls.columns],
         F.when(F.col("m.action") == "block", F.lit("blocked"))
@@ -956,25 +957,26 @@ def blocklist_gate(
 
 
 def blocklist_oracle_sql(urls_sql: str, blocklist_sql: str) -> str:
-    """DuckDB replay of :func:`blocklist_gate`: ancestor suffixes via a
-    list comprehension over the label split, the longest-match argmax
-    as a plain ``row_number`` window, allow-punches-hole precedence
-    included.  *urls_sql* must yield distinct url rows with a ``host``
-    column; *blocklist_sql* yields (pattern, action, category)."""
+    """DuckDB replay of :func:`blocklist_gate`: ancestor suffixes of each
+    distinct host via a list comprehension over the label split, the
+    longest-match argmax as a plain ``row_number`` window, allow-punches-
+    hole precedence included, joined back on host.  *urls_sql* yields
+    rows with a ``host`` column; *blocklist_sql* yields (pattern, action,
+    category)."""
     return f"""
         WITH u AS ({urls_sql}),
         bl AS ({blocklist_sql}),
         sfx AS (
-          SELECT u.*, unnest(
+          SELECT h.host, unnest(
             [array_to_string(p[len(p)-i+1:len(p)], '.')
              for i in range(1, least(len(p), 8) + 1)]
           ) AS suffix
-          FROM (SELECT *, string_split(host, '.') p FROM u) u
+          FROM (SELECT DISTINCT host, string_split(host, '.') p FROM u) h
         ),
         m AS (
-          SELECT sfx.*, bl.pattern, bl.action, bl.category,
+          SELECT sfx.host, bl.pattern, bl.action, bl.category,
                  row_number() OVER (
-                     PARTITION BY sfx.url
+                     PARTITION BY sfx.host
                      ORDER BY length(bl.pattern) DESC, bl.pattern DESC
                  ) rn
           FROM sfx JOIN bl ON sfx.suffix = bl.pattern
@@ -985,5 +987,5 @@ def blocklist_oracle_sql(urls_sql: str, blocklist_sql: str) -> str:
                     ELSE 'allowed' END AS verdict,
                b.pattern AS matched_pattern,
                b.category AS category
-        FROM u LEFT JOIN best b ON u.url = b.url
+        FROM u LEFT JOIN best b ON u.host = b.host
     """

@@ -7,16 +7,20 @@ The reference gets idempotence implicitly from Postgres upserts
 podcast_repository.rs:178-183,212-218``).  The north rule makes the seen
 set explicit at 10^10-URL scale (SURVEY.md §2.7 D3):
 
-* **Build**: each partition builds a numpy bit array over its 64-bit keys
-  (``xxhash64(canonical_url)`` — already a uniform hash, so the k probe
-  positions derive via Kirsch-Mitzenmacher double hashing h1+i·h2, no
-  per-key rehash).  PySpark does not expose Spark's internal BloomFilter
-  aggregate, hence this Arrow-batched construction (SURVEY.md §4).
-* **Probe**: membership is evaluated vectorized in numpy.  A Bloom
-  "maybe" is only an *accelerator* — candidate hits are verified exactly
-  with a ``left_anti``/``left_semi`` join so false positives can never
-  drop URLs; set equality with the reference's upsert keys is therefore
-  provable (SURVEY.md §7.2).
+* **Build**: the key space is sharded by ``pmod(url_hash, S)``, and
+  each shard's keys build one numpy bit array inside
+  ``groupBy(shard).applyInPandas`` (one hash shuffle keyed on the shard
+  id).  Keys are ``xxhash64(canonical_url)`` — already a uniform hash,
+  so the k probe positions derive via Kirsch-Mitzenmacher double hashing
+  h1+i·h2, no per-key rehash.  PySpark does not expose Spark's internal
+  BloomFilter aggregate, hence this Arrow-batched construction
+  (SURVEY.md §4).
+* **Probe**: candidates probe their own shard through a ``cogroup`` on
+  the shard id, membership evaluated vectorized in numpy.  A Bloom
+  "maybe" is only an *accelerator* — :func:`filter_unseen` verifies the
+  maybes exactly with a ``left_semi``/``left_anti`` join, so false
+  positives can never drop URLs; set equality with the reference's
+  upsert keys is therefore provable (SURVEY.md §7.2).
 * **Cuckoo fallback**: a cuckoo filter (numpy buckets, 4 slots × 16-bit
   fingerprints) supporting **delete** — used when keys must be retired
   (e.g. re-crawl after ``fetch_interval``).  All bulk operations are
@@ -24,29 +28,19 @@ set explicit at 10^10-URL scale (SURVEY.md §2.7 D3):
   slow path for an over-full bucket is scalar, as in any cuckoo
   implementation.
 
-Two deployment modes, selected by ``partitioned=``:
-
-* **Broadcast** (``partitioned=False``) — for seen sets that fit one
-  executor: per-partition filters are OR-merged on the driver and the
-  merged filter ships in the probe task closure.  Right up to ~10^8
-  keys (~120 MB at 1% fpp).
-* **Partitioned** (``partitioned=True``) — the 10^10 design point:
-  bits = -n·ln(p)/ln(2)² ⇒ at n=10^10, p=1% ~95.8 Gbit ≈ 12 GB, far too
-  big to broadcast or to materialize on the driver.  The key space is
-  sharded by ``pmod(url_hash, S)``; each shard's keys build their own
-  bloom via ``groupBy(shard).applyInPandas`` (one hash shuffle keyed on
-  the shard id — the bits live only in executors), and candidates probe
-  their own shard via a ``cogroup`` join on the shard id.  The driver
-  never sees a filter byte; each executor holds m/S bits.  A persisted
-  shard table (``bits`` per shard row) doubles as an incremental seen
-  index across epochs.
+The shard table is the one deployment mode, because it is the one that
+reaches the 10^10 design point: bits = -n·ln(p)/ln(2)² ⇒ at n=10^10,
+p=1% ~95.8 Gbit ≈ 12 GB, far too big to broadcast or to materialize on
+the driver.  The driver never sees a filter byte; each executor holds
+m/S bits.  Persisted (``bits`` per shard row) it is the incremental seen
+index across epochs (``plans/epoch.admit_urls``).
 """
 
 from __future__ import annotations
 
 import math
 from dataclasses import dataclass
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -113,73 +107,6 @@ class BloomFilter:
             )
 
 
-def build_bloom(
-    df: DataFrame,
-    key_col: str = "url_hash",
-    expected_keys: Optional[int] = None,
-    fpp: float = 0.01,
-    params: Optional[Tuple[int, int]] = None,
-) -> BloomFilter:
-    """Broadcast-mode build: per-partition numpy bit arrays, OR-merged on
-    the driver (merge payload = P × m/8 bytes, independent of row count).
-    For seen sets beyond executor memory use ``build_bloom_shards``.
-    ``params`` pins ``(num_bits, num_hashes)`` explicitly (the FPP audit
-    needs an engine-independent geometry); default derives from
-    ``bloom_params``."""
-    if params is not None:
-        num_bits, num_hashes = params
-    else:
-        if expected_keys is None:
-            expected_keys = df.count()
-        num_bits, num_hashes = bloom_params(expected_keys, fpp)
-    schema = StructType([StructField("bits", BinaryType())])
-
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bf = BloomFilter(
-            np.zeros(num_bits // 8, dtype=np.uint8), num_bits, num_hashes
-        )
-        any_rows = False
-        for pdf in batches:
-            if len(pdf):
-                any_rows = True
-                bf.add(pdf[key_col].to_numpy(dtype=np.int64))
-        if any_rows:
-            yield pd.DataFrame({"bits": [bf.bits.tobytes()]})
-
-    parts = df.select(key_col).mapInPandas(_build, schema=schema).collect()
-    merged = np.zeros(num_bits // 8, dtype=np.uint8)
-    for row in parts:
-        merged |= np.frombuffer(row.bits, dtype=np.uint8)
-    return BloomFilter(merged, num_bits, num_hashes)
-
-
-def bloom_probe(
-    df: DataFrame, bloom: BloomFilter, key_col: str = "url_hash",
-    out_col: str = "maybe_seen",
-) -> DataFrame:
-    """Vectorized membership probe; adds boolean *out_col*.  The filter is
-    shipped once per executor via the closure (Spark broadcast of the
-    serialized task), not per row."""
-    bits, num_bits, num_hashes = bloom.bits, bloom.num_bits, bloom.num_hashes
-    cols = df.columns
-    schema = StructType(df.schema.fields + [StructField(out_col, BooleanType())])
-
-    def _probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bf = BloomFilter(np.frombuffer(bits, dtype=np.uint8), num_bits, num_hashes)
-        for pdf in batches:
-            out = pdf[cols].copy()
-            out[out_col] = (
-                bf.contains(pdf[key_col].to_numpy(dtype=np.int64))
-                if len(pdf)
-                else np.zeros(0, dtype=bool)
-            )
-            yield out
-
-    return df.mapInPandas(_probe, schema=schema)
-
-
-# ---------------- partitioned (non-broadcast) mode ----------------
-
 SHARD_SCHEMA = StructType([
     StructField("shard", IntegerType(), False),
     StructField("bits", BinaryType(), False),
@@ -222,22 +149,27 @@ def build_bloom_shards(
     num_shards: int = 32,
     expected_keys: Optional[int] = None,
     fpp: float = 0.01,
+    params: Optional[Tuple[int, int]] = None,
 ) -> DataFrame:
-    """Partitioned build: shard keys by ``pmod(key, S)`` and build one
-    bloom per shard inside ``applyInPandas`` — one hash shuffle keyed on
-    the shard id, **no driver materialization, no OR-merge**.  Returns a
-    lazy ``(shard, bits, num_bits, num_hashes)`` DataFrame whose rows
-    live (and stay) on executors; persist it as a table to reuse the
-    seen index across epochs.
+    """Shard keys by ``pmod(key, S)`` and build one bloom per shard inside
+    ``applyInPandas`` — one hash shuffle keyed on the shard id, **no
+    driver materialization, no OR-merge**.  Returns a lazy
+    ``(shard, bits, num_bits, num_hashes)`` DataFrame whose rows live
+    (and stay) on executors; persist it as a table to reuse the seen
+    index across epochs.
 
-    Each shard is sized for its expected share of the keys, so total
-    memory is the same ~1.2 GB/10^9 keys as the broadcast mode but split
-    S ways across the cluster."""
-    if expected_keys is None:
-        expected_keys = df.count()
-    num_bits, num_hashes = bloom_params(
-        max(1, expected_keys // num_shards), fpp
-    )
+    Each shard is sized for its expected share of the keys (~1.2 GB per
+    10^9 keys at 1% fpp, split S ways across the cluster).  ``params``
+    pins each shard's ``(num_bits, num_hashes)`` instead (the FPP audit
+    needs an engine-independent geometry)."""
+    if params is not None:
+        num_bits, num_hashes = params
+    else:
+        if expected_keys is None:
+            expected_keys = df.count()
+        num_bits, num_hashes = bloom_params(
+            max(1, expected_keys // num_shards), fpp
+        )
 
     def _build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         bf = BloomFilter(
@@ -328,11 +260,10 @@ def bloom_probe_partitioned(
     num_shards: int = 32,
     out_col: str = "maybe_seen",
 ) -> DataFrame:
-    """Partitioned probe: candidates and shard rows are co-grouped on the
-    shard id (``cogroup`` → ``applyInPandas``) so each task probes its own
-    shard's bits vectorized.  The filter bytes move through exactly one
-    shuffle of S rows (executor→executor) and never visit the driver —
-    this is the 10^10 path the broadcast mode cannot take."""
+    """Candidates and shard rows are co-grouped on the shard id
+    (``cogroup`` → ``applyInPandas``) so each task probes its own shard's
+    bits vectorized.  The filter bytes move through exactly one shuffle
+    of S rows (executor→executor) and never visit the driver."""
     cols = candidates.columns
     schema = StructType(
         candidates.schema.fields + [StructField(out_col, BooleanType())]
@@ -364,40 +295,51 @@ def bloom_probe_partitioned(
     )
 
 
+# Exact verify of the bloom "maybe" rows: up to this many maybes the
+# seen-key scan semi-joins a broadcast of the maybe keys (the seen side is
+# never shuffled) and the hit set (at most the maybes) broadcasts back into
+# an anti-join; beyond it both sides shuffle into a plain anti-join — the
+# safe path when an admission batch is almost all duplicates at 10^9+.
+VERIFY_BROADCAST_MAX_ROWS = 4_000_000
+
+
 def filter_unseen(
     candidates: DataFrame,
-    seen: DataFrame,
-    bloom: Optional[BloomFilter],
+    shards: DataFrame,
+    seen_keys: DataFrame,
     key_col: str = "url_hash",
-    partitioned: bool = False,
     num_shards: int = 32,
-    expected_keys: Optional[int] = None,
-) -> DataFrame:
-    """Exact "not yet seen" (D3): Bloom pre-filter (definite-negatives skip
-    the join entirely) + ``left_anti`` verification of the maybes.
+) -> Tuple[DataFrame, DataFrame]:
+    """Exact "not yet seen" (D3): probe *candidates* against the shard
+    table (:func:`bloom_probe_partitioned`); definite-negatives skip the
+    verify, and the maybes are verified exactly against *seen_keys*, so a
+    false positive costs join rows, never a dropped key.  *num_shards*
+    must be the count *shards* was built with.
 
-    - ``bloom=None, partitioned=False``: plain anti-join (the semantic
-      baseline — results are identical by construction, tested).
-    - ``bloom=<BloomFilter>``: broadcast mode (filter in task closure).
-    - ``partitioned=True``: sharded mode — builds shard filters with
-      ``build_bloom_shards`` and probes via ``cogroup``; nothing filter-
-      sized ever reaches the driver.  *bloom* is ignored.
-    """
-    if partitioned:
-        shards = build_bloom_shards(
-            seen.select(key_col), key_col, num_shards, expected_keys
-        )
-        probed = bloom_probe_partitioned(
-            candidates, shards, key_col, num_shards
-        )
-    elif bloom is None:
-        return candidates.join(seen.select(key_col), key_col, "left_anti")
-    else:
-        probed = bloom_probe(candidates, bloom, key_col)
+    Returns ``(fresh, probed)``: *probed* is persisted (the maybe count
+    that picks the verify strategy reads it), so the caller unpersists it
+    once *fresh* has been consumed."""
+    probed = bloom_probe_partitioned(
+        candidates, shards, key_col, num_shards
+    ).persist()
     definite_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybes = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    verified_new = maybes.join(seen.select(key_col), key_col, "left_anti")
-    return definite_new.unionByName(verified_new)
+    n_maybes = maybes.count()
+    seen = seen_keys.select(key_col)
+    if n_maybes == 0:
+        fresh = definite_new
+    elif n_maybes <= VERIFY_BROADCAST_MAX_ROWS:
+        hits = seen.join(
+            F.broadcast(maybes.select(key_col)), key_col, "left_semi"
+        )
+        fresh = definite_new.unionByName(
+            maybes.join(F.broadcast(hits), key_col, "left_anti")
+        )
+    else:
+        fresh = definite_new.unionByName(
+            maybes.join(seen, key_col, "left_anti")
+        )
+    return fresh, probed
 
 
 # ---------------- cuckoo filter (deletable fallback) ----------------
@@ -614,9 +556,9 @@ def bloom_fpp_audit(
 ) -> DataFrame:
     """Observability for the D3 seen-set: measure the bloom filter's
     ACTUAL false-positive rate against a disjoint probe set, through the
-    production bit path (``build_bloom``'s mapInPandas partial bitmaps +
-    driver OR-merge, ``bloom_probe``'s vectorized contains — the same
-    numpy double-hashing that admits URLs in ``plans/epoch``).
+    bit path admission runs (:func:`build_bloom_shards` with one shard,
+    then :func:`bloom_probe_partitioned` — the same numpy double-hashing
+    that admits URLs in ``plans/epoch``).
 
     The reference sizes nothing and measures nothing (its seen set is
     exact rows in Postgres, `url_repository.rs`); at a 10^10-URL
@@ -642,16 +584,19 @@ def bloom_fpp_audit(
     n_false_pos, fpp_observed_ppm, fpp_target_ppm, fpp_within_2x)``.
     All integers/booleans — no float crosses the engine boundary.
 
-    Scale shape: the build is one map-side pass collapsing each
-    partition to an m/8-byte bitmap (merge payload independent of row
-    count); the probe is map-side numpy over the broadcast filter; the
-    final agg is a single global count pair.  For seen sets beyond one
-    executor's memory the same audit runs against
-    ``bloom_probe_partitioned`` — the bit math is identical.
+    Scale shape: one shard holds the whole pinned m-bit filter, so the
+    build is one shuffle of the seen keys into one task and the probe
+    one cogroup of the probe keys against that single shard row; the
+    final agg is a single global count pair.  An audit is a bounded
+    sample, not the 10^10 seen set.
     """
     n_seen = seen.count()  # bounded: one count job for the report column
-    bf = build_bloom(seen, key_col=key_col, params=(num_bits, num_hashes))
-    probed = bloom_probe(probe.select(key_col), bf, key_col=key_col)
+    shards = build_bloom_shards(
+        seen, key_col, num_shards=1, params=(num_bits, num_hashes)
+    )
+    probed = bloom_probe_partitioned(
+        probe.select(key_col), shards, key_col, num_shards=1
+    )
     agg = probed.agg(
         F.count(F.lit(1)).alias("n_probe"),
         F.sum(F.col("maybe_seen").cast("long")).alias("n_false_pos"),

@@ -714,7 +714,7 @@ def script_profile(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Writing-system detection by codepoint-range counts — the
-    coverage :func:`lang_id` (stopword markers, space-tokenized
+    coverage :func:`language_id` (stopword markers, space-tokenized
     European languages) structurally cannot give: CJK has no spaces,
     Cyrillic/Arabic share no markers.  A webtext pipeline routes on
     script FIRST (tokenizer choice, lang-ID model choice, CJK-specific

@@ -46,6 +46,11 @@ from ..operators.frontier import (
     frontier_rows,
     schedule_epoch,
 )
+from ..operators.seen import (
+    build_bloom_shards,
+    filter_unseen,
+    update_bloom_shards,
+)
 from ..operators.stats import ERROR_TYPES, categorize_error
 from .checkpoint import SnapshotTable, resolve_lww
 
@@ -75,6 +80,10 @@ _COMMIT_CONFS = {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": COMMIT_ADVISORY_BYTES,
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
 }
+
+# Largest epoch (outcome rows) whose frontier update broadcasts the
+# outcomes: 4 narrow columns, 2M rows ≈ 60 MB serialized.
+BROADCAST_OUTCOMES_MAX_ROWS = 2_000_000
 
 
 @dataclass
@@ -284,15 +293,25 @@ def run_epoch(
     )
 
     # 6. frontier update (R1-R3) + per-row stage lineage for this epoch.
-    # The outcome set is O(epoch), tiny next to a 10^10-row frontier —
-    # broadcast it below the threshold so the frontier is never shuffled
-    # for this join (it already lives hash-partitioned by host).
+    # The outcome set is O(epoch), tiny next to a 10^10-row frontier.  Up
+    # to BROADCAST_OUTCOMES_MAX_ROWS it is broadcast: the whole update is
+    # then narrow over the snapshot scan, so the stored host_hash file
+    # layout carries over and re-bucketing would be a full-frontier
+    # shuffle for nothing (the politeness window runs its own host_hash
+    # exchange regardless).  Above it both sides shuffle (the hint keeps
+    # Spark from broadcasting a small cached side on its own), so the
+    # rewrite re-buckets the frontier by host_hash.
     outcomes = parsed.select(
         "url_hash", "fetch_ok", "parse_error_kind", "parse_error_message"
     )
-    if m["total"] <= cfg.broadcast_outcomes_max_rows:
-        outcomes = F.broadcast(outcomes)
-    new_frontier = apply_epoch_results(frontier, outcomes, epoch_ts, cfg)
+    if m["total"] <= BROADCAST_OUTCOMES_MAX_ROWS:
+        new_frontier = apply_epoch_results(
+            frontier, F.broadcast(outcomes), epoch_ts, cfg
+        )
+    else:
+        new_frontier = apply_epoch_results(
+            frontier, outcomes.hint("shuffle_hash"), epoch_ts, cfg
+        ).repartition(cfg.num_partitions, "host_hash")
     new_frontier = _stamp_stages(new_frontier, epoch_ts)
 
     # 7. commit podcasts/episodes + PREPARE the frontier, all overlapped.
@@ -310,18 +329,10 @@ def run_epoch(
     # current; retry-only epochs cost zero output writes).
     from concurrent.futures import ThreadPoolExecutor
 
-    # frontier file layout decision must precede the write (see the
-    # comment at the bottom of this function for the rationale)
-    if m["total"] > cfg.broadcast_outcomes_max_rows:
-        new_frontier = new_frontier.repartition(cfg.num_partitions, "host_hash")
-
     def _commit_out(table, updates, key):
-        if table.current_snapshot_id() is None:
-            table.commit(updates, metrics={"epoch": epoch_no})
-        else:
-            table.commit_delta(
-                updates, key, "_epoch", metrics={"epoch": epoch_no}
-            )
+        # the first commit_delta (no base snapshot) writes a one-segment
+        # snapshot that reads like a plain commit
+        table.commit_delta(updates, key, "_epoch", metrics={"epoch": epoch_no})
         # periodic rewrite: resolve cost is amortized, read
         # amplification stays bounded by cfg.compact_segments
         if table.num_segments() >= cfg.compact_segments:
@@ -416,13 +427,6 @@ def run_epoch(
         metrics={"epoch": epoch_no},
     )
     metrics["wall_s"] = round(time.time() - t0, 3)
-    # Layout note (decision made before the overlapped write above): when
-    # the outcome join was broadcast the whole frontier-update plan is
-    # narrow over the snapshot scan, so the stored host_hash file layout is
-    # preserved as-is and re-bucketing would be a full-frontier shuffle for
-    # nothing (the politeness window runs its own host_hash exchange
-    # regardless).  Only re-bucket when a shuffled outcome join (or a
-    # production bucketed-table contract) actually disturbed the layout.
     # The epoch boundary = this manifest publish (outputs are durable).
     state.frontier.publish(frontier_staged, metrics=metrics)
     parsed.unpersist()
@@ -512,8 +516,6 @@ def seen_shards_current(
     expected = cfg.seen_expected_keys or max(
         (man.get("row_count") or 0) * 8, 100_000
     )
-    from ..operators.seen import build_bloom_shards
-
     shards = build_bloom_shards(
         state.frontier.read(spark).select("url_hash"),
         "url_hash",
@@ -575,10 +577,11 @@ def admit_urls(
       shuffle), and the resulting hit set (≤ maybes, tiny) broadcasts
       back into an anti-join.  False positives therefore only cost join
       rows, never a wrongly-dropped URL.  Above
-      ``cfg.verify_broadcast_max_rows`` maybes the verify falls back to
+      ``seen.VERIFY_BROADCAST_MAX_ROWS`` maybes the verify falls back to
       a plain anti-join (shuffle both sides) — the safe path when an
       admission batch is almost entirely duplicates at 10^9+ scale.
-    * **fold** — after the frontier commit the candidate keys are OR-ed
+      Probe and verify are ``seen.filter_unseen``.
+    * **fold** — before the frontier commit the candidate keys are OR-ed
       into the shard table (``seen.update_bloom_shards``: one cogroup of
       O(new keys + S rows)) and committed as the next ``seen_shards``
       snapshot.  Never a rebuild over the full frontier — the r2 design
@@ -602,9 +605,12 @@ def admit_urls(
     cand = frontier_rows(urls.select("url", "priority"), epoch_ts, cfg)
 
     if use_bloom:
-        shards = seen_shards_current(spark, state, cfg)
-        fresh, probed = _unseen_via_shards(
-            frontier, cand, shards, cfg, num_shards=_seen_num_shards(state, cfg)
+        fresh, probed = filter_unseen(
+            cand,
+            seen_shards_current(spark, state, cfg),
+            frontier,
+            "url_hash",
+            _seen_num_shards(state, cfg),
         )
         try:
             snap = _commit_admission(state, frontier, cand, fresh, cfg)
@@ -615,45 +621,6 @@ def admit_urls(
     return _commit_admission(state, frontier, cand, fresh, cfg)
 
 
-def _unseen_via_shards(
-    frontier: DataFrame,
-    cand: DataFrame,
-    shards: DataFrame,
-    cfg: CrawlConfig,
-    num_shards: int | None = None,
-):
-    """The shard-probe + exact-verify lineage (see ``admit_urls``).
-    Returns ``(fresh, probed)`` — *probed* is persisted; the caller
-    unpersists it once *fresh* has been consumed.  *num_shards* must be
-    the index's BUILD-time shard count (``_seen_num_shards``); it
-    defaults to ``cfg.num_partitions`` only for direct test callers
-    that built the shards with that same count."""
-    from ..operators.seen import bloom_probe_partitioned
-
-    probed = bloom_probe_partitioned(
-        cand, shards, "url_hash", num_shards or cfg.num_partitions
-    ).persist()
-    definite_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybes = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    # cheap after the persist above — gates the verify strategy
-    n_maybes = maybes.count()
-    seen_keys = frontier.select("url_hash")
-    if n_maybes == 0:
-        fresh = definite_new
-    elif n_maybes <= cfg.verify_broadcast_max_rows:
-        hits = seen_keys.join(
-            F.broadcast(maybes.select("url_hash")), "url_hash", "left_semi"
-        )
-        fresh = definite_new.unionByName(
-            maybes.join(F.broadcast(hits), "url_hash", "left_anti")
-        )
-    else:
-        fresh = definite_new.unionByName(
-            maybes.join(seen_keys, "url_hash", "left_anti")
-        )
-    return fresh, probed
-
-
 def _commit_admission(
     state: CrawlState,
     frontier: DataFrame,
@@ -661,8 +628,6 @@ def _commit_admission(
     fresh: DataFrame,
     cfg: CrawlConfig,
 ) -> int:
-    from ..operators.seen import update_bloom_shards
-
     # Fold the admission's keys into the persisted shard index so the next
     # admission probes a complete seen set.  Folding ALL candidate keys
     # (not just the admitted subset) is equivalent and cheaper: a

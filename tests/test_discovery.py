@@ -132,16 +132,39 @@ def test_admission_incremental_shards_equals_rebuild(spark, tmp_path_factory):
     assert exact.seen_shards.current_snapshot_id() is None
 
 
+def test_admission_shuffled_verify_matches_broadcast_verify(
+    spark, tmp_path_factory, monkeypatch
+):
+    """Above VERIFY_BROADCAST_MAX_ROWS bloom maybes the exact verify is a
+    shuffled anti-join.  With the bound at 0 every non-empty maybe set
+    takes that branch; two admission rounds (new urls, then the same urls
+    again, all maybes) leave the same frontier as the broadcast verify."""
+    from podcast_crawler_spark.operators import seen
+    from podcast_crawler_spark.plans.epoch import init_crawl
+
+    seeds = gen_seeds(spark, 40, partitions=2)
+    batch = _url_batch(spark, 0, 60)
+    frontiers = []
+    for bound in (seen.VERIFY_BROADCAST_MAX_ROWS, 0):
+        monkeypatch.setattr(seen, "VERIFY_BROADCAST_MAX_ROWS", bound)
+        root = str(tmp_path_factory.mktemp(f"verify{bound}"))
+        state = init_crawl(spark, seeds, root, EPOCH0, CFG)
+        for _ in range(2):
+            admit_urls(spark, state, batch, EPOCH0, CFG)
+        f = state.frontier.read(spark).drop("stages")
+        frontiers.append(sorted(map(tuple, f.collect()), key=lambda r: r[0]))
+    assert frontiers[1] == frontiers[0]
+    assert len({r[1] for r in frontiers[0]}) == len(frontiers[0]) > 60
+
+
 def test_admission_definite_new_never_scans_frontier(spark, tmp_path_factory):
     """O(new keys + S) admission: when the shard probe says definitely-new
     for every candidate, the admitted-set lineage contains NO scan of the
     frontier snapshot — the only frontier access is the final union for
     the commit.  (Bloom false positives add a narrow column-pruned verify
     pass; they never shuffle the frontier.)"""
-    from podcast_crawler_spark.plans.epoch import (
-        _unseen_via_shards,
-        seen_shards_current,
-    )
+    from podcast_crawler_spark.operators.seen import filter_unseen
+    from podcast_crawler_spark.plans.epoch import seen_shards_current
     from podcast_crawler_spark.functions.urlfns import (
         canonicalize_url,
         url_hash,
@@ -165,7 +188,9 @@ def test_admission_definite_new_never_scans_frontier(spark, tmp_path_factory):
         .withColumn("url_hash", url_hash(F.col("canonical_url")))
     )
     frontier = state.frontier.read(spark)
-    fresh, probed = _unseen_via_shards(frontier, cand, shards, CFG)
+    fresh, probed = filter_unseen(
+        cand, shards, frontier.select("url_hash"), "url_hash", CFG.num_partitions
+    )
     try:
         plan = fresh._jdf.queryExecution().executedPlan().toString()
         # the frontier parquet lives under <root>/frontier/data/

@@ -104,6 +104,32 @@ def test_cited_tool_scripts_exist():
     assert not missing, missing
 
 
+def test_func_references_name_package_definitions():
+    """Every ``:func:`name``` in a package docstring names a function or
+    class the package defines, so deleting or renaming one cannot leave
+    a dangling reference."""
+    import ast
+    import glob
+
+    files = glob.glob(
+        os.path.join(ROOT, "podcast_crawler_spark", "**", "*.py"), recursive=True
+    )
+    trees = {f: ast.parse(_read(f)) for f in files}
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    defined = {
+        n.name for t in trees.values() for n in ast.walk(t) if isinstance(n, defs)
+    }
+    ref = re.compile(r":func:`~?([\w.]+)`")
+    dangling = []
+    for f, tree in trees.items():
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Module,) + defs):
+                for m in ref.finditer(ast.get_docstring(node) or ""):
+                    if m.group(1).rsplit(".", 1)[-1] not in defined:
+                        dangling.append(f"{os.path.relpath(f, ROOT)}: {m.group(1)}")
+    assert not dangling, dangling
+
+
 def test_only_the_epoch_plan_commits_the_frontier():
     """``CrawlState``'s seen-index invariant: after init, the frontier
     grows only through ``admit_urls``, which folds what it admits.  So

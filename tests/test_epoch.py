@@ -123,6 +123,59 @@ def test_epoch_metrics_manifest(spark, crawl_state):
     assert mt.count() == 2
 
 
+def test_shuffled_outcome_join_matches_broadcast(
+    spark, crawl_state, tmp_path, monkeypatch
+):
+    """Above BROADCAST_OUTCOMES_MAX_ROWS the frontier update shuffles the
+    outcomes and re-buckets the frontier by host_hash.  With the bound at
+    0 every epoch takes that branch: the outcome join plans without a
+    broadcast, and the crawl leaves the same frontier rows and manifest
+    metrics as the default (broadcast) run."""
+    from podcast_crawler_spark.plans import epoch as epoch_mod
+
+    joins = []
+    apply = epoch_mod.apply_epoch_results
+
+    def spy(*args, **kwargs):
+        out = apply(*args, **kwargs)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        joins.extend(
+            ln for ln in plan.splitlines() if "Join" in ln and "o_hash" in ln
+        )
+        return out
+
+    monkeypatch.setattr(epoch_mod, "BROADCAST_OUTCOMES_MAX_ROWS", 0)
+    monkeypatch.setattr(epoch_mod, "apply_epoch_results", spy)
+    shuffled = run_crawl(
+        spark,
+        str(tmp_path),
+        gen_seeds(spark, N, partitions=4),
+        gen_pages(spark, N, partitions=4),
+        gen_robots(spark, N),
+        epochs=2,
+        epoch0=EPOCH0,
+        cfg=CFG,
+    )
+    assert len(joins) == 2 and not any("Broadcast" in ln for ln in joins), joins
+
+    def rows(state):
+        return sorted(
+            map(tuple, state.frontier.read(spark).collect()), key=lambda r: r[0]
+        )
+
+    assert rows(shuffled) == rows(crawl_state)
+    for snap in crawl_state.frontier.snapshot_ids():
+        want, got = (
+            {
+                k: v
+                for k, v in s.frontier.manifest(snap)["metrics"].items()
+                if k not in ("wall_s", "partition_lineage")
+            }
+            for s in (crawl_state, shuffled)
+        )
+        assert got == want, snap
+
+
 def _table_digest(df, cols, key):
     rows = df.select(*cols).orderBy(key).collect()
     h = hashlib.sha256()

@@ -214,15 +214,19 @@ def test_skew_safe_two_phase_schedule_identical(spark):
         " crawl_delay_s double"
     )
     budget = 5
-    single = CrawlConfig(
-        per_host_budget=budget, salt_buckets=1, num_partitions=8
-    )
-    two = CrawlConfig(per_host_budget=budget, salt_buckets=8, num_partitions=8)
-    assert two.per_host_budget * two.salt_buckets <= two.skew_safe_max_budget
+    # budget 10^9 ranks in the single window; budget 5 in two phases
+    single = CrawlConfig(per_host_budget=10**9, num_partitions=8)
+    two = CrawlConfig(per_host_budget=budget, num_partitions=8)
+    assert single.per_host_budget * fr.SALT_BUCKETS > fr.SKEW_SAFE_MAX_BUDGET
+    assert two.per_host_budget * fr.SALT_BUCKETS <= fr.SKEW_SAFE_MAX_BUDGET
     key = lambda df: {
         (r.url, r.host_seq) for r in df.select("url", "host_seq").collect()
     }
-    got_single = key(fr.schedule_epoch(frontier, robots, EPOCH0, single))
+    got_single = key(
+        fr.schedule_epoch(frontier, robots, EPOCH0, single).filter(
+            F.col("host_seq") <= budget
+        )
+    )
     got_two = key(fr.schedule_epoch(frontier, robots, EPOCH0, two))
     assert got_single == got_two
     assert len({u for u, _ in got_two if "hot" in u}) == budget
@@ -351,7 +355,7 @@ def test_schedule_epoch_deny_hosts(spark):
         gen_seeds,
     )
 
-    cfg = CrawlConfig(num_partitions=4, salt_buckets=1)
+    cfg = CrawlConfig(num_partitions=4)
     seeds = gen_seeds(spark, 40, partitions=2)
     frontier = build_frontier(seeds, EPOCH0, cfg)
     robots = gen_robots(spark, 40, partitions=2)
@@ -472,13 +476,24 @@ def test_ip_politeness_shared_budget_and_fallback(spark):
     assert rows["h3"].queue_key == "host:h3"
     assert rows["h3"].n_selected_host == 5
     assert all(r.n_urls_host == 10 for r in rows.values())
-    # two-phase (salted pre-rank) == single window, bit for bit
-    single = ip_politeness(
-        urls, hostmap, per_queue_budget=5, skew_safe_max_budget=0
+    # two-phase (salted pre-rank) == a plain per-queue window
+    from pyspark.sql import Window
+
+    queue = F.coalesce(F.col("ip"), F.concat(F.lit("host:"), F.col("host")))
+    ranked = (
+        urls.join(hostmap, "host", "left")
+        .withColumn("queue_key", queue)
+        .withColumn(
+            "rn",
+            F.row_number().over(Window.partitionBy("queue_key").orderBy("url")),
+        )
     )
-    assert sorted(map(tuple, out.collect())) == sorted(
-        map(tuple, single.collect())
+    single = ranked.groupBy("host").agg(
+        F.sum((F.col("rn") <= 5).cast("long")).alias("n")
     )
+    assert {r.host: r.n_selected_host for r in out.collect()} == {
+        r.host: r.n for r in single.collect()
+    }
 
 
 def test_robots_availability_policy(spark):
@@ -821,3 +836,32 @@ def test_blocklist_gate_inheritance_and_precedence(spark):
     assert out["good.bad.net"].matched_pattern == "good.bad.net"
     assert out["clean.org"].verdict == "allowed"
     assert out["clean.org"].category is None
+
+
+def test_blocklist_gate_verdict_keys_on_host(spark):
+    """The verdict depends only on the host: a NULL url on a blocked host
+    comes back blocked, and one url listed under two hosts gets each
+    host's own verdict."""
+    from podcast_crawler_spark.operators.frontier import blocklist_gate
+
+    urls = spark.createDataFrame(
+        [
+            (None, "ads.example.com"),
+            ("https://x/", "ads.example.com"),
+            ("https://x/", "clean.org"),
+        ],
+        "url string, host string",
+    )
+    bl = spark.createDataFrame(
+        [("example.com", "block", "spam")],
+        "pattern string, action string, category string",
+    )
+    got = sorted(
+        (r.url or "", r.host, r.verdict, r.matched_pattern)
+        for r in blocklist_gate(urls, bl).collect()
+    )
+    assert got == [
+        ("", "ads.example.com", "blocked", "example.com"),
+        ("https://x/", "ads.example.com", "blocked", "example.com"),
+        ("https://x/", "clean.org", "allowed", None),
+    ]

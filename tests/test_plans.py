@@ -89,7 +89,7 @@ def test_politeness_window_single_shuffle(spark):
         gen_seeds,
     )
 
-    cfg = CrawlConfig(num_partitions=4, salt_buckets=1)
+    cfg = CrawlConfig(num_partitions=4, per_host_budget=10**9)
     seeds = gen_seeds(spark, 50, partitions=2)
     frontier = build_frontier(seeds, EPOCH0, cfg)
     robots = gen_robots(spark, 50, partitions=2)

@@ -1,5 +1,6 @@
-"""Seen-set: Bloom build/probe (no false negatives), exact equality of
-bloom-accelerated filter_unseen with the plain anti-join, cuckoo fallback."""
+"""Seen-set: Bloom shard build/probe (no false negatives), exact equality
+of the shard-probed filter_unseen with the plain anti-join, cuckoo
+fallback."""
 
 from __future__ import annotations
 
@@ -12,9 +13,7 @@ from podcast_crawler_spark.operators.seen import (
     BloomFilter,
     CuckooFilter,
     bloom_params,
-    bloom_probe,
     bloom_probe_partitioned,
-    build_bloom,
     build_bloom_shards,
     cuckoo_filter_unseen,
     filter_unseen,
@@ -36,43 +35,36 @@ def test_bloom_params_math():
 
 def test_bloom_no_false_negatives_and_low_fpp(spark):
     seen = _keys_df(spark, 0, 5_000).cache()
-    bloom = build_bloom(seen, expected_keys=5_000, fpp=0.01)
+    shards = build_bloom_shards(seen, num_shards=4, expected_keys=5_000)
     # every inserted key must hit
-    probed = bloom_probe(seen, bloom)
+    probed = bloom_probe_partitioned(seen, shards, num_shards=4)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
     # disjoint keys: fpp should be near target
     fresh = _keys_df(spark, 1_000_000, 1_010_000)
-    fp = bloom_probe(fresh, bloom).filter(F.col("maybe_seen")).count()
+    fp = (
+        bloom_probe_partitioned(fresh, shards, num_shards=4)
+        .filter(F.col("maybe_seen"))
+        .count()
+    )
     assert fp / 10_000 < 0.03
 
 
-def test_filter_unseen_exact_equality(spark):
+def test_partitioned_filter_unseen_equality(spark):
+    """filter_unseen (shard probe + exact verify of the maybes) returns
+    exactly the plain anti-join's rows."""
     seen = _keys_df(spark, 0, 3_000).cache()
     candidates = _keys_df(spark, 2_000, 6_000).cache()  # 1k overlap
-    bloom = build_bloom(seen, expected_keys=3_000)
-    with_bloom = set(
-        r.id for r in filter_unseen(candidates, seen, bloom).collect()
-    )
+    shards = build_bloom_shards(seen, num_shards=8, expected_keys=3_000)
+    fresh, probed = filter_unseen(candidates, shards, seen, num_shards=8)
+    try:
+        part = set(r.id for r in fresh.collect())
+    finally:
+        probed.unpersist()
     exact = set(
-        r.id for r in filter_unseen(candidates, seen, None).collect()
-    )
-    assert with_bloom == exact
-    assert exact == set(range(3_000, 6_000))
-
-
-def test_partitioned_filter_unseen_equality(spark):
-    """The partitioned (sharded, cogroup-probed) mode returns exactly the
-    plain anti-join's rows — same guarantee as the broadcast mode."""
-    seen = _keys_df(spark, 0, 3_000).cache()
-    candidates = _keys_df(spark, 2_000, 6_000).cache()
-    part = set(
         r.id
-        for r in filter_unseen(
-            candidates, seen, None, partitioned=True, num_shards=8,
-            expected_keys=3_000,
-        ).collect()
+        for r in candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
+        .collect()
     )
-    exact = set(r.id for r in filter_unseen(candidates, seen, None).collect())
     assert part == exact == set(range(3_000, 6_000))
 
 
