@@ -2230,84 +2230,20 @@ def _sitemap_scan(spark, sf_dir):
     return sitemap.scan_sitemaps(docs)
 
 
-from podcast_crawler_spark.operators import robots as _robots
-
-
-def _robots_mod():
-    return _robots
-
-
-from podcast_crawler_spark.operators import links as _links
-
-
-def _links_mod():
-    return _links
-
-
-from podcast_crawler_spark.operators import placement as _placement
-
-
-def _placement_mod():
-    return _placement
-
-
-from podcast_crawler_spark.operators import frontier as _frontier
-
-
-def _frontier_mod():
-    return _frontier
-
-
-from podcast_crawler_spark.operators import sampling as _sampling
-
-
-def _sampling_mod():
-    return _sampling
-
-
-from podcast_crawler_spark.operators import seen as _seen
-
-
-def _seen_mod():
-    return _seen
-
-
-from podcast_crawler_spark.operators import refetch as _refetch
-
-
-def _refetch_mod():
-    return _refetch
-
-
-from podcast_crawler_spark.operators import similarity as _similarity
-
-
-def _similarity_mod():
-    return _similarity
-
-from podcast_crawler_spark.operators import traps as _traps
-
-
-def _traps_mod():
-    return _traps
-
-from podcast_crawler_spark.operators import sitemap as _sitemap
-
-
-def _sitemap_mod():
-    return _sitemap
-
-from podcast_crawler_spark.operators import temporal as _temporal
-
-
-def _temporal_mod():
-    return _temporal
-
-from podcast_crawler_spark.operators import stats as _statsop
-
-
-def _stats_mod():
-    return _statsop
+from podcast_crawler_spark.operators import (
+    frontier as _frontier,
+    links as _links,
+    placement as _placement,
+    refetch as _refetch,
+    robots as _robots,
+    sampling as _sampling,
+    seen as _seen,
+    similarity as _similarity,
+    sitemap as _sitemap,
+    stats as _statsop,
+    temporal as _temporal,
+    traps as _traps,
+)
 
 
 _RING_WORKERS = [f"w{i:02d}" for i in range(16)]
@@ -3674,7 +3610,7 @@ def _dsir_weights(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").withColumn(
         "is_en", F.col("lang") == "en"
     )
-    return sampling_mod().dsir_weights(docs, "is_en")
+    return _sampling.dsir_weights(docs, "is_en")
 
 
 def _weighted_sample(spark, sf_dir):
@@ -3685,15 +3621,9 @@ def _weighted_sample(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("long").alias("weight")
     )
-    return sampling_mod().weighted_bottom_k(
+    return _sampling.weighted_bottom_k(
         docs, key_col="doc_id", weight_col="weight", k=100
     )
-
-
-def sampling_mod():
-    from podcast_crawler_spark.operators import sampling
-
-    return sampling
 
 
 def _bpe_encode(spark, sf_dir):
@@ -3744,7 +3674,7 @@ def _dataset_split(spark, sf_dir):
     # leakage-safe train/val/test assignment keyed by SOURCE (whole
     # groups land in one split -- the near-dup leakage guard); pure
     # hash rule, engine-exact.
-    return sampling_mod().dataset_split(
+    return _sampling.dataset_split(
         _t(spark, sf_dir, "documents").select("doc_id", "source"),
         key_col="source",
         val_pct=10,
@@ -6155,10 +6085,7 @@ def _bm25_oracle(terms=None, k=_BM25_K, k1=1.2, b=0.75) -> str:
 # --- episode_rank analytics tier (reference schema.rs:3-21, the last
 # reference table to get a repo counterpart) -------------------------------
 
-def _rank_mod():
-    from podcast_crawler_spark.operators import rank_analytics
-
-    return rank_analytics
+from podcast_crawler_spark.operators import rank_analytics as _rank
 
 
 def _episode_rank_raw(spark, sf_dir):
@@ -6212,30 +6139,28 @@ def _episode_rank_ingest(spark, sf_dir):
     # ingest-normalize the raw batch into the episode_rank model shape
     # with the two derived columns (open_rate_ppm, last_release_day_
     # count) computed integer-exactly; invalid rows dropped.
-    return _rank_mod().episode_rank_ingest(_episode_rank_raw(spark, sf_dir))
+    return _rank.episode_rank_ingest(_episode_rank_raw(spark, sf_dir))
 
 
 def _episode_rank_top(spark, sf_dir):
     # the chart query the episode_rank table serves: top-3 episodes per
     # genre by plays, deterministic tie-break, WindowGroupLimit plan.
-    m = _rank_mod()
-    return m.rank_top_by_genre(
-        m.episode_rank_ingest(_episode_rank_raw(spark, sf_dir)), k=3
+    return _rank.rank_top_by_genre(
+        _rank.episode_rank_ingest(_episode_rank_raw(spark, sf_dir)), k=3
     )
 
 
 def _podcast_rank_rollup(spark, sf_dir):
     # episode_rank -> podcast_rank avg_* columns (schema.rs:54-75):
     # one map-side-combined aggregate keyed on podcast_id.
-    m = _rank_mod()
-    return m.podcast_rank_rollup(
-        m.episode_rank_ingest(_episode_rank_raw(spark, sf_dir)),
+    return _rank.podcast_rank_rollup(
+        _rank.episode_rank_ingest(_episode_rank_raw(spark, sf_dir)),
         active_window_days=90,
     )
 
 
 def _eprank_ingest_sql():
-    return _rank_mod().episode_rank_ingest_oracle_sql(_EPRANK_RAW_SQL)
+    return _rank.episode_rank_ingest_oracle_sql(_EPRANK_RAW_SQL)
 
 
 def _rank_momentum(spark, sf_dir):
@@ -6251,7 +6176,7 @@ def _rank_momentum(spark, sf_dir):
         e.alias("epoch"),
         (F.lit(1) + (p * 31 + e * (p % 7)) % 100).alias("rank"),
     )
-    return _rank_mod().rank_momentum(obs)
+    return _rank.rank_momentum(obs)
 
 
 _RANK_OBS_SQL = """
@@ -6628,16 +6553,16 @@ def oracle_sql() -> dict[str, str]:
         """,
         # UCB1: every pull replayed — integer means, ln literals,
         # correctly-rounded sqrt bonus, (score desc, host) top-m ranks
-        "ucb_host_select": _placement_mod().ucb_oracle_sql(
+        "ucb_host_select": _placement.ucb_oracle_sql(
             _UCB_REWARDS_SQL, epochs=8, m=4
         ),
-        "eps_greedy_assign": _placement_mod().epsilon_greedy_oracle_sql(
+        "eps_greedy_assign": _placement.epsilon_greedy_oracle_sql(
             "select event_id::VARCHAR as task_id from events",
             "select n_name as worker_id, (n_nationkey % 4)::INT as"
             " queue_len, ((n_regionkey + 1) / 5.0)::DOUBLE as similarity"
             " from nation",
         ),
-        "ip_asn": _placement_mod().asn_oracle_sql(
+        "ip_asn": _placement.asn_oracle_sql(
             _ASN_IPS_SQL, _ASN_RANGES_SQL
         ),
         "keyset_page": """
@@ -6895,7 +6820,7 @@ def oracle_sql() -> dict[str, str]:
         # robots Sitemap directives: expected rows re-derived from the
         # synthesis formula (a stray Sitemap line in a fixture body
         # would surface as a mismatch — tripwire by construction)
-        "robots_rfc_match": _robots_mod().rfc9309_oracle_sql(
+        "robots_rfc_match": _robots.rfc9309_oracle_sql(
             """
     select 'h' || (o_orderkey % 11)::varchar as host,
            case when o_orderkey % 6 = 0 then
@@ -7245,10 +7170,10 @@ def oracle_sql() -> dict[str, str]:
                    description
             from rows_
         """,
-        "sitemap_coverage": _sitemap_mod().coverage_oracle_sql(
+        "sitemap_coverage": _sitemap.coverage_oracle_sql(
             _SM_ENTRIES_SQL, _SM_FETCHED_SQL
         ),
-        "ip_rotation": _traps_mod().ip_rotation_oracle_sql(
+        "ip_rotation": _traps.ip_rotation_oracle_sql(
             _IPROT_HISTORY_SQL
         ),
         "sitemap_refresh": """
@@ -7408,58 +7333,58 @@ def oracle_sql() -> dict[str, str]:
             _MIRROR_HD_SQL, min_shared=2, max_digest_hosts=1000
         ),
         "jsonld_extract": htmltext.jsonld_oracle_sql(_JSONLD_PAGES_SQL),
-        "page_directives": _links_mod().directives_oracle_sql(
+        "page_directives": _links.directives_oracle_sql(
             _DIRECTIVE_PAGES_SQL
         ),
         "frontier_gating": _frontier_gating_oracle(),
         # link farms: host-keyed integer-ppm aggregation replay
-        "link_farm_detect": _links_mod().link_farm_oracle_sql(
+        "link_farm_detect": _links.link_farm_oracle_sql(
             _LINK_FARM_EDGES_SQL
         ),
         "chunk_documents": curation.chunk_oracle_sql(
             "select doc_id as id, text from documents",
             chunk_tokens=32, overlap=8,
         ),
-        "delay_compliance": _refetch_mod().compliance_oracle_sql(
+        "delay_compliance": _refetch.compliance_oracle_sql(
             _DC_FETCH_SQL, _DC_DECLARED_SQL
         ),
-        "effective_delay": _refetch_mod().effective_delay_oracle_sql(
+        "effective_delay": _refetch.effective_delay_oracle_sql(
             _ED_ROBOTS_SQL, _ED_LATENCY_SQL, _ED_RETRY_SQL
         ),
-        "retry_after": _refetch_mod().retry_after_oracle_sql(
+        "retry_after": _refetch.retry_after_oracle_sql(
             _RAF_ROWS_SQL, now_unix=_RAF_NOW
         ),
-        "robots_availability": _robots_mod().availability_oracle_sql(
+        "robots_availability": _robots.availability_oracle_sql(
             _RA_OUTCOMES_SQL, now_unix=_RA_NOW
         ),
-        "refetch_decision": _refetch_mod().decision_oracle_sql(
-            _refetch_mod().cache_ttl_oracle_sql(_RD_ROWS_SQL),
+        "refetch_decision": _refetch.decision_oracle_sql(
+            _refetch.cache_ttl_oracle_sql(_RD_ROWS_SQL),
             _RD_ROWS_SQL,
             now_unix=_RD_NOW,
         ),
-        "jl_project": _similarity_mod().jl_oracle_sql(
+        "jl_project": _similarity.jl_oracle_sql(
             "select vec_id, embedding from embeddings",
             in_dim=64, out_dim=8,
         ),
-        "change_rates": _refetch_mod().change_rate_oracle_sql(
+        "change_rates": _refetch.change_rate_oracle_sql(
             _CRS_FETCHES_SQL
         ),
-        "byte_budget": _frontier_mod().byte_budget_oracle_sql(
+        "byte_budget": _frontier.byte_budget_oracle_sql(
             _BB_URLS_SQL, per_host_bytes=100_000
         ),
-        "soft404_stats": _traps_mod().soft404_oracle_sql(
+        "soft404_stats": _traps.soft404_oracle_sql(
             _S404_PAGES_SQL
         ),
-        "priority_aging": _frontier_mod().aged_priority_oracle_sql(
+        "priority_aging": _frontier.aged_priority_oracle_sql(
             _AGE_URLS_SQL, now_unix=_AGE_NOW, max_boost=60
         ),
-        "ip_politeness": _frontier_mod().ip_politeness_oracle_sql(
+        "ip_politeness": _frontier.ip_politeness_oracle_sql(
             _IPQ_URLS_SQL, _IPQ_MAP_SQL, per_queue_budget=5
         ),
-        "feed_autodiscovery": _links_mod().autodiscovery_oracle_sql(
+        "feed_autodiscovery": _links.autodiscovery_oracle_sql(
             _AUTODISC_PAGES_SQL
         ),
-        "scheme_upgrades": _links_mod().scheme_oracle_sql(
+        "scheme_upgrades": _links.scheme_oracle_sql(
             _SCHEME_URLS_SQL
         ),
         "canonical_groups": (
@@ -7472,13 +7397,13 @@ def oracle_sql() -> dict[str, str]:
                          n_canonicalized
                 from pd group by 1
             """
-        )(_links_mod().directives_oracle_sql(_DIRECTIVE_PAGES_SQL)),
-        "consistent_placement": _placement_mod().assign_oracle_sql(
+        )(_links.directives_oracle_sql(_DIRECTIVE_PAGES_SQL)),
+        "consistent_placement": _placement.assign_oracle_sql(
             f"select host, host as key from ({_PLACEMENT_KEYS_SQL}) k",
             _RING_WORKERS,
             vnodes=32,
         ),
-        "ring_rebalance": _placement_mod().rebalance_oracle_sql(
+        "ring_rebalance": _placement.rebalance_oracle_sql(
             f"select host as key from ({_PLACEMENT_KEYS_SQL}) k",
             _RING_WORKERS,
             _RING_WORKERS + ["w16"],
@@ -7507,13 +7432,13 @@ def oracle_sql() -> dict[str, str]:
         "normalize_text": textstats.normalize_oracle_sql(
             _normalize_docs_sql()
         ),
-        "weighted_sample": sampling_mod().weighted_oracle_sql(
+        "weighted_sample": _sampling.weighted_oracle_sql(
             "select doc_id, n_chars::BIGINT as weight,"
             " doc_id as key from documents",
             k=100,
         ),
         # DSIR: hashed-ngram histograms + integer micro log-ratios
-        "dsir_weights": sampling_mod().dsir_oracle_sql(),
+        "dsir_weights": _sampling.dsir_oracle_sql(),
         "bpe_encode": textstats.bpe_encode_oracle_sql(
             "select doc_id as id, text from documents", _BPE_MERGES
         ),
@@ -7526,7 +7451,7 @@ def oracle_sql() -> dict[str, str]:
         "split_leakage": curation.split_leakage_oracle_sql(
             _SL_ROWS_SQL, "doc_id"
         ),
-        "dataset_split": sampling_mod().split_oracle_sql(
+        "dataset_split": _sampling.split_oracle_sql(
             "select doc_id, source from documents", "source",
             val_pct=10, test_pct=10,
         ),
@@ -7609,18 +7534,18 @@ def oracle_sql() -> dict[str, str]:
             FROM u
         """,
         # html->text: expected output constructed from components
-        "host_scorecard": _refetch_mod().scorecard_oracle_sql(
-            _refetch_mod().latency_oracle_sql(_SC_LAT_SQL),
-            _refetch_mod().validator_oracle_sql(_SC_VAL_SQL),
+        "host_scorecard": _refetch.scorecard_oracle_sql(
+            _refetch.latency_oracle_sql(_SC_LAT_SQL),
+            _refetch.validator_oracle_sql(_SC_VAL_SQL),
             f"""
                 select split_part(url, '/', 1) as host,
                        (sum(change_ppm) // count(*))::BIGINT as change_ppm
-                from ({_refetch_mod().change_rate_oracle_sql(
+                from ({_refetch.change_rate_oracle_sql(
                     _SC_FETCH_SQL)}) cr
                 group by 1
             """,
         ),
-        "host_concentration": _stats_mod().concentration_oracle_sql(
+        "host_concentration": _statsop.concentration_oracle_sql(
             _HC_URLS_SQL
         ),
         "boilerplate_stats": """
@@ -7811,7 +7736,7 @@ def oracle_sql() -> dict[str, str]:
         "c4_clean": curation.c4_oracle_sql(_C4_DOCS_SQL),
         # robots policy churn: both eras' longest-match argmaxes and
         # every transition label replayed over the same URL set
-        "robots_policy_diff": _robots_mod().policy_diff_oracle_sql(
+        "robots_policy_diff": _robots.policy_diff_oracle_sql(
             """
     select 'h' || (o_orderkey % 11)::varchar as host,
            case when o_orderkey % 6 = 0 then
@@ -8277,7 +8202,7 @@ def oracle_sql() -> dict[str, str]:
                   < (case lang when 'en' then 0.5 when 'de' then 0.1
                      else 0.25 end * 4294967296)::BIGINT
         """,
-        "temperature_mixture": _sampling_mod().temperature_oracle_sql(
+        "temperature_mixture": _sampling.temperature_oracle_sql(
             "select doc_id, lang, n_chars from documents",
             "doc_id", "lang", "n_chars",
         ),
@@ -8649,7 +8574,7 @@ def oracle_sql() -> dict[str, str]:
         # construction, so per-char codepoints ARE the int8 sample values;
         # squares are exact integers in float64 ⇒ the mean/sqrt/round chain
         # is bit-deterministic across engines
-        "burst_detection": _temporal_mod().burst_oracle_sql(
+        "burst_detection": _temporal.burst_oracle_sql(
             _BURST_EVENTS_SQL
         ),
         "image_ahash_dups": f"""
@@ -8927,23 +8852,23 @@ def oracle_sql() -> dict[str, str]:
         "wet_export": _wet_export_oracle(),
         # domain blocklist: ancestor suffixes, longest-match argmax,
         # allow-punches-hole precedence all replayed
-        "blocklist_gate": _frontier_mod().blocklist_oracle_sql(
+        "blocklist_gate": _frontier.blocklist_oracle_sql(
             _BLOCKLIST_URLS_SQL, _BLOCKLIST_SQL
         ),
         # seen-shard capacity plan: integer divisions, NULL/0 epoch
         # cases, bit-length power-of-two rebuild geometry
-        "bloom_capacity_plan": _seen_mod().capacity_plan_oracle_sql(
+        "bloom_capacity_plan": _seen.capacity_plan_oracle_sql(
             _SHARDS_SQL, bits_per_key=10, horizon_epochs=30
         ),
         # exact stratified holdout: largest-remainder allocation and
         # every md5 rank vs a naive per-stratum window
-        "holdout_allocation": _sampling_mod().holdout_oracle_sql(
+        "holdout_allocation": _sampling.holdout_oracle_sql(
             "select doc_id id, lang, source from documents",
             holdout_total=100,
         ),
         # per-source CUSUM drift: identical windows, same prefix-min
         # identity, every alarm epoch replayed
-        "quality_drift": _stats_mod().drift_oracle_sql(
+        "quality_drift": _statsop.drift_oracle_sql(
             _DRIFT_DOCS_SQL, baseline_epochs=3,
             slack_k=5_000_000, threshold_h=300_000_000,
         ),
@@ -8954,7 +8879,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         # TTL'd seen set: latest-admission ages and every
         # skip/readmit/new decision replayed
-        "seen_ttl": _seen_mod().seen_ttl_oracle_sql(
+        "seen_ttl": _seen.seen_ttl_oracle_sql(
             """select 'u' || cast(event_id % 4000 as varchar) as key,
                       user_id % 40 as admit_epoch from events""",
             """select 'u' || cast(o_orderkey % 6000 as varchar) as key
@@ -8976,16 +8901,16 @@ def oracle_sql() -> dict[str, str]:
         ),
         # dead-link lifecycle: precedence chain, trailing failed run
         # (fold vs last-success position) and shifted backoff replayed
-        "url_tombstones": _refetch_mod().tombstone_oracle_sql(
+        "url_tombstones": _refetch.tombstone_oracle_sql(
             _TOMBSTONE_FETCHES_SQL
         ),
         # episode_rank tier (reference schema.rs:3-21 / 54-75): ingest
         # gate + derived ppm columns, per-genre chart, podcast rollup
         "episode_rank_ingest": _eprank_ingest_sql(),
-        "episode_rank_top": _rank_mod().rank_top_by_genre_oracle_sql(
+        "episode_rank_top": _rank.rank_top_by_genre_oracle_sql(
             _eprank_ingest_sql(), k=3
         ),
-        "podcast_rank_rollup": _rank_mod().podcast_rank_rollup_oracle_sql(
+        "podcast_rank_rollup": _rank.podcast_rank_rollup_oracle_sql(
             _eprank_ingest_sql(), active_window_days=90
         ),
         # streaming ≡ batch equivalence: the oracle replays only the
@@ -9028,13 +8953,13 @@ def oracle_sql() -> dict[str, str]:
         """,
         "stream_circuit_equiv": (
             "select *, true as stream_matches from ("
-            + _refetch_mod().circuit_oracle_sql(
+            + _refetch.circuit_oracle_sql(
                 _CIRCUIT_EQUIV_OBS_SQL, k_open=3, max_backoff=64
             )
             + ")"
         ),
         # chart-movement trend over the rank observations (lag window)
-        "rank_momentum": _rank_mod().rank_momentum_oracle_sql(
+        "rank_momentum": _rank.rank_momentum_oracle_sql(
             _RANK_OBS_SQL
         ),
     }

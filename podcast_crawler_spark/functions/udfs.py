@@ -14,7 +14,8 @@ expressions for use outside the parse UDF.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Sequence
+from operator import itemgetter
+from typing import Iterator, Sequence
 
 import pandas as pd
 
@@ -23,51 +24,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..feedparse.rssparse import parse_feed_result
-from .schemas import PARSE_RESULT_FIELDS
+from .schemas import EPISODE_STRUCT, PARSE_RESULT_FIELDS, PODCAST_STRUCT
 
-_PARSE_COL_NAMES = [f.name for f in PARSE_RESULT_FIELDS]
-
-
-def _episode_tuple(ep: dict) -> tuple:
-    return (
-        ep["episode_image_url"],
-        ep["title"],
-        ep["description"],
-        ep["link"],
-        ep["pub_date"],
-        ep["guid"],
-        ep["enclosure_url"],
-        ep["enclosure_type"],
-        ep["enclosure_length"],
-        ep["explicit"],
-        ep["subtitle"],
-        ep["author"],
-        ep["summary"],
-        ep["keywords"],
-        ep["category"],
-        ep["duration"],
-    )
-
-
-def _podcast_tuple(p: dict) -> tuple:
-    return (
-        p["title"],
-        p["description"],
-        p["link"],
-        p["last_build_date"],
-        p["language"],
-        p["copyright"],
-        p["image_url"],
-        p["rss_feed_url"],
-        p["category"],
-        p["author"],
-        p["owner_name"],
-        p["owner_email"],
-        p["keywords"],
-        p["explicit"],
-        p["summary"],
-        p["subtitle"],
-    )
+# parse-result dict -> struct tuple, in the schema's field order
+_episode_row = itemgetter(*EPISODE_STRUCT.names)
+_podcast_row = itemgetter(*PODCAST_STRUCT.names)
 
 
 def parse_pages(df: DataFrame, passthrough: Sequence[str] = ("url",)) -> DataFrame:
@@ -98,11 +59,11 @@ def parse_pages(df: DataFrame, passthrough: Sequence[str] = ("url",)) -> DataFra
             ]
             out = {c: pdf[c] for c in passthrough}
             out["podcast"] = [
-                _podcast_tuple(r["podcast"]) if r["podcast"] is not None else None
+                _podcast_row(r["podcast"]) if r["podcast"] is not None else None
                 for r in results
             ]
             out["episodes"] = [
-                [_episode_tuple(e) for e in r["episodes"]]
+                [_episode_row(e) for e in r["episodes"]]
                 if r["episodes"] is not None
                 else None
                 for r in results
@@ -115,19 +76,19 @@ def parse_pages(df: DataFrame, passthrough: Sequence[str] = ("url",)) -> DataFra
     return base.mapInPandas(_run, schema=out_schema)
 
 
-def explode_episodes(parsed: DataFrame, feed_key: str = "url") -> DataFrame:
+def explode_episodes(parsed: DataFrame) -> DataFrame:
     """UDTF-equivalent: 1 feed row → N episode rows (SURVEY.md §2.11),
-    carrying the parent feed key so J2's podcast_id assignment is a
+    carrying the parent feed ``url`` so J2's podcast_id assignment is a
     shuffle-free inherit (podcast_id = xxhash64(rss_feed_url))."""
     ok = parsed.filter(F.col("parse_error_kind").isNull())
     return (
         ok.select(
-            F.col(feed_key),
+            "url",
             F.col("podcast.rss_feed_url").alias("rss_feed_url"),
             F.explode("episodes").alias("episode"),
         )
         .select(
-            F.col(feed_key),
+            "url",
             "rss_feed_url",
             F.xxhash64("rss_feed_url").alias("podcast_id"),
             "episode.*",

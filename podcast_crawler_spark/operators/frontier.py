@@ -244,7 +244,6 @@ def schedule_epoch(
     robots: DataFrame,
     epoch_ts: datetime,
     cfg: CrawlConfig = CrawlConfig(),
-    deny_hosts: "DataFrame | None" = None,
 ) -> DataFrame:
     """W4+W5: select due pending rows, apply robots, rank them per host by
     ``(next_fetch_ts, priority, url_hash)`` and keep the per-host budget.
@@ -269,17 +268,6 @@ def schedule_epoch(
         (F.col("state") != FAILED)
         & (F.col("next_fetch_ts") <= F.lit(epoch_ts).cast("timestamp"))
     )
-    if deny_hosts is not None:
-        # operational deny-list (trap hosts, circuit-open hosts — see
-        # the frontier_gating composition): broadcast anti-join on
-        # host, the same never-shuffle-the-frontier discipline as the
-        # robots join.  Rows come back when the breaker closes / the
-        # trap rule clears; robots denial below stays authoritative.
-        due = due.join(
-            F.broadcast(deny_hosts.select("host").distinct()),
-            "host",
-            "left_anti",
-        )
     allowed = robots_filter(due, robots).filter(~F.col("robots_denied"))
 
     delay = F.coalesce(F.col("crawl_delay_s"), F.lit(cfg.default_crawl_delay_s))
@@ -897,9 +885,9 @@ def blocklist_gate(
     entry punches holes (``good.example.com`` with action ``allow``
     overrides the shorter block) — longest-suffix-match precedence,
     the domain-label analogue of robots' longest-path rule
-    (:mod:`operators.robots`).  Distinct from :func:`schedule_epoch`'s
-    ``deny_hosts`` (trap/circuit denials): this is policy (externally
-    curated categories), not observed behavior.
+    (:mod:`operators.robots`).  Distinct from the trap/circuit deny
+    list of the ``frontier_gating`` driver query: this is policy
+    (externally curated categories), not observed behavior.
 
     *blocklist* columns: ``(pattern, action, category)`` — pattern is
     a domain suffix on label boundaries, action ``block`` | ``allow``.

@@ -33,7 +33,11 @@ reaches the 10^10 design point: bits = -n·ln(p)/ln(2)² ⇒ at n=10^10,
 p=1% ~95.8 Gbit ≈ 12 GB, far too big to broadcast or to materialize on
 the driver.  The driver never sees a filter byte; each executor holds
 m/S bits.  Persisted (``bits`` per shard row) it is the incremental seen
-index across epochs (``plans/epoch.admit_urls``).
+index across epochs (``plans/epoch.admit_urls``).  Its layout — the
+shard count S and the expected key count — is fixed when the index is
+built: the caller records it beside the index and passes it back to
+every probe (*num_shards*) and fold (*expected_keys_per_shard*); no
+function here guesses it.
 """
 
 from __future__ import annotations
@@ -133,6 +137,18 @@ def _one_shard_row(shard: pd.DataFrame) -> None:
         )
 
 
+def _shard_row(shard: int, bf: BloomFilter) -> pd.DataFrame:
+    """The one-row frame a shard's build or fold task returns."""
+    return pd.DataFrame(
+        {
+            "shard": [shard],
+            "bits": [bf.bits.tobytes()],
+            "num_bits": [bf.num_bits],
+            "num_hashes": [bf.num_hashes],
+        }
+    )
+
+
 def _free_col_name(df: DataFrame, base: str) -> str:
     """A grouping-column name that cannot clobber caller data: suffix
     underscores until it's free (a caller whose candidates already carry
@@ -148,7 +164,6 @@ def build_bloom_shards(
     key_col: str = "url_hash",
     num_shards: int = 32,
     expected_keys: Optional[int] = None,
-    fpp: float = 0.01,
     params: Optional[Tuple[int, int]] = None,
 ) -> DataFrame:
     """Shard keys by ``pmod(key, S)`` and build one bloom per shard inside
@@ -158,8 +173,8 @@ def build_bloom_shards(
     (and stay) on executors; persist it as a table to reuse the seen
     index across epochs.
 
-    Each shard is sized for its expected share of the keys (~1.2 GB per
-    10^9 keys at 1% fpp, split S ways across the cluster).  ``params``
+    Each shard is sized for its expected share of the keys at 1% fpp
+    (~1.2 GB per 10^9 keys, split S ways across the cluster).  ``params``
     pins each shard's ``(num_bits, num_hashes)`` instead (the FPP audit
     needs an engine-independent geometry)."""
     if params is not None:
@@ -167,23 +182,14 @@ def build_bloom_shards(
     else:
         if expected_keys is None:
             expected_keys = df.count()
-        num_bits, num_hashes = bloom_params(
-            max(1, expected_keys // num_shards), fpp
-        )
+        num_bits, num_hashes = bloom_params(max(1, expected_keys // num_shards))
 
     def _build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         bf = BloomFilter(
             np.zeros(num_bits // 8, dtype=np.uint8), num_bits, num_hashes
         )
         bf.add(pdf[key_col].to_numpy(dtype=np.int64))
-        return pd.DataFrame(
-            {
-                "shard": [int(key[0])],
-                "bits": [bf.bits.tobytes()],
-                "num_bits": [num_bits],
-                "num_hashes": [num_hashes],
-            }
-        )
+        return _shard_row(int(key[0]), bf)
 
     return (
         df.select(key_col)
@@ -198,7 +204,8 @@ def update_bloom_shards(
     new_keys: DataFrame,
     key_col: str = "url_hash",
     num_shards: int = 32,
-    expected_keys_per_shard: Optional[int] = None,
+    *,
+    expected_keys_per_shard: int,
 ) -> DataFrame:
     """Incrementally fold *new_keys* into an existing shard table — the
     cross-epoch seen index: admit a batch of URLs, OR their bits into
@@ -207,12 +214,10 @@ def update_bloom_shards(
     full history.  Shards with no new keys pass through untouched.
 
     A shard receiving its FIRST keys here has no sibling metadata in its
-    task, so pass ``expected_keys_per_shard`` (the bootstrap sizing —
-    corpus target / S, ~1.2 GB per 10^9 keys at 1% fpp split S ways);
-    without it the fresh shard is sized from its first batch ×4, which
-    under-sizes a shard that keeps growing (bloom bits don't resize —
-    its fpp then degrades toward 1 and the pre-filter stops pruning;
-    correctness is still saved by the exact verify join)."""
+    task, so it is sized from ``expected_keys_per_shard``: the index's
+    recorded ``expected_keys`` / S.  Bloom bits never resize, so a fresh
+    shard sized from its first batch would degrade toward fpp 1 as it
+    grows."""
     keyed = new_keys.select(key_col).withColumn(
         "shard", _shard_col(key_col, num_shards)
     )
@@ -228,23 +233,12 @@ def update_bloom_shards(
             num_hashes = int(shard["num_hashes"].iloc[0])
             bits = np.frombuffer(shard["bits"].iloc[0], dtype=np.uint8).copy()
         else:  # first keys for this shard
-            num_bits, num_hashes = bloom_params(
-                expected_keys_per_shard
-                if expected_keys_per_shard
-                else max(1, len(keys) * 4)
-            )
+            num_bits, num_hashes = bloom_params(expected_keys_per_shard)
             bits = np.zeros(num_bits // 8, dtype=np.uint8)
         bf = BloomFilter(bits, num_bits, num_hashes)
         if len(keys):
             bf.add(keys[key_col].to_numpy(dtype=np.int64))
-        return pd.DataFrame(
-            {
-                "shard": [int(key[0])],
-                "bits": [bf.bits.tobytes()],
-                "num_bits": [num_bits],
-                "num_hashes": [num_hashes],
-            }
-        )
+        return _shard_row(int(key[0]), bf)
 
     return (
         shards.groupBy("shard")
@@ -258,24 +252,24 @@ def bloom_probe_partitioned(
     shards: DataFrame,
     key_col: str = "url_hash",
     num_shards: int = 32,
-    out_col: str = "maybe_seen",
 ) -> DataFrame:
     """Candidates and shard rows are co-grouped on the shard id
     (``cogroup`` → ``applyInPandas``) so each task probes its own shard's
     bits vectorized.  The filter bytes move through exactly one shuffle
-    of S rows (executor→executor) and never visit the driver."""
+    of S rows (executor→executor) and never visit the driver.  Output =
+    candidates + boolean ``maybe_seen``."""
     cols = candidates.columns
     schema = StructType(
-        candidates.schema.fields + [StructField(out_col, BooleanType())]
+        candidates.schema.fields + [StructField("maybe_seen", BooleanType())]
     )
 
     def _probe(key: tuple, cand: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
         out = cand[cols].copy()
         if len(cand) == 0:
-            out[out_col] = np.zeros(0, dtype=bool)
+            out["maybe_seen"] = np.zeros(0, dtype=bool)
             return out
         if len(shard) == 0:  # no seen keys in this shard ⇒ all unseen
-            out[out_col] = np.zeros(len(cand), dtype=bool)
+            out["maybe_seen"] = np.zeros(len(cand), dtype=bool)
             return out
         _one_shard_row(shard)
         bf = BloomFilter(
@@ -283,7 +277,7 @@ def bloom_probe_partitioned(
             int(shard["num_bits"].iloc[0]),
             int(shard["num_hashes"].iloc[0]),
         )
-        out[out_col] = bf.contains(cand[key_col].to_numpy(dtype=np.int64))
+        out["maybe_seen"] = bf.contains(cand[key_col].to_numpy(dtype=np.int64))
         return out
 
     sc = _free_col_name(candidates, "_shard")
@@ -481,7 +475,6 @@ def cuckoo_filter_unseen(
     key_col: str = "url_hash",
     num_shards: int = 32,
     expected_keys: Optional[int] = None,
-    out_col: str = "maybe_seen",
 ) -> DataFrame:
     """Distributed deletable seen-set probe (D3 cuckoo fallback): per-shard
     cuckoo filters built, deleted-from, and probed entirely inside
@@ -492,7 +485,7 @@ def cuckoo_filter_unseen(
     builds the shard's cuckoo filter with a vectorized batch insert,
     retires the deleted keys (the operation Bloom cannot do), and probes
     the candidates with the vectorized ``contains``.  Output = candidates
-    + boolean *out_col*; callers MUST exact-verify positive hits against
+    + boolean ``maybe_seen``; callers MUST exact-verify positive hits against
     the true seen set (false positives are inherent, ~2·SLOTS/2^16).
     """
     if expected_keys is None:
@@ -500,7 +493,7 @@ def cuckoo_filter_unseen(
     per_shard = max(64, (expected_keys // max(num_shards, 1)) * 2)
     cols = candidates.columns
     schema = StructType(
-        candidates.schema.fields + [StructField(out_col, BooleanType())]
+        candidates.schema.fields + [StructField("maybe_seen", BooleanType())]
     )
     deleted = deleted if deleted is not None else seen.limit(0)
 
@@ -514,7 +507,7 @@ def cuckoo_filter_unseen(
     def _probe(key: tuple, cand: pd.DataFrame, keys: pd.DataFrame) -> pd.DataFrame:
         out = cand[cols].copy()
         if len(cand) == 0:
-            out[out_col] = np.zeros(0, dtype=bool)
+            out["maybe_seen"] = np.zeros(0, dtype=bool)
             return out
         cf = CuckooFilter(num_buckets=max(64, per_shard // CuckooFilter.SLOTS))
         if len(keys):
@@ -524,7 +517,7 @@ def cuckoo_filter_unseen(
             dels = keys.loc[keys["kind"] == 1, "k"].to_numpy(dtype=np.int64)
             if len(dels):
                 cf.delete_batch(dels)
-        out[out_col] = cf.contains(cand[key_col].to_numpy(dtype=np.int64))
+        out["maybe_seen"] = cf.contains(cand[key_col].to_numpy(dtype=np.int64))
         return out
 
     sc = _free_col_name(candidates, "_shard")

@@ -159,13 +159,12 @@ class SnapshotTable:
         rows: List[tuple],
         arrow_schema,
         metrics: Optional[Dict] = None,
-        carry_previous: bool = True,
     ) -> int:
         """Commit a small snapshot entirely driver-side via pyarrow — no
         Spark job.  Used for tiny control tables (per-epoch metrics): at
         one row per epoch a Spark write costs a full job-scheduling round
-        trip per epoch for kilobytes of data.  ``carry_previous`` appends
-        the previous snapshot's rows (append-only table semantics)."""
+        trip per epoch for kilobytes of data.  Each snapshot carries the
+        previous snapshot's rows (append-only table semantics)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -174,7 +173,7 @@ class SnapshotTable:
         data_dir = os.path.join(self.dir, "data", f"snap-{snap_id}")
         os.makedirs(data_dir, exist_ok=True)
         tables = []
-        if carry_previous and parent is not None:
+        if parent is not None:
             prev = self.manifest(parent)
             for f in prev["files"]:
                 tables.append(

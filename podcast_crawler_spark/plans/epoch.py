@@ -97,7 +97,10 @@ class CrawlState:
     # (pmod(url_hash, S)), bootstrapped once from the frontier and folded
     # incrementally on every admission (``update_bloom_shards``) — the
     # cross-epoch seen set the reference keeps implicitly in Postgres
-    # unique indexes (podcast_repository.rs:178-183,212-218).  INVARIANT:
+    # unique indexes (podcast_repository.rs:178-183,212-218).  Its layout
+    # (``num_shards`` S, ``expected_keys``) is fixed at bootstrap and
+    # recorded in every seen_shards manifest; admission reads it there,
+    # never from ``cfg``.  INVARIANT:
     # frontier membership only ever grows through ``init_crawl`` (seeds,
     # pre-bootstrap) and, once initialized, through ``admit_urls`` alone
     # (which folds what it admits) — ``PodcastQueryAPI.add_task`` and the
@@ -533,20 +536,17 @@ def seen_shards_current(
             # the crawl with a different cfg.num_partitions would
             # mis-shard the cogroup and turn bloom false negatives into
             # duplicate admissions (the invariant is "never a false
-            # negative").  _seen_num_shards reads this back.
+            # negative").  admit_urls reads it back from the latest
+            # seen_shards manifest.
             "num_shards": cfg.num_partitions,
         },
     )
     return state.seen_shards.read(spark)
 
 
-def _seen_num_shards(state: CrawlState, cfg: CrawlConfig) -> int:
-    """The shard count the persisted seen index was BUILT with — the
-    only count that probes/folds may use (see bootstrap metrics note).
-    Falls back to ``cfg.num_partitions`` for pre-existing state dirs
-    whose bootstrap predates the ``num_shards`` manifest field."""
-    man = state.seen_shards.manifest() or {}
-    return (man.get("metrics") or {}).get("num_shards") or cfg.num_partitions
+# Priority of admitted urls whose batch has no ``priority`` column: low,
+# so discovered urls are crawled after all seeds at equal due-time.
+ADMIT_PRIORITY = 1_000_000
 
 
 def admit_urls(
@@ -555,7 +555,6 @@ def admit_urls(
     urls: DataFrame,
     epoch_ts: datetime,
     cfg: CrawlConfig = CrawlConfig(),
-    priority: int = 1_000_000,
     use_bloom: bool = True,
 ) -> int:
     """Frontier growth: admit URLs that are NOT already in the frontier —
@@ -564,7 +563,9 @@ def admit_urls(
     frontier (see ``CrawlState``).
 
     The seen check is the D3 discipline over the PERSISTED shard index
-    (``state.seen_shards`` — bootstrapped once, folded incrementally):
+    (``state.seen_shards`` — bootstrapped once, folded incrementally),
+    whose layout (shard count, expected keys) is read once from its
+    manifest and used by both the probe and the fold:
 
     * **probe** — candidates cogroup against the S persisted shard rows
       (``seen.bloom_probe_partitioned``); cost O(candidates + S), the
@@ -584,92 +585,76 @@ def admit_urls(
     * **fold** — before the frontier commit the candidate keys are OR-ed
       into the shard table (``seen.update_bloom_shards``: one cogroup of
       O(new keys + S rows)) and committed as the next ``seen_shards``
-      snapshot.  Never a rebuild over the full frontier — the r2 design
-      rebuilt the shards from the frontier on every call, O(frontier)
-      per admission.
+      snapshot, with the same layout.  Never a rebuild over the full
+      frontier, which would cost O(frontier) per admission.
 
     *urls* needs a ``url`` column; returns the new frontier snapshot id.
     Rows are built by ``frontier.frontier_rows``, due at *epoch_ts*.  A
     ``priority`` column in *urls* gives each url its own priority (stream
     seed batches carry the seed rank); otherwise every url gets
-    *priority* — by default a low one, so discovered urls are crawled
-    after all seeds at equal due-time.
+    ``ADMIT_PRIORITY``.
 
     ``use_bloom=False`` skips the probe for a plain anti-join against the
-    frontier; it is kept as the exact reference the bloom path is tested
-    against (tests/test_discovery.py).
+    frontier and never bootstraps the index; it still folds into an
+    existing one.  It is kept as the exact reference the bloom path is
+    tested against (tests/test_discovery.py).
     """
     frontier = state.frontier.read(spark)
     if "priority" not in urls.columns:
-        urls = urls.withColumn("priority", F.lit(priority))
+        urls = urls.withColumn("priority", F.lit(ADMIT_PRIORITY))
     cand = frontier_rows(urls.select("url", "priority"), epoch_ts, cfg)
-
+    shards = seen_shards_current(spark, state, cfg) if use_bloom else None
+    man = state.seen_shards.manifest()
+    layout = man and {k: man["metrics"][k] for k in ("expected_keys", "num_shards")}
     if use_bloom:
         fresh, probed = filter_unseen(
-            cand,
-            seen_shards_current(spark, state, cfg),
-            frontier,
-            "url_hash",
-            _seen_num_shards(state, cfg),
+            cand, shards, frontier, "url_hash", layout["num_shards"]
         )
-        try:
-            snap = _commit_admission(state, frontier, cand, fresh, cfg)
-        finally:
+    else:
+        fresh = cand.join(frontier.select("url_hash"), "url_hash", "left_anti")
+        probed = None
+    try:
+        # Fold the admission's keys into the persisted shard index so the
+        # next admission probes a complete seen set.  Folding ALL
+        # candidate keys (not just the admitted subset) is equivalent and
+        # cheaper: a candidate either was admitted (must fold) or was
+        # already in the frontier (its bits are already set — OR is
+        # idempotent), and it avoids re-running the probe+verify lineage
+        # just to isolate the admitted keys.
+        #
+        # ORDER MATTERS: the fold commits BEFORE the frontier commit.  A
+        # crash between the two then leaves bloom bits set for keys that
+        # never landed in the frontier — harmless false positives that
+        # the exact verify resolves.  The reverse order (frontier first)
+        # would leave frontier keys ABSENT from the bloom after a crash:
+        # false negatives that skip the exact verify and re-admit
+        # duplicates.
+        if layout:
+            state.seen_shards.commit(
+                update_bloom_shards(
+                    state.seen_shards.read(spark),
+                    cand.select("url_hash"),
+                    "url_hash",
+                    layout["num_shards"],
+                    expected_keys_per_shard=max(
+                        1, layout["expected_keys"] // layout["num_shards"]
+                    ),
+                ),
+                metrics={
+                    "op": "seen_fold",
+                    "epoch": state.completed_epochs(),
+                    **layout,
+                },
+            )
+        return state.frontier.commit(
+            frontier.unionByName(fresh.select(*frontier.columns)).repartition(
+                cfg.num_partitions, "host_hash"
+            ),
+            metrics={"epoch": state.completed_epochs(), "op": "admit"},
+        )
+    finally:
+        if probed is not None:
             probed.unpersist()
-        return snap
-    fresh = cand.join(frontier.select("url_hash"), "url_hash", "left_anti")
-    return _commit_admission(state, frontier, cand, fresh, cfg)
-
-
-def _commit_admission(
-    state: CrawlState,
-    frontier: DataFrame,
-    cand: DataFrame,
-    fresh: DataFrame,
-    cfg: CrawlConfig,
-) -> int:
-    # Fold the admission's keys into the persisted shard index so the next
-    # admission probes a complete seen set.  Folding ALL candidate keys
-    # (not just the admitted subset) is equivalent and cheaper: a
-    # candidate either was admitted (must fold) or was already in the
-    # frontier (its bits are already set — OR is idempotent), and it
-    # avoids re-running the probe+verify lineage just to isolate the
-    # admitted keys.  Runs whenever the shard table exists (even on the
-    # use_bloom=False path) so the index never goes stale.
-    #
-    # ORDER MATTERS: the fold commits BEFORE the frontier commit.  A
-    # crash between the two then leaves bloom bits set for keys that
-    # never landed in the frontier — harmless false positives that the
-    # exact verify resolves.  The reverse order (frontier first) would
-    # leave frontier keys ABSENT from the bloom after a crash: false
-    # negatives that skip the exact verify and re-admit duplicates.
-    spark = frontier.sparkSession
-    if state.seen_shards.current_snapshot_id() is not None:
-        man = state.seen_shards.manifest() or {}
-        expected = (man.get("metrics") or {}).get("expected_keys") or 100_000
-        num_shards = _seen_num_shards(state, cfg)
-        new_shards = update_bloom_shards(
-            state.seen_shards.read(spark),
-            cand.select("url_hash"),
-            "url_hash",
-            num_shards,
-            expected_keys_per_shard=max(1, expected // num_shards),
-        )
-        state.seen_shards.commit(
-            new_shards,
-            metrics={
-                "op": "seen_fold",
-                "epoch": state.completed_epochs(),
-                "expected_keys": expected,
-                "num_shards": num_shards,
-            },
-        )
-    return state.frontier.commit(
-        frontier.unionByName(fresh.select(*frontier.columns)).repartition(
-            cfg.num_partitions, "host_hash"
-        ),
-        metrics={"epoch": state.completed_epochs(), "op": "admit"},
-    )
 
 
 def discovered_urls(state: CrawlState, spark: SparkSession) -> DataFrame:

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.schemas import PAGES_SCHEMA
 from ..operators.frontier import fetch_join
 
 
@@ -59,8 +60,6 @@ def register_bucketed_pages(
     location: str,
     table: str = "pages_bucketed",
     buckets: int = 32,
-    schema: str = "url string, warc_ts timestamp, html binary, "
-    "text string, lang string",
 ) -> None:
     """Re-attach an existing bucketed parquet layout to a fresh session.
 
@@ -70,7 +69,11 @@ def register_bucketed_pages(
     bucket spec over the existing LOCATION — no data moves — so separate
     bench legs / resumed jobs reuse one ingest.  On a production cluster
     the Iceberg/Hive metastore carries this spec durably; this is the
-    local stand-in for that durability."""
+    local stand-in for that durability.  The columns are
+    ``schemas.PAGES_SCHEMA``."""
+    schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in PAGES_SCHEMA
+    )
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(
         f"CREATE TABLE {table} ({schema}) USING parquet "

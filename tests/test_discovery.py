@@ -123,11 +123,17 @@ def test_admission_incremental_shards_equals_rebuild(spark, tmp_path_factory):
             == 0
         )
     # shard-table lineage: 1 bootstrap + one fold per admission round
-    ops = [
-        (inc.seen_shards.manifest(s).get("metrics") or {}).get("op")
+    metas = [
+        inc.seen_shards.manifest(s)["metrics"]
         for s in inc.seen_shards.snapshot_ids()
     ]
-    assert ops == ["seen_bootstrap", "seen_fold", "seen_fold", "seen_fold"]
+    assert [m["op"] for m in metas] == [
+        "seen_bootstrap", "seen_fold", "seen_fold", "seen_fold"
+    ]
+    # every fold records the bootstrap's layout
+    layout = [(m["num_shards"], m["expected_keys"]) for m in metas]
+    assert layout == [layout[0]] * 4
+    assert layout[0][0] == CFG.num_partitions
     # the exact path never bootstrapped a shard table
     assert exact.seen_shards.current_snapshot_id() is None
 
@@ -206,8 +212,6 @@ def test_admission_shard_count_pinned_across_reopen(spark, tmp_path_factory):
     with the BOOTSTRAP-time count (persisted in the manifest), or the
     mis-sharded cogroup turns bloom false negatives into duplicate
     admissions.  Regression for the r3 advice item."""
-    from podcast_crawler_spark.plans.epoch import _seen_num_shards
-
     root = str(tmp_path_factory.mktemp("pin"))
     state = run_crawl(
         spark,
@@ -229,7 +233,7 @@ def test_admission_shard_count_pinned_across_reopen(spark, tmp_path_factory):
     # a correct probe admits nothing; a mis-sharded probe misses bits
     # and re-admits duplicates
     wide = CrawlConfig(per_host_budget=1000, max_retries=1, num_partitions=9)
-    assert _seen_num_shards(state, wide) == 4
+    assert state.seen_shards.manifest()["metrics"]["num_shards"] == 4
     admit_urls(spark, state, _url_batch(spark, 0, 60), EPOCH0, wide)
     assert state.frontier.read(spark).count() == n_after_first
     # and the fold under the new cfg still records the pinned count

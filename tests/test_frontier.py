@@ -339,51 +339,6 @@ def test_robots_sitemap_directives(spark):
     assert "Python" not in plan and "Exchange" not in plan, plan
 
 
-def test_schedule_epoch_deny_hosts(spark):
-    """The operational deny-list (trap / circuit-open hosts) excludes a
-    host's due rows via a broadcast anti-join; everyone else schedules
-    identically; a later epoch WITHOUT the deny list schedules the
-    host again (deny is operational state, not frontier state)."""
-    from podcast_crawler_spark.operators.frontier import (
-        CrawlConfig,
-        build_frontier,
-        schedule_epoch,
-    )
-    from podcast_crawler_spark.sources.pagesgen import (
-        EPOCH0,
-        gen_robots,
-        gen_seeds,
-    )
-
-    cfg = CrawlConfig(num_partitions=4)
-    seeds = gen_seeds(spark, 40, partitions=2)
-    frontier = build_frontier(seeds, EPOCH0, cfg)
-    robots = gen_robots(spark, 40, partitions=2)
-    base = schedule_epoch(frontier, robots, EPOCH0, cfg)
-    hosts = [r["host"] for r in base.select("host").distinct().collect()]
-    denied = hosts[0]
-    deny = spark.createDataFrame([(denied,)], "host string")
-    gated = schedule_epoch(frontier, robots, EPOCH0, cfg, deny_hosts=deny)
-    assert gated.filter(F.col("host") == denied).count() == 0
-    # everyone else unchanged (same rows, same order columns)
-    a = sorted(
-        tuple(r)
-        for r in base.filter(F.col("host") != denied)
-        .select("url", "host", "host_seq")
-        .collect()
-    )
-    b = sorted(
-        tuple(r) for r in gated.select("url", "host", "host_seq").collect()
-    )
-    assert a == b
-    # plan: the deny join must broadcast, never shuffle the frontier
-    p = gated._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in p and "LeftAnti" in p, p
-    # recovery: scheduling again without the deny list re-admits
-    again = schedule_epoch(frontier, robots, EPOCH0, cfg)
-    assert again.filter(F.col("host") == denied).count() > 0
-
-
 def test_rfc9309_matching_semantics(spark):
     from podcast_crawler_spark.operators.robots import match_rfc9309
 

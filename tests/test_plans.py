@@ -171,12 +171,6 @@ def test_commit_local_driver_side_snapshots(spark, tmp_path):
     for sid in (s1, s2):
         _assert_manifest_files(t, t.manifest(sid))
     assert t.manifest(s2)["row_count"] == 2
-    # no-carry commit replaces instead of appending
-    t2 = SnapshotTable(str(tmp_path / "wh"), "latest_only")
-    t2.commit_local([(1, 1)], schema)
-    t2.commit_local([(2, 2)], schema, carry_previous=False)
-    assert [(r.epoch, r.n) for r in t2.read(spark).collect()] == [(2, 2)]
-    _assert_manifest_files(t2, t2.manifest())
 
 
 def test_delta_commit_merge_on_read(spark, tmp_path):
@@ -332,7 +326,10 @@ def test_bucketed_fetch_join_no_pages_exchange(spark, tmp_path):
     """Production J3 contract: with the pages table bucketed by url, the
     fetch join reads html in place — the plan has NO Exchange above the
     bucketed pages scan (only the narrow scheduled side shuffles), and
-    the result equals the plain shuffled join."""
+    the result equals the plain shuffled join.  The same files
+    re-attached through ``register_bucketed_pages`` (as a new session
+    does) read as ``PAGES_SCHEMA`` with the same bucket spec."""
+    from podcast_crawler_spark.functions.schemas import PAGES_SCHEMA
     from podcast_crawler_spark.operators.frontier import (
         CrawlConfig,
         build_frontier,
@@ -341,6 +338,7 @@ def test_bucketed_fetch_join_no_pages_exchange(spark, tmp_path):
     )
     from podcast_crawler_spark.sources.bucketed import (
         fetch_join_bucketed,
+        register_bucketed_pages,
         write_bucketed_pages,
     )
     from podcast_crawler_spark.sources.pagesgen import (
@@ -388,8 +386,21 @@ def test_bucketed_fetch_join_no_pages_exchange(spark, tmp_path):
             tuple(r) for r in fetch_join(sched, pages).select(*cols).collect()
         }
         assert got == want
+        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+        register_bucketed_pages(
+            spark, os.path.join(wh, "pages_bucketed_t"), "pages_bucketed_r", 8
+        )
+        schema = spark.table("pages_bucketed_r").schema
+        assert [(f.name, f.dataType) for f in schema] == [
+            (f.name, f.dataType) for f in PAGES_SCHEMA
+        ]
+        reattached = fetch_join_bucketed(sched, spark, "pages_bucketed_r")
+        assert "SelectedBucketsCount: 8 out of 8" in plan_of(reattached)
+        assert {tuple(r) for r in reattached.select(*cols).collect()} == want
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
+        # the re-attached table is external: dropping it keeps the files
+        spark.sql("drop table if exists pages_bucketed_r")
         spark.sql("drop table if exists pages_bucketed_t")
 
 

@@ -156,7 +156,9 @@ def test_update_bloom_shards_incremental_equals_rebuild(spark):
     a = _keys_df(spark, 0, 2_000)
     b = _keys_df(spark, 2_000, 3_000)
     base = build_bloom_shards(a, num_shards=8, expected_keys=4_000)
-    updated = update_bloom_shards(base, b.select("url_hash"), num_shards=8)
+    updated = update_bloom_shards(
+        base, b.select("url_hash"), num_shards=8, expected_keys_per_shard=500
+    )
     rebuilt = build_bloom_shards(
         a.unionByName(b), num_shards=8, expected_keys=4_000
     )
