@@ -6228,7 +6228,9 @@ def _stream_batches_to_dir(spark, frames):
 
 
 def _run_stream_to_sink(spark, stream_df, root, mode="append"):
-    """Drain a bounded stream into a memory sink; return its table.
+    """Drain a bounded stream into a memory sink; return its rows as a
+    local frame and drop the sink's view, so repeated runs in one session
+    leave no ``pcs_sink_*`` table holding rows in driver memory.
 
     The stateful operators inherit ``spark.sql.shuffle.partitions`` as
     their state-store partition count at checkpoint creation — 64
@@ -6262,7 +6264,10 @@ def _run_stream_to_sink(spark, stream_df, root, mode="append"):
         # dead weight once the drain finished (repeat driver/bench runs
         # would otherwise accumulate dirs on /dev/shm)
         shutil.rmtree(root, ignore_errors=True)
-    return spark.table(name)
+    sink = spark.table(name)
+    out = spark.createDataFrame(sink.collect(), sink.schema)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def _stream_dedup_equiv(spark, sf_dir):

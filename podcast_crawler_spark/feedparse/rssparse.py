@@ -30,13 +30,12 @@ Faithfully reproduced quirks:
   ``lastBuildDate`` and channel ``pubDate`` are ignored.
 
 Output is plain dicts (Arrow-friendly) so the same function serves the
-pandas oracle and the Spark ``mapInPandas`` parse stage.
+pandas oracle and the Spark ``mapInArrow`` parse stage.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from datetime import datetime
+from dataclasses import dataclass
 from typing import Dict, List, Optional, Tuple
 
 from .sanitize import clean_text
@@ -48,7 +47,6 @@ from .xmlscan import XmlEscapeError, XmlScanError, scan, xml_unescape
 KIND_INVALID_XML = "invalid_xml"
 KIND_MISSING_FIELD = "missing_field"
 KIND_INVALID_FORMAT = "invalid_format"
-KIND_OTHER = "parse_other"
 
 
 class FeedParseError(Exception):
@@ -103,15 +101,38 @@ def _new_episode() -> Dict:
 
 _ST_INITIAL, _ST_PODCAST, _ST_EPISODE, _ST_FINISHED = range(4)
 
+# How a text event's value lands in its record field.
+_SET, _APPEND, _BOOL, _DATE, _URL = range(5)
 
-@dataclass
-class _State:
-    url: str
-    state: int = _ST_INITIAL
-    current_tag: str = ""
-    podcast: Optional[Dict] = None
-    episode: Optional[Dict] = None
-    episodes: List[Dict] = field(default_factory=list)
+# Text events, by the sticky current tag: record field and how it is set
+# (``rss.rs:296-329`` podcast, ``rss.rs:416-438`` episode).
+_PODCAST_TEXT = {
+    "title": ("title", _SET),
+    "description": ("description", _SET),
+    "language": ("language", _SET),
+    "copyright": ("copyright", _SET),
+    "itunes:author": ("author", _SET),
+    "itunes:name": ("owner_name", _SET),
+    "itunes:email": ("owner_email", _SET),
+    "itunes:category": ("category", _APPEND),
+    "itunes:keywords": ("keywords", _APPEND),
+    "itunes:explicit": ("explicit", _BOOL),
+    "itunes:summary": ("summary", _SET),
+    "itunes:subtitle": ("subtitle", _SET),
+    "link": ("link", _URL),
+}
+_EPISODE_TEXT = {
+    "title": ("title", _SET),
+    "description": ("description", _SET),
+    "pubDate": ("pub_date", _DATE),
+    "guid": ("guid", _SET),
+    "itunes:duration": ("duration", _SET),
+    "itunes:author": ("author", _SET),
+    "itunes:subtitle": ("subtitle", _SET),
+    "itunes:summary": ("summary", _SET),
+    "itunes:explicit": ("explicit", _BOOL),
+    "link": ("link", _URL),
+}
 
 
 @dataclass
@@ -137,6 +158,66 @@ def _append(record: Dict, key: str, value: str) -> None:
     record[key].append(value)
 
 
+def _check_url(text: str, url: str, config: ParserConfig) -> None:
+    if config.validate_urls and not validate_url(text):
+        raise FeedParseError(KIND_INVALID_FORMAT, f"Invalid link URL: {text}", url)
+
+
+def _enclosure(
+    episode: Dict, attrs: Tuple[Tuple[str, str], ...], url: str, config: ParserConfig
+) -> None:
+    found_url = ",url not found"
+    error_msg = ""
+    for key, value in attrs:
+        if key == "url":
+            decoded = value.replace("&amp;", "&")
+            normalized = (
+                decoded if decoded.startswith("http") else decoded.replace("//", "/")
+            )
+            _check_url(normalized, url, config)
+            episode["enclosure_url"] = normalized
+            found_url = ""
+        elif key == "type":
+            episode["enclosure_type"] = value
+        elif key == "length":
+            try:
+                episode["enclosure_length"] = int(value)
+            except ValueError:
+                if config.strict_mode:
+                    error_msg = f"Invalid enclosure length: {value}"
+    error_msg += found_url
+    if error_msg and config.strict_mode:
+        raise FeedParseError(KIND_MISSING_FIELD, error_msg, url)
+
+
+_START_TAGS = frozenset({"link", "itunes:image", "itunes:category", "enclosure"})
+
+
+def _start(
+    state: int, tag: str, record: Dict, attrs, url: str, config: ParserConfig
+) -> None:
+    """The :data:`_START_TAGS` start events inside ``<channel>`` or
+    ``<item>``: their attributes set fields (``rss.rs:446-470``)."""
+    if state == _ST_PODCAST:
+        if tag == "link" or tag == "itunes:image":
+            href = _attr(attrs, "href")
+            if href is not None:
+                _check_url(href, url, config)
+                record["link" if tag == "link" else "image_url"] = href
+        elif tag == "itunes:category":
+            text = _attr(attrs, "text")
+            if text is not None:
+                _append(record, "category", text)
+    elif state == _ST_EPISODE:
+        if tag == "enclosure":
+            _enclosure(record, attrs, url, config)
+        elif tag == "itunes:image":
+            href = _attr(attrs, "href")
+            if href is not None:
+                _check_url(href, url, config)
+                record["episode_image_url"] = href
+
+
 def parse_feed(
     content: bytes, url: str, config: ParserConfig = ParserConfig()
 ) -> Tuple[Dict, List[Dict]]:
@@ -144,183 +225,79 @@ def parse_feed(
 
     Raises :class:`FeedParseError` on any condition that fails the feed in
     the reference.
+
+    Text events are XML-unescaped whatever the state or tag (a bad entity
+    anywhere fails the feed), but cleaned only when a field takes them;
+    whitespace-only text, blank after unescape and clean, is dropped
+    before either.
     """
     doc = content.decode("utf-8", errors="replace")
-    st = _State(url=url, podcast=_new_podcast(url))
-
-    def check_url(text: str) -> None:
-        if config.validate_urls and not validate_url(text):
-            raise FeedParseError(
-                KIND_INVALID_FORMAT, f"Invalid link URL: {text}", url
-            )
-
-    def handle_enclosure(attrs: Tuple[Tuple[str, str], ...]) -> None:
-        if st.episode is None:
-            raise FeedParseError(
-                KIND_OTHER, "Enclosure tag found outside of episode context", url
-            )
-        found_url = ",url not found"
-        error_msg = ""
-        for key, value in attrs:
-            if key == "url":
-                decoded = value.replace("&amp;", "&")
-                normalized = (
-                    decoded if decoded.startswith("http") else decoded.replace("//", "/")
-                )
-                check_url(normalized)
-                st.episode["enclosure_url"] = normalized
-                found_url = ""
-            elif key == "type":
-                st.episode["enclosure_type"] = value
-            elif key == "length":
-                try:
-                    st.episode["enclosure_length"] = int(value)
-                except ValueError:
-                    if config.strict_mode:
-                        error_msg = f"Invalid enclosure length: {value}"
-        error_msg += found_url
-        if error_msg and config.strict_mode:
-            raise FeedParseError(KIND_MISSING_FIELD, error_msg, url)
-
-    def handle_podcast_start(attrs) -> None:
-        tag, p = st.current_tag, st.podcast
-        if tag == "link":
-            href = _attr(attrs, "href")
-            if href is not None:
-                check_url(href)
-                p["link"] = href
-        elif tag == "itunes:image":
-            href = _attr(attrs, "href")
-            if href is not None:
-                check_url(href)
-                p["image_url"] = href
-        elif tag == "itunes:category":
-            text = _attr(attrs, "text")
-            if text is not None:
-                _append(p, "category", text)
-
-    def handle_episode_start(attrs) -> None:
-        tag, e = st.current_tag, st.episode
-        if tag == "enclosure":
-            handle_enclosure(attrs)
-        elif tag == "itunes:image":
-            href = _attr(attrs, "href")
-            if href is not None:
-                check_url(href)
-                e["episode_image_url"] = href
-
-    def handle_podcast_text(text: str) -> None:
-        tag, p = st.current_tag, st.podcast
-        if tag == "title":
-            p["title"] = text
-        elif tag == "description":
-            p["description"] = text
-        elif tag == "language":
-            p["language"] = text
-        elif tag == "copyright":
-            p["copyright"] = text
-        elif tag == "itunes:author":
-            p["author"] = text
-        elif tag == "itunes:name":
-            p["owner_name"] = text
-        elif tag == "itunes:email":
-            p["owner_email"] = text
-        elif tag == "itunes:category":
-            _append(p, "category", text)
-        elif tag == "itunes:keywords":
-            _append(p, "keywords", text)
-        elif tag == "itunes:explicit":
-            p["explicit"] = parse_bool(text)
-        elif tag == "itunes:summary":
-            p["summary"] = text
-        elif tag == "itunes:subtitle":
-            p["subtitle"] = text
-        elif tag == "link":
-            check_url(text)
-            p["link"] = text
-
-    def handle_episode_text(text: str) -> None:
-        tag, e = st.current_tag, st.episode
-        if tag == "title":
-            e["title"] = text
-        elif tag == "description":
-            e["description"] = text
-        elif tag == "pubDate":
-            e["pub_date"] = parse_date(text)
-        elif tag == "guid":
-            e["guid"] = text
-        elif tag == "itunes:duration":
-            e["duration"] = text
-        elif tag == "itunes:author":
-            e["author"] = text
-        elif tag == "itunes:subtitle":
-            e["subtitle"] = text
-        elif tag == "itunes:summary":
-            e["summary"] = text
-        elif tag == "itunes:explicit":
-            e["explicit"] = parse_bool(text)
-        elif tag == "link":
-            check_url(text)
-            e["link"] = text
-
-    def handle_text(raw: str, is_cdata: bool) -> None:
-        if is_cdata:
-            text = raw  # CDATA: no XML unescape (rss.rs:212-218)
-        else:
-            try:
-                text = xml_unescape(raw)
-            except XmlEscapeError as exc:
-                raise FeedParseError(
-                    KIND_INVALID_XML, f"Failed to unescape text: {exc}", url
-                ) from exc
-        if config.clean_html:
-            text = clean_text(text)
-        if not text.strip() and not config.allow_empty_required:
-            return
-        if st.state == _ST_PODCAST:
-            handle_podcast_text(text)
-        elif st.state == _ST_EPISODE:
-            handle_episode_text(text)
-
+    keep_blank = config.allow_empty_required
+    state = _ST_INITIAL
+    tag = ""  # sticky current tag (P11)
+    podcast = record = _new_podcast(url)
+    fields: Optional[Dict] = None  # text dispatch of the current state
+    episodes: List[Dict] = []
     try:
-        for ev in scan(doc):
-            if ev.kind == "start":
-                st.current_tag = ev.name
-                if ev.name == "channel":
-                    st.state = _ST_PODCAST
-                    st.podcast = _new_podcast(url)
-                elif ev.name == "item":
-                    st.state = _ST_EPISODE
-                    st.episode = _new_episode()
-                elif st.state == _ST_PODCAST:
-                    handle_podcast_start(ev.attrs)
-                elif st.state == _ST_EPISODE:
-                    handle_episode_start(ev.attrs)
-            elif ev.kind == "end":
-                if ev.name == "channel" and st.state == _ST_PODCAST:
-                    st.state = _ST_FINISHED
-                elif ev.name == "item" and st.state == _ST_EPISODE:
-                    ep = st.episode
-                    st.episode = None
-                    if ep is not None:
-                        if not ep["title"]:
-                            raise FeedParseError(
-                                KIND_MISSING_FIELD, "Missing episode title", url
-                            )
-                        st.episodes.append(ep)
-                    st.state = _ST_PODCAST
-            elif ev.kind == "text":
-                handle_text(ev.text, is_cdata=False)
-            elif ev.kind == "cdata":
-                handle_text(ev.text, is_cdata=True)
-            else:  # eof
+        for kind, name, attrs, raw in scan(doc):
+            if kind == "start":
+                tag = name
+                if name == "channel":
+                    state, fields = _ST_PODCAST, _PODCAST_TEXT
+                    podcast = record = _new_podcast(url)
+                elif name == "item":
+                    state, fields = _ST_EPISODE, _EPISODE_TEXT
+                    record = _new_episode()
+                elif name in _START_TAGS:
+                    _start(state, name, record, attrs, url, config)
+            elif kind == "end":
+                if name == "channel" and state == _ST_PODCAST:
+                    state, fields = _ST_FINISHED, None
+                elif name == "item" and state == _ST_EPISODE:
+                    if not record["title"]:
+                        raise FeedParseError(
+                            KIND_MISSING_FIELD, "Missing episode title", url
+                        )
+                    episodes.append(record)
+                    state, fields = _ST_PODCAST, _PODCAST_TEXT
+                    record = podcast
+            elif kind == "eof":
                 break
+            else:  # text, cdata
+                if not keep_blank and raw.isspace() and "\xa0" not in raw:
+                    continue
+                # CDATA is taken raw, with no XML unescape (rss.rs:212-218)
+                if kind == "text" and "&" in raw:
+                    try:
+                        raw = xml_unescape(raw)
+                    except XmlEscapeError as exc:
+                        raise FeedParseError(
+                            KIND_INVALID_XML, f"Failed to unescape text: {exc}", url
+                        ) from exc
+                spec = fields.get(tag) if fields is not None else None
+                if spec is None:
+                    continue
+                text = clean_text(raw) if config.clean_html else raw
+                if not keep_blank and not text.strip():
+                    continue
+                field, how = spec
+                if how == _SET:
+                    record[field] = text
+                elif how == _APPEND:
+                    _append(record, field, text)
+                elif how == _BOOL:
+                    record[field] = parse_bool(text)
+                elif how == _DATE:
+                    record[field] = parse_date(text)
+                else:
+                    _check_url(text, url, config)
+                    record[field] = text
     except XmlScanError as exc:
         raise FeedParseError(KIND_INVALID_XML, str(exc), url) from exc
 
-    if not st.podcast["title"]:
+    if not podcast["title"]:
         raise FeedParseError(KIND_MISSING_FIELD, "Missing podcast title", url)
-    return st.podcast, st.episodes
+    return podcast, episodes
 
 
 def extract_text(podcast: Dict, episodes: List[Dict]) -> str:

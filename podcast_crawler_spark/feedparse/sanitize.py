@@ -128,8 +128,18 @@ def _url_allowed(value: str) -> bool:
 
 
 def clean_html(content: str) -> str:
-    """Ammonia-default-equivalent sanitize of an HTML fragment."""
-    content = _COMMENT_RE.sub("", content)
+    """Ammonia-default-equivalent sanitize of an HTML fragment.
+
+    Exact fast paths: without any of ``< > & \\xa0`` there is nothing to
+    decode, drop or escape, so the input comes back unchanged; without
+    ``<`` there are no tags or comments, so the whole fragment is one
+    text run."""
+    if "<" not in content:
+        if "&" not in content and ">" not in content and "\xa0" not in content:
+            return content
+        return _escape_text(_htmllib.unescape(content))
+    if "<!--" in content:
+        content = _COMMENT_RE.sub("", content)
     out: List[str] = []
     pos = 0
     skip_until: str | None = None  # inside a clean-content tag

@@ -3,7 +3,7 @@
 Reimplementations of the reference's free functions (reference:
 ``/root/reference/src/crawler_refactor/rss.rs:661-720``), pinned by the
 scalar golden tests ``/root/reference/tests/rss_parser_test.rs:199-252``.
-Pure Python so they run standalone and inside Arrow-batched pandas UDFs.
+Pure Python so they run standalone and inside the Arrow-batched parse stage.
 """
 
 from __future__ import annotations
@@ -37,6 +37,13 @@ _RFC3339_RE = re.compile(
 )
 
 _FALLBACK_FORMATS = ("%Y-%m-%d %H:%M:%S", "%Y-%m-%dT%H:%M:%S", "%Y-%m-%d")
+# The first fallback format in its zero-padded form.  strptime accepts a
+# string of this shape exactly when the datetime constructor accepts its
+# fields, and builds the same value, so a match skips strptime's
+# Python-level format parse.
+_NAIVE_DATETIME_RE = re.compile(
+    r"([0-9]{4})-([0-9]{2})-([0-9]{2}) ([0-9]{2}):([0-9]{2}):([0-9]{2})"
+)
 
 
 def parse_date(date_str: str) -> Optional[datetime]:
@@ -57,6 +64,12 @@ def parse_date(date_str: str) -> Optional[datetime]:
             iso = date_str.upper() if date_str[-1] in "zZ" else date_str
             dt = datetime.fromisoformat(iso.replace("t", "T", 1))
             return dt.astimezone(timezone.utc)
+        except ValueError:
+            pass
+    m = _NAIVE_DATETIME_RE.fullmatch(date_str)
+    if m:
+        try:
+            return datetime(*map(int, m.groups()), tzinfo=timezone.utc)
         except ValueError:
             pass
     for fmt in _FALLBACK_FORMATS:

@@ -21,16 +21,27 @@ crawler_refactor/rss.rs:177-236``).  The quirks we must reproduce
   close tag is a scan error, surfaced with the buffer position like
   ``rss.rs:224-232``.
 
+**Tokenizer.** One compiled regex (``_TOKEN``) splits the document into
+text runs, text-only elements (``<name>text</name>``, three events from
+one match), start tags (name, raw attribute span, self-closing slash), end
+tags, CDATA sections and skipped markup (comments, processing
+instructions, declarations); ``re.finditer`` walks it in one pass, so no
+Python code runs per character.  Attributes of a matched start tag are
+split by a second regex over the tag's attribute span.  Any ``<`` the
+token patterns cannot match is malformed: only then does
+``_markup_error`` walk that one piece of markup character by character
+to name the error and its position exactly as quick_xml-style strict
+scanning would.  Events are :class:`XmlEvent` named tuples.
+
 This module is pure Python with no Spark dependency so the golden tests can
-run it standalone; at scale it executes inside Arrow-batched ``mapInPandas``
+run it standalone; at scale it executes inside Arrow-batched ``mapInArrow``
 workers (one call per feed, thousands of feeds per batch).
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
-from typing import Iterator, List, Tuple
+from typing import Iterator, List, NamedTuple, Tuple
 
 
 class XmlScanError(Exception):
@@ -46,8 +57,7 @@ class XmlEscapeError(Exception):
     """Invalid entity reference during text unescape."""
 
 
-@dataclass(frozen=True)
-class XmlEvent:
+class XmlEvent(NamedTuple):
     kind: str  # 'start' | 'end' | 'text' | 'cdata' | 'eof'
     name: str = ""
     attrs: Tuple[Tuple[str, str], ...] = ()
@@ -57,8 +67,48 @@ class XmlEvent:
 _WS = " \t\r\n"
 _NAME_END = set(_WS) | {">", "/", "="}
 
-_ENTITY_RE = re.compile(r"&(#x[0-9a-fA-F]+|#[0-9]+|[A-Za-z][A-Za-z0-9]*);")
+# Token patterns, one alternative per markup kind.  The alternatives for a
+# '<' are told apart by its next characters, except that a text-only
+# element is tried before the start tag it begins with.  Names and
+# attribute keys run up to whitespace, '>', '/' or '='; the possessive
+# quantifiers stop a name from backtracking into a key.
+_W = r"[ \t\r\n]"
+_N = r"[^ \t\r\n>/=]"
+_TOKEN = re.compile(
+    r"([^<]+)"  # 1 text
+    # an element holding only text, <name>text</name>: 3 events, 1 match
+    rf"|<(?![!?/])({_N}++)>([^<]*+)</\2>"  # 2 name, 3 text (maybe empty)
+    rf"|<(?![!?/])({_N}++)"  # 4 start tag name
+    rf"((?:{_W}*+{_N}++{_W}*+={_W}*+(?:\"[^\"]*+\"|'[^']*+'))*+)"  # 5 attrs
+    rf"{_W}*+(/?)>"  # 6 self-closing slash
+    r"|</([^>]*)>"  # 7 end tag name, unstripped
+    r"|(<!\[CDATA\[.*?\]\]>)"  # 8 CDATA section
+    r"|<(?:!--.*?--|\?.*?\?|!(?!--|\[CDATA\[)[^>]*)>"  # skipped markup
+    r"|(<)",  # 9 malformed markup
+    re.S,
+)
+_ATTR = re.compile(rf"{_W}*({_N}+){_W}*={_W}*(?:\"([^\"]*)\"|'([^']*)')")
+_TEXT, _ELEMENT, _START, _END, _CDATA, _BAD = 1, 3, 6, 7, 8, 9  # Match.lastindex
+
+_new = tuple.__new__  # builds an XmlEvent without the Python-level __new__
+_EOF = XmlEvent("eof")
+
+_ENTITY_RE = re.compile(r"&(?:(#x[0-9a-fA-F]+|#[0-9]+|[A-Za-z][A-Za-z0-9]*);)?")
 _BUILTIN_ENTITIES = {"amp": "&", "lt": "<", "gt": ">", "quot": '"', "apos": "'"}
+
+
+def _entity(m: "re.Match[str]") -> str:
+    body = m.group(1)
+    if body is None:
+        raise XmlEscapeError(f"invalid entity reference at offset {m.start()}")
+    if body.startswith("#x") or body.startswith("#X"):
+        return chr(int(body[2:], 16))
+    if body.startswith("#"):
+        return chr(int(body[1:]))
+    rep = _BUILTIN_ENTITIES.get(body)
+    if rep is None:
+        raise XmlEscapeError(f"unknown entity '&{body};' at offset {m.start()}")
+    return rep
 
 
 def xml_unescape(text: str) -> str:
@@ -67,141 +117,136 @@ def xml_unescape(text: str) -> str:
     Unknown named entities or a dangling ``&`` raise :class:`XmlEscapeError`,
     matching quick_xml's strict ``unescape`` used for Text events
     (``rss.rs:297-304`` turns this into a feed-level parse failure).
+    Text without ``&`` is returned unchanged.
     """
-    out: List[str] = []
-    i = 0
-    n = len(text)
-    while i < n:
-        ch = text[i]
-        if ch != "&":
-            out.append(ch)
-            i += 1
-            continue
-        m = _ENTITY_RE.match(text, i)
-        if not m:
-            raise XmlEscapeError(f"invalid entity reference at offset {i}")
-        body = m.group(1)
-        if body.startswith("#x") or body.startswith("#X"):
-            out.append(chr(int(body[2:], 16)))
-        elif body.startswith("#"):
-            out.append(chr(int(body[1:])))
-        else:
-            rep = _BUILTIN_ENTITIES.get(body)
-            if rep is None:
-                raise XmlEscapeError(f"unknown entity '&{body};' at offset {i}")
-            out.append(rep)
-        i = m.end()
-    return "".join(out)
+    if "&" not in text:
+        return text
+    return _ENTITY_RE.sub(_entity, text)
 
 
 def scan(doc: str) -> Iterator[XmlEvent]:
-    """Yield XML events over *doc*; raise :class:`XmlScanError` on malformed
-    markup.  Empty elements are expanded to start+end pairs."""
-    i = 0
-    n = len(doc)
+    """Iterate the XML events of *doc*; raise :class:`XmlScanError` on
+    malformed markup.  Empty elements are expanded to start+end pairs.
+
+    The document is tokenized in one pass up front (memory O(events));
+    the error, if any, is raised when iteration reaches the malformed
+    markup, after every event before it, as a lazy scan would."""
+    events: List[XmlEvent] = []
+    try:
+        _tokenize(doc, events)
+    except XmlScanError as exc:
+        return _then_raise(events, exc)
+    return iter(events)
+
+
+def _then_raise(events: List[XmlEvent], exc: XmlScanError) -> Iterator[XmlEvent]:
+    yield from events
+    raise exc
+
+
+def _tokenize(doc: str, out: List[XmlEvent]) -> None:
+    """Append the events of *doc* to *out* up to its first malformed markup,
+    then raise that markup's :class:`XmlScanError`."""
+    add, new, event = out.append, _new, XmlEvent
     stack: List[str] = []
-    while i < n:
-        lt = doc.find("<", i)
-        if lt == -1:
-            if doc[i:].strip("\x00") != "" or i < n:
-                yield XmlEvent("text", text=doc[i:])
-            break
-        if lt > i:
-            yield XmlEvent("text", text=doc[i:lt])
-        i = lt
-        if doc.startswith("<!--", i):
-            end = doc.find("-->", i + 4)
-            if end == -1:
-                raise XmlScanError("unterminated comment", i)
-            i = end + 3
-        elif doc.startswith("<![CDATA[", i):
-            end = doc.find("]]>", i + 9)
-            if end == -1:
-                raise XmlScanError("unterminated CDATA", i)
-            yield XmlEvent("cdata", text=doc[i + 9 : end])
-            i = end + 3
-        elif doc.startswith("<!", i):
-            end = doc.find(">", i)  # DOCTYPE etc. — skipped like Event::DocType
-            if end == -1:
-                raise XmlScanError("unterminated markup declaration", i)
-            i = end + 1
-        elif doc.startswith("<?", i):
-            end = doc.find("?>", i + 2)
-            if end == -1:
-                raise XmlScanError("unterminated processing instruction", i)
-            i = end + 2
-        elif doc.startswith("</", i):
-            end = doc.find(">", i)
-            if end == -1:
-                raise XmlScanError("unterminated end tag", i)
-            name = doc[i + 2 : end].strip(_WS)
+    for m in _TOKEN.finditer(doc):
+        k = m.lastindex
+        if k == _TEXT:
+            add(new(event, ("text", "", (), m[1])))
+        elif k == _ELEMENT:
+            name, text = m.group(2, 3)
+            add(new(event, ("start", name, (), "")))
+            if text:
+                add(new(event, ("text", "", (), text)))
+            add(new(event, ("end", name, (), "")))
+        elif k == _START:
+            name, raw, slash = m.group(4, 5, 6)
+            attrs = ()
+            if raw:
+                attrs = tuple([(a, b or c) for a, b, c in _ATTR.findall(raw)])
+                if len(attrs) > 1 and len(dict(attrs)) < len(attrs):
+                    raise _markup_error(doc, m.start())  # duplicate key
+            add(new(event, ("start", name, attrs, "")))
+            if slash:
+                add(new(event, ("end", name, (), "")))
+            else:
+                stack.append(name)
+        elif k == _END:
+            name = m[7].strip(_WS)
             if not stack:
-                raise XmlScanError(f"close tag </{name}> with no open element", i)
+                raise XmlScanError(
+                    f"close tag </{name}> with no open element", m.start()
+                )
             expected = stack.pop()
             if name != expected:
                 raise XmlScanError(
-                    f"expected </{expected}>, found </{name}>", i
+                    f"expected </{expected}>, found </{name}>", m.start()
                 )
-            yield XmlEvent("end", name=name)
-            i = end + 1
-        else:
-            name, attrs, self_closing, i = _scan_start_tag(doc, i)
-            yield XmlEvent("start", name=name, attrs=tuple(attrs))
-            if self_closing:
-                yield XmlEvent("end", name=name)
-            else:
-                stack.append(name)
-    yield XmlEvent("eof")
+            add(new(event, ("end", name, (), "")))
+        elif k == _CDATA:
+            add(new(event, ("cdata", "", (), m[8][9:-3])))
+        elif k == _BAD:
+            raise _markup_error(doc, m.start())
+    add(_EOF)
 
 
-def _scan_start_tag(doc: str, i: int) -> Tuple[str, List[Tuple[str, str]], bool, int]:
+def _markup_error(doc: str, i: int) -> XmlScanError:
+    """The error for the markup at ``doc[i] == '<'``, which is malformed or
+    a start tag with a repeated attribute key."""
+    if doc.startswith("<!--", i):
+        return XmlScanError("unterminated comment", i)
+    if doc.startswith("<![CDATA[", i):
+        return XmlScanError("unterminated CDATA", i)
+    if doc.startswith("<!", i):
+        return XmlScanError("unterminated markup declaration", i)
+    if doc.startswith("<?", i):
+        return XmlScanError("unterminated processing instruction", i)
+    if doc.startswith("</", i):
+        return XmlScanError("unterminated end tag", i)
+    return _start_tag_error(doc, i)
+
+
+def _start_tag_error(doc: str, start: int) -> XmlScanError:
+    """Walk the start tag at *start* one character at a time and return the
+    first error in it, with its position."""
     n = len(doc)
-    start = i
-    i += 1  # past '<'
-    j = i
+    i = j = start + 1  # past '<'
     while j < n and doc[j] not in _NAME_END:
         j += 1
-    name = doc[i:j]
-    if not name:
-        raise XmlScanError("empty tag name", start)
+    if j == i:
+        return XmlScanError("empty tag name", start)
     i = j
-    attrs: List[Tuple[str, str]] = []
     seen_keys = set()
     while True:
         while i < n and doc[i] in _WS:
             i += 1
         if i >= n:
-            raise XmlScanError("unterminated start tag", start)
-        if doc[i] == ">":
-            return name, attrs, False, i + 1
+            return XmlScanError("unterminated start tag", start)
+        if doc[i] == ">" or doc.startswith("/>", i):
+            # the token pattern accepts every tag this walk accepts
+            raise RuntimeError(f"start tag at {start} has no error")
         if doc[i] == "/":
-            if i + 1 < n and doc[i + 1] == ">":
-                return name, attrs, True, i + 2
-            raise XmlScanError("stray '/' in start tag", i)
+            return XmlScanError("stray '/' in start tag", i)
         j = i
         while j < n and doc[j] not in _NAME_END:
             j += 1
         key = doc[i:j]
         if not key:
-            raise XmlScanError("malformed attribute", i)
+            return XmlScanError("malformed attribute", i)
         i = j
         while i < n and doc[i] in _WS:
             i += 1
         if i >= n or doc[i] != "=":
-            raise XmlScanError(f"attribute '{key}' without value", i)
+            return XmlScanError(f"attribute '{key}' without value", i)
         i += 1
         while i < n and doc[i] in _WS:
             i += 1
         if i >= n or doc[i] not in "\"'":
-            raise XmlScanError(f"unquoted value for attribute '{key}'", i)
-        quote = doc[i]
-        end = doc.find(quote, i + 1)
+            return XmlScanError(f"unquoted value for attribute '{key}'", i)
+        end = doc.find(doc[i], i + 1)
         if end == -1:
-            raise XmlScanError(f"unterminated value for attribute '{key}'", i)
-        # Raw value: entities left intact, bare '&' tolerated (P12).
-        value = doc[i + 1 : end]
+            return XmlScanError(f"unterminated value for attribute '{key}'", i)
         if key in seen_keys:
-            raise XmlScanError(f"duplicate attribute '{key}'", i)
+            return XmlScanError(f"duplicate attribute '{key}'", i)
         seen_keys.add(key)
-        attrs.append((key, value))
         i = end + 1

@@ -132,7 +132,7 @@ FRONTIER_SCHEMA = StructType(
     ]
 )
 
-# columns appended by the parse stage (mapInPandas output, SURVEY.md §2.11)
+# columns appended by the parse stage (mapInArrow output, SURVEY.md §2.11)
 PARSE_RESULT_FIELDS = [
     _f("podcast", PODCAST_STRUCT),
     _f("episodes", ArrayType(EPISODE_STRUCT)),

@@ -1,12 +1,19 @@
 """Arrow-batched parse stage and scalar column equivalents.
 
 The parse stage (SURVEY.md §2.11 UDF #1) wraps the pure-Python feedparse
-core in ``mapInPandas``: one Arrow batch in → one batch out, preserving a
-caller-chosen set of passthrough columns (the frontier bookkeeping), so no
-re-join is needed after parsing.  This is the only Python in the pipeline's
-hot path and it is batch-vectorized per the input_hint ("no per-row
-Python" = no row-at-a-time ``udf()``; parsing is inherently per-document
-but crosses the JVM↔Python boundary once per ~10k-row Arrow batch).
+core in ``mapInArrow``: one Arrow record batch in → one batch out,
+preserving a caller-chosen set of passthrough columns (the frontier
+bookkeeping), so no re-join is needed after parsing.  This is the only
+Python in the pipeline's hot path and it is batch-vectorized per the
+input_hint ("no per-row Python" = no row-at-a-time ``udf()``; parsing is
+inherently per-document but crosses the JVM↔Python boundary once per
+~10k-row Arrow batch).
+
+The boundary has no pandas in it: the ``url`` and ``html`` columns are
+read with ``to_pylist``, the passthrough columns go back out as the same
+Arrow arrays (zero-copy), and the five result columns are built by
+``pa.array`` straight from the kernel's dicts, typed by the Arrow form of
+:data:`~.schemas.PARSE_RESULT_FIELDS`.
 
 ``parse_date`` / ``parse_bool`` column equivalents (P8/P9) are pure JVM
 expressions for use outside the parse UDF.
@@ -14,21 +21,20 @@ expressions for use outside the parse UDF.
 
 from __future__ import annotations
 
-from operator import itemgetter
 from typing import Iterator, Sequence
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from ..feedparse.rssparse import parse_feed_result
-from .schemas import EPISODE_STRUCT, PARSE_RESULT_FIELDS, PODCAST_STRUCT
+from .schemas import PARSE_RESULT_FIELDS
 
-# parse-result dict -> struct tuple, in the schema's field order
-_episode_row = itemgetter(*EPISODE_STRUCT.names)
-_podcast_row = itemgetter(*PODCAST_STRUCT.names)
+# parse_feed_result key of each result column, in PARSE_RESULT_FIELDS order
+_RESULT_KEYS = ("podcast", "episodes", "text", "error_kind", "error_message")
 
 
 def parse_pages(df: DataFrame, passthrough: Sequence[str] = ("url",)) -> DataFrame:
@@ -48,32 +54,29 @@ def parse_pages(df: DataFrame, passthrough: Sequence[str] = ("url",)) -> DataFra
     out_schema = StructType(
         [base.schema[c] for c in passthrough] + PARSE_RESULT_FIELDS
     )
+    arrow_schema = to_arrow_schema(out_schema)
+    results = [
+        (f.name, key, arrow_schema.field(f.name).type)
+        for f, key in zip(PARSE_RESULT_FIELDS, _RESULT_KEYS)
+    ]
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            results = [
-                parse_feed_result(
-                    bytes(html) if html is not None else None, url
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            parsed = [
+                parse_feed_result(html, url)
+                for url, html in zip(
+                    batch.column("url").to_pylist(),
+                    batch.column("html").to_pylist(),
                 )
-                for url, html in zip(pdf["url"], pdf["html"])
             ]
-            out = {c: pdf[c] for c in passthrough}
-            out["podcast"] = [
-                _podcast_row(r["podcast"]) if r["podcast"] is not None else None
-                for r in results
-            ]
-            out["episodes"] = [
-                [_episode_row(e) for e in r["episodes"]]
-                if r["episodes"] is not None
-                else None
-                for r in results
-            ]
-            out["extracted_text"] = [r["text"] for r in results]
-            out["parse_error_kind"] = [r["error_kind"] for r in results]
-            out["parse_error_message"] = [r["error_message"] for r in results]
-            yield pd.DataFrame(out)
+            names = list(passthrough)
+            arrays = [batch.column(c) for c in passthrough]
+            for name, key, dtype in results:
+                names.append(name)
+                arrays.append(pa.array([r[key] for r in parsed], type=dtype))
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return base.mapInPandas(_run, schema=out_schema)
+    return base.mapInArrow(_run, schema=out_schema)
 
 
 def explode_episodes(parsed: DataFrame) -> DataFrame:

@@ -202,8 +202,11 @@ def run_epoch(
     else:
         fetched = fetch_join(scheduled, pages)
 
-    # 4. parse stage (P1-P12) — Arrow-batched, frontier bookkeeping passes
-    # through so no re-join afterwards.  All scalar epoch metrics (A3/A4/A7)
+    # 4. parse stage (P1-P12) — ``mapInArrow`` over Arrow record batches:
+    # the frontier bookkeeping passes through as the same Arrow arrays
+    # (zero-copy, no pandas) so no re-join afterwards, and the kernel's
+    # dicts become the five typed result columns in one ``pa.array`` each
+    # (``functions/udfs.parse_pages``).  All scalar epoch metrics (A3/A4/A7)
     # ride along as an Observation and are collected while the parse output
     # is materialized — costing ZERO extra Spark jobs (the reference's
     # Prometheus counters similarly piggyback on the task flow,
@@ -225,7 +228,7 @@ def run_epoch(
     # pruned select drops extracted_text + politeness bookkeeping (heavy,
     # never read after the parse) so the scratch bytes are output-sized,
     # not parse-sized; pruning below the cache is impossible for a
-    # mapInPandas stage (Python emits the full schema), so the select
+    # mapInArrow stage (Python emits the full schema), so the select
     # above it is what keeps those bytes out of the scratch.
     from pyspark import StorageLevel
     from pyspark.sql import Observation
@@ -563,9 +566,10 @@ def admit_urls(
     frontier (see ``CrawlState``).
 
     The seen check is the D3 discipline over the PERSISTED shard index
-    (``state.seen_shards`` — bootstrapped once, folded incrementally),
-    whose layout (shard count, expected keys) is read once from its
-    manifest and used by both the probe and the fold:
+    (``state.seen_shards`` — bootstrapped once, folded incrementally).
+    The shard table is read once per admission, and its layout (shard
+    count, expected keys) once from its manifest; the probe and the fold
+    both use them:
 
     * **probe** — candidates cogroup against the S persisted shard rows
       (``seen.bloom_probe_partitioned``); cost O(candidates + S), the
@@ -603,7 +607,12 @@ def admit_urls(
     if "priority" not in urls.columns:
         urls = urls.withColumn("priority", F.lit(ADMIT_PRIORITY))
     cand = frontier_rows(urls.select("url", "priority"), epoch_ts, cfg)
-    shards = seen_shards_current(spark, state, cfg) if use_bloom else None
+    # read once: the probe and the fold use this frame
+    shards = (
+        seen_shards_current(spark, state, cfg)
+        if use_bloom
+        else state.seen_shards.read(spark)
+    )
     man = state.seen_shards.manifest()
     layout = man and {k: man["metrics"][k] for k in ("expected_keys", "num_shards")}
     if use_bloom:
@@ -632,7 +641,7 @@ def admit_urls(
         if layout:
             state.seen_shards.commit(
                 update_bloom_shards(
-                    state.seen_shards.read(spark),
+                    shards,
                     cand.select("url_hash"),
                     "url_hash",
                     layout["num_shards"],

@@ -117,3 +117,10 @@ def test_crawl_fixtures_match_generator():
     for name, rows in fresh.items():
         committed = pq.read_table(f"{OUT}/{name}.parquet").to_pylist()
         assert committed == [norm_row(r) for r in rows], f"fixture drift in {name}"
+
+
+def test_stream_equivalence_leaves_no_sink_table(spark):
+    out = entry_mod.queries()["stream_dedup_equiv"](spark, SF).collect()
+    assert len(out) == 150 and all(r.stream_matches for r in out)
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("pcs_sink_")]
+    assert left == []
