@@ -22,7 +22,7 @@ Field policy (explicit, last-text-wins like rssparse):
                description; content → summary;
                link[rel=alternate|relless] → link;
                link[rel=enclosure] → enclosure_url/type/length
-               (href decoded like rssparse's enclosure policy).
+               (href decoded by rssparse's enclosure rule).
 
 Malformed XML / entities raise :class:`rssparse.FeedParseError` with
 kind ``invalid_atom`` — finally constructing the reference's dead
@@ -36,6 +36,8 @@ from typing import Dict, List, Optional, Tuple
 from .rssparse import (
     FeedParseError,
     ParserConfig,
+    _attr,
+    _enclosure_url,
     _new_episode,
     _new_podcast,
 )
@@ -55,13 +57,6 @@ _ENTRY_TEXT = {
     "summary": "description",
     "content": "summary",
 }
-
-
-def _attr(attrs: Tuple[Tuple[str, str], ...], key: str) -> Optional[str]:
-    for k, v in attrs:
-        if k == key:
-            return v
-    return None
 
 
 def parse_atom_feed(
@@ -97,12 +92,7 @@ def parse_atom_feed(
             else:
                 episode["link"] = href
         elif rel == "enclosure" and episode is not None:
-            decoded = href.replace("&amp;", "&")
-            normalized = (
-                decoded
-                if decoded.startswith("http")
-                else decoded.replace("//", "/")
-            )
+            normalized = _enclosure_url(href)
             check_url(normalized)
             episode["enclosure_url"] = normalized
             mime = _attr(attrs, "type")

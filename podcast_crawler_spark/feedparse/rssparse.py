@@ -163,6 +163,13 @@ def _check_url(text: str, url: str, config: ParserConfig) -> None:
         raise FeedParseError(KIND_INVALID_FORMAT, f"Invalid link URL: {text}", url)
 
 
+def _enclosure_url(value: str) -> str:
+    """An enclosure url as stored: ``&amp;`` decoded and, for non-http
+    URLs, ``//`` collapsed to ``/`` (RSS ``url`` and Atom ``href`` alike)."""
+    decoded = value.replace("&amp;", "&")
+    return decoded if decoded.startswith("http") else decoded.replace("//", "/")
+
+
 def _enclosure(
     episode: Dict, attrs: Tuple[Tuple[str, str], ...], url: str, config: ParserConfig
 ) -> None:
@@ -170,10 +177,7 @@ def _enclosure(
     error_msg = ""
     for key, value in attrs:
         if key == "url":
-            decoded = value.replace("&amp;", "&")
-            normalized = (
-                decoded if decoded.startswith("http") else decoded.replace("//", "/")
-            )
+            normalized = _enclosure_url(value)
             _check_url(normalized, url, config)
             episode["enclosure_url"] = normalized
             found_url = ""

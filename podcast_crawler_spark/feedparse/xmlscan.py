@@ -101,10 +101,14 @@ def _entity(m: "re.Match[str]") -> str:
     body = m.group(1)
     if body is None:
         raise XmlEscapeError(f"invalid entity reference at offset {m.start()}")
-    if body.startswith("#x") or body.startswith("#X"):
-        return chr(int(body[2:], 16))
     if body.startswith("#"):
-        return chr(int(body[1:]))
+        code = int(body[2:], 16) if body[1] == "x" else int(body[1:])
+        # a surrogate or a code point past U+10FFFF is no character
+        if code > 0x10FFFF or 0xD800 <= code <= 0xDFFF:
+            raise XmlEscapeError(
+                f"invalid character reference '&{body};' at offset {m.start()}"
+            )
+        return chr(code)
     rep = _BUILTIN_ENTITIES.get(body)
     if rep is None:
         raise XmlEscapeError(f"unknown entity '&{body};' at offset {m.start()}")
@@ -114,7 +118,8 @@ def _entity(m: "re.Match[str]") -> str:
 def xml_unescape(text: str) -> str:
     """Decode the five predefined XML entities plus numeric references.
 
-    Unknown named entities or a dangling ``&`` raise :class:`XmlEscapeError`,
+    Unknown named entities, a dangling ``&`` or a numeric reference to a
+    surrogate or past U+10FFFF raise :class:`XmlEscapeError`,
     matching quick_xml's strict ``unescape`` used for Text events
     (``rss.rs:297-304`` turns this into a feed-level parse failure).
     Text without ``&`` is returned unchanged.

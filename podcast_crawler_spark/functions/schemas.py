@@ -5,11 +5,13 @@ fixed, SURVEY.md §1.1/§1.3 — no schema inference anywhere).
 mirrors ``src/schema.rs:23-52``; ``seeds`` mirrors ``podcast_rank``
 (``src/schema.rs:54-75``); the in-flight ``stages`` lineage struct mirrors
 ``src/crawler_refactor/task.rs:33-41``.  The ``pages`` table is the
-BASELINE.json input_hint shape.
+BASELINE.json input_hint shape.  The per-epoch metrics table is written
+driver-side by pyarrow, so its one schema is an Arrow schema.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -140,3 +142,16 @@ PARSE_RESULT_FIELDS = [
     _f("parse_error_kind", S),
     _f("parse_error_message", S),
 ]
+
+# the metrics table: one row per epoch, committed driver-side by pyarrow
+METRICS_ARROW_SCHEMA = pa.schema(
+    [
+        pa.field("epoch", pa.int32()),
+        pa.field("epoch_ts", pa.timestamp("us")),
+        pa.field("scheduled", pa.int64()),
+        pa.field("fetched", pa.int64()),
+        pa.field("parsed", pa.int64()),
+        pa.field("fetch_failures", pa.int64()),
+        pa.field("parse_failures", pa.int64()),
+    ]
+)

@@ -1,4 +1,4 @@
-"""Arrow-batched parse stage and scalar column equivalents.
+"""Arrow-batched parse stage.
 
 The parse stage (SURVEY.md §2.11 UDF #1) wraps the pure-Python feedparse
 core in ``mapInArrow``: one Arrow record batch in → one batch out,
@@ -14,9 +14,6 @@ read with ``to_pylist``, the passthrough columns go back out as the same
 Arrow arrays (zero-copy), and the five result columns are built by
 ``pa.array`` straight from the kernel's dicts, typed by the Arrow form of
 :data:`~.schemas.PARSE_RESULT_FIELDS`.
-
-``parse_date`` / ``parse_bool`` column equivalents (P8/P9) are pure JVM
-expressions for use outside the parse UDF.
 """
 
 from __future__ import annotations
@@ -25,7 +22,7 @@ from typing import Iterator, Sequence
 
 import pyarrow as pa
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
@@ -96,34 +93,4 @@ def explode_episodes(parsed: DataFrame) -> DataFrame:
             F.xxhash64("rss_feed_url").alias("podcast_id"),
             "episode.*",
         )
-    )
-
-
-# ---- P8/P9 as JVM column expressions (for non-UDF paths) ----
-
-_TRUE_LITS = ("true", "yes", "1")
-_FALSE_LITS = ("false", "no", "0")
-
-
-def parse_bool_col(c: Column) -> Column:
-    low = F.lower(c)
-    return (
-        F.when(low.isin(*_TRUE_LITS), F.lit(True))
-        .when(low.isin(*_FALSE_LITS), F.lit(False))
-        .otherwise(F.lit(None).cast("boolean"))
-    )
-
-
-def parse_date_col(c: Column) -> Column:
-    """coalesce chain over the reference's accepted formats (P9).  Spark 3+
-    bans week-based ``EEE`` in parse patterns, so the RFC2822 day-name
-    prefix is stripped before matching."""
-    no_dow = F.regexp_replace(c, r"^[A-Za-z]{3},\s*", "")
-    return F.coalesce(
-        F.try_to_timestamp(no_dow, F.lit("d MMM yyyy HH:mm:ss zzz")),
-        F.try_to_timestamp(no_dow, F.lit("d MMM yyyy HH:mm:ss Z")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd HH:mm:ss")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd")),
     )

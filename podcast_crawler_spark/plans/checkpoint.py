@@ -4,20 +4,25 @@ No Iceberg runtime jar / pyiceberg exists in this sandbox (SURVEY.md §7.0),
 so this is a thin warehouse layer with Iceberg's *semantics*: immutable
 parquet data files + JSON snapshot manifests giving *atomic commits*,
 *time travel* and *exact resume*.  In production the same call sites swap to
-a real Iceberg catalog (``df.writeTo(...)`` + ``MERGE INTO``) — the epoch
-loop only touches the four methods below.
+a real Iceberg catalog (``df.writeTo(...)`` + ``MERGE INTO``).
 
 Layout per table::
 
     <root>/<name>/data/snap-<n>/part-*.parquet     (immutable)
     <root>/<name>/_snapshots/<n>.json              (manifest, atomic rename)
 
-Manifest fields: snapshot_id, parent_id, data_dir, row_count,
-per-partition lineage (file, rows, bytes) and caller metrics — the
-north rule's "per-partition lineage + metrics".  A commit is the atomic
-rename of the manifest into ``_snapshots/``; readers resolve the highest
-committed id, so a killed writer leaves no torn state (the orphan data dir
-is ignored and overwritten on retry).
+Every write is two steps.  ``_stage`` picks the next snapshot id after the
+current one, writes its data dir (a Spark parquet write, or pyarrow for a
+driver-side table) and reads per-file lineage (file, rows, bytes) from the
+parquet footers.  ``_publish`` is the commit point: it refuses if another
+snapshot committed since the stage (single writer per table), then renames
+the manifest into ``_snapshots/`` with the caller's metrics and any extra
+fields (a merge-on-read delta adds its segment list and resolve key).  The
+public writers are compositions of the two: ``prepare``/``publish`` split
+them so the epoch can overlap the frontier's data write with the output
+commits; ``commit``, ``commit_delta``, ``commit_local`` and ``compact`` run
+both.  Readers resolve the highest committed id, so a killed writer leaves
+no torn state (the orphan data dir is ignored and overwritten on retry).
 """
 
 from __future__ import annotations
@@ -25,7 +30,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Dict, List, Optional
+from typing import Callable, Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -78,17 +83,23 @@ class SnapshotTable:
 
     # -- commit / read -------------------------------------------------------
 
-    def _write_data(self, df: DataFrame) -> Dict:
-        """Write *df* as the next snapshot's data dir and return its staged
-        manifest fields.  Per-partition lineage comes from the parquet
-        footers — no extra Spark job; row counts come from file metadata
-        (cheap local reads)."""
+    @staticmethod
+    def _segments(man: Dict) -> List[str]:
+        """The data dirs a snapshot reads: every live delta segment of a
+        merge-on-read snapshot, else its one data dir."""
+        return man.get("segments") or [man["data_dir"]]
+
+    def _stage(self, write: Callable[[str], None]) -> Dict:
+        """Write the next snapshot's data dir with *write* (given the dir
+        path) and return its staged manifest fields.  Per-partition
+        lineage comes from the parquet footers — no extra Spark job; row
+        counts come from file metadata (cheap local reads)."""
         import pyarrow.parquet as pq
 
         parent = self.current_snapshot_id()
         snap_id = (parent or 0) + 1
         data_dir = os.path.join(self.dir, "data", f"snap-{snap_id}")
-        df.write.mode("overwrite").parquet(data_dir)
+        write(data_dir)
         files = []
         for f in sorted(os.listdir(data_dir)):
             if f.endswith(".parquet"):
@@ -108,10 +119,25 @@ class SnapshotTable:
             "files": files,
         }
 
-    def _write_manifest(self, man: Dict) -> int:
-        """The commit point: write-tmp + atomic rename of the manifest
-        into ``_snapshots/``."""
-        snap_id = man["snapshot_id"]
+    def _publish(
+        self, staged: Dict, metrics: Optional[Dict] = None, **fields
+    ) -> int:
+        """The commit point: refuse if another snapshot committed since
+        *staged* was written (single-writer-per-table protocol), then
+        write-tmp + atomic rename of the manifest into ``_snapshots/``.
+        *fields* add to or override the staged fields."""
+        snap_id = staged["snapshot_id"]
+        current = self.current_snapshot_id()
+        if current is not None and current >= snap_id:
+            raise RuntimeError(
+                f"snapshot {current} committed since prepare of {snap_id}"
+            )
+        man = {
+            **staged,
+            "committed_at_unix": time.time(),
+            "metrics": metrics or {},
+            **fields,
+        }
         tmp = os.path.join(self.snap_dir, f".{snap_id}.json.tmp")
         with open(tmp, "w") as fh:
             json.dump(man, fh, indent=1)
@@ -128,22 +154,12 @@ class SnapshotTable:
         commits and publishes its manifest last).  A crash between prepare
         and publish leaves only an orphan data dir that the idempotent
         retry overwrites."""
-        return self._write_data(df)
+        return self._stage(df.write.mode("overwrite").parquet)
 
     def publish(self, staged: Dict, metrics: Optional[Dict] = None) -> int:
-        """Phase 2: atomically publish a prepared snapshot (write-tmp +
-        rename — the commit point).  Refuses if another snapshot committed
-        since prepare (single-writer-per-table protocol)."""
-        snap_id = staged["snapshot_id"]
-        current = self.current_snapshot_id()
-        if current is not None and current >= snap_id:
-            raise RuntimeError(
-                f"snapshot {current} committed since prepare of {snap_id}"
-            )
-        man = dict(staged)
-        man["committed_at_unix"] = time.time()
-        man["metrics"] = metrics or {}
-        return self._write_manifest(man)
+        """Phase 2: atomically publish a prepared snapshot; raises
+        ``RuntimeError`` if another snapshot committed since prepare."""
+        return self._publish(staged, metrics)
 
     def commit(self, df: DataFrame, metrics: Optional[Dict] = None) -> int:
         """Write *df* as the next snapshot; returns the new snapshot id.
@@ -156,56 +172,36 @@ class SnapshotTable:
 
     def commit_local(
         self,
-        rows: List[tuple],
+        rows: List[Dict],
         arrow_schema,
         metrics: Optional[Dict] = None,
     ) -> int:
         """Commit a small snapshot entirely driver-side via pyarrow — no
         Spark job.  Used for tiny control tables (per-epoch metrics): at
         one row per epoch a Spark write costs a full job-scheduling round
-        trip per epoch for kilobytes of data.  Each snapshot carries the
-        previous snapshot's rows (append-only table semantics)."""
+        trip per epoch for kilobytes of data.  *rows* are dicts keyed by
+        *arrow_schema*'s field names.  Each snapshot rewrites the previous
+        snapshot's rows and the new ones into one file (append-only table
+        semantics)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        parent = self.current_snapshot_id()
-        snap_id = (parent or 0) + 1
-        data_dir = os.path.join(self.dir, "data", f"snap-{snap_id}")
-        os.makedirs(data_dir, exist_ok=True)
-        tables = []
-        if parent is not None:
-            prev = self.manifest(parent)
-            for f in prev["files"]:
-                tables.append(
-                    pq.read_table(os.path.join(prev["data_dir"], f["file"]))
-                )
-        tables.append(
-            pa.Table.from_pylist(
-                [dict(zip([f.name for f in arrow_schema], r)) for r in rows],
-                schema=arrow_schema,
+        def write(data_dir: str) -> None:
+            # the current snapshot is the staged parent, or a newer one
+            # that makes the publish below refuse
+            prev = self.manifest()
+            tables = [
+                pq.read_table(os.path.join(prev["data_dir"], f["file"]))
+                for f in (prev["files"] if prev else [])
+            ]
+            tables.append(pa.Table.from_pylist(rows, schema=arrow_schema))
+            os.makedirs(data_dir, exist_ok=True)
+            pq.write_table(
+                pa.concat_tables(tables),
+                os.path.join(data_dir, "part-00000.parquet"),
             )
-        )
-        table = pa.concat_tables(tables)
-        path = os.path.join(data_dir, "part-00000.parquet")
-        pq.write_table(table, path)
-        files = [
-            {
-                "file": "part-00000.parquet",
-                "bytes": os.path.getsize(path),
-                "rows": table.num_rows,
-            }
-        ]
-        return self._write_manifest(
-            {
-                "snapshot_id": snap_id,
-                "parent_id": parent,
-                "committed_at_unix": time.time(),
-                "data_dir": data_dir,
-                "row_count": table.num_rows,
-                "files": files,
-                "metrics": metrics or {},
-            }
-        )
+
+        return self._publish(self._stage(write), metrics)
 
     def commit_delta(
         self,
@@ -222,39 +218,25 @@ class SnapshotTable:
         bottleneck of the whole crawl (Iceberg calls the same idea MOR
         delete/equality files; ``compact`` below is the rewrite).
 
-        If no base snapshot exists this degrades to a plain ``commit``
-        (with resolve metadata recorded so later deltas know the key).
-        Calls the private writers, not the public ``prepare``/``publish``,
-        so instrumentation wrapping those two sees a delta commit as one
-        commit, not a nested prepare + publish."""
-        staged = self._write_data(updates)
+        If no base snapshot exists this degrades to a one-segment
+        snapshot (with resolve metadata recorded so later deltas know the
+        key).  Calls the private steps, not the public
+        ``prepare``/``publish``, so instrumentation wrapping those two
+        sees a delta commit as one commit, not a nested prepare +
+        publish."""
+        staged = self._stage(updates.write.mode("overwrite").parquet)
         parent = staged["parent_id"]
-        parent_man = self.manifest(parent) if parent is not None else None
-        data_dir = staged["data_dir"]
+        base = self.manifest(parent) if parent is not None else None
         delta_rows = staged["row_count"]
-        if parent_man is None:
-            segments = [data_dir]
-            raw_rows = delta_rows
-        else:
-            segments = (
-                parent_man.get("segments") or [parent_man["data_dir"]]
-            ) + [data_dir]
-            raw_rows = parent_man["row_count"] + delta_rows
-        return self._write_manifest(
-            {
-                "snapshot_id": staged["snapshot_id"],
-                "parent_id": parent,
-                "committed_at_unix": time.time(),
-                "data_dir": data_dir,
-                "segments": segments,
-                "resolve": {"key": key, "order_col": order_col},
-                # raw (pre-resolve) rows across segments — an upper bound
-                # on the resolved count, like Iceberg's file-level stats
-                "row_count": raw_rows,
-                "delta_rows": delta_rows,
-                "files": staged["files"],
-                "metrics": metrics or {},
-            }
+        return self._publish(
+            staged,
+            metrics,
+            segments=(self._segments(base) if base else []) + [staged["data_dir"]],
+            resolve={"key": key, "order_col": order_col},
+            # raw (pre-resolve) rows across segments — an upper bound on
+            # the resolved count, like Iceberg's file-level stats
+            row_count=delta_rows + (base["row_count"] if base else 0),
+            delta_rows=delta_rows,
         )
 
     def expire(
@@ -292,7 +274,7 @@ class SnapshotTable:
         reachable = set()
         for sid in kept:
             man = self.manifest(sid)
-            reachable.update(man.get("segments") or [man["data_dir"]])
+            reachable.update(self._segments(man))
         expired = [sid for sid in ids if sid not in kept]
         deleted = []
         for sid in expired:
@@ -301,7 +283,7 @@ class SnapshotTable:
             # orphan data dir (harmless, re-collected next expire), never
             # a manifest pointing at deleted data.
             os.remove(os.path.join(self.snap_dir, f"{sid}.json"))
-            for seg in man.get("segments") or [man["data_dir"]]:
+            for seg in self._segments(man):
                 if seg not in reachable and os.path.isdir(seg):
                     shutil.rmtree(seg)
                     deleted.append(seg)
@@ -312,7 +294,7 @@ class SnapshotTable:
         man = self.manifest()
         if man is None:
             return 0
-        return len(man.get("segments") or [man["data_dir"]])
+        return len(self._segments(man))
 
     def compact(self, spark: SparkSession, metrics: Optional[Dict] = None) -> int:
         """Materialize the resolved view as a single-segment snapshot —
@@ -331,7 +313,7 @@ class SnapshotTable:
         man = self.manifest(snapshot_id)
         if man is None:
             return None
-        segments = man.get("segments") or [man["data_dir"]]
+        segments = self._segments(man)
         reader = spark.read
         if len(segments) > 1:
             # delta segments may carry evolved schemas (a later ingest

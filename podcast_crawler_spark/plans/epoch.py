@@ -35,6 +35,7 @@ from typing import Dict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.schemas import METRICS_ARROW_SCHEMA
 from ..functions.udfs import explode_episodes, parse_pages
 from ..functions.urlfns import canonicalize_url, url_hash
 from ..operators.frontier import (
@@ -54,16 +55,9 @@ from ..operators.seen import (
 from ..operators.stats import ERROR_TYPES, categorize_error
 from .checkpoint import SnapshotTable, resolve_lww
 
-PASSTHROUGH = [
-    "url",
-    "url_hash",
-    "host",
-    "host_hash",
-    "priority",
-    "host_seq",
-    "planned_fetch_ts",
-    "fetch_ok",
-]
+# frontier bookkeeping carried through the parse unchanged: exactly what
+# the three post-parse consumers read besides the parse results
+PASSTHROUGH = ["url", "url_hash", "fetch_ok"]
 
 # Scoped AQE override for the epoch's commit writes: the delta/frontier
 # writers are shuffle-final jobs over O(delta) bytes, and AQE's default
@@ -126,10 +120,7 @@ class CrawlState:
         ``epoch`` metric (snapshot ids can't be used directly: each
         ``admit_urls`` call commits an extra frontier snapshot)."""
         man = self.frontier.manifest()
-        if man is None:
-            return 0
-        ep = man["metrics"].get("epoch")
-        return ep if ep is not None else man["snapshot_id"] - 1
+        return man["metrics"]["epoch"] if man else 0
 
 
 def init_crawl(
@@ -252,17 +243,10 @@ def run_epoch(
             for t in ERROR_TYPES
         ],
     )
-    # exactly the columns the three consumers below read — everything
-    # else (extracted_text, host/priority/host_seq politeness bookkeeping)
-    # is parse/schedule working state that must not hit the scratch
-    scratch_cols = [
-        "url",
-        "url_hash",
-        "fetch_ok",
-        "podcast",
-        "episodes",
-        "parse_error_kind",
-        "parse_error_message",
+    # exactly the columns the three consumers below read — extracted_text
+    # is parse working state that must not hit the scratch
+    scratch_cols = PASSTHROUGH + [
+        "podcast", "episodes", "parse_error_kind", "parse_error_message"
     ]
     parsed = observed.select(*scratch_cols).persist(StorageLevel.DISK_ONLY)
     # materialize now so the Observation is complete and every consumer
@@ -404,32 +388,9 @@ def run_epoch(
 
     # metrics table: one row per epoch — committed driver-side via pyarrow
     # (a Spark job per epoch for one row is pure scheduling overhead)
-    import pyarrow as pa
-
-    metrics_arrow_schema = pa.schema(
-        [
-            pa.field("epoch", pa.int32()),
-            pa.field("epoch_ts", pa.timestamp("us")),
-            pa.field("scheduled", pa.int64()),
-            pa.field("fetched", pa.int64()),
-            pa.field("parsed", pa.int64()),
-            pa.field("fetch_failures", pa.int64()),
-            pa.field("parse_failures", pa.int64()),
-        ]
-    )
     state.metrics.commit_local(
-        [
-            (
-                epoch_no,
-                epoch_ts.replace(tzinfo=None),
-                total,
-                n_fetch_ok,
-                n_parse_ok,
-                total - n_fetch_ok,
-                n_fetch_ok - n_parse_ok,
-            )
-        ],
-        metrics_arrow_schema,
+        [{**metrics, "epoch_ts": epoch_ts.replace(tzinfo=None)}],
+        METRICS_ARROW_SCHEMA,
         metrics={"epoch": epoch_no},
     )
     metrics["wall_s"] = round(time.time() - t0, 3)

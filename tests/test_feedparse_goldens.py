@@ -28,6 +28,7 @@ from podcast_crawler_spark.feedparse import (
     parse_bool,
     parse_date,
     parse_feed,
+    parse_feed_result,
     validate_url,
 )
 
@@ -254,6 +255,16 @@ def test_unknown_entity_fails():
     with pytest.raises(FeedParseError) as exc:
         parse_feed(rss, "http://e/f")
     assert exc.value.kind == "invalid_xml"
+
+
+@pytest.mark.parametrize("ref", ["&#1114112;", "&#x110000;", "&#xD800;", "&#57343;"])
+def test_bad_character_reference_fails_feed(ref):
+    """A numeric reference past U+10FFFF or to a surrogate is no
+    character: the feed fails as invalid_xml instead of the parse raising."""
+    rss = f"<rss><channel><title>T {ref}</title></channel></rss>".encode()
+    res = parse_feed_result(rss, "http://e/f")
+    assert res["error_kind"] == "invalid_xml"
+    assert res["podcast"] is None
 
 
 def test_mismatched_end_tag_fails():

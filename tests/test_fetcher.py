@@ -4,6 +4,7 @@ failure → retry path, and end-to-end equality with the pages-join mode."""
 from __future__ import annotations
 
 import time
+import zlib
 from datetime import datetime, timezone
 
 import pytest
@@ -90,13 +91,17 @@ def test_live_fetch_errors_feed_retry_path(spark, corpus):
     scheduled, _, page_map = corpus
 
     def flaky(url, timeout_s, user_agent):
-        if hash(url) % 3 == 0:
+        # crc32, not hash(): str hashes differ per worker process
+        if zlib.crc32(url.encode()) % 3 == 0:
             raise TimeoutError("simulated network timeout")
         return page_map.get(url)
 
     rows = live_fetch(scheduled, flaky, EPOCH0).collect()
     failed = [r for r in rows if not r.fetch_ok]
-    assert failed and all(r.html is None for r in failed)
+    timed_out = {r.url for r in rows if zlib.crc32(r.url.encode()) % 3 == 0}
+    assert timed_out and timed_out <= {r.url for r in failed}
+    assert all(r.html is None for r in failed)
+    assert len(failed) < len(rows)
 
 
 def test_epoch_with_live_fetcher_matches_join_mode(spark, tmp_path, corpus):

@@ -158,8 +158,8 @@ def test_commit_local_driver_side_snapshots(spark, tmp_path):
 
     t = SnapshotTable(str(tmp_path / "wh"), "metrics")
     schema = pa.schema([pa.field("epoch", pa.int32()), pa.field("n", pa.int64())])
-    s1 = t.commit_local([(1, 10)], schema, metrics={"epoch": 1})
-    s2 = t.commit_local([(2, 20)], schema, metrics={"epoch": 2})
+    s1 = t.commit_local([{"epoch": 1, "n": 10}], schema, metrics={"epoch": 1})
+    s2 = t.commit_local([{"n": 20, "epoch": 2}], schema, metrics={"epoch": 2})
     assert (s1, s2) == (1, 2)
     # snapshot 2 carries snapshot 1's rows (append-only table semantics)
     assert {(r.epoch, r.n) for r in t.read(spark).collect()} == {(1, 10), (2, 20)}
@@ -171,6 +171,53 @@ def test_commit_local_driver_side_snapshots(spark, tmp_path):
     for sid in (s1, s2):
         _assert_manifest_files(t, t.manifest(sid))
     assert t.manifest(s2)["row_count"] == 2
+
+
+@pytest.mark.parametrize("writer", ["commit", "commit_delta", "commit_local"])
+def test_racing_writer_refused_at_publish(spark, tmp_path, monkeypatch, writer):
+    """Single writer per table: when another writer's snapshot lands while
+    a commit is writing its data, the commit raises at publish instead of
+    renaming its manifest over that snapshot."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from podcast_crawler_spark.plans.checkpoint import SnapshotTable
+
+    root = str(tmp_path / "wh")
+    schema = pa.schema([pa.field("k", pa.int64()), pa.field("ts", pa.int64())])
+
+    def commit(table, k, marker):
+        m = {"writer": marker}
+        if writer == "commit_local":
+            return table.commit_local([{"k": k, "ts": k}], schema, metrics=m)
+        df = spark.createDataFrame([(k, k)], "k long, ts long")
+        if writer == "commit_delta":
+            return table.commit_delta(df, "k", "ts", metrics=m)
+        return table.commit(df, metrics=m)
+
+    t = SnapshotTable(root, "t")
+    commit(t, 1, "base")
+    if writer == "commit_local":
+        patched = (pq, "write_table")
+    else:
+        patched = (DataFrameWriter, "parquet")
+    write = getattr(*patched)
+    raced = []
+
+    def racing_write(*a, **kw):
+        # unpatch, then the other writer commits before this write runs
+        monkeypatch.setattr(*patched, write)
+        raced.append(commit(SnapshotTable(root, "t"), 2, "other"))
+        return write(*a, **kw)
+
+    monkeypatch.setattr(*patched, racing_write)
+    with pytest.raises(RuntimeError, match="committed since prepare"):
+        commit(t, 3, "loser")
+    assert raced == [2]
+    assert t.snapshot_ids() == [1, 2]
+    assert t.manifest()["metrics"] == {"writer": "other"}
+    assert not [n for n in os.listdir(t.snap_dir) if n.endswith(".tmp")]
 
 
 def test_delta_commit_merge_on_read(spark, tmp_path):

@@ -8,8 +8,6 @@ from pyspark.sql import functions as F
 
 from podcast_crawler_spark.functions.udfs import (
     explode_episodes,
-    parse_bool_col,
-    parse_date_col,
     parse_pages,
 )
 from podcast_crawler_spark.sources.pagesgen import (
@@ -50,6 +48,23 @@ def test_parse_error_taxonomy(spark):
     assert by_url[feed_url(FAIL_BAD_ENCLOSURE)] == "missing_field"
 
 
+def test_bad_character_reference_fails_only_its_feed(spark):
+    """Numeric references to no character (past U+10FFFF, a surrogate)
+    fail their own feed as invalid_xml; the stage itself completes."""
+    feed = "<rss><channel><title>T{}</title></channel></rss>"
+    pages = spark.createDataFrame(
+        [
+            (f"http://e/{i}", bytearray(feed.format(ref).encode()))
+            for i, ref in enumerate(["", " &#1114112;", " &#xD800;"])
+        ],
+        "url string, html binary",
+    )
+    kinds = {r.url: r.parse_error_kind for r in parse_pages(pages).collect()}
+    assert kinds == {
+        "http://e/0": None, "http://e/1": "invalid_xml", "http://e/2": "invalid_xml"
+    }
+
+
 def test_reference_fixtures_through_spark(spark):
     pages = reference_fixture_pages(spark)
     if pages is None:
@@ -77,26 +92,3 @@ def test_explode_episodes_inherits_podcast_id(spark):
     assert joined.count() == 0
     assert eps.filter(F.col("guid").isNull()).count() == 0
     assert eps.count() > 50
-
-
-def test_parse_scalar_cols(spark):
-    df = spark.createDataFrame(
-        [("true",), ("no",), ("bogus",)], ["v"]
-    ).withColumn("b", parse_bool_col(F.col("v")))
-    assert [r.b for r in df.collect()] == [True, False, None]
-    df = spark.createDataFrame(
-        [
-            ("Wed, 04 Dec 2024 10:06:00 GMT",),
-            ("2024-12-04T10:06:00Z",),
-            ("2024-12-04 10:06:00",),
-            ("2024-12-04",),
-            ("garbage",),
-        ],
-        ["v"],
-    ).withColumn("d", parse_date_col(F.col("v")))
-    vals = [r.d for r in df.collect()]
-    assert vals[0] is not None and vals[0].isoformat().startswith("2024-12-04T10:06")
-    assert vals[1] is not None
-    assert vals[2] is not None
-    assert vals[3] is not None
-    assert vals[4] is None
