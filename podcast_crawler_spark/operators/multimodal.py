@@ -191,21 +191,6 @@ def sample_video_frames(media: DataFrame, every_n_bytes: int = 1024,
     return media.select("media_id", "blob").mapInPandas(_run, schema=FRAME_SCHEMA)
 
 
-def image_meta_sql_equivalent(media: DataFrame) -> DataFrame:
-    """The oracle-comparable slice of ``decode_image`` expressed as pure
-    column ops (n_bytes, format, width, height are deterministic functions
-    of byte length) — used by the correctness gate to pin the pipeline's
-    Spark-side plumbing against DuckDB."""
-    n = F.length(F.col("blob")).cast("long")
-    return media.select(
-        F.col("media_id"),
-        n.alias("n_bytes"),
-        F.when(n % 2 == 0, F.lit("png")).otherwise(F.lit("jpeg")).alias("format"),
-        (64 + n % 512).cast("int").alias("width"),
-        (64 + F.floor(n / 7) % 512).cast("int").alias("height"),
-    )
-
-
 # WHATWG-ish magic table: hex prefix -> MIME.  Ordered longest-prefix
 # first so PNG (8 bytes) wins before shorter patterns get a look.
 _MAGIC = [

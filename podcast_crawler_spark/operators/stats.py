@@ -8,9 +8,9 @@ Prometheus surface (SURVEY.md §2.5 A3-A7, §2.1 K4).
   {Timeout, Connection Refused, DNS Error, Parse Error, Other Error}.
 * A6 log analysis (``scripts/task_analysis.sh:5-135``): per-task duration
   max/min/avg/median.
-* A7 Prometheus counters/histogram (``src/metrics.rs:47-116``): per-stage
-  status counts + stage-duration histogram with the reference's default
-  buckets 0.1/0.5/1/2/5/10 s.
+* A7 Prometheus counters/histogram (``src/metrics.rs:47-116``) are not
+  here: the epoch's Observation metrics, ``stage_metrics_stream`` and the
+  ``duration_histogram`` query of ``__spark_entry__`` cover them.
 
 All pure ``groupBy``/``agg`` column expressions — metrics are tables, not a
 scrape endpoint (§7.3 non-goals).
@@ -18,16 +18,8 @@ scrape endpoint (§7.3 non-goals).
 
 from __future__ import annotations
 
-from typing import List
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# reference default histogram buckets (src/metrics.rs:74-86)
-STAGE_DURATION_BUCKETS = [0.1, 0.5, 1.0, 2.0, 5.0, 10.0]
-
-# stage names (src/metrics.rs:105)
-STAGES = ["distribution", "fetching", "parsing", "inserting"]
 
 # A4 error taxonomy (stats.rs:144-156)
 ERROR_TYPES = [
@@ -78,33 +70,6 @@ def error_histogram(outcomes: DataFrame, error_col: str = "last_error") -> DataF
         .count()
         .withColumnRenamed("count", "n")
     )
-
-
-def stage_status_counts(stage_rows: DataFrame) -> DataFrame:
-    """A7 gauge equivalent: counts per (stage, status)."""
-    return stage_rows.groupBy("stage", "status").count().withColumnRenamed(
-        "count", "n"
-    )
-
-
-def duration_bucket(duration: Column, buckets: List[float] = STAGE_DURATION_BUCKETS) -> Column:
-    """A7 histogram bucketing (cumulative ``le`` label, Prometheus-style)."""
-    expr = F.when(duration <= buckets[0], F.lit(f"le_{buckets[0]}"))
-    for b in buckets[1:]:
-        expr = expr.when(duration <= b, F.lit(f"le_{b}"))
-    return expr.otherwise(F.lit("inf"))
-
-
-def per_partition_lineage(df: DataFrame) -> List[dict]:
-    """North-rule per-partition lineage: rows per physical partition of the
-    epoch output (recorded into the snapshot manifest)."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .count()
-        .orderBy("partition_id")
-        .collect()
-    )
-    return [{"partition_id": r.partition_id, "rows": r["count"]} for r in rows]
 
 
 def host_concentration(

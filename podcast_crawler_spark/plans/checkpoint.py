@@ -8,8 +8,8 @@ a real Iceberg catalog (``df.writeTo(...)`` + ``MERGE INTO``).
 
 Layout per table::
 
-    <root>/<name>/data/snap-<n>/part-*.parquet     (immutable)
-    <root>/<name>/_snapshots/<n>.json              (manifest, atomic rename)
+    <root>/<name>/data/snap-<n>-<attempt>/part-*.parquet  (immutable)
+    <root>/<name>/_snapshots/<n>.json          (manifest, atomic rename)
 
 Every write is two steps.  ``_stage`` picks the next snapshot id after the
 current one, writes its data dir (a Spark parquet write, or pyarrow for a
@@ -21,8 +21,11 @@ fields (a merge-on-read delta adds its segment list and resolve key).  The
 public writers are compositions of the two: ``prepare``/``publish`` split
 them so the epoch can overlap the frontier's data write with the output
 commits; ``commit``, ``commit_delta``, ``commit_local`` and ``compact`` run
-both.  Readers resolve the highest committed id, so a killed writer leaves
-no torn state (the orphan data dir is ignored and overwritten on retry).
+both.  Each attempt stages into a data dir of its own (a random attempt
+tag in its name), so no other attempt at the same id can overwrite it.
+Readers resolve the highest committed id, so a killed or refused writer
+leaves no torn state: its orphan data dir is never read, and ``expire``
+collects it.
 """
 
 from __future__ import annotations
@@ -30,6 +33,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from typing import Callable, Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -98,7 +102,9 @@ class SnapshotTable:
 
         parent = self.current_snapshot_id()
         snap_id = (parent or 0) + 1
-        data_dir = os.path.join(self.dir, "data", f"snap-{snap_id}")
+        data_dir = os.path.join(
+            self.dir, "data", f"snap-{snap_id}-{uuid.uuid4().hex}"
+        )
         write(data_dir)
         files = []
         for f in sorted(os.listdir(data_dir)):
@@ -152,8 +158,8 @@ class SnapshotTable:
         *protocol* orders this table's publication after theirs (the epoch
         loop overlaps the frontier's big parquet write with the output
         commits and publishes its manifest last).  A crash between prepare
-        and publish leaves only an orphan data dir that the idempotent
-        retry overwrites."""
+        and publish leaves only an orphan data dir, which ``expire``
+        collects."""
         return self._stage(df.write.mode("overwrite").parquet)
 
     def publish(self, staged: Dict, metrics: Optional[Dict] = None) -> int:
@@ -239,20 +245,16 @@ class SnapshotTable:
             delta_rows=delta_rows,
         )
 
-    def expire(
-        self,
-        retain_last: int = 2,
-        max_age_s: Optional[float] = None,
-        now: Optional[float] = None,
-    ) -> Dict:
-        """Expire old snapshots (Iceberg ``expire_snapshots``): drop
-        manifests outside the retention rule (keep the newest
-        *retain_last* ids, plus everything younger than *max_age_s*),
-        then delete exactly the data segments no RETAINED snapshot
-        references — merge-on-read lineage means an old delta segment
-        stays alive as long as any kept snapshot's ``segments`` list
-        includes it, so reachability (not age) decides file deletion;
-        time travel to an expired id fails loudly afterwards.
+    def expire(self, retain_last: int = 2) -> Dict:
+        """Expire old snapshots (Iceberg ``expire_snapshots``): drop the
+        manifests of all but the newest *retain_last* ids, then delete
+        every data dir no KEPT snapshot references — merge-on-read
+        lineage means an old delta segment stays alive as long as any
+        kept snapshot's ``segments`` list includes it, so reachability
+        (not age) decides file deletion.  The same rule collects the
+        orphan dirs of crashed or refused attempts.  A dir above the
+        current snapshot id may be a write in flight and is never
+        touched.  Time travel to an expired id fails loudly afterwards.
 
         Driver-side by design: the manifest set is O(commits), the same
         scale at which Iceberg's own expire action plans (the
@@ -264,31 +266,26 @@ class SnapshotTable:
         ids = self.snapshot_ids()
         if not ids:
             return {"expired": [], "deleted_dirs": []}
-        now = time.time() if now is None else now
-        kept = set(ids[-max(retain_last, 1):])
-        if max_age_s is not None:
-            for sid in ids:
-                man = self.manifest(sid)
-                if man and now - man["committed_at_unix"] <= max_age_s:
-                    kept.add(sid)
-        reachable = set()
-        for sid in kept:
-            man = self.manifest(sid)
-            reachable.update(self._segments(man))
-        expired = [sid for sid in ids if sid not in kept]
-        deleted = []
+        kept = ids[-max(retain_last, 1):]
+        reachable = {
+            os.path.basename(seg)
+            for sid in kept
+            for seg in self._segments(self.manifest(sid))
+        }
+        expired = ids[: len(ids) - len(kept)]
+        # manifests first: a crash before the dirs go leaves orphan data
+        # dirs (collected by the next expire), never a manifest pointing
+        # at deleted data
         for sid in expired:
-            man = self.manifest(sid)
-            # manifest first: a crash between the two deletes leaves an
-            # orphan data dir (harmless, re-collected next expire), never
-            # a manifest pointing at deleted data.
             os.remove(os.path.join(self.snap_dir, f"{sid}.json"))
-            for seg in self._segments(man):
-                if seg not in reachable and os.path.isdir(seg):
-                    shutil.rmtree(seg)
-                    deleted.append(seg)
-                    reachable.add(seg)  # counted once
-        return {"expired": expired, "deleted_dirs": sorted(set(deleted))}
+        data = os.path.join(self.dir, "data")
+        deleted = []
+        for name in sorted(os.listdir(data)):
+            # snap-<id>-<attempt>
+            if name not in reachable and int(name.split("-")[1]) <= ids[-1]:
+                deleted.append(os.path.join(data, name))
+                shutil.rmtree(deleted[-1])
+        return {"expired": expired, "deleted_dirs": deleted}
 
     def num_segments(self) -> int:
         man = self.manifest()

@@ -519,7 +519,6 @@ def admit_urls(
     urls: DataFrame,
     epoch_ts: datetime,
     cfg: CrawlConfig = CrawlConfig(),
-    use_bloom: bool = True,
 ) -> int:
     """Frontier growth: admit URLs that are NOT already in the frontier —
     discovered episode links (``discovered_urls``), ``add_task`` urls and
@@ -558,31 +557,18 @@ def admit_urls(
     ``priority`` column in *urls* gives each url its own priority (stream
     seed batches carry the seed rank); otherwise every url gets
     ``ADMIT_PRIORITY``.
-
-    ``use_bloom=False`` skips the probe for a plain anti-join against the
-    frontier and never bootstraps the index; it still folds into an
-    existing one.  It is kept as the exact reference the bloom path is
-    tested against (tests/test_discovery.py).
     """
     frontier = state.frontier.read(spark)
     if "priority" not in urls.columns:
         urls = urls.withColumn("priority", F.lit(ADMIT_PRIORITY))
     cand = frontier_rows(urls.select("url", "priority"), epoch_ts, cfg)
     # read once: the probe and the fold use this frame
-    shards = (
-        seen_shards_current(spark, state, cfg)
-        if use_bloom
-        else state.seen_shards.read(spark)
-    )
+    shards = seen_shards_current(spark, state, cfg)
     man = state.seen_shards.manifest()
-    layout = man and {k: man["metrics"][k] for k in ("expected_keys", "num_shards")}
-    if use_bloom:
-        fresh, probed = filter_unseen(
-            cand, shards, frontier, "url_hash", layout["num_shards"]
-        )
-    else:
-        fresh = cand.join(frontier.select("url_hash"), "url_hash", "left_anti")
-        probed = None
+    layout = {k: man["metrics"][k] for k in ("expected_keys", "num_shards")}
+    fresh, probed = filter_unseen(
+        cand, shards, frontier, "url_hash", layout["num_shards"]
+    )
     try:
         # Fold the admission's keys into the persisted shard index so the
         # next admission probes a complete seen set.  Folding ALL
@@ -599,23 +585,22 @@ def admit_urls(
         # would leave frontier keys ABSENT from the bloom after a crash:
         # false negatives that skip the exact verify and re-admit
         # duplicates.
-        if layout:
-            state.seen_shards.commit(
-                update_bloom_shards(
-                    shards,
-                    cand.select("url_hash"),
-                    "url_hash",
-                    layout["num_shards"],
-                    expected_keys_per_shard=max(
-                        1, layout["expected_keys"] // layout["num_shards"]
-                    ),
+        state.seen_shards.commit(
+            update_bloom_shards(
+                shards,
+                cand.select("url_hash"),
+                "url_hash",
+                layout["num_shards"],
+                expected_keys_per_shard=max(
+                    1, layout["expected_keys"] // layout["num_shards"]
                 ),
-                metrics={
-                    "op": "seen_fold",
-                    "epoch": state.completed_epochs(),
-                    **layout,
-                },
-            )
+            ),
+            metrics={
+                "op": "seen_fold",
+                "epoch": state.completed_epochs(),
+                **layout,
+            },
+        )
         return state.frontier.commit(
             frontier.unionByName(fresh.select(*frontier.columns)).repartition(
                 cfg.num_partitions, "host_hash"
@@ -623,8 +608,7 @@ def admit_urls(
             metrics={"epoch": state.completed_epochs(), "op": "admit"},
         )
     finally:
-        if probed is not None:
-            probed.unpersist()
+        probed.unpersist()
 
 
 def discovered_urls(state: CrawlState, spark: SparkSession) -> DataFrame:

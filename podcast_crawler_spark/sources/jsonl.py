@@ -1,5 +1,4 @@
-"""JSONL source: schema-pinned newline-delimited JSON with an explicit
-corrupt-record policy.
+"""JSON parse with a pinned schema and an explicit corrupt-record policy.
 
 Web-scale text corpora ship as JSONL at least as often as parquet
 (CC-NEWS dumps, WET-derived exports, vendor deliveries), and the
@@ -10,11 +9,11 @@ standard lakehouse one:
 
 - the schema is PINNED (never inferred — inference is a full extra pass
   at 100 TB and nondeterministic under corrupt rows);
-- malformed lines land in ``_corrupt`` (Spark PERMISSIVE mode) and are
-  split into a quarantine DataFrame the caller persists next to the
+- malformed records are flagged through Spark's PERMISSIVE
+  ``_corrupt`` column, so the caller can quarantine them next to the
   clean table.
 
-``parse_json_rows`` is the same policy for a JSON *column* (e.g. the
+``parse_json_rows`` applies the policy to a JSON *column* (e.g. the
 ``props`` field on events, or an API payload landed as text) —
 ``from_json`` is null-on-malformed, map-side, codegen-friendly.
 """
@@ -23,41 +22,11 @@ from __future__ import annotations
 
 from typing import Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 CORRUPT_COL = "_corrupt"
-
-
-def read_jsonl(
-    spark: SparkSession, path: str, schema: StructType
-) -> Tuple[DataFrame, DataFrame]:
-    """Read newline-delimited JSON with the pinned *schema*.  Returns
-    ``(clean, quarantine)``: clean rows with the schema's columns,
-    quarantine rows with the raw offending line.
-
-    The raw read is ``.cache()``d: Spark explicitly disallows filtering
-    on only the corrupt-record column of an uncached raw JSON scan
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN — the column
-    exists only for rows materialized with their data).  At 100 TB the
-    equivalent move is landing the raw read once into a staging table
-    and deriving clean/quarantine from that single materialization."""
-    full = StructType(
-        schema.fields + [StructField(CORRUPT_COL, StringType())]
-    )
-    raw = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .json(path)
-        .cache()
-    )
-    clean = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    quarantine = raw.filter(F.col(CORRUPT_COL).isNotNull()).select(
-        F.col(CORRUPT_COL).alias("raw_line")
-    )
-    return clean, quarantine
 
 
 def parse_json_rows(

@@ -248,27 +248,6 @@ def robots_txt(host: str) -> str:
     return "\n".join(parts) + "\n"
 
 
-def gen_robots_bodies(
-    spark: SparkSession, n_feeds: int, partitions: int = 32
-) -> DataFrame:
-    """Raw (host, body) robots.txt rows for the corpus hosts — input for
-    the robots parse operator; generated distributed like everything else."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (h, robots_txt(h))
-                for h in (feed_host(int(fid)) for fid in pdf["id"])
-            ]
-            yield pd.DataFrame(rows, columns=["host", "body"])
-
-    return (
-        spark.range(0, n_feeds, 1, partitions)
-        .mapInPandas(_gen, schema="host string, body string")
-        .dropDuplicates(["host"])
-    )
-
-
 def gen_robots(spark: SparkSession, n_feeds: int, partitions: int = 32) -> DataFrame:
     """One rule row per distinct host that has rules.  The hot network hosts
     get a tighter crawl delay; every host disallows ``/private/``.
@@ -295,26 +274,3 @@ def gen_robots(spark: SparkSession, n_feeds: int, partitions: int = 32) -> DataF
         .mapInPandas(_gen, schema=ROBOTS_SCHEMA)
         .dropDuplicates(["host"])
     )
-
-
-def reference_fixture_pages(spark: SparkSession) -> Optional[DataFrame]:
-    """The three reference fixture feeds as pages rows (read from the
-    read-only checkout at runtime, never copied into this repo)."""
-    import os
-
-    base = "/root/reference/tests/data"
-    fixtures = [
-        ("https://www.ximalaya.com/album/20527677.xml", "ximalaya.xml", "zh-cn"),
-        ("https://techblog.example/feed1", "complex_feed.xml", "en-us"),
-        ("https://xyz.example/feed2", "xiaoyuzhou.xml", "zh-cn"),
-    ]
-    rows = []
-    for url, fname, lang in fixtures:
-        path = os.path.join(base, fname)
-        if not os.path.exists(path):
-            return None
-        with open(path, "rb") as fh:
-            html = fh.read()
-        res = parse_feed_result(html, url)
-        rows.append((url, EPOCH0, html, res["text"], lang))
-    return spark.createDataFrame(rows, schema=PAGES_SCHEMA)

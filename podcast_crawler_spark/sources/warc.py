@@ -855,35 +855,3 @@ def wet_export_oracle_sql(docs_sql: str, shard_rows: int = 1000) -> str:
                ) AS record_md5
         FROM o
     """
-
-
-WET_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("warc_ts", TimestampType(), True),
-    StructField("text", StringType(), True),
-])
-
-
-def read_wet(spark: SparkSession, path: str) -> DataFrame:
-    """WET file(s) → DataFrame(url, warc_ts, text) — the round-trip
-    reader for :func:`wet_export` (conversion records, payload decoded
-    utf-8).  Same one-task-per-file contract as :func:`read_warc`."""
-    files = spark.read.format("binaryFile").load(path)
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                for url, ts, _status, body, _o, _l in parse_warc_records(
-                    bytes(content), record_types=(b"conversion",)
-                ):
-                    rows.append((
-                        url,
-                        ts.replace(tzinfo=None) if ts else None,
-                        body.decode("utf-8", "replace"),
-                    ))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WET_SCHEMA.fields]
-            )
-
-    return files.select("content").mapInPandas(_run, schema=WET_SCHEMA)

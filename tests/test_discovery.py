@@ -5,8 +5,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from podcast_crawler_spark.operators.frontier import CrawlConfig
+from podcast_crawler_spark.operators.frontier import CrawlConfig, frontier_rows
 from podcast_crawler_spark.plans.epoch import (
+    ADMIT_PRIORITY,
     admit_urls,
     discovered_urls,
     run_crawl,
@@ -62,7 +63,7 @@ def test_admit_discovered_bloom_vs_exact(spark, crawled):
         .count()
     )
 
-    admit_urls(spark, crawled, d, EPOCH0, CFG, use_bloom=True)
+    admit_urls(spark, crawled, d, EPOCH0, CFG)
     after = crawled.frontier.read(spark)
     assert after.count() == n_before + expected_new
     # frontier still keyed by canonical_url
@@ -71,7 +72,7 @@ def test_admit_discovered_bloom_vs_exact(spark, crawled):
     assert crawled.completed_epochs() == 1
 
     # idempotent: second admit adds nothing
-    admit_urls(spark, crawled, d, EPOCH0, CFG, use_bloom=True)
+    admit_urls(spark, crawled, d, EPOCH0, CFG)
     assert crawled.frontier.read(spark).count() == n_before + expected_new
 
 
@@ -84,25 +85,21 @@ def _url_batch(spark, lo, hi, extra=()):
 def test_admission_incremental_shards_equals_rebuild(spark, tmp_path_factory):
     """Three admission rounds through the PERSISTED shard index (bootstrap
     once, then incremental ``update_bloom_shards`` folds) admit exactly
-    the frontier the plain anti-join path admits — including rounds whose
-    batches overlap earlier admissions (true-positive maybes) — and each
-    round after the first is a FOLD commit, never a rebuild."""
-    roots = [str(tmp_path_factory.mktemp(k)) for k in ("inc", "exact")]
-    states = []
-    for root in roots:
-        states.append(
-            run_crawl(
-                spark,
-                root,
-                gen_seeds(spark, 40, partitions=2),
-                gen_pages(spark, 40, partitions=2),
-                gen_robots(spark, 40, partitions=2),
-                epochs=1,
-                epoch0=EPOCH0,
-                cfg=CFG,
-            )
-        )
-    inc, exact = states
+    the frontier rows the plain anti-join on ``url_hash`` admits —
+    including rounds whose batches overlap earlier admissions
+    (true-positive maybes) — and each round after the first is a FOLD
+    commit, never a rebuild."""
+    state = run_crawl(
+        spark,
+        str(tmp_path_factory.mktemp("inc")),
+        gen_seeds(spark, 40, partitions=2),
+        gen_pages(spark, 40, partitions=2),
+        gen_robots(spark, 40, partitions=2),
+        epochs=1,
+        epoch0=EPOCH0,
+        cfg=CFG,
+    )
+    expected = state.frontier.read(spark)
     # round 2 re-offers round 1's URLs (maybes that ARE seen); round 3
     # mixes new URLs with round-1 stragglers
     batches = [
@@ -111,21 +108,24 @@ def test_admission_incremental_shards_equals_rebuild(spark, tmp_path_factory):
         _url_batch(spark, 70, 120, extra=["https://h1.pods.example/ep/3.mp3"]),
     ]
     for b in batches:
-        admit_urls(spark, inc, b, EPOCH0, CFG, use_bloom=True)
-        admit_urls(spark, exact, b, EPOCH0, CFG, use_bloom=False)
-        fa = inc.frontier.read(spark)
-        fb = exact.frontier.read(spark)
-        assert fa.count() == fb.count()
-        assert (
-            fa.select("canonical_url")
-            .exceptAll(fb.select("canonical_url"))
-            .count()
-            == 0
+        admit_urls(spark, state, b, EPOCH0, CFG)
+        # the reference: the batch's frontier rows anti-joined against
+        # the previous expected frontier
+        cand = frontier_rows(
+            b.withColumn("priority", F.lit(ADMIT_PRIORITY)), EPOCH0, CFG
         )
+        expected = expected.unionByName(
+            cand.join(expected.select("url_hash"), "url_hash", "left_anti")
+        )
+        got, want = (
+            sorted(f.collect(), key=lambda r: r.canonical_url)
+            for f in (state.frontier.read(spark), expected)
+        )
+        assert got == want
     # shard-table lineage: 1 bootstrap + one fold per admission round
     metas = [
-        inc.seen_shards.manifest(s)["metrics"]
-        for s in inc.seen_shards.snapshot_ids()
+        state.seen_shards.manifest(s)["metrics"]
+        for s in state.seen_shards.snapshot_ids()
     ]
     assert [m["op"] for m in metas] == [
         "seen_bootstrap", "seen_fold", "seen_fold", "seen_fold"
@@ -134,8 +134,6 @@ def test_admission_incremental_shards_equals_rebuild(spark, tmp_path_factory):
     layout = [(m["num_shards"], m["expected_keys"]) for m in metas]
     assert layout == [layout[0]] * 4
     assert layout[0][0] == CFG.num_partitions
-    # the exact path never bootstrapped a shard table
-    assert exact.seen_shards.current_snapshot_id() is None
 
 
 def test_admission_shuffled_verify_matches_broadcast_verify(

@@ -130,6 +130,27 @@ def test_func_references_name_package_definitions():
     assert not dangling, dangling
 
 
+def test_coverage_citations_name_definitions():
+    """Every ``path.py::name`` COVERAGE.md cites names a ``def`` or
+    ``class`` in that file (a test file for ``test_*.py``, else a package
+    module), so moving or deleting a function cannot leave a dangling
+    citation.  ``Class.method`` needs both names; a trailing
+    ``(argument)`` is prose."""
+    import ast
+
+    cites = re.findall(r"`([\w/]+\.py)::([\w.]+)", _read("COVERAGE.md"))
+    assert cites, "COVERAGE.md lost its path::name citations"
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    dangling = []
+    for path, name in cites:
+        home = "tests" if path.startswith("test_") else "podcast_crawler_spark"
+        tree = ast.parse(_read(os.path.join(home, path)))
+        defined = {n.name for n in ast.walk(tree) if isinstance(n, defs)}
+        if not set(name.split(".")) <= defined:
+            dangling.append(f"{path}::{name}")
+    assert not dangling, dangling
+
+
 def test_only_the_epoch_plan_commits_the_frontier():
     """``CrawlState``'s seen-index invariant: after init, the frontier
     grows only through ``admit_urls``, which folds what it admits.  So

@@ -222,8 +222,8 @@ def test_discovered_urls(spark, crawl_state):
 def test_crash_between_prepare_and_publish_is_invisible(spark, tmp_path):
     """Two-phase commit crash window: data files written (prepare) but no
     manifest (publish) must be invisible to readers, and the idempotent
-    epoch retry must overwrite the orphan and converge to the same state
-    as an uninterrupted run."""
+    epoch retry (writing its own data dir beside the orphan) must
+    converge to the same state as an uninterrupted run."""
     seeds = gen_seeds(spark, 60, partitions=4)
     pages = gen_pages(spark, 60, partitions=4)
     robots = gen_robots(spark, 60)
@@ -242,7 +242,8 @@ def test_crash_between_prepare_and_publish_is_invisible(spark, tmp_path):
     assert state.frontier.current_snapshot_id() == snap_before  # invisible
     assert staged["snapshot_id"] == snap_before + 1
 
-    # resume: the retry re-runs epoch 2, overwriting the orphan data dir
+    # resume: the retry re-runs epoch 2 into a new data dir; the orphan
+    # stays unread until expire collects it
     resumed = run_crawl(
         spark, crash_dir, seeds, pages, robots, 2, EPOCH0, cfg=cfg
     )

@@ -305,11 +305,15 @@ def test_parse_robots_closes_loop_with_gen_robots(spark):
     round-trips (delay + prefixes identical for every host; UA may be
     '*' for star-only hosts, which robots_filter accepts equally)."""
     from podcast_crawler_spark.operators.robots import parse_robots
-    from podcast_crawler_spark.sources.pagesgen import gen_robots_bodies
+    from podcast_crawler_spark.sources.pagesgen import robots_txt
 
+    hosts = sorted({feed_host(i) for i in range(N)})
+    bodies = spark.createDataFrame(
+        [(h, robots_txt(h)) for h in hosts], "host string, body string"
+    )
     parsed = {
         r.host: (list(r.disallow_prefixes), r.crawl_delay_s)
-        for r in parse_robots(gen_robots_bodies(spark, N, partitions=4)).collect()
+        for r in parse_robots(bodies).collect()
     }
     direct = {
         r.host: (list(r.disallow_prefixes), r.crawl_delay_s)

@@ -1,6 +1,5 @@
-"""JSONL source + JSON-column parse tests."""
+"""JSON-column parse tests: pinned schema, corrupt-record flag."""
 
-from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 SCHEMA = StructType(
@@ -9,37 +8,6 @@ SCHEMA = StructType(
         StructField("lang", StringType()),
     ]
 )
-
-
-def test_read_jsonl_clean_and_quarantine(spark, tmp_path):
-    from podcast_crawler_spark.sources.jsonl import read_jsonl
-
-    p = tmp_path / "data.jsonl"
-    p.write_text(
-        '{"id":1,"lang":"en"}\n'
-        '{"id":2,"lang":"de"}\n'
-        '{"id":3,"lang":   <-- truncated garbage\n'
-        "not json at all\n"
-        '{"id":4,"lang":"fr"}\n'
-    )
-    clean, quarantine = read_jsonl(spark, str(p), SCHEMA)
-    got = sorted(map(tuple, clean.collect()))
-    assert got == [(1, "en"), (2, "de"), (4, "fr")]
-    bad = sorted(r.raw_line for r in quarantine.collect())
-    assert bad == [
-        "not json at all",
-        '{"id":3,"lang":   <-- truncated garbage',
-    ]
-
-
-def test_read_jsonl_schema_pinned_extra_fields_ignored(spark, tmp_path):
-    from podcast_crawler_spark.sources.jsonl import read_jsonl
-
-    p = tmp_path / "extra.jsonl"
-    p.write_text('{"id":7,"lang":"en","junk":[1,2,3]}\n')
-    clean, quarantine = read_jsonl(spark, str(p), SCHEMA)
-    assert [tuple(r) for r in clean.collect()] == [(7, "en")]
-    assert quarantine.count() == 0
 
 
 def test_parse_json_rows_corrupt_flag(spark):

@@ -177,7 +177,8 @@ def test_commit_local_driver_side_snapshots(spark, tmp_path):
 def test_racing_writer_refused_at_publish(spark, tmp_path, monkeypatch, writer):
     """Single writer per table: when another writer's snapshot lands while
     a commit is writing its data, the commit raises at publish instead of
-    renaming its manifest over that snapshot."""
+    renaming its manifest over that snapshot, and its data write leaves
+    the published snapshot's files alone."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.readwriter import DataFrameWriter
@@ -218,6 +219,12 @@ def test_racing_writer_refused_at_publish(spark, tmp_path, monkeypatch, writer):
     assert t.snapshot_ids() == [1, 2]
     assert t.manifest()["metrics"] == {"writer": "other"}
     assert not [n for n in os.listdir(t.snap_dir) if n.endswith(".tmp")]
+    # the loser wrote only its own data dir: snapshot 2's files are all
+    # there and read back the winner's row, not the loser's
+    rows_key = "delta_rows" if writer == "commit_delta" else "row_count"
+    _assert_manifest_files(t, t.manifest(2), rows_key)
+    keys = {r.k for r in t.read(spark).collect()}
+    assert 2 in keys and 3 not in keys
 
 
 def test_delta_commit_merge_on_read(spark, tmp_path):
@@ -589,13 +596,14 @@ def test_snapshot_expire_reachability(spark, tmp_path):
             order_col="ts",
         )
     assert t.snapshot_ids() == [1, 2, 3, 4]
+    dirs = {sid: t.manifest(sid)["data_dir"] for sid in t.snapshot_ids()}
     res = t.expire(retain_last=2)
     assert res["expired"] == [1, 2]
-    # MOR: snapshot 3/4 still read segments snap-1..snap-4 -> nothing deleted
+    # MOR: snapshot 3/4 still read segments 1..4 -> nothing deleted
     assert res["deleted_dirs"] == []
     assert t.snapshot_ids() == [3, 4]
     for sid in (1, 2, 3, 4):
-        assert os.path.isdir(os.path.join(str(tmp_path), "t", "data", f"snap-{sid}"))
+        assert os.path.isdir(dirs[sid])
     # time travel to an expired id fails loudly
     import pytest as _pytest
 
@@ -606,9 +614,22 @@ def test_snapshot_expire_reachability(spark, tmp_path):
     # compact rewrites to one segment; a second expire collects the orphans
     t.compact(spark)
     res2 = t.expire(retain_last=1)
-    deleted = {os.path.basename(d) for d in res2["deleted_dirs"]}
-    assert deleted == {"snap-1", "snap-2", "snap-3", "snap-4"}
+    deleted = set(res2["deleted_dirs"])
+    assert deleted == {dirs[1], dirs[2], dirs[3], dirs[4]}
     assert t.read(spark).count() == 4
+    # a refused attempt's dir is collected once a snapshot at or above its
+    # id is published; before that it may be a write in flight
+    staged = t.prepare(base)
+    assert t.expire(retain_last=1)["deleted_dirs"] == []
+    t.commit_delta(
+        spark.createDataFrame([(6, "v", 6)], "k long, v string, ts long"),
+        key="k",
+        order_col="ts",
+    )
+    with _pytest.raises(RuntimeError, match="committed since prepare"):
+        t.publish(staged)
+    assert t.expire(retain_last=1)["deleted_dirs"] == [staged["data_dir"]]
+    assert t.read(spark).count() == 5
 
 
 def test_snapshot_expiry_plan_matches_driver_action(spark, tmp_path):

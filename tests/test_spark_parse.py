@@ -6,19 +6,37 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from test_feedparse_goldens import _fixture
+
+from podcast_crawler_spark.feedparse.rssparse import parse_feed_result
+from podcast_crawler_spark.functions.schemas import PAGES_SCHEMA
 from podcast_crawler_spark.functions.udfs import (
     explode_episodes,
     parse_pages,
 )
 from podcast_crawler_spark.sources.pagesgen import (
+    EPOCH0,
     FAIL_BAD_ENCLOSURE,
     FAIL_BAD_ENTITY,
     FAIL_MISSING_TITLE,
     gen_pages,
-    reference_fixture_pages,
 )
 
 N_FEEDS = 120
+
+
+def _reference_fixture_pages(spark):
+    """The three reference fixture feeds as pages rows, read from the
+    reference checkout (the test skips without it)."""
+    rows = []
+    for url, fname, lang in [
+        ("https://www.ximalaya.com/album/20527677.xml", "ximalaya.xml", "zh-cn"),
+        ("https://techblog.example/feed1", "complex_feed.xml", "en-us"),
+        ("https://xyz.example/feed2", "xiaoyuzhou.xml", "zh-cn"),
+    ]:
+        html = _fixture(fname)
+        rows.append((url, EPOCH0, html, parse_feed_result(html, url)["text"], lang))
+    return spark.createDataFrame(rows, schema=PAGES_SCHEMA)
 
 
 def test_extracted_text_byte_identity(spark):
@@ -66,11 +84,7 @@ def test_bad_character_reference_fails_only_its_feed(spark):
 
 
 def test_reference_fixtures_through_spark(spark):
-    pages = reference_fixture_pages(spark)
-    if pages is None:
-        import pytest
-
-        pytest.skip("reference fixtures unavailable")
+    pages = _reference_fixture_pages(spark)
     parsed = parse_pages(pages, passthrough=["url", "text"]).collect()
     assert len(parsed) == 3
     titles = {r.podcast.title for r in parsed}

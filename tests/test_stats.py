@@ -9,13 +9,9 @@ from pyspark.sql import functions as F
 
 from podcast_crawler_spark.operators.stats import (
     ERROR_TYPES,
-    STAGE_DURATION_BUCKETS,
     batch_stats,
     categorize_error,
-    duration_bucket,
     error_histogram,
-    per_partition_lineage,
-    stage_status_counts,
 )
 
 OUTCOMES = [
@@ -69,44 +65,6 @@ def test_error_categorization_reference_taxonomy(outcomes):
     assert got["weird thing happened"] == "Other Error"
     hist = {r.error_type: r.n for r in error_histogram(outcomes).collect()}
     assert hist == {t: 1 for t in ERROR_TYPES}
-
-
-def test_stage_status_counts(spark):
-    rows = [
-        ("fetching", "Completed"),
-        ("fetching", "Completed"),
-        ("fetching", "Failed"),
-        ("parsing", "Completed"),
-    ]
-    df = spark.createDataFrame(rows, "stage string, status string")
-    got = {(r.stage, r.status): r.n for r in stage_status_counts(df).collect()}
-    assert got == {
-        ("fetching", "Completed"): 2,
-        ("fetching", "Failed"): 1,
-        ("parsing", "Completed"): 1,
-    }
-
-
-def test_duration_buckets_are_cumulative_le_labels(spark):
-    durs = [0.05, 0.1, 0.3, 1.5, 9.0, 60.0]
-    df = spark.createDataFrame([(d,) for d in durs], "d double")
-    got = [
-        r.b
-        for r in df.select(duration_bucket(F.col("d")).alias("b"))
-        .orderBy("d" if "d" in df.columns else "b")
-        .collect()
-    ]
-    # reference default buckets 0.1/0.5/1/2/5/10 (src/metrics.rs:74-86)
-    assert got == ["le_0.1", "le_0.1", "le_0.5", "le_2.0", "le_10.0", "inf"]
-    assert STAGE_DURATION_BUCKETS == [0.1, 0.5, 1.0, 2.0, 5.0, 10.0]
-
-
-def test_per_partition_lineage_accounts_for_every_row(spark):
-    df = spark.range(1000).repartition(7)
-    lineage = per_partition_lineage(df)
-    assert sum(p["rows"] for p in lineage) == 1000
-    assert len(lineage) <= 7
-    assert all(p["rows"] > 0 for p in lineage)
 
 
 def test_running_avg_matches_pandas_oracle(spark):

@@ -3,11 +3,14 @@
 from __future__ import annotations
 
 from datetime import datetime, timezone
+from typing import Iterator
 
+import pandas as pd
 import pytest
 
 from podcast_crawler_spark.sources.warc import (
     parse_warc_bytes,
+    parse_warc_records,
     read_warc,
     wet_export,
     write_warc_file,
@@ -243,20 +246,39 @@ def test_wet_export_rejects_null_body(spark, tmp_path):
         wet_export(docs, str(tmp_path / "wet"), shard_rows=3)
 
 
+def _read_wet(spark, path):
+    """WET file(s) → DataFrame(url, warc_ts, text): the round-trip reader
+    for ``wet_export`` (conversion records, payload decoded utf-8), one
+    task per file like ``read_warc``."""
+    files = spark.read.format("binaryFile").load(path)
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for content in pdf["content"]:
+                for url, ts, _status, body, _o, _l in parse_warc_records(
+                    bytes(content), record_types=(b"conversion",)
+                ):
+                    rows.append((
+                        url,
+                        ts.replace(tzinfo=None) if ts else None,
+                        body.decode("utf-8", "replace"),
+                    ))
+            yield pd.DataFrame(rows, columns=["url", "warc_ts", "text"])
+
+    return files.select("content").mapInPandas(
+        _run, schema="url string, warc_ts timestamp, text string"
+    )
+
+
 def test_wet_export_roundtrip_layout_and_md5(spark, tmp_path):
-    """WET sink → read_wet round-trip: shards are byte-valid WARC
+    """WET sink → _read_wet round-trip: shards are byte-valid WARC
     conversion records, every manifest (offset, length) slices exactly
     one record whose md5 matches, and the reader recovers (url, ts,
     text) — including multibyte payloads — exactly."""
     import hashlib
 
     from pyspark.sql import functions as F
-
-    from podcast_crawler_spark.sources.warc import (
-        parse_warc_records,
-        read_wet,
-        wet_export,
-    )
 
     out = str(tmp_path / "wet")
     rows = [
@@ -294,7 +316,7 @@ def test_wet_export_roundtrip_layout_and_md5(spark, tmp_path):
             assert url == r.url and status is None
             assert off == 0 and rlen == len(rec)
     # reader round-trip: url/ts/text recovered exactly
-    got = read_wet(spark, out).orderBy("url").collect()
+    got = _read_wet(spark, out).orderBy("url").collect()
     want = {u: t for _i, u, t in rows}
     assert len(got) == 7
     for row in got:
