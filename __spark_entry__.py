@@ -8716,7 +8716,9 @@ def oracle_sql() -> dict[str, str]:
             rules as (
               select host as r_host, disallow_prefixes
               from read_parquet('{FIXTURES}/crawl_robots.parquet')
-              where user_agent = 'PodcastCrawler/1.0' or user_agent = '*'),
+              where user_agent = 'PodcastCrawler/1.0' or user_agent = '*'
+              qualify row_number() over (partition by host
+                order by user_agent = 'PodcastCrawler/1.0' desc) = 1),
             allowed as (
               select u.url from hosted u left join rules r on u.host = r.r_host
               where not coalesce(
@@ -8747,7 +8749,9 @@ def oracle_sql() -> dict[str, str]:
             rules as (
               select host as r_host, disallow_prefixes, crawl_delay_s
               from read_parquet('{FIXTURES}/crawl_robots.parquet')
-              where user_agent = 'PodcastCrawler/1.0' or user_agent = '*'),
+              where user_agent = 'PodcastCrawler/1.0' or user_agent = '*'
+              qualify row_number() over (partition by host
+                order by user_agent = 'PodcastCrawler/1.0' desc) = 1),
             allowed as (
               select u.url, u.priority, u.host,
                      coalesce(r.crawl_delay_s, 0.5) as delay
@@ -8779,7 +8783,9 @@ def oracle_sql() -> dict[str, str]:
             rules as (
               select host as r_host, disallow_prefixes
               from read_parquet('{FIXTURES}/crawl_robots.parquet')
-              where user_agent = 'PodcastCrawler/1.0' or user_agent = '*'),
+              where user_agent = 'PodcastCrawler/1.0' or user_agent = '*'
+              qualify row_number() over (partition by host
+                order by user_agent = 'PodcastCrawler/1.0' desc) = 1),
             allowed as (
               select u.url from hosted u left join rules r on u.host = r.r_host
               where not coalesce(
@@ -8817,7 +8823,9 @@ def oracle_sql() -> dict[str, str]:
             rules as (
               select host as r_host, disallow_prefixes
               from read_parquet('{FIXTURES}/crawl_robots.parquet')
-              where user_agent = 'PodcastCrawler/1.0' or user_agent = '*'),
+              where user_agent = 'PodcastCrawler/1.0' or user_agent = '*'
+              qualify row_number() over (partition by host
+                order by user_agent = 'PodcastCrawler/1.0' desc) = 1),
             allowed as (
               select u.url, u.priority, u.host
               from hosted u left join rules r on u.host = r.r_host

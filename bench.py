@@ -261,23 +261,27 @@ def main() -> None:
     tmp_ctx = tempfile.TemporaryDirectory(dir=fast_tmp)
     with tmp_ctx as tmp:
         base = corpus_dir or tmp
-        pages_path = f"{base}/pages-{n_feeds}"
-        seeds_path = f"{base}/seeds-{n_feeds}"
-        # materialize the corpus first (generation excluded from timing)
-        if not os.path.exists(f"{pages_path}/_SUCCESS"):
-            gen_parts = max(64, 2 * CPUS)
-            gen_pages(spark, n_feeds, partitions=gen_parts).write.mode(
-                "overwrite"
-            ).parquet(pages_path)
-            gen_seeds(spark, n_feeds, partitions=gen_parts).write.mode(
-                "overwrite"
-            ).parquet(seeds_path)
+        # materialize the corpus first (generation excluded from timing):
+        # the epoch reads every input back from parquet, so no generator
+        # lineage re-runs inside the timed run_crawl
+        gen_parts = max(64, 2 * CPUS)
+        paths = {}
+        for name, gen, parts in (
+            ("pages", gen_pages, gen_parts),
+            ("seeds", gen_seeds, gen_parts),
+            ("robots", gen_robots, 2 * CPUS),
+        ):
+            paths[name] = f"{base}/{name}-{n_feeds}"
+            if not os.path.exists(f"{paths[name]}/_SUCCESS"):
+                gen(spark, n_feeds, partitions=parts).write.mode(
+                    "overwrite"
+                ).parquet(paths[name])
         if os.environ.get("BENCH_GEN_ONLY"):
             print(json.dumps({"gen_only": True, "n_feeds": n_feeds}))
             return
-        pages = spark.read.parquet(pages_path)
-        seeds = spark.read.parquet(seeds_path)
-        robots = gen_robots(spark, n_feeds, partitions=2 * CPUS)
+        pages, seeds, robots = (
+            spark.read.parquet(paths[n]) for n in ("pages", "seeds", "robots")
+        )
 
         # The epoch reads html in place from a url-bucketed pages table
         # (J3 production layout, sources/bucketed.py): at 100 TB over a

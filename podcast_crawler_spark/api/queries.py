@@ -118,8 +118,6 @@ def keyset_page(
     return out.orderBy(*order).limit(per_page)
 
 
-_page = page_slice  # back-compat alias
-
 
 class PodcastQueryAPI:
     def __init__(self, spark: SparkSession, state: CrawlState):
@@ -183,7 +181,7 @@ class PodcastQueryAPI:
         """GET /podcasts/page/{page}/{per_page} — W1 pagination ordered by
         podcast_id (the reference pages in PK order,
         ``podcast_repository.rs:59-65``)."""
-        return _page(self._podcasts(), [F.col("podcast_id")], page, per_page)
+        return page_slice(self._podcasts(), [F.col("podcast_id")], page, per_page)
 
     def podcast_by_title(self, title: str) -> DataFrame:
         """GET /podcasts/by-title/{title} — F5 exact-match point lookup."""
@@ -194,7 +192,7 @@ class PodcastQueryAPI:
         one podcast, newest first, paginated
         (``podcast_repository.rs:300-307``)."""
         eps = self._episodes().filter(F.col("podcast_id") == podcast_id)
-        return _page(
+        return page_slice(
             eps, [F.col("pub_date").desc_nulls_last(), F.col("guid")], page, per_page
         )
 

@@ -327,6 +327,33 @@ def _bucketed_prefix_sum(
     return local.join(F.broadcast(offsets), "bkt")
 
 
+def _id_range_buckets(
+    staged: DataFrame, lo, hi, num_partitions: int | None = None
+) -> DataFrame:
+    """*staged* plus the order-aligned ``bkt`` column
+    :func:`_bucketed_prefix_sum` needs, for a non-null LONG ``id`` order
+    key: ``bkt = (id - lo) // width``, with *width* sized so about
+    *num_partitions* buckets (default: the session's shuffle partitions)
+    cover ``[lo, hi]``, the caller's min/max of ``id`` (``lo`` None means
+    empty input).  The bucket step of :func:`pack_shards` and the archive
+    sinks (``sources/warc.py``)."""
+    if num_partitions is None:
+        num_partitions = int(
+            staged.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+        )
+    if lo is None:  # empty input
+        lo, width = 0, 1
+    else:
+        width = max((hi - lo) // num_partitions + 1, 1)
+    # coalesce makes bkt provably non-nullable (the cast alone is not)
+    return staged.withColumn(
+        "bkt",
+        F.coalesce(
+            ((F.col("id") - F.lit(lo)) / F.lit(width)).cast("long"), F.lit(0)
+        ),
+    )
+
+
 def pack_shards(
     df: DataFrame,
     budget: int = 2048,
@@ -374,23 +401,8 @@ def pack_shards(
     staged = df.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col).alias("id"), F.size(toks).cast("long").alias("n_tokens")
     )
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
     lo, hi = staged.agg(F.min("id"), F.max("id")).first()
-    if lo is None:  # empty input
-        width = 1
-        lo = 0
-    else:
-        width = max((hi - lo) // num_partitions + 1, 1)
-    # coalesce makes bkt provably non-nullable (the cast alone is not)
-    bucketed = staged.withColumn(
-        "bkt",
-        F.coalesce(
-            ((F.col("id") - F.lit(lo)) / F.lit(width)).cast("long"), F.lit(0)
-        ),
-    )
+    bucketed = _id_range_buckets(staged, lo, hi, num_partitions)
     start = F.col("bkt_offset") + F.col("local_cum") - F.col("n_tokens")
     return _bucketed_prefix_sum(bucketed, "n_tokens", ["id"]).select(
         "id",

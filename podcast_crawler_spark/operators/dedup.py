@@ -885,6 +885,53 @@ def span_dedup(
     )
 
 
+def _capped_overlap_pairs(
+    rows: DataFrame,
+    key: str,
+    member: str,
+    cap: int,
+    min_shared: int,
+    pair: tuple[str, str],
+    size: str,
+    sizes_over_kept: bool = False,
+) -> DataFrame:
+    """The capped set-overlap self-join of :func:`containment_pairs`,
+    ``traps.mirror_hosts`` and ``graph.cocitation`` (one algorithm, the
+    set-containment join LCJoin, ICDE'19, studies).  *rows* are distinct
+    ``(member, key)`` pairs.  A key held by more than *cap* members is
+    dropped first: it would pair every holder with every other (cost
+    Σ_key holders², quadratic in a hub) and carries no overlap signal.
+    The kept rows self-join on *key*; member pairs ``a < b`` (named by
+    *pair*) count their shared keys, and pairs sharing at least
+    *min_shared* keep ``(a, b, shared, {size}_a, {size}_b)`` — each
+    member's row count over all *rows*, or over the kept rows when
+    *sizes_over_kept*."""
+    a, b = pair
+    held = rows.groupBy(key).agg(F.count(F.lit(1)).alias("_held"))
+    kept = rows.join(
+        held.filter(F.col("_held") <= cap).select(key), key, "semi"
+    )
+    shared = (
+        kept.select(key, F.col(member).alias(a))
+        .join(kept.select(key, F.col(member).alias(b)), key)
+        .filter(F.col(a) < F.col(b))
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).cast("long").alias("shared"))
+        .filter(F.col("shared") >= min_shared)
+    )
+    sizes = (kept if sizes_over_kept else rows).groupBy(member).agg(
+        F.count(F.lit(1)).alias("_n")
+    )
+    for m, side in zip(pair, "ab"):
+        shared = shared.join(
+            sizes.select(
+                F.col(member).alias(m), F.col("_n").alias(f"{size}_{side}")
+            ),
+            m,
+        )
+    return shared
+
+
 def containment_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -937,35 +984,15 @@ def containment_pairs(
     # misses for all of them at once, re-running the winnowing pass per
     # consumer; one cheap count() fills the persist sequentially
     fps.count()
-    sizes = fps.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    freq = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("c"))
-    cold = fps.join(
-        freq.filter(F.col("c") <= max_fp_freq).select("fp"), "fp"
-    )
-    a = cold.select("fp", F.col("id").alias("id_a"))
-    b = cold.select("fp", F.col("id").alias("id_b"))
-    shared = (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
-    na = sizes.select(F.col("id").alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col("id").alias("id_b"), F.col("n").alias("n_b"))
-    return (
-        shared.join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "shared",
-            F.col("n_a").cast("long").alias("n_a"),
-            F.col("n_b").cast("long").alias("n_b"),
-            F.expr("(100 * shared) div least(n_a, n_b)").alias(
-                "containment_pct"
-            ),
-        )
+    return _capped_overlap_pairs(
+        fps, "fp", "id", max_fp_freq, min_shared, ("id_a", "id_b"), "n"
+    ).select(
+        "id_a",
+        "id_b",
+        "shared",
+        "n_a",
+        "n_b",
+        F.expr("(100 * shared) div least(n_a, n_b)").alias("containment_pct"),
     )
 
 

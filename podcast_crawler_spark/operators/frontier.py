@@ -59,15 +59,15 @@ USER_AGENT = "PodcastCrawler/1.0"  # rss_fetcher.rs:20
 
 @dataclass
 class CrawlConfig:
-    """Crawl policy (budget, delays, cadence, retries) and deployment
+    """Crawl policy (budget, cadence, retries) and deployment
     values (partitions, seen-index sizing, pages table).  The engine's
     tuning thresholds are module constants beside the function that reads
-    each one: ``SALT_BUCKETS`` / ``SKEW_SAFE_MAX_BUDGET`` here,
+    each one: ``SALT_BUCKETS`` / ``SKEW_SAFE_MAX_BUDGET`` /
+    ``DEFAULT_CRAWL_DELAY_S`` here,
     ``plans.epoch.BROADCAST_OUTCOMES_MAX_ROWS`` and
     ``seen.VERIFY_BROADCAST_MAX_ROWS``."""
 
     per_host_budget: int = 5  # max_concurrent_tasks default (config/crawler.rs:55-63)
-    default_crawl_delay_s: float = 0.5  # 2 req/s governor default (rate_limiter.rs:34-41)
     fetch_interval_s: int = 3600  # re-crawl cadence (config/crawler.rs:55-63)
     max_retries: int = 3  # legacy retry macro (error/macros.rs:253-277)
     backoff_s: float = 1.0  # refactor TimerQueue backoff (worker.rs:151-155)
@@ -176,15 +176,19 @@ def build_frontier(
 
 def robots_filter(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     """J4: left-join robots rules on host; deny rows whose URL path starts
-    with a disallowed prefix for our UA.  The rules table is tiny relative
-    to the frontier → broadcast join, no shuffle of the frontier."""
+    with a disallowed prefix for our UA.  A host with both an exact-UA row
+    and a ``*`` row is governed by the exact-UA row alone (RFC 9309
+    §2.2.1, as ``robots.parse_robots_text`` resolves it).  The rules
+    table is tiny relative to the frontier → broadcast join, no shuffle of
+    the frontier."""
     rules = robots.filter(
         (F.col("user_agent") == USER_AGENT) | (F.col("user_agent") == "*")
-    ).select(
-        F.col("host").alias("r_host"),
-        "disallow_prefixes",
-        "crawl_delay_s",
-    )
+    ).groupBy(F.col("host").alias("r_host")).agg(
+        F.max_by(
+            F.struct("disallow_prefixes", "crawl_delay_s"),
+            F.col("user_agent") == USER_AGENT,
+        ).alias("g")
+    ).select("r_host", "g.disallow_prefixes", "g.crawl_delay_s")
     path = F.regexp_extract(
         F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)", 1
     )
@@ -239,6 +243,11 @@ def _top_k_per_key(
     )
 
 
+# a host without a robots crawl delay: the reference's 2 req/s governor
+# (rate_limiter.rs:34-41)
+DEFAULT_CRAWL_DELAY_S = 0.5
+
+
 def schedule_epoch(
     frontier: DataFrame,
     robots: DataFrame,
@@ -270,7 +279,7 @@ def schedule_epoch(
     )
     allowed = robots_filter(due, robots).filter(~F.col("robots_denied"))
 
-    delay = F.coalesce(F.col("crawl_delay_s"), F.lit(cfg.default_crawl_delay_s))
+    delay = F.coalesce(F.col("crawl_delay_s"), F.lit(DEFAULT_CRAWL_DELAY_S))
     return (
         _top_k_per_key(
             allowed,

@@ -44,9 +44,71 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _capped_overlap_pairs
+
 PR_SCALE = 10 ** 12
 DAMP_NUM = 85
 DAMP_DEN = 100
+
+
+def _link_graph(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    checkpoint: bool,
+    outdeg: bool = False,
+    seeds: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """The prologue of the link-graph loops: ``(e, nodes, outdeg)`` —
+    the ``(src, dst)`` edges, the distinct endpoint ``node`` rows and,
+    only when *outdeg* is set, the per-source out-degree ``(src, d)``
+    (None otherwise).  *seeds* (a ``node`` column) adds the broadcast
+    ``is_seed`` flag to the nodes.  With *checkpoint* each frame is
+    ``localCheckpoint``-ed eagerly, so no iteration replays the prologue."""
+    e = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    )
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    if seeds is not None:
+        flag = seeds.distinct().withColumn("is_seed", F.lit(True))
+        nodes = nodes.join(F.broadcast(flag), "node", "left").select(
+            "node", F.coalesce("is_seed", F.lit(False)).alias("is_seed")
+        )
+    od = e.groupBy("src").agg(F.count(F.lit(1)).alias("d")) if outdeg else None
+    if checkpoint:
+        e = e.localCheckpoint(eager=True)
+        nodes = nodes.localCheckpoint(eager=True)
+        if od is not None:
+            od = od.localCheckpoint(eager=True)
+    return e, nodes, od
+
+
+def _rank_flow(
+    nodes: DataFrame, ranks: DataFrame, e: DataFrame, outdeg: DataFrame
+) -> DataFrame:
+    """One rank-flow step of :func:`pagerank` and :func:`trustrank`:
+    every node with its exact ``inflow`` (null if nothing flows in) —
+    the sum over in-edges of the source quotient ``r div outdeg`` — and
+    the dangling mass ``ds``, the summed rank of out-degree-0 nodes,
+    a 1-row aggregate cross-joined back as a broadcast."""
+    quot = ranks.join(
+        outdeg, ranks["node"] == outdeg["src"], "inner"
+    ).select(F.col("node").alias("qsrc"), F.expr("r div d").alias("q"))
+    inflow = (
+        quot.join(e, quot["qsrc"] == e["src"])
+        .groupBy("dst")
+        .agg(F.sum("q").alias("inflow"))
+    )
+    dangling = ranks.join(
+        outdeg, ranks["node"] == outdeg["src"], "left_anti"
+    ).agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("ds"))
+    return nodes.crossJoin(F.broadcast(dangling)).join(
+        inflow, nodes["node"] == inflow["dst"], "left"
+    )
 
 
 def pagerank(
@@ -67,19 +129,9 @@ def pagerank(
     touches them.  ``checkpoint=False`` keeps the full lineage (useful
     for plan tests on tiny graphs).
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    e, nodes, outdeg = _link_graph(
+        edges, src_col, dst_col, checkpoint, outdeg=True
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
-        outdeg = outdeg.localCheckpoint(eager=True)
     n = nodes.count()
     if n == 0:
         raise ValueError("pagerank: empty graph")
@@ -87,22 +139,8 @@ def pagerank(
     base = (15 * init) // 100  # (1-d)/n in scaled integer units
     ranks = nodes.select("node", F.lit(init).cast("long").alias("r"))
     for _ in range(iters):
-        quot = ranks.join(
-            outdeg, ranks["node"] == outdeg["src"], "inner"
-        ).select(
-            F.col("node").alias("qsrc"), F.expr("r div d").alias("q")
-        )
-        inflow = (
-            quot.join(e, quot["qsrc"] == e["src"])
-            .groupBy("dst")
-            .agg(F.sum("q").alias("inflow"))
-        )
-        dangling = ranks.join(
-            outdeg, ranks["node"] == outdeg["src"], "left_anti"
-        ).agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("ds"))
         ranks = (
-            nodes.crossJoin(F.broadcast(dangling))
-            .join(inflow, nodes["node"] == inflow["dst"], "left")
+            _rank_flow(nodes, ranks, e, outdeg)
             .select(
                 "node",
                 (
@@ -287,17 +325,7 @@ def hits(
     score 0.  ``localCheckpoint`` per iteration (Pregel lineage
     truncation).  Output: ``(node, auth_scaled, hub_scaled)``.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
+    e, nodes, _ = _link_graph(edges, src_col, dst_col, checkpoint)
     if nodes.count() == 0:
         raise ValueError("hits: empty graph")
     hub = nodes.select("node", F.lit(scale).cast("long").alias("h"))
@@ -1033,19 +1061,9 @@ def opic(
     checkpoints with the frontier.  Output: ``(node, cash_scaled,
     hist_scaled, importance)`` with importance = hist / Σhist at 9 dp.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    e, nodes, outdeg = _link_graph(
+        edges, src_col, dst_col, checkpoint, outdeg=True
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
-        outdeg = outdeg.localCheckpoint(eager=True)
     n = nodes.count()
     if n == 0:
         raise ValueError("opic: empty graph")
@@ -1184,23 +1202,10 @@ def trustrank(
     iteration); the seed membership flag rides a broadcast join.
     Output: ``(node, trust_scaled, trust)``.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    e, nodes, outdeg = _link_graph(
+        edges, src_col, dst_col, checkpoint, outdeg=True,
+        seeds=seeds.select(F.col(seed_col).alias("node")),
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    sd = seeds.select(F.col(seed_col).alias("node")).distinct()
-    nodes = nodes.join(
-        F.broadcast(sd.withColumn("is_seed", F.lit(True))), "node", "left"
-    ).select("node", F.coalesce("is_seed", F.lit(False)).alias("is_seed"))
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
-        outdeg = outdeg.localCheckpoint(eager=True)
     s = nodes.filter("is_seed").count()
     if s == 0:
         raise ValueError("trustrank: empty seed set")
@@ -1213,20 +1218,8 @@ def trustrank(
         .otherwise(F.lit(0)).cast("long").alias("r"),
     )
     for _ in range(iters):
-        quot = ranks.join(
-            outdeg, ranks["node"] == outdeg["src"], "inner"
-        ).select(F.col("node").alias("qsrc"), F.expr("r div d").alias("q"))
-        inflow = (
-            quot.join(e, quot["qsrc"] == e["src"])
-            .groupBy("dst")
-            .agg(F.sum("q").alias("inflow"))
-        )
-        dangling = ranks.join(
-            outdeg, ranks["node"] == outdeg["src"], "left_anti"
-        ).agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("ds"))
         ranks = (
-            nodes.crossJoin(F.broadcast(dangling))
-            .join(inflow, nodes["node"] == inflow["dst"], "left")
+            _rank_flow(nodes, ranks, e, outdeg)
             .select(
                 "node",
                 "is_seed",
@@ -1336,17 +1329,7 @@ def hyperball(
     """
     from podcast_crawler_spark.operators import sketches
 
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
+    e, nodes, _ = _link_graph(edges, src_col, dst_col, checkpoint)
     regs = sketches.hll_registers(
         nodes.select("node", F.col("node").alias("k")), "k", ["node"]
     )
@@ -1459,47 +1442,18 @@ def cocitation(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
-    indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("ind"))
-    kept = e.join(
-        indeg.filter(F.col("ind") <= max_indeg).select("dst"),
-        "dst",
-        "semi",
-    )
-    outdeg = kept.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    a = kept.select(F.col("src").alias("host_a"), "dst")
-    b = kept.select(F.col("src").alias("host_b"), "dst")
-    pairs = (
-        a.join(b, "dst")
-        .filter(F.col("host_a") < F.col("host_b"))
-        .groupBy("host_a", "host_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
-    return (
-        pairs.join(
-            outdeg.select(
-                F.col("src").alias("host_a"), F.col("od").alias("outdeg_a")
-            ),
-            "host_a",
-        )
-        .join(
-            outdeg.select(
-                F.col("src").alias("host_b"), F.col("od").alias("outdeg_b")
-            ),
-            "host_b",
-        )
-        .select(
-            "host_a",
-            "host_b",
-            "shared",
-            "outdeg_a",
-            "outdeg_b",
-            F.expr(
-                "1000000 * shared div (outdeg_a + outdeg_b - shared)"
-            )
-            .cast("long")
-            .alias("jaccard_ppm"),
-        )
+    return _capped_overlap_pairs(
+        e, "dst", "src", max_indeg, min_shared, ("host_a", "host_b"),
+        "outdeg", sizes_over_kept=True,
+    ).select(
+        "host_a",
+        "host_b",
+        "shared",
+        "outdeg_a",
+        "outdeg_b",
+        F.expr("1000000 * shared div (outdeg_a + outdeg_b - shared)")
+        .cast("long")
+        .alias("jaccard_ppm"),
     )
 
 

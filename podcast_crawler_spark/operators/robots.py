@@ -30,7 +30,7 @@ from typing import Iterator, Optional
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -153,38 +153,22 @@ def sitemap_directives(
     )
 
 
-def match_rfc9309(
+def _longest_match(
     paths: DataFrame,
-    rules: DataFrame,
-    host_col: str = "host",
-    path_col: str = "path",
+    r: DataFrame,
+    host_col: str,
+    path_col: str,
+    **picks: Optional[Column],
 ) -> DataFrame:
-    """RFC 9309-complete robots matching: ``*`` wildcards, ``$`` end
-    anchors, Allow lines, and LONGEST-MATCH precedence (allow wins
-    length ties) — the full REP the legacy prefix filter
-    (:func:`frontier.robots_filter`, reference-parity semantics)
-    deliberately omits.  Input: per-URL ``(host, path)`` rows and a
-    rules table ``(host, rule, pattern)`` with ``rule`` in
-    {'allow','disallow'}.  Output: the paths plus ``(matched_pattern,
-    matched_rule, allowed)``; hosts/paths matching no rule are allowed.
-
-    Matching compiles each pattern ONCE to a SQL LIKE expression
-    (metachars escaped, ``*``→``%``, ``$`` anchor ⇒ no trailing ``%``)
-    — Spark and DuckDB LIKE semantics coincide, so the oracle replays
-    every decision.  Precedence = max(length of pattern sans ``$``),
-    allow over disallow on ties, then lexicographically smaller pattern
-    (a total order, so the decision is engine-exact even with
-    duplicate-length rules).
-
-    Scale shape: rules are host metadata (broadcast); one
-    broadcast-join + groupBy(path-key) argmax via ``min(struct(...))``
-    (window-free, the ``trap_stats`` discipline).
-    """
-    r = rules.select(
-        F.col(host_col).alias("r_host"),
-        F.col("rule"),
-        F.col("pattern"),
-    ).withColumn(
+    """The REP matching core of :func:`match_rfc9309` and
+    :func:`robots_policy_diff`.  *r* holds ``(r_host, rule, pattern)``
+    rows plus any column a pick condition reads.  Each pattern compiles
+    once to a SQL LIKE expression and its precedence length; the distinct
+    ``(host, path)`` rows broadcast-join the rules on host plus LIKE, and
+    one groupBy(host, path) yields, per keyword of *picks*, the
+    precedence-minimal ``struct(nl, ra, pat, rl)`` among the matches its
+    condition admits (None admits every match) — null if none matches."""
+    r = r.withColumn(
         "_like_tmp",
         F.replace(
             F.replace(
@@ -224,10 +208,12 @@ def match_rfc9309(
         & F.expr("path like _like escape '\\\\'"),
         "left",
     )
-    pick = joined.groupBy("host", "path").agg(
-        F.min(
+
+    def _best(cond: Optional[Column]) -> Column:
+        matched = F.col("pattern").isNotNull()
+        return F.min(
             F.when(
-                F.col("pattern").isNotNull(),
+                matched if cond is None else matched & cond,
                 F.struct(
                     (-F.col("_plen")).alias("nl"),
                     F.when(F.col("rule") == "allow", F.lit(0))
@@ -237,8 +223,44 @@ def match_rfc9309(
                     F.col("rule").alias("rl"),
                 ),
             )
-        ).alias("b")
+        )
+
+    return joined.groupBy("host", "path").agg(
+        *[_best(c).alias(name) for name, c in picks.items()]
     )
+
+
+def match_rfc9309(
+    paths: DataFrame,
+    rules: DataFrame,
+    host_col: str = "host",
+    path_col: str = "path",
+) -> DataFrame:
+    """RFC 9309-complete robots matching: ``*`` wildcards, ``$`` end
+    anchors, Allow lines, and LONGEST-MATCH precedence (allow wins
+    length ties) — the full REP the legacy prefix filter
+    (:func:`frontier.robots_filter`, reference-parity semantics)
+    deliberately omits.  Input: per-URL ``(host, path)`` rows and a
+    rules table ``(host, rule, pattern)`` with ``rule`` in
+    {'allow','disallow'}.  Output: the paths plus ``(matched_pattern,
+    matched_rule, allowed)``; hosts/paths matching no rule are allowed.
+
+    Matching compiles each pattern ONCE to a SQL LIKE expression
+    (metachars escaped, ``*``→``%``, ``$`` anchor ⇒ no trailing ``%``)
+    — Spark and DuckDB LIKE semantics coincide, so the oracle replays
+    every decision.  Precedence = max(length of pattern sans ``$``),
+    allow over disallow on ties, then lexicographically smaller pattern
+    (a total order, so the decision is engine-exact even with
+    duplicate-length rules).
+
+    Scale shape: rules are host metadata (broadcast); one
+    broadcast-join + groupBy(path-key) argmax via ``min(struct(...))``
+    (window-free, the ``trap_stats`` discipline).
+    """
+    r = rules.select(
+        F.col(host_col).alias("r_host"), F.col("rule"), F.col("pattern")
+    )
+    pick = _longest_match(paths, r, host_col, path_col, b=None)
     return pick.select(
         "host",
         "path",
@@ -420,61 +442,10 @@ def robots_policy_diff(
         F.col(host_col).alias("r_host"),
         "rule",
         "pattern",
-    ).withColumn(
-        "_like_tmp",
-        F.replace(
-            F.replace(
-                F.replace(
-                    F.replace(F.col("pattern"), F.lit("\\"), F.lit("\\\\")),
-                    F.lit("%"),
-                    F.lit("\\%"),
-                ),
-                F.lit("_"),
-                F.lit("\\_"),
-            ),
-            F.lit("*"),
-            F.lit("%"),
-        ),
     )
-    r = r.withColumn(
-        "_like",
-        F.when(
-            F.col("pattern").endswith("$"),
-            F.expr("substring(_like_tmp, 1, length(_like_tmp) - 1)"),
-        ).otherwise(F.concat(F.col("_like_tmp"), F.lit("%"))),
-    ).withColumn(
-        "_plen",
-        F.when(
-            F.col("pattern").endswith("$"), F.length("pattern") - 1
-        ).otherwise(F.length("pattern")),
-    )
-    p = paths.select(
-        F.col(host_col).alias("host"), F.col(path_col).alias("path")
-    ).distinct()
-    joined = p.join(
-        F.broadcast(r),
-        (p["host"] == r["r_host"])
-        & F.expr("path like _like escape '\\\\'"),
-        "left",
-    )
-
-    def _best(era: str):
-        return F.min(
-            F.when(
-                F.col("pattern").isNotNull() & (F.col("era") == era),
-                F.struct(
-                    (-F.col("_plen")).alias("nl"),
-                    F.when(F.col("rule") == "allow", F.lit(0))
-                    .otherwise(F.lit(1))
-                    .alias("ra"),
-                    F.col("pattern").alias("pat"),
-                    F.col("rule").alias("rl"),
-                ),
-            )
-        )
-
-    pick = joined.groupBy("host", "path").agg(
-        _best("old").alias("bo"), _best("new").alias("bn")
+    pick = _longest_match(
+        paths, r, host_col, path_col,
+        bo=F.col("era") == "old", bn=F.col("era") == "new",
     )
     old_ok = F.coalesce(F.col("bo.rl") != "disallow", F.lit(True))
     new_ok = F.coalesce(F.col("bn.rl") != "disallow", F.lit(True))

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _capped_overlap_pairs
+
 TEMPLATE_PATTERN = "[0-9]+"
 
 
@@ -205,40 +207,16 @@ def mirror_hosts(
     hd = docs.select(
         F.col(host_col).alias("host"), F.col(digest_col).alias("digest")
     ).distinct()
-    sizes = hd.groupBy("host").agg(F.count(F.lit(1)).alias("n"))
-    dfreq = hd.groupBy("digest").agg(F.count(F.lit(1)).alias("k"))
-    cold = hd.join(
-        dfreq.filter(F.col("k") <= max_digest_hosts).select("digest"),
-        "digest",
-    )
-    a = cold.select("digest", F.col("host").alias("host_a"))
-    b = cold.select("digest", F.col("host").alias("host_b"))
-    shared = (
-        a.join(b, "digest")
-        .filter(F.col("host_a") < F.col("host_b"))
-        .groupBy("host_a", "host_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
-    na = sizes.select(
-        F.col("host").alias("host_a"), F.col("n").alias("n_a")
-    )
-    nb = sizes.select(
-        F.col("host").alias("host_b"), F.col("n").alias("n_b")
-    )
-    return (
-        shared.join(na, "host_a")
-        .join(nb, "host_b")
-        .select(
-            "host_a",
-            "host_b",
-            "shared",
-            F.col("n_a").cast("long").alias("n_a"),
-            F.col("n_b").cast("long").alias("n_b"),
-            F.expr("(100 * shared) div least(n_a, n_b)").alias(
-                "containment_pct"
-            ),
-        )
+    return _capped_overlap_pairs(
+        hd, "digest", "host", max_digest_hosts, min_shared,
+        ("host_a", "host_b"), "n",
+    ).select(
+        "host_a",
+        "host_b",
+        "shared",
+        "n_a",
+        "n_b",
+        F.expr("(100 * shared) div least(n_a, n_b)").alias("containment_pct"),
     )
 
 

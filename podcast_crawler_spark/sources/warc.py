@@ -33,7 +33,7 @@ from __future__ import annotations
 import gzip
 import io
 from datetime import datetime, timezone
-from typing import Iterator, List, Optional, Tuple
+from typing import Any, Callable, Iterator, List, Optional, Tuple
 
 import pandas as pd
 
@@ -342,6 +342,98 @@ EXPORT_MANIFEST_SCHEMA = StructType([
 ])
 
 
+def _plan_shards(
+    staged: DataFrame,
+    lo,
+    hi,
+    shard_rows: int,
+    num_partitions: Optional[int],
+) -> DataFrame:
+    """The layout planner of the archive sinks (:func:`warc_export`,
+    :func:`wet_export`): *staged* rows ``(id, ..., rec_length)`` with
+    non-null ids in ``[lo, hi]`` gain their global position ``pos`` in id
+    order, ``shard_id = pos div shard_rows`` and ``rec_offset``, the
+    record's byte offset within its shard — from one two-phase bucketed
+    prefix-sum pass over id-range buckets that carries the row count and
+    the byte length together, and an S-row shard-start aggregate
+    broadcast back."""
+    from pyspark.sql import functions as F
+
+    from ..operators.curation import _bucketed_prefix_sum, _id_range_buckets
+
+    bucketed = _id_range_buckets(
+        staged.withColumn("one", F.lit(1).cast("long")), lo, hi, num_partitions
+    )
+    pr = _bucketed_prefix_sum(
+        bucketed, "one", ["id"], extra_val_cols=("rec_length",)
+    )
+    rows = pr.select(
+        *staged.columns,
+        (F.col("bkt_offset") + F.col("local_cum") - 1).alias("pos"),
+        (
+            F.col("bkt_offset__rec_length")
+            + F.col("local_cum__rec_length")
+            - F.col("rec_length")
+        ).alias("byte_excl"),
+    ).withColumn("shard_id", F.expr(f"pos div {int(shard_rows)}"))
+    starts = rows.groupBy("shard_id").agg(
+        F.min("byte_excl").alias("shard_start")
+    )
+    return rows.join(F.broadcast(starts), "shard_id").withColumn(
+        "rec_offset", F.col("byte_excl") - F.col("shard_start")
+    )
+
+
+def _write_shards(
+    rows: DataFrame,
+    out_dir: str,
+    suffix: str,
+    format_row: Callable[[Any], bytes],
+) -> DataFrame:
+    """The writer task of the archive sinks: one task per planned shard
+    formats each record with *format_row*, CONFIRMS the plan (the actual
+    offset and length must equal the planned ones, else ``ValueError``),
+    writes ``part-{shard_id:05d}.{suffix}`` under *out_dir* and emits
+    :data:`EXPORT_MANIFEST_SCHEMA` rows with the md5 of the written
+    bytes."""
+    import hashlib
+    import os
+
+    def _write(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("pos").reset_index(drop=True)
+        sid = int(pdf["shard_id"].iloc[0])
+        fname = f"part-{sid:05d}.{suffix}"
+        buf = io.BytesIO()
+        out = []
+        for r in pdf.itertuples(index=False):
+            if buf.tell() != int(r.rec_offset):
+                raise ValueError(
+                    f"planned offset {r.rec_offset} != actual {buf.tell()}"
+                    f" for {r.url} in shard {sid}"
+                )
+            rec = format_row(r)
+            if len(rec) != int(r.rec_length):
+                raise ValueError(
+                    f"planned length {r.rec_length} != actual {len(rec)}"
+                    f" for {r.url} (record length expression drift)"
+                )
+            buf.write(rec)
+            out.append((
+                int(r.id), r.url, sid, fname, int(r.rec_offset),
+                int(r.rec_length), hashlib.md5(rec).hexdigest(),
+            ))
+        os.makedirs(out_dir, exist_ok=True)  # concurrent-safe on local FS
+        with open(os.path.join(out_dir, fname), "wb") as fh:
+            fh.write(buf.getvalue())
+        return pd.DataFrame(
+            out, columns=[f.name for f in EXPORT_MANIFEST_SCHEMA.fields]
+        )
+
+    return rows.groupBy("shard_id").applyInPandas(
+        _write, schema=EXPORT_MANIFEST_SCHEMA
+    )
+
+
 def warc_export(
     pages: DataFrame,
     out_dir: str,
@@ -388,12 +480,7 @@ def warc_export(
     achievable only by aligning shard boundaries to input splits, which
     trades exact shard sizes away).
     """
-    import hashlib
-    import os
-
     from pyspark.sql import functions as F
-
-    from ..operators.curation import _bucketed_prefix_sum
 
     if shard_rows <= 0:
         raise ValueError(f"shard_rows must be positive, got {shard_rows}")
@@ -406,75 +493,15 @@ def warc_export(
     ).withColumn(
         "rec_length",
         record_length_expr("url", "status", "body", content_type),
-    ).withColumn("one", F.lit(1).cast("long"))
-    if num_partitions is None:
-        num_partitions = int(
-            pages.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
+    )
     lo, hi = staged.agg(F.min("id"), F.max("id")).first()
-    if lo is None:
-        lo, width = 0, 1
-    else:
-        width = max((hi - lo) // num_partitions + 1, 1)
-    bucketed = staged.withColumn(
-        "bkt",
-        F.coalesce(
-            ((F.col("id") - F.lit(lo)) / F.lit(width)).cast("long"), F.lit(0)
+    return _write_shards(
+        _plan_shards(staged, lo, hi, shard_rows, num_partitions),
+        out_dir,
+        "warc",
+        lambda r: _format_record(
+            r.url, r.ts, int(r.status), bytes(r.body), content_type
         ),
-    )
-    pr = _bucketed_prefix_sum(
-        bucketed, "one", ["id"], extra_val_cols=("rec_length",)
-    )
-    rows = pr.select(
-        "id", "url", "ts", "status", "body", "rec_length",
-        (F.col("bkt_offset") + F.col("local_cum") - 1).alias("pos"),
-        (
-            F.col("bkt_offset__rec_length")
-            + F.col("local_cum__rec_length")
-            - F.col("rec_length")
-        ).alias("byte_excl"),
-    ).withColumn("shard_id", F.expr(f"pos div {int(shard_rows)}"))
-    starts = rows.groupBy("shard_id").agg(
-        F.min("byte_excl").alias("shard_start")
-    )
-    rows = rows.join(F.broadcast(starts), "shard_id").withColumn(
-        "rec_offset", F.col("byte_excl") - F.col("shard_start")
-    )
-
-    def _write(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos").reset_index(drop=True)
-        sid = int(pdf["shard_id"].iloc[0])
-        fname = f"part-{sid:05d}.warc"
-        buf = io.BytesIO()
-        out = []
-        for r in pdf.itertuples(index=False):
-            if buf.tell() != int(r.rec_offset):
-                raise ValueError(
-                    f"planned offset {r.rec_offset} != actual {buf.tell()}"
-                    f" for {r.url} in shard {sid}"
-                )
-            rec = _format_record(
-                r.url, r.ts, int(r.status), bytes(r.body), content_type
-            )
-            if len(rec) != int(r.rec_length):
-                raise ValueError(
-                    f"planned length {r.rec_length} != actual {len(rec)}"
-                    f" for {r.url} (record_length_expr drift)"
-                )
-            buf.write(rec)
-            out.append((
-                int(r.id), r.url, sid, fname, int(r.rec_offset),
-                int(r.rec_length), hashlib.md5(rec).hexdigest(),
-            ))
-        os.makedirs(out_dir, exist_ok=True)  # concurrent-safe on local FS
-        with open(os.path.join(out_dir, fname), "wb") as fh:
-            fh.write(buf.getvalue())
-        return pd.DataFrame(
-            out, columns=[f.name for f in EXPORT_MANIFEST_SCHEMA.fields]
-        )
-
-    return rows.groupBy("shard_id").applyInPandas(
-        _write, schema=EXPORT_MANIFEST_SCHEMA
     )
 
 
@@ -702,12 +729,7 @@ def wet_export(
     dominates at archive scale).  Raises ``ValueError`` on a null id
     or text.
     """
-    import hashlib
-    import os
-
     from pyspark.sql import functions as F
-
-    from ..operators.curation import _bucketed_prefix_sum
 
     if shard_rows <= 0:
         raise ValueError(f"shard_rows must be positive, got {shard_rows}")
@@ -716,13 +738,7 @@ def wet_export(
         F.col(url_col).alias("url"),
         F.col(ts_col).alias("ts"),
         F.col(text_col).cast("string").alias("body"),
-    ).withColumn(
-        "rec_length", wet_record_length_expr("url", "body")
-    ).withColumn("one", F.lit(1).cast("long"))
-    if num_partitions is None:
-        num_partitions = int(
-            docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
+    ).withColumn("rec_length", wet_record_length_expr("url", "body"))
     # Fail fast on a null id or body (in the id-range pass): a null body
     # reaching the writer would surface as an opaque planned-offset
     # mismatch deep in applyInPandas (the planned rec_length is NULL while
@@ -735,70 +751,13 @@ def wet_export(
         raise ValueError(
             f"wet_export: {n_null} rows with a null {id_col} or {text_col}"
         )
-    if lo is None:
-        lo, width = 0, 1
-    else:
-        width = max((hi - lo) // num_partitions + 1, 1)
-    bucketed = staged.withColumn(
-        "bkt",
-        F.coalesce(
-            ((F.col("id") - F.lit(lo)) / F.lit(width)).cast("long"), F.lit(0)
-        ),
-    )
-    pr = _bucketed_prefix_sum(
-        bucketed, "one", ["id"], extra_val_cols=("rec_length",)
-    )
-    rows = pr.select(
-        "id", "url", "ts", "body", "rec_length",
-        (F.col("bkt_offset") + F.col("local_cum") - 1).alias("pos"),
-        (
-            F.col("bkt_offset__rec_length")
-            + F.col("local_cum__rec_length")
-            - F.col("rec_length")
-        ).alias("byte_excl"),
-    ).withColumn("shard_id", F.expr(f"pos div {int(shard_rows)}"))
-    starts = rows.groupBy("shard_id").agg(
-        F.min("byte_excl").alias("shard_start")
-    )
-    rows = rows.join(F.broadcast(starts), "shard_id").withColumn(
-        "rec_offset", F.col("byte_excl") - F.col("shard_start")
-    )
-
-    def _write(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos").reset_index(drop=True)
-        sid = int(pdf["shard_id"].iloc[0])
-        fname = f"part-{sid:05d}.warc.wet"
-        buf = io.BytesIO()
-        out = []
-        for r in pdf.itertuples(index=False):
-            if buf.tell() != int(r.rec_offset):
-                raise ValueError(
-                    f"planned offset {r.rec_offset} != actual {buf.tell()}"
-                    f" for {r.url} in shard {sid}"
-                )
-            # body is null-checked + string-cast at staging; a non-str
-            # here is a real bug and should fail loudly, not be masked
-            # by str() coercion.
-            rec = _format_wet_record(r.url, r.ts, r.body.encode())
-            if len(rec) != int(r.rec_length):
-                raise ValueError(
-                    f"planned length {r.rec_length} != actual {len(rec)}"
-                    f" for {r.url} (wet_record_length_expr drift)"
-                )
-            buf.write(rec)
-            out.append((
-                int(r.id), r.url, sid, fname, int(r.rec_offset),
-                int(r.rec_length), hashlib.md5(rec).hexdigest(),
-            ))
-        os.makedirs(out_dir, exist_ok=True)  # concurrent-safe on local FS
-        with open(os.path.join(out_dir, fname), "wb") as fh:
-            fh.write(buf.getvalue())
-        return pd.DataFrame(
-            out, columns=[f.name for f in EXPORT_MANIFEST_SCHEMA.fields]
-        )
-
-    return rows.groupBy("shard_id").applyInPandas(
-        _write, schema=EXPORT_MANIFEST_SCHEMA
+    # body is null-checked + string-cast at staging; a non-str here is a
+    # real bug and should fail loudly, not be masked by str() coercion.
+    return _write_shards(
+        _plan_shards(staged, lo, hi, shard_rows, num_partitions),
+        out_dir,
+        "warc.wet",
+        lambda r: _format_wet_record(r.url, r.ts, r.body.encode()),
     )
 
 

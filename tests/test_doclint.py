@@ -238,3 +238,83 @@ def test_perfbench_session_matches_engine_conf():
     }
     literal.pop("spark.ui.enabled")
     assert literal == _engine_keys()
+
+
+# Function pairs that still share a copied run of CLONE_RUN tokens, each
+# with the reason the copy stays.
+CLONE_RUN = 120
+CLONE_ALLOWED = {
+    ("operators/similarity.py::cosine_topk", "operators/similarity.py::ivf_topk"):
+        "both end in the same cosine score and per-query rank tail; "
+        "folding it is open (ROADMAP item 5)",
+}
+
+
+def _function_tokens():
+    """Token list of every top-level function and method body under
+    ``podcast_crawler_spark/``, keyed ``module.py::name``.  Docstrings,
+    comments and layout tokens are dropped, every string literal is one
+    placeholder token, and the ``*_sql`` oracles are skipped (they are
+    the references the operators are checked against)."""
+    import ast
+    import glob
+    import io
+    import tokenize
+
+    layout = {
+        tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE, tokenize.INDENT,
+        tokenize.DEDENT, tokenize.ENDMARKER,
+    }
+    scopes = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    pkg = os.path.join(ROOT, "podcast_crawler_spark")
+    out = {}
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        src = _read(path)
+        tree = ast.parse(src)
+        doc_lines = set()
+        for node in ast.walk(tree):
+            if isinstance(node, scopes) and ast.get_docstring(node) is not None:
+                d = node.body[0]
+                doc_lines.update(range(d.lineno, d.end_lineno + 1))
+        toks = [
+            (t.start[0], "STR" if t.type == tokenize.STRING else t.string)
+            for t in tokenize.generate_tokens(io.StringIO(src).readline)
+            if t.type not in layout and t.start[0] not in doc_lines
+        ]
+        defs = []
+        for node in tree.body:
+            if isinstance(node, ast.ClassDef):
+                defs += [
+                    (f"{node.name}.{m.name}", m)
+                    for m in node.body if isinstance(m, funcs)
+                ]
+            elif isinstance(node, funcs):
+                defs.append((node.name, node))
+        rel = os.path.relpath(path, pkg)
+        for name, fn in defs:
+            if not name.endswith("_sql"):
+                lo, hi = fn.body[0].lineno, fn.end_lineno
+                out[f"{rel}::{name}"] = [s for line, s in toks if lo <= line <= hi]
+    return out
+
+
+def test_no_copied_operator_cores():
+    """No two package functions share an identical run of ``CLONE_RUN``
+    tokens unless the pair is in ``CLONE_ALLOWED``: a copied operator core
+    becomes one private helper its operators call.  An allowlisted pair
+    that no longer shares such a run must leave the list."""
+    toks = _function_tokens()
+    first = {}  # hash of a token window -> [(function, offset)]
+    shared = set()
+    for fid, t in toks.items():
+        for i in range(len(t) - CLONE_RUN + 1):
+            window = t[i:i + CLONE_RUN]
+            seen = first.setdefault(hash(tuple(window)), [])
+            for other, j in seen:
+                if other != fid and toks[other][j:j + CLONE_RUN] == window:
+                    shared.add(tuple(sorted((other, fid))))
+            if all(other != fid for other, _ in seen):
+                seen.append((fid, i))
+    assert shared - set(CLONE_ALLOWED) == set(), sorted(shared - set(CLONE_ALLOWED))
+    assert set(CLONE_ALLOWED) - shared == set(), "stale CLONE_ALLOWED entries"

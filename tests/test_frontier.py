@@ -11,13 +11,16 @@ from pyspark.sql import functions as F
 
 from podcast_crawler_spark.feedparse.scalars import validate_url
 from podcast_crawler_spark.operators.frontier import (
+    USER_AGENT,
     CrawlConfig,
     apply_epoch_results,
     build_frontier,
     fetch_join,
+    frontier_rows,
     schedule_epoch,
     seed_scan,
 )
+from podcast_crawler_spark.operators.robots import RULES_SCHEMA
 from podcast_crawler_spark.sources.pagesgen import (
     EPOCH0,
     ROBOTS_DENIED,
@@ -95,6 +98,36 @@ def test_robots_denied_excluded(spark):
     assert denied_urls  # corpus contains denied feeds
     got = {r.url for r in sched.collect()}
     assert not (got & denied_urls)
+
+
+def test_exact_agent_robots_row_overrides_star_row(spark):
+    """A host with an exact-UA rules row and a ``*`` row is governed by
+    the exact-UA row alone (RFC 9309 §2.2.1): each due url is scheduled
+    once, spaced by that row's delay, and its disallow still applies."""
+    host = "h.example"
+    urls = [f"https://{host}/{p}" for p in ("a.xml", "b.xml", "c.xml", "private/x.xml")]
+    frontier = frontier_rows(
+        spark.createDataFrame(
+            [(u, i) for i, u in enumerate(urls)], "url string, priority int"
+        ),
+        EPOCH0,
+    )
+    robots = spark.createDataFrame(
+        [(host, USER_AGENT, ["/private/"], 2.0), (host, "*", [], 9.0)],
+        RULES_SCHEMA,
+    )
+    cfg = CrawlConfig(per_host_budget=10, num_partitions=4)
+    rows = sorted(
+        schedule_epoch(frontier, robots, EPOCH0, cfg).collect(),
+        key=lambda r: r.host_seq,
+    )
+    assert [(r.url, r.host_seq) for r in rows] == [
+        (u, i + 1) for i, u in enumerate(urls[:3])
+    ]
+    assert [
+        (r.planned_fetch_ts - rows[0].planned_fetch_ts).total_seconds()
+        for r in rows
+    ] == [0.0, 2.0, 4.0]
 
 
 def test_politeness_spacing(spark):

@@ -779,6 +779,37 @@ def test_trustrank_oracle_sql_matches(spark):
     assert got == want
 
 
+def test_cocitation_oracle_sql_matches(spark):
+    """Target 9 is cited by every source, above ``max_indeg``: the cap
+    drops it before the pair join and from the kept-set outdegrees."""
+    import duckdb
+
+    from podcast_crawler_spark.operators.graph import (
+        cocitation,
+        cocitation_oracle_sql,
+    )
+
+    edges = [(s, d) for s in range(8) for d in (s % 3, s % 4 + 3)]
+    edges += [(s, 9) for s in range(8)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = sorted(
+        tuple(r) for r in cocitation(df, max_indeg=6, min_shared=1).collect()
+    )
+    con = duckdb.connect()
+    con.execute("create table eg(src bigint, dst bigint)")
+    con.executemany("insert into eg values (?, ?)", edges)
+    want = sorted(
+        tuple(r)
+        for r in con.sql(
+            cocitation_oracle_sql(
+                "select src, dst from eg", max_indeg=6, min_shared=1
+            )
+        ).fetchall()
+    )
+    assert got and got == want
+    assert all(r[3] == 2 and r[4] == 2 for r in got)  # 9 left no outdegree
+
+
 def _py_ball_sizes(edges, iters):
     # exact |B(v, t)|: nodes within t OUT-hops of v, including v
     nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
