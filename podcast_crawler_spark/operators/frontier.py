@@ -176,19 +176,13 @@ def build_frontier(
 
 def robots_filter(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     """J4: left-join robots rules on host; deny rows whose URL path starts
-    with a disallowed prefix for our UA.  A host with both an exact-UA row
-    and a ``*`` row is governed by the exact-UA row alone (RFC 9309
-    §2.2.1, as ``robots.parse_robots_text`` resolves it).  The rules
-    table is tiny relative to the frontier → broadcast join, no shuffle of
-    the frontier."""
-    rules = robots.filter(
-        (F.col("user_agent") == USER_AGENT) | (F.col("user_agent") == "*")
-    ).groupBy(F.col("host").alias("r_host")).agg(
-        F.max_by(
-            F.struct("disallow_prefixes", "crawl_delay_s"),
-            F.col("user_agent") == USER_AGENT,
-        ).alias("g")
-    ).select("r_host", "g.disallow_prefixes", "g.crawl_delay_s")
+    with a disallowed prefix.  *robots* holds at most one row per host,
+    the group that applies to ``USER_AGENT`` (``robots.agent_rules``).
+    The rules table is tiny relative to the frontier → broadcast join, no
+    shuffle of the frontier."""
+    rules = robots.select(
+        F.col("host").alias("r_host"), "disallow_prefixes", "crawl_delay_s"
+    )
     path = F.regexp_extract(
         F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)", 1
     )
@@ -256,6 +250,7 @@ def schedule_epoch(
 ) -> DataFrame:
     """W4+W5: select due pending rows, apply robots, rank them per host by
     ``(next_fetch_ts, priority, url_hash)`` and keep the per-host budget.
+    *robots*: at most one row per host, as ``robots_filter`` takes it.
     Emits ``host_seq`` (1-based per-host order) and ``planned_fetch_ts``
     spaced by the host's crawl delay — the deterministic crawl ordering the
     north rule asks to match (SURVEY.md §7.2).

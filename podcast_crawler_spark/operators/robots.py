@@ -5,7 +5,8 @@ The reference does not fetch or honor robots.txt at all (its politeness
 is only the global 2 req/s governor, ``/root/reference/src/crawler/
 rate_limiter.rs:34-41``); the north rule adds per-host robots rules, and
 this operator closes the loop from raw crawled ``robots.txt`` bytes to
-the ``(host, user_agent, disallow_prefixes, crawl_delay_s)`` table.
+the ``(host, user_agent, disallow_prefixes, crawl_delay_s)`` table
+(``functions/schemas.ROBOTS_SCHEMA``).
 
 Grammar (the practical subset, per the original 1994 REP and RFC 9309's
 group model, simplified to one User-agent line per group — the shape the
@@ -17,6 +18,11 @@ deterministic corpus generates):
 * the group for OUR exact user-agent wins over the ``*`` group; a host
   with neither yields no rules row (crawl with defaults)
 * empty ``Disallow:`` means "allow all" and adds no prefix
+
+Agent precedence is decided here only: per file by
+``parse_robots_text``, per rules table by :func:`agent_rules`, which
+``run_crawl`` and ``run_crawl_stream`` call once per crawl.  The
+scheduler's join (``frontier.robots_filter``) takes the resolved table.
 
 Parsing is line-oriented per host — a pandas-batched map over the
 (small: one row per host) robots table, same Arrow-UDF pattern as the
@@ -32,25 +38,12 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
 
+from ..functions.schemas import ROBOTS_SCHEMA
 from .frontier import USER_AGENT
 
-RULES_SCHEMA = StructType([
-    StructField("host", StringType(), False),
-    StructField("user_agent", StringType(), False),
-    StructField("disallow_prefixes", ArrayType(StringType()), False),
-    StructField("crawl_delay_s", DoubleType(), True),
-])
 
-
-def parse_robots_text(body: str, user_agent: str = USER_AGENT) -> Optional[dict]:
+def parse_robots_text(body: str) -> Optional[dict]:
     """Parse one robots.txt body; returns the applicable group's rules
     (exact-UA group preferred over ``*``) or None if neither exists."""
     groups: dict = {}
@@ -71,7 +64,7 @@ def parse_robots_text(body: str, user_agent: str = USER_AGENT) -> Optional[dict]
                     cur["delay"] = float(val)
                 except ValueError:
                     pass
-    for ua in (user_agent, "*"):
+    for ua in (USER_AGENT, "*"):
         if ua in groups:
             g = groups[ua]
             return {
@@ -83,34 +76,43 @@ def parse_robots_text(body: str, user_agent: str = USER_AGENT) -> Optional[dict]
 
 
 def parse_robots(
-    df: DataFrame,
-    host_col: str = "host",
-    body_col: str = "body",
-    user_agent: str = USER_AGENT,
+    df: DataFrame, host_col: str = "host", body_col: str = "body"
 ) -> DataFrame:
-    """Robots bodies → rules table (RULES_SCHEMA).  Hosts whose file has
-    no applicable group emit no row — the scheduler's left join then
+    """Robots bodies → rules table (``ROBOTS_SCHEMA``).  Hosts whose file
+    has no applicable group emit no row — the scheduler's left join then
     applies defaults, exactly as for hosts with no robots.txt at all."""
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for host, body in zip(pdf[host_col], pdf[body_col]):
-                r = parse_robots_text(body or "", user_agent)
-                if r is not None:
-                    rows.append(
-                        (
-                            host,
-                            r["user_agent"],
-                            r["disallow_prefixes"],
-                            r["crawl_delay_s"],
-                        )
-                    )
+            rules = (
+                (host, parse_robots_text(body or ""))
+                for host, body in zip(pdf[host_col], pdf[body_col])
+            )
             yield pd.DataFrame(
-                rows, columns=[f.name for f in RULES_SCHEMA.fields]
+                [{"host": h, **r} for h, r in rules if r is not None],
+                columns=ROBOTS_SCHEMA.fieldNames(),
             )
 
-    return df.select(host_col, body_col).mapInPandas(_run, schema=RULES_SCHEMA)
+    return df.select(host_col, body_col).mapInPandas(_run, schema=ROBOTS_SCHEMA)
+
+
+def agent_rules(robots: DataFrame) -> DataFrame:
+    """Resolve a rules table (``ROBOTS_SCHEMA``) to the rows that apply
+    to ``USER_AGENT``: per host, its exact-agent row, else its ``*`` row
+    (RFC 9309 §2.2.1).  A host with two rows for one agent raises in the
+    same aggregate (``raise_error``, no extra job) instead of getting an
+    arbitrary pick."""
+    ours = F.col("user_agent") == USER_AGENT
+    g = robots.filter(ours | (F.col("user_agent") == "*")).groupBy("host").agg(
+        F.max_by(F.struct(*ROBOTS_SCHEMA.fieldNames()), ours).alias("g"),
+        ((F.count_if(ours) > 1) | (F.count_if(~ours) > 1)).alias("dup"),
+    )
+    dup = F.concat(
+        F.lit("robots rules: host "), "host", F.lit(" has two rows for one agent")
+    )
+    return g.select(
+        F.when(F.col("dup"), F.raise_error(dup)).otherwise(F.col("g")).alias("g")
+    ).select("g.*")
 
 
 def sitemap_directives(

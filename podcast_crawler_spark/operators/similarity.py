@@ -86,23 +86,28 @@ def cosine_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", cosine(F.col("qvec"), F.col("cvec")))
+    return _rank_topk(_scored(c.crossJoin(F.broadcast(q))), k)
+
+
+def _scored(pairs: DataFrame) -> DataFrame:
+    """Candidate ``(query_id, qvec, neighbor_id, cvec)`` pairs with their
+    ``cos``, self-matches dropped."""
+    return pairs.filter(F.col("neighbor_id") != F.col("query_id")).withColumn(
+        "cos", cosine(F.col("qvec"), F.col("cvec"))
     )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's top-*k* scored neighbors by ``cos`` (ties on neighbor
+    id) as ``(query_id, neighbor_id, rank, cos)``, the shape of
+    ``cosine_topk``, ``lsh_topk`` and ``ivf_topk``."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round("cos", 6).alias("cos"),
-        )
+        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos"))
     )
 
 
@@ -232,20 +237,11 @@ def lsh_topk(
     # never cross an exchange (a distinct over (ids, qvec, cvec) would
     # ship every duplicate's two embeddings through the wire)
     scored = (
-        cb.join(F.broadcast(qb), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", cosine(F.col("qvec"), F.col("cvec")))
+        _scored(cb.join(F.broadcast(qb), "bucket"))
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cos").alias("cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _rank_topk(scored, k)
 
 
 def ivf_assign(
@@ -422,19 +418,7 @@ def ivf_topk(
         ).join(probes, "query_id")
         joined = corpus_side.join(F.broadcast(q), "cell")
 
-    scored = (
-        joined
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", cosine(F.col("qvec"), F.col("cvec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _rank_topk(_scored(joined), k)
 
 
 def quantize_int8(

@@ -52,6 +52,7 @@ from ..operators.seen import (
     filter_unseen,
     update_bloom_shards,
 )
+from ..operators.robots import agent_rules
 from ..operators.stats import ERROR_TYPES, categorize_error
 from .checkpoint import SnapshotTable, resolve_lww
 
@@ -155,6 +156,11 @@ def run_epoch(
     crash before it re-runs the whole epoch idempotently: upserts are
     keyed, re-insertion converges to the same state).
 
+    *robots*: at most one row per host, the group that applies to
+    ``USER_AGENT`` (``robots.agent_rules``).  A url scheduled twice (a
+    second rules row for a host, a ``url_hash`` collision) changes the
+    frontier's row count, which no epoch does: it raises before publish.
+
     *fetcher*: optional production fetch swap-in (S2) — a callable
     ``scheduled -> DataFrame`` with ``fetch_join``'s output schema, e.g.
     ``operators.fetcher.live_fetch`` bound to a transport.  When given,
@@ -162,6 +168,7 @@ def run_epoch(
     upserts, frontier update, metrics) runs unchanged."""
     t0 = time.time()
     epoch_no = state.completed_epochs() + 1
+    frontier_rows_read = state.frontier.manifest()["row_count"]
     frontier = state.frontier.read(spark)
 
     # 1-2. due selection + politeness priority queue (W4/W5) + robots (J4).
@@ -357,6 +364,11 @@ def run_epoch(
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, old)
+    if frontier_staged["row_count"] != frontier_rows_read:
+        raise RuntimeError(
+            f"epoch {epoch_no}: frontier of {frontier_rows_read} rows staged"
+            f" as {frontier_staged['row_count']}: a url was scheduled twice"
+        )
     pod_man = state.podcasts.manifest() or {}
     ep_man = state.episodes.manifest() or {}
     # manifest row_count is the RAW segment total (delta segments include
@@ -454,8 +466,10 @@ def run_crawl(
 ) -> CrawlState:
     """Run (or **resume**) the crawl until *epochs* epochs are committed.
     Epoch timestamps are deterministic (epoch0 + i·interval), so resuming a
-    killed run reproduces byte-identical outputs (tested)."""
+    killed run reproduces byte-identical outputs (tested).  *robots* is
+    resolved (``robots.agent_rules``) and materialized once per crawl."""
     state = init_crawl(spark, seeds, state_dir, epoch0, cfg)
+    robots = agent_rules(robots).localCheckpoint()
     while state.completed_epochs() < epochs:
         i = state.completed_epochs()
         epoch_ts = epoch0 + timedelta(seconds=i * epoch_interval_s)

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.frontier import CrawlConfig, seed_scan
+from ..operators.robots import agent_rules
 from ..plans.epoch import CrawlState, admit_urls, init_crawl, run_epoch
 
 
@@ -60,13 +61,15 @@ def run_crawl_stream(
     the frontier (``init_crawl``); each later one admits the batch's new
     URLs through ``admit_urls`` (seed rank as priority, due at *epoch0*;
     already-present canonical URLs are skipped and the seen index is
-    folded).  Every micro-batch then runs one deterministic epoch.
+    folded).  Every micro-batch then runs one deterministic epoch;
+    *robots* is resolved and materialized once, as in ``run_crawl``.
 
     Returns the StreamingQuery (caller awaits termination; with
     ``available_now`` the query drains pending files and stops).
     """
     from ..functions.schemas import SEEDS_SCHEMA
 
+    robots = agent_rules(robots).localCheckpoint()
     seeds_stream = (
         spark.readStream.schema(SEEDS_SCHEMA)
         .option("maxFilesPerTrigger", 1)

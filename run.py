@@ -86,7 +86,10 @@ def main() -> None:
 
         pages = gen_pages(spark, args.n_feeds, partitions=cfg.num_partitions)
         seeds = gen_seeds(spark, args.n_feeds, partitions=cfg.num_partitions)
-        robots = gen_robots(spark, args.n_feeds, partitions=cfg.num_partitions)
+        # run_crawl runs once per epoch below: generate the rules once
+        robots = gen_robots(
+            spark, args.n_feeds, partitions=cfg.num_partitions
+        ).localCheckpoint()
     else:
         pages = spark.read.parquet(args.pages)
         seeds = spark.read.parquet(args.seeds)

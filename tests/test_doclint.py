@@ -243,11 +243,7 @@ def test_perfbench_session_matches_engine_conf():
 # Function pairs that still share a copied run of CLONE_RUN tokens, each
 # with the reason the copy stays.
 CLONE_RUN = 120
-CLONE_ALLOWED = {
-    ("operators/similarity.py::cosine_topk", "operators/similarity.py::ivf_topk"):
-        "both end in the same cosine score and per-query rank tail; "
-        "folding it is open (ROADMAP item 5)",
-}
+CLONE_ALLOWED = {}
 
 
 def _function_tokens():

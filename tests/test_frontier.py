@@ -7,9 +7,15 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
+import pytest
 from pyspark.sql import functions as F
 
 from podcast_crawler_spark.feedparse.scalars import validate_url
+from podcast_crawler_spark.functions.schemas import (
+    PAGES_SCHEMA,
+    ROBOTS_SCHEMA,
+    SEEDS_SCHEMA,
+)
 from podcast_crawler_spark.operators.frontier import (
     USER_AGENT,
     CrawlConfig,
@@ -20,7 +26,8 @@ from podcast_crawler_spark.operators.frontier import (
     schedule_epoch,
     seed_scan,
 )
-from podcast_crawler_spark.operators.robots import RULES_SCHEMA
+from podcast_crawler_spark.operators.robots import agent_rules
+from podcast_crawler_spark.plans.epoch import init_crawl, run_crawl, run_epoch
 from podcast_crawler_spark.sources.pagesgen import (
     EPOCH0,
     ROBOTS_DENIED,
@@ -100,34 +107,133 @@ def test_robots_denied_excluded(spark):
     assert not (got & denied_urls)
 
 
+# one host with an exact-UA rules row and a ``*`` row
+TWO_ROW_HOST = "h.example"
+TWO_ROW_URLS = [
+    f"https://{TWO_ROW_HOST}/{p}"
+    for p in ("a.xml", "b.xml", "c.xml", "private/x.xml")
+]
+
+
+def _two_row_robots(spark):
+    return spark.createDataFrame(
+        [
+            (TWO_ROW_HOST, USER_AGENT, ["/private/"], 2.0),
+            (TWO_ROW_HOST, "*", [], 9.0),
+        ],
+        ROBOTS_SCHEMA,
+    )
+
+
 def test_exact_agent_robots_row_overrides_star_row(spark):
     """A host with an exact-UA rules row and a ``*`` row is governed by
-    the exact-UA row alone (RFC 9309 §2.2.1): each due url is scheduled
-    once, spaced by that row's delay, and its disallow still applies."""
-    host = "h.example"
-    urls = [f"https://{host}/{p}" for p in ("a.xml", "b.xml", "c.xml", "private/x.xml")]
+    the exact-UA row alone (RFC 9309 §2.2.1), once ``agent_rules`` has
+    resolved the table: each due url is scheduled once, spaced by that
+    row's delay, and its disallow still applies."""
     frontier = frontier_rows(
         spark.createDataFrame(
-            [(u, i) for i, u in enumerate(urls)], "url string, priority int"
+            [(u, i) for i, u in enumerate(TWO_ROW_URLS)],
+            "url string, priority int",
         ),
         EPOCH0,
     )
-    robots = spark.createDataFrame(
-        [(host, USER_AGENT, ["/private/"], 2.0), (host, "*", [], 9.0)],
-        RULES_SCHEMA,
-    )
     cfg = CrawlConfig(per_host_budget=10, num_partitions=4)
+    rules = agent_rules(_two_row_robots(spark))
     rows = sorted(
-        schedule_epoch(frontier, robots, EPOCH0, cfg).collect(),
+        schedule_epoch(frontier, rules, EPOCH0, cfg).collect(),
         key=lambda r: r.host_seq,
     )
     assert [(r.url, r.host_seq) for r in rows] == [
-        (u, i + 1) for i, u in enumerate(urls[:3])
+        (u, i + 1) for i, u in enumerate(TWO_ROW_URLS[:3])
     ]
     assert [
         (r.planned_fetch_ts - rows[0].planned_fetch_ts).total_seconds()
         for r in rows
     ] == [0.0, 2.0, 4.0]
+
+
+def test_agent_rules_one_row_per_host(spark):
+    """``agent_rules`` keeps one row per host — exact UA over ``*`` —
+    and drops rows for other agents."""
+    robots = spark.createDataFrame(
+        [
+            ("a.example", "*", ["/s/"], 1.0),
+            ("a.example", USER_AGENT, ["/e/"], 2.0),
+            ("b.example", "*", ["/s/"], None),
+            ("c.example", "OtherBot", ["/"], 3.0),
+        ],
+        ROBOTS_SCHEMA,
+    )
+    got = {
+        r.host: (r.user_agent, list(r.disallow_prefixes), r.crawl_delay_s)
+        for r in agent_rules(robots).collect()
+    }
+    assert got == {
+        "a.example": (USER_AGENT, ["/e/"], 2.0),
+        "b.example": ("*", ["/s/"], None),
+    }
+
+
+def test_agent_rules_rejects_two_rows_for_one_agent(spark):
+    """Two exact-UA rows for one host leave no single group to apply:
+    the resolver raises instead of picking one arbitrarily."""
+    robots = spark.createDataFrame(
+        [
+            ("a.example", USER_AGENT, ["/x/"], 1.0),
+            ("a.example", USER_AGENT, ["/y/"], 2.0),
+            ("b.example", USER_AGENT, [], 1.0),
+        ],
+        ROBOTS_SCHEMA,
+    )
+    with pytest.raises(Exception, match="host a.example has two rows"):
+        agent_rules(robots).collect()
+
+
+def test_run_crawl_exact_agent_row_overrides_star_row(spark, tmp_path):
+    """End to end: a ``*`` row that would deny every feed of a host
+    changes nothing next to that host's exact-UA row — the crawl's
+    frontier after one epoch equals the crawl without the ``*`` row."""
+    seeds = gen_seeds(spark, N, partitions=4)
+    pages = gen_pages(spark, N, partitions=4)
+    robots = gen_robots(spark, N)
+    star = spark.createDataFrame(
+        [(feed_host(0), "*", ["/feeds/"], 9.0)], ROBOTS_SCHEMA
+    )
+
+    def frontier_after(name, rules):
+        state = run_crawl(
+            spark, str(tmp_path / name), seeds, pages, rules, 1, EPOCH0, cfg=CFG
+        )
+        return sorted(state.frontier.read(spark).collect(), key=lambda r: r.url)
+
+    plain = frontier_after("plain", robots)
+    with_star = frontier_after("star", robots.unionByName(star))
+    assert with_star == plain
+    # the host's feeds were crawled, which the * row alone would deny
+    assert any(
+        r.host == feed_host(0) and r.state == "parsed" for r in with_star
+    )
+
+
+def test_run_epoch_rejects_unresolved_two_row_host(spark, tmp_path):
+    """``run_epoch`` given an unresolved table (two rules rows for one
+    host) would schedule that host's urls twice; the epoch raises before
+    publishing, so the crawl state does not move."""
+    seeds = spark.createDataFrame(
+        [
+            (str(i), i, "show", "News", [("rss", u)])
+            for i, u in enumerate(TWO_ROW_URLS)
+        ],
+        SEEDS_SCHEMA,
+    )
+    cfg = CrawlConfig(per_host_budget=10, num_partitions=4)
+    state = init_crawl(spark, seeds, str(tmp_path), EPOCH0, cfg)
+    snap = state.frontier.current_snapshot_id()
+    pages = spark.createDataFrame([], PAGES_SCHEMA)
+    with pytest.raises(RuntimeError, match="scheduled twice"):
+        run_epoch(spark, state, pages, _two_row_robots(spark), EPOCH0, cfg)
+    assert state.completed_epochs() == 0
+    assert state.frontier.current_snapshot_id() == snap
 
 
 def test_politeness_spacing(spark):
@@ -326,7 +432,7 @@ def test_parse_robots_unit_grammar():
         "disallow_prefixes": ["/a/", "/b/"],
         "crawl_delay_s": 1.5,
     }
-    star = parse_robots_text("User-agent: *\nDisallow: /x/\n", "OtherBot")
+    star = parse_robots_text("User-agent: *\nDisallow: /x/\n")
     assert star["user_agent"] == "*" and star["disallow_prefixes"] == ["/x/"]
     assert parse_robots_text("User-agent: GoogleBot\nDisallow: /\n") is None
     assert parse_robots_text("") is None
@@ -335,8 +441,10 @@ def test_parse_robots_unit_grammar():
 def test_parse_robots_closes_loop_with_gen_robots(spark):
     """Parsing the raw deterministic robots.txt bodies must reproduce the
     rules table gen_robots emits directly — raw bytes → scheduler input
-    round-trips (delay + prefixes identical for every host; UA may be
-    '*' for star-only hosts, which robots_filter accepts equally)."""
+    round-trips (delay + prefixes identical for every host).  Both tables
+    hold one row per host: ``parse_robots_text`` resolves agent
+    precedence within each file, as ``agent_rules`` does across a
+    table's rows (the UA may be '*' for a star-only host)."""
     from podcast_crawler_spark.operators.robots import parse_robots
     from podcast_crawler_spark.sources.pagesgen import robots_txt
 

@@ -8,6 +8,7 @@ silently regresses the plan (e.g. a UDF blocks pushdown, or a join side
 stops broadcasting)."""
 
 import os
+import re
 
 import pytest
 
@@ -77,12 +78,14 @@ def test_seed_scan_prunes_columns(spark):
 
 def test_politeness_window_single_shuffle(spark):
     """The politeness priority queue costs exactly one exchange (hash by
-    host_hash) — no extra sort/shuffle beyond the window's own."""
+    host_hash) — no extra sort/shuffle beyond the window's own, and none
+    for the robots join."""
     from podcast_crawler_spark.operators.frontier import (
         CrawlConfig,
         build_frontier,
         schedule_epoch,
     )
+    from podcast_crawler_spark.operators.robots import agent_rules
     from podcast_crawler_spark.sources.pagesgen import (
         EPOCH0,
         gen_robots,
@@ -107,6 +110,17 @@ def test_politeness_window_single_shuffle(spark):
     )
     assert p2.count("Exchange hashpartitioning(host_hash") == 2, p2
     assert "pmod(xxhash64(url" in p2, p2
+
+    # with materialized inputs (the frontier is a snapshot scan, and
+    # run_crawl resolves and materializes the robots table once per crawl)
+    # the window's exchanges are the plan's only shuffles: the robots
+    # join adds none
+    frontier_m = frontier.localCheckpoint()
+    robots_m = agent_rules(robots).localCheckpoint()
+    for c in (cfg, CrawlConfig(num_partitions=4)):
+        pm = plan_of(schedule_epoch(frontier_m, robots_m, EPOCH0, c))
+        shuffles = re.findall(r"(?<!Broadcast)Exchange (\w+\(\w+)", pm)
+        assert set(shuffles) == {"hashpartitioning(host_hash"}, pm
 
 
 def test_frontier_update_broadcasts_outcomes(spark, tmp_path):
