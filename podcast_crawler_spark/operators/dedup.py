@@ -190,8 +190,11 @@ def ngram_jaccard_pairs(
        above threshold is stop-shingles (df > 1000).  Callers needing the
        old behavior pass ``max_shingle_freq=None`` explicitly.
     """
-    sh = shingles(df, text_col, id_col, n).cache()
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
+    # eager truncation, not a lazy cache: the hot probe, both candidate
+    # legs, the hot overlap and the set sizes all read the shingles, and
+    # a cache entry would stay pinned in the session after the pairs are
+    # read (the ContextCleaner frees a checkpoint)
+    sh = shingles(df, text_col, id_col, n).localCheckpoint(eager=True)
 
     cand_src = sh
     hot = None
@@ -206,11 +209,12 @@ def ngram_jaccard_pairs(
             .filter(F.col("df_") > max_shingle_freq)
             .select("shingle")
         )
-        # eager emptiness probe (one map-side-combine agg over the cached
-        # shingles): most corpora have NO hot shingle, and the cap's
-        # bookkeeping — anti-join + three hot-overlap joins — measured
-        # ~40% overhead at sf0.1 when it all joins empty inputs.  With no
-        # hot shingle the capped plan is exactly the uncapped plan.
+        # eager emptiness probe (one map-side-combine agg over the
+        # checkpointed shingles): most corpora have NO hot shingle, and
+        # the cap's bookkeeping — anti-join + three hot-overlap joins —
+        # measured ~40% overhead at sf0.1 when it all joins empty
+        # inputs.  With no hot shingle the capped plan is exactly the
+        # uncapped plan.
         if not hot_df.isEmpty():
             hot = F.broadcast(hot_df)
             cand_src = sh.join(hot, "shingle", "left_anti")
@@ -244,9 +248,19 @@ def ngram_jaccard_pairs(
                 F.col("common") + F.coalesce(F.col("hot_common"), F.lit(0))
             ).alias("common"),
         )
-    out = (
-        common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+    return _jaccard_verify(common, sh, threshold)
+
+
+def _jaccard_verify(common: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """The exact-verification tail of the n-gram and MinHash near-dup
+    operators: ``(id_a, id_b, jaccard)`` for the ``(id_a, id_b, common)``
+    pairs whose true Jaccard ``common / (|A| + |B| - common)`` over the
+    ``(id, shingle)`` sets *sh* reaches *threshold* — filtered on the
+    unrounded value, then rounded to 6 dp."""
+    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
+    return (
+        common.join(sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
+        .join(sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
         .withColumn(
             "jaccard",
             F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
@@ -254,7 +268,17 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
-    return out
+
+
+def _candidate_common(candidates: DataFrame, sh: DataFrame) -> DataFrame:
+    """``(id_a, id_b, common)``: each candidate pair's shared-shingle
+    count, joined over both docs' full ``(id, shingle)`` rows *sh*."""
+    return (
+        candidates.join(sh.select(F.col("id").alias("id_a"), "shingle"), "id_a")
+        .join(sh.select(F.col("id").alias("id_b"), "shingle"), ["id_b", "shingle"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("common"))
+    )
 
 
 def minhash_signatures(
@@ -292,28 +316,14 @@ def _lsh_candidates(
     inside a degenerate bucket — the same df-cap discipline as
     ``max_shingle_freq``.  ``None`` disables the cap."""
     if max_bucket_size is None:
-        l = stacked.select(F.col("id").alias("id_a"), "band", "bh")
-        r = stacked.select(F.col("id").alias("id_b"), "band", "bh")
-        return (
-            l.join(r, ["band", "bh"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
+        return _bucket_pairs(stacked).distinct()
     # one exchange on (band, bh); count + min are unbounded-frame window
     # aggregates (no sort) and both branches below reuse the partitioning
     wb = Window.partitionBy("band", "bh")
     sized = stacked.withColumn("bucket_n", F.count("*").over(wb)).withColumn(
         "rep", F.min("id").over(wb)
     )
-    small = sized.filter(F.col("bucket_n") <= max_bucket_size)
-    l = small.select(F.col("id").alias("id_a"), "band", "bh")
-    r = small.select(F.col("id").alias("id_b"), "band", "bh")
-    pairs_small = (
-        l.join(r, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
+    pairs_small = _bucket_pairs(sized.filter(F.col("bucket_n") <= max_bucket_size))
     pairs_big = (
         sized.filter(
             (F.col("bucket_n") > max_bucket_size) & (F.col("id") != F.col("rep"))
@@ -323,15 +333,31 @@ def _lsh_candidates(
     return pairs_small.unionByName(pairs_big).distinct()
 
 
-def _stack_bands(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
+def _bucket_pairs(stacked: DataFrame) -> DataFrame:
+    """``(id_a, id_b)``, ``id_a < id_b``, once per ``(band, bh)`` bucket
+    the two ids share: the all-pairs bucket join.  A pair colliding in
+    several bands repeats, so callers ``distinct()``."""
+    l = stacked.select(F.col("id").alias("id_a"), "band", "bh")
+    r = stacked.select(F.col("id").alias("id_b"), "band", "bh")
+    return (
+        l.join(r, ["band", "bh"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+    )
+
+
+def _stack_bands(
+    sig: DataFrame, num_perm: int, bands: int, sep: str = ","
+) -> DataFrame:
     """Signatures -> long-form ``(id, band, bh)`` bucket rows: ``bands``
     bands of ``num_perm/bands`` signature slots each, the band hash a
-    16-byte md5 of its slots.  One explode, no per-band re-shuffle."""
+    16-byte md5 of its *sep*-joined slots.  One explode, no per-band
+    re-shuffle."""
     rows_per_band = num_perm // bands
     band_cols = [
         F.md5(
             F.concat_ws(
-                ",",
+                sep,
                 *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)],
             )
         ).alias(f"b{b}")
@@ -497,29 +523,8 @@ def incremental_minhash_lsh(
             )
             .localCheckpoint(eager=True)
         )
-    sizes = all_sh.groupBy("id").agg(F.count("*").alias("sz"))
-    common = (
-        candidates.join(all_sh.select(F.col("id").alias("id_a"), "shingle"), "id_a")
-        .join(all_sh.select(F.col("id").alias("id_b"), "shingle"),
-              ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
-    )
-    return (
-        common.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"),
-            "id_a",
-        )
-        .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    return _jaccard_verify(
+        _candidate_common(candidates, all_sh), all_sh, threshold
     )
 
 
@@ -568,25 +573,7 @@ def minhash_lsh_pairs(
         eager=True
     )
     # exact verification: true Jaccard over the full shingle sets
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    a_full = sh.select(F.col("id").alias("id_a"), "shingle")
-    b_full = sh.select(F.col("id").alias("id_b"), "shingle")
-    common = (
-        candidates.join(a_full, "id_a")
-        .join(b_full, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
-    )
-    return (
-        common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _jaccard_verify(_candidate_common(candidates, sh), sh, threshold)
 
 
 def dedup_clusters(
@@ -1229,6 +1216,31 @@ def _md5h60(prefix: str, col: Column) -> Column:
     ).cast("long")
 
 
+def _md5_minhash(
+    sh: DataFrame, num_hashes: int, band_rows: int
+) -> tuple[DataFrame, DataFrame]:
+    """The md5 MinHash of :func:`host_minhash_similarity` and
+    :func:`minhash_recall_audit`: ``(sigs, pairs)`` over ``(id,
+    shingle)`` rows *sh*.  ``sigs = (id, h0..h{num_hashes-1})`` holds
+    the :func:`_md5h60` component mins (one partial-aggregated groupBy,
+    checkpointed eagerly); ``pairs = (id_a, id_b)`` are the distinct
+    band collisions of ``band_rows``-component bands, each band keyed
+    by the md5 of its ``':'``-joined components, as the oracles key it."""
+    assert num_hashes % band_rows == 0
+    aggs = [
+        F.min(_md5h60(f"{i}:", F.col("shingle"))).alias(f"h{i}")
+        for i in range(num_hashes)
+    ]
+    # O(ids) rows from the one corpus-scale pass, read by the banding
+    # and by the callers' joins.  EAGER checkpoint, not lazy cache: a
+    # caller's broadcast legs execute as concurrent subquery jobs and a
+    # lazy cache misses for all at once, re-running the shingle explode
+    # + md5 mins per leg
+    sigs = sh.groupBy("id").agg(*aggs).localCheckpoint(eager=True)
+    stacked = _stack_bands(sigs, num_hashes, num_hashes // band_rows, ":")
+    return sigs, _bucket_pairs(stacked).distinct()
+
+
 def host_minhash_similarity(
     df: DataFrame,
     host_col: str = "host",
@@ -1262,58 +1274,20 @@ def host_minhash_similarity(
     Output: ``(host_a, host_b, sig_matches, est_jaccard_ppm)`` — the
     estimate is ``1e6 · matching components / num_hashes``.
     """
-    assert num_hashes % band_rows == 0
-    n_bands = num_hashes // band_rows
     sh = shingles(
         df.select(F.col(host_col).alias("doc_id"), F.col(text_col)),
         id_col="doc_id",
     )
-    aggs = [
-        F.min(_md5h60(f"{i}:", F.col("shingle"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    # O(hosts) rows but derived from the ONE corpus-scale pass — three
-    # consumers below (banding + both broadcast sides of the estimate
-    # join).  EAGER checkpoint, not lazy cache: the two broadcast legs
-    # execute as concurrent subquery jobs and a lazy cache misses for
-    # both at once, re-running the shingle explode + 16 md5 mins per leg
-    sigs = (
-        sh.groupBy(F.col("id").alias("host"))
-        .agg(*aggs)
-        .localCheckpoint(eager=True)
-    )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    *[
-                        F.col(f"h{i}").cast("string")
-                        for i in range(b * band_rows, (b + 1) * band_rows)
-                    ],
-                )
-            ).alias("bk"),
-        )
-        for b in range(n_bands)
-    ]
-    stacked = sigs.select(
-        "host", F.explode(F.array(*band_structs)).alias("s")
-    ).select("host", F.col("s.band").alias("band"), F.col("s.bk").alias("bk"))
-    l = stacked.select(F.col("host").alias("host_a"), "band", "bk")
-    r = stacked.select(F.col("host").alias("host_b"), "band", "bk")
-    pairs = (
-        l.join(r, ["band", "bk"])
-        .filter(F.col("host_a") < F.col("host_b"))
-        .select("host_a", "host_b")
-        .distinct()
+    sigs, pairs = _md5_minhash(sh, num_hashes, band_rows)
+    pairs = pairs.select(
+        F.col("id_a").alias("host_a"), F.col("id_b").alias("host_b")
     )
     a = sigs.select(
-        F.col("host").alias("host_a"),
+        F.col("id").alias("host_a"),
         *[F.col(f"h{i}").alias(f"a{i}") for i in range(num_hashes)],
     )
     b_ = sigs.select(
-        F.col("host").alias("host_b"),
+        F.col("id").alias("host_b"),
         *[F.col(f"h{i}").alias(f"b{i}") for i in range(num_hashes)],
     )
     matches = sum(
@@ -1418,66 +1392,13 @@ def minhash_recall_audit(
     the O(shingle-df²) join the LSH path exists to avoid.  All
     arithmetic lands in integer ppm, so the oracle matches exactly.
     """
-    assert num_hashes % band_rows == 0
-    n_bands = num_hashes // band_rows
-    sh = shingles(df, text_col, id_col).cache()
-
     # exact ground truth: true-Jaccard >= threshold pairs (uncapped)
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    a = sh.select(F.col("id").alias("id_a"), "shingle")
-    b = sh.select(F.col("id").alias("id_b"), "shingle")
-    exact = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
-        .join(
-            sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")),
-            "id_b",
-        )
-        .filter(
-            F.col("common")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("common"))
-            >= threshold
-        )
-        .select("id_a", "id_b")
-    )
-
+    exact = ngram_jaccard_pairs(
+        df, text_col, id_col, threshold=threshold, max_shingle_freq=None
+    ).select("id_a", "id_b")
     # md5-minhash candidates with the audited (bands x rows) geometry
-    aggs = [
-        F.min(_md5h60(f"{i}:", F.col("shingle"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sigs = sh.groupBy("id").agg(*aggs)
-    band_structs = [
-        F.struct(
-            F.lit(bd).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    *[
-                        F.col(f"h{i}").cast("string")
-                        for i in range(bd * band_rows, (bd + 1) * band_rows)
-                    ],
-                )
-            ).alias("bk"),
-        )
-        for bd in range(n_bands)
-    ]
-    stacked = sigs.select(
-        "id", F.explode(F.array(*band_structs)).alias("s")
-    ).select("id", F.col("s.band").alias("band"), F.col("s.bk").alias("bk"))
-    l = stacked.select(F.col("id").alias("id_a"), "band", "bk")
-    r = stacked.select(F.col("id").alias("id_b"), "band", "bk")
-    cands = (
-        l.join(r, ["band", "bk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    _, cands = _md5_minhash(
+        shingles(df, text_col, id_col), num_hashes, band_rows
     )
 
     hits = cands.join(exact, ["id_a", "id_b"], "semi")

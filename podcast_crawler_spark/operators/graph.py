@@ -41,7 +41,7 @@ Scale design (10^8 hosts, 10^10 edges, 1000 executors):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import _capped_overlap_pairs
@@ -111,6 +111,36 @@ def _rank_flow(
     )
 
 
+def _rank_loop(
+    nodes: DataFrame,
+    ranks: DataFrame,
+    e: DataFrame,
+    outdeg: DataFrame,
+    rank: Column,
+    iters: int,
+    checkpoint: bool,
+    scale: int,
+    name: str,
+) -> DataFrame:
+    """The iteration of :func:`pagerank` and :func:`trustrank`: *iters*
+    :func:`_rank_flow` steps, each setting every node's ``r`` to *rank*
+    (an expression over the nodes' columns, ``inflow`` and ``ds``),
+    checkpointed eagerly per step with *checkpoint*.  Returns ``(node,
+    <name>_scaled, <name>)``: the exact BIGINT state and its float
+    rendering rounded to 9 dp."""
+    for _ in range(iters):
+        ranks = _rank_flow(nodes, ranks, e, outdeg).select(
+            *nodes.columns, rank.cast("long").alias("r")
+        )
+        if checkpoint:
+            ranks = ranks.localCheckpoint(eager=True)
+    return ranks.select(
+        "node",
+        F.col("r").alias(f"{name}_scaled"),
+        F.round(F.col("r") / F.lit(float(scale)), 9).alias(name),
+    )
+
+
 def pagerank(
     edges: DataFrame,
     iters: int = 5,
@@ -138,26 +168,11 @@ def pagerank(
     init = scale // n
     base = (15 * init) // 100  # (1-d)/n in scaled integer units
     ranks = nodes.select("node", F.lit(init).cast("long").alias("r"))
-    for _ in range(iters):
-        ranks = (
-            _rank_flow(nodes, ranks, e, outdeg)
-            .select(
-                "node",
-                (
-                    F.lit(base).cast("long")
-                    + F.expr(
-                        f"({DAMP_NUM} * (coalesce(inflow, 0L)"
-                        f" + ds div {n})) div {DAMP_DEN}"
-                    )
-                ).cast("long").alias("r"),
-            )
-        )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select(
-        "node",
-        F.col("r").alias("rank_scaled"),
-        F.round(F.col("r") / F.lit(float(scale)), 9).alias("rank"),
+    rank = F.lit(base).cast("long") + F.expr(
+        f"({DAMP_NUM} * (coalesce(inflow, 0L) + ds div {n})) div {DAMP_DEN}"
+    )
+    return _rank_loop(
+        nodes, ranks, e, outdeg, rank, iters, checkpoint, scale, "rank"
     )
 
 
@@ -1217,32 +1232,15 @@ def trustrank(
         F.when(F.col("is_seed"), F.lit(init))
         .otherwise(F.lit(0)).cast("long").alias("r"),
     )
-    for _ in range(iters):
-        ranks = (
-            _rank_flow(nodes, ranks, e, outdeg)
-            .select(
-                "node",
-                "is_seed",
-                (
-                    F.when(
-                        F.col("is_seed"),
-                        F.lit(base).cast("long")
-                        + F.expr(f"({DAMP_NUM} * (ds div {s}))"
-                                 f" div {DAMP_DEN}"),
-                    ).otherwise(F.lit(0))
-                    + F.expr(
-                        f"({DAMP_NUM} * coalesce(inflow, 0L))"
-                        f" div {DAMP_DEN}"
-                    )
-                ).cast("long").alias("r"),
-            )
-        )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select(
-        "node",
-        F.col("r").alias("trust_scaled"),
-        F.round(F.col("r") / F.lit(float(scale)), 9).alias("trust"),
+    rank = F.when(
+        F.col("is_seed"),
+        F.lit(base).cast("long")
+        + F.expr(f"({DAMP_NUM} * (ds div {s})) div {DAMP_DEN}"),
+    ).otherwise(F.lit(0)) + F.expr(
+        f"({DAMP_NUM} * coalesce(inflow, 0L)) div {DAMP_DEN}"
+    )
+    return _rank_loop(
+        nodes, ranks, e, outdeg, rank, iters, checkpoint, scale, "trust"
     )
 
 

@@ -42,6 +42,44 @@ def _threshold(rate: float) -> int:
     return int(rate * _HASH_SPACE + 0.5)
 
 
+def _rate_sample(
+    df: DataFrame,
+    key_col: str,
+    strata_col: str,
+    rates: Dict[str, float],
+    default_rate: float = 0.0,
+) -> DataFrame:
+    """Keep each row whose key hash falls under its stratum's rate
+    threshold (*default_rate* for strata not in *rates*) and add the
+    applied ``rate`` column.  Both are one when-chain each, folded into
+    the scan."""
+    rate_expr = F.lit(default_rate)
+    threshold = F.lit(_threshold(default_rate))
+    for s, rate in sorted(rates.items()):
+        rate_expr = F.when(
+            F.col(strata_col) == s, F.lit(rate)
+        ).otherwise(rate_expr)
+        threshold = F.when(
+            F.col(strata_col) == s, F.lit(_threshold(rate))
+        ).otherwise(threshold)
+    return df.filter(key_hash32(F.col(key_col)) < threshold).withColumn(
+        "rate", rate_expr
+    )
+
+
+def _stratum_totals(
+    df: DataFrame, strata_col: str, weight_col: str
+) -> Dict[str, float]:
+    """``{stratum: sum(weight)}`` (None where every weight is null):
+    one map-side-combined aggregate, k strata rows to the driver."""
+    return {
+        r["s"]: r["w"]
+        for r in df.groupBy(F.col(strata_col).alias("s"))
+        .agg(F.sum(weight_col).alias("w"))
+        .collect()
+    }
+
+
 def sample_by_hash(
     df: DataFrame, key_col: str, rate: float
 ) -> DataFrame:
@@ -62,12 +100,9 @@ def stratified_sample(
     rebalancing a multilingual corpus): each row's threshold comes from
     its stratum, membership from its key hash.  Still one map-side
     filter — the when-chain folds into the scan."""
-    threshold = F.lit(_threshold(default_rate))
-    for value, rate in sorted(rates.items()):
-        threshold = F.when(
-            F.col(strata_col) == value, F.lit(_threshold(rate))
-        ).otherwise(threshold)
-    return df.filter(key_hash32(F.col(key_col)) < threshold)
+    return _rate_sample(df, key_col, strata_col, rates, default_rate).drop(
+        "rate"
+    )
 
 
 def topk_sample(
@@ -122,7 +157,10 @@ def mixture_sample(
     ``default_rate``.  Output = input columns + ``rate`` (the applied
     rate — the IEEE double ``min(1.0, budget/total)``, bit-identical to
     the SQL oracle's ``least(1.0, budget/total)``) so downstream
-    accounting — and the oracle — can audit the derivation.
+    accounting — and the oracle — can audit the derivation.  A
+    budgeted stratum whose weights sum to 0 takes rate 1.0 (a zero
+    weight fits any budget); one whose weights are all null has no
+    total to divide and raises ``ValueError``.
 
     Expected sampled weight per stratum ≈ ``min(budget_d, total_d)``
     (hash sampling is weight-oblivious within a stratum; exact
@@ -134,28 +172,18 @@ def mixture_sample(
     itself is a map-side filter riding the scan, exactly like every
     other sampler here.  No corpus shuffle, no join.
     """
-    totals = {
-        r["s"]: r["w"]
-        for r in df.groupBy(F.col(strata_col).alias("s"))
-        .agg(F.sum(weight_col).alias("w"))
-        .collect()
-    }
-    rates = {
-        s: (min(1.0, budgets[s] / totals[s]) if s in budgets else default_rate)
-        for s in totals
-    }
-    rate_expr = F.lit(default_rate)
-    threshold = F.lit(_threshold(default_rate))
-    for s, rate in sorted(rates.items()):
-        rate_expr = F.when(
-            F.col(strata_col) == s, F.lit(rate)
-        ).otherwise(rate_expr)
-        threshold = F.when(
-            F.col(strata_col) == s, F.lit(_threshold(rate))
-        ).otherwise(threshold)
-    return df.filter(key_hash32(F.col(key_col)) < threshold).withColumn(
-        "rate", rate_expr
-    )
+    rates = {}
+    for s, total in _stratum_totals(df, strata_col, weight_col).items():
+        if s not in budgets:
+            rates[s] = default_rate
+        elif total is None:
+            raise ValueError(
+                f"mixture_sample: stratum {s!r} has a budget but every"
+                f" {weight_col} in it is null"
+            )
+        else:
+            rates[s] = min(1.0, budgets[s] / total) if total else 1.0
+    return _rate_sample(df, key_col, strata_col, rates, default_rate)
 
 
 def weighted_bottom_k(
@@ -297,11 +325,9 @@ def temperature_mixture(
     import math
 
     totals = {
-        r["s"]: r["w"]
-        for r in df.groupBy(F.col(strata_col).alias("s"))
-        .agg(F.sum(weight_col).alias("w"))
-        .collect()
-        if r["w"] is not None and r["w"] > 0
+        s: w
+        for s, w in _stratum_totals(df, strata_col, weight_col).items()
+        if w is not None and w > 0
     }
     if not totals:
         return df.filter(F.lit(False)).withColumn("rate", F.lit(0.0))
@@ -310,18 +336,7 @@ def temperature_mixture(
         rates = {s: math.sqrt(n_min / w) for s, w in totals.items()}
     else:
         rates = {s: (w / n_min) ** (alpha - 1.0) for s, w in totals.items()}
-    rate_expr = F.lit(0.0)
-    threshold = F.lit(0)
-    for s, rate in sorted(rates.items()):
-        rate_expr = F.when(F.col(strata_col) == s, F.lit(rate)).otherwise(
-            rate_expr
-        )
-        threshold = F.when(
-            F.col(strata_col) == s, F.lit(_threshold(rate))
-        ).otherwise(threshold)
-    return df.filter(key_hash32(F.col(key_col)) < threshold).withColumn(
-        "rate", rate_expr
-    )
+    return _rate_sample(df, key_col, strata_col, rates)
 
 
 def temperature_oracle_sql(

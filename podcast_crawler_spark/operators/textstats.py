@@ -51,22 +51,20 @@ def sum_cols(cols):
     return out
 
 
-def language_id(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id",
-                extra_cols: tuple = ()) -> DataFrame:
-    """``(id, lang_pred, lang_score)`` — argmax over marker-token counts;
-    ties resolve alphabetically ('unk' when all scores are 0).
-    *extra_cols* pass through unchanged.
+def _lang_argmax(
+    df: DataFrame, id_col: str, extra_cols: tuple, scores: dict
+) -> tuple[DataFrame, Column, Column]:
+    """The argmax of :func:`language_id` and :func:`lang_id_ngram`:
+    ``(staged, pred, best)``.  *staged* is ``(id, *extra_cols, _sc)``
+    with the per-language *scores* in ONE array column ``_sc``, ordered
+    by language; ``best`` is its max and ``pred`` the first language
+    reaching it (alphabetical tie-break), ``'unk'`` when ``best`` is 0.
 
-    The scores live in ONE staged array column and the argmax reads it:
-    an inline when-chain formulation duplicates every marker-count
-    subtree into each CASE branch (~2× per language) and the codegen'd
-    plan re-scans the text for each copy — the staged array is
-    referenced several times, so CollapseProject keeps the boundary and
-    each count is computed exactly once per row.  Alphabetical
-    tie-break = ``array_position`` returning the FIRST index achieving
-    the max over the ascending-sorted language list."""
-    scores = lang_scores(F.col(text_col))
+    An inline when-chain formulation duplicates every score subtree
+    into each CASE branch and the codegen'd plan re-scans the text for
+    each copy; the staged array is referenced several times, so
+    CollapseProject keeps the boundary and each score is computed
+    exactly once per row."""
     langs = sorted(scores)
     staged = df.select(
         F.col(id_col).alias("id"),
@@ -82,6 +80,19 @@ def language_id(df: DataFrame, text_col: str = "text",
             F.array_position(sc, best).cast("int"),
         ),
     ).otherwise(F.lit("unk"))
+    return staged, pred, best
+
+
+def language_id(df: DataFrame, text_col: str = "text",
+                id_col: str = "doc_id",
+                extra_cols: tuple = ()) -> DataFrame:
+    """``(id, lang_pred, lang_score)`` — argmax over marker-token counts;
+    ties resolve alphabetically ('unk' when all scores are 0).
+    *extra_cols* pass through unchanged.  The argmax is
+    :func:`_lang_argmax` over the marker counts."""
+    staged, pred, best = _lang_argmax(
+        df, id_col, extra_cols, lang_scores(F.col(text_col))
+    )
     return staged.select(
         "id",
         *extra_cols,
@@ -252,6 +263,63 @@ def vocab_df(df: DataFrame, text_col: str = "text",
     )
 
 
+def _token_pairs(
+    df: DataFrame, text_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """``(base, pairs)``: ``base = (id, t)``, each document's non-empty
+    space-split tokens, and ``pairs = (id, prev, cur)``, its adjacent
+    token pairs, built map-side from the array (``zip_with`` of two
+    slices — no positional self-join, no corpus shuffle)."""
+    toks = F.filter(F.split(F.col(text_col), " "), lambda x: F.length(x) > 0)
+    base = df.select(F.col(id_col).alias("id"), toks.alias("t"))
+    last = F.greatest(F.lit(0), F.size("t") - 1)
+    pairs = base.select(
+        "id",
+        F.explode(
+            F.zip_with(
+                F.slice("t", 1, last),
+                F.slice(F.col("t"), F.lit(2), last),
+                lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
+            )
+        ).alias("p"),
+    ).select("id", "p.prev", "p.cur")
+    return base, pairs
+
+
+def _unigram_table(
+    base: DataFrame, vocab_size: int
+) -> tuple[DataFrame, DataFrame, int]:
+    """The unigram model of :func:`lm_surprisal` and
+    :func:`bigram_surprisal` over :func:`_token_pairs`' *base*:
+    ``(tok, vocab, n_total)`` — the ``(id, token)`` rows, the
+    ``vocab_size`` most frequent tokens ``(token, cu)`` (count desc,
+    token asc) and the corpus token count.  The token counts are
+    checkpointed eagerly: both the total and the cap read them, and a
+    cache entry would stay pinned in the session."""
+    tok = base.select("id", F.explode("t").alias("token"))
+    counts = (
+        tok.groupBy("token")
+        .agg(F.count("*").alias("cu"))
+        .localCheckpoint(eager=True)
+    )
+    n_total = int(counts.agg(F.sum("cu")).collect()[0][0])
+    vocab = counts.orderBy(F.col("cu").desc(), F.col("token")).limit(vocab_size)
+    return tok, vocab, n_total
+
+
+def _per_doc_bits(scored: DataFrame, n_name: str, flag: str) -> DataFrame:
+    """Per-doc rollup of ``(id, bits, <flag>)`` scored rows: ``(id,
+    <n_name>, sum_bits, mean_bits, <flag>_frac)``, the means rounded
+    to 6 dp."""
+    n = F.count("*")
+    return scored.groupBy("id").agg(
+        n.alias(n_name),
+        F.sum("bits").alias("sum_bits"),
+        F.round(F.sum("bits") / n, 6).alias("mean_bits"),
+        F.round(F.sum(flag) / n, 6).alias(f"{flag}_frac"),
+    )
+
+
 def pmi_collocations(
     df: DataFrame,
     text_col: str = "text",
@@ -280,23 +348,14 @@ def pmi_collocations(
     filter prunes the long tail before the two token-keyed count joins;
     the final top-k is ``TakeOrderedAndProject`` — no global sort.
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: F.length(x) > 0)
-    base = df.select(F.col(id_col).alias("id"), toks.alias("t"))
-    tok = base.select(F.explode("t").alias("token"))
-    pairs = base.select(
-        F.explode(
-            F.zip_with(
-                F.slice("t", 1, F.greatest(F.lit(0), F.size("t") - 1)),
-                F.slice(
-                    F.col("t"), F.lit(2), F.greatest(F.lit(0), F.size("t") - 1)
-                ),
-                lambda a, b: F.struct(a.alias("tok1"), b.alias("tok2")),
-            )
-        ).alias("p"),
-    ).select("p.tok1", "p.tok2")
-    uni = tok.groupBy("token").agg(F.count("*").alias("cu"))
+    base, pairs = _token_pairs(df, text_col, id_col)
+    uni = (
+        base.select(F.explode("t").alias("token"))
+        .groupBy("token")
+        .agg(F.count("*").alias("cu"))
+    )
     bi = (
-        pairs.groupBy("tok1", "tok2")
+        pairs.groupBy(F.col("prev").alias("tok1"), F.col("cur").alias("tok2"))
         .agg(F.count("*").alias("c_pair"))
         .filter(F.col("c_pair") >= min_count)
     )
@@ -360,28 +419,15 @@ def lm_surprisal(
     shuffles until the per-doc ``groupBy(id)`` partial-aggregated
     rollup (3 longs per doc crossing the exchange).
     """
-    tok = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.split(F.col(text_col), " ")).alias("token"),
-        )
-        .filter(F.length("token") > 0)
-    )
-    counts = tok.groupBy("token").agg(F.count("*").alias("c")).cache()
-    n_total = counts.agg(F.sum("c").alias("n")).collect()[0]["n"]
-    vocab = counts.orderBy(F.col("c").desc(), F.col("token")).limit(vocab_size)
-    bits = _bitlen(F.lit(int(n_total))) - _bitlen(F.coalesce(F.col("c"), F.lit(0)) + 1)
+    base, _ = _token_pairs(df, text_col, id_col)
+    tok, vocab, n_total = _unigram_table(base, vocab_size)
+    bits = _bitlen(F.lit(n_total)) - _bitlen(F.coalesce(F.col("cu"), F.lit(0)) + 1)
     scored = tok.join(F.broadcast(vocab), "token", "left").select(
         "id",
         bits.cast("long").alias("bits"),
-        F.col("c").isNull().cast("long").alias("oov"),
+        F.col("cu").isNull().cast("long").alias("oov"),
     )
-    return scored.groupBy("id").agg(
-        F.count("*").alias("n_tokens"),
-        F.sum("bits").alias("sum_bits"),
-        F.round(F.sum("bits") / F.count("*"), 6).alias("mean_bits"),
-        F.round(F.sum("oov") / F.count("*"), 6).alias("oov_frac"),
-    )
+    return _per_doc_bits(scored, "n_tokens", "oov")
 
 
 def bigram_surprisal(
@@ -419,25 +465,8 @@ def bigram_surprisal(
     against the ≤``vocab/bigram_size``-row tables, and rolled up per doc
     (4 longs per doc crossing the final exchange).
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: F.length(x) > 0)
-    base = df.select(F.col(id_col).alias("id"), toks.alias("t"))
-    tok = base.select("id", F.explode("t").alias("token"))
-    pairs = base.select(
-        "id",
-        F.explode(
-            F.zip_with(
-                F.slice("t", 1, F.greatest(F.lit(0), F.size("t") - 1)),
-                F.slice(
-                    F.col("t"), F.lit(2), F.greatest(F.lit(0), F.size("t") - 1)
-                ),
-                lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
-            )
-        ).alias("p"),
-    ).select("id", "p.prev", "p.cur")
-
-    uni = tok.groupBy("token").agg(F.count("*").alias("cu")).cache()
-    n_total = int(uni.agg(F.sum("cu")).collect()[0][0])
-    vocab = uni.orderBy(F.col("cu").desc(), F.col("token")).limit(vocab_size)
+    base, pairs = _token_pairs(df, text_col, id_col)
+    _, vocab, n_total = _unigram_table(base, vocab_size)
     bitable = (
         pairs.groupBy("prev", "cur")
         .agg(F.count("*").alias("cb"))
@@ -466,12 +495,7 @@ def bigram_surprisal(
             (~seen).cast("long").alias("backoff"),
         )
     )
-    return scored.groupBy("id").agg(
-        F.count("*").alias("n_bigrams"),
-        F.sum("bits").alias("sum_bits"),
-        F.round(F.sum("bits") / F.count("*"), 6).alias("mean_bits"),
-        F.round(F.sum("backoff") / F.count("*"), 6).alias("backoff_frac"),
-    )
+    return _per_doc_bits(scored, "n_bigrams", "backoff")
 
 
 def classifier_score(df: DataFrame, text_col: str = "text",
@@ -1103,8 +1127,8 @@ def lang_id_ngram(
 
     Scale shape: ~60 replace-count expressions, all map-side codegen,
     zero shuffle; exact SQL oracle over the same constant table.  The
-    per-language scores live in ONE staged array column (same pattern
-    as :func:`language_id`): the previous when-chain formulation
+    per-language scores live in ONE staged array column
+    (:func:`_lang_argmax`): the previous when-chain formulation
     duplicated every trigram-count subtree ~8× across the
     argmax/second-best branches, and the plan re-scanned the text for
     each copy — measured 2.8 s → 0.6 s warm at sf0.1/local[32] after
@@ -1114,32 +1138,14 @@ def lang_id_ngram(
     → best; all-zero → 0.
     """
     padded = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
-    langs = sorted(LID_PROFILES)
-    staged = df.select(
-        F.col(id_col).alias("id"),
-        *[F.col(c) for c in extra_cols],
-        F.array(
-            *[
-                sum_cols(
-                    [
-                        _count_substr(padded, g) * w
-                        for g, w in LID_PROFILES[lang]
-                    ]
-                ).cast("long")
-                for lang in langs
-            ]
-        ).alias("_sc"),
-    )
-    sc = F.col("_sc")
-    best = F.array_max(sc)
-    pred = F.when(
-        best > 0,
-        F.element_at(
-            F.array(*[F.lit(lang) for lang in langs]),
-            F.array_position(sc, best).cast("int"),
-        ),
-    ).otherwise(F.lit("unk"))
-    second = F.element_at(F.reverse(F.array_sort(sc)), 2)
+    scores = {
+        lang: sum_cols(
+            [_count_substr(padded, g) * w for g, w in profile]
+        ).cast("long")
+        for lang, profile in LID_PROFILES.items()
+    }
+    staged, pred, best = _lang_argmax(df, id_col, extra_cols, scores)
+    second = F.element_at(F.reverse(F.array_sort(F.col("_sc"))), 2)
     return staged.select(
         "id",
         *extra_cols,

@@ -256,159 +256,163 @@ def run_epoch(
         "podcast", "episodes", "parse_error_kind", "parse_error_message"
     ]
     parsed = observed.select(*scratch_cols).persist(StorageLevel.DISK_ONLY)
-    # materialize now so the Observation is complete and every consumer
-    # below hits the cache instead of re-running the parse
-    parsed.write.format("noop").mode("overwrite").save()
-    # the scratch write (the epoch's first action) has completed, so the
-    # observed metrics are already available
-    m = obs.get
-
-    ok = parsed.filter(F.col("parse_error_kind").isNull())
-
-    # 5. outputs: podcasts (J2 key = xxhash64(rss_feed_url)) + episodes.
-    # Within-epoch LWW dedup only — the cross-epoch merge (D1/D2, ON
-    # CONFLICT DO UPDATE parity) is carried by merge-on-read delta
-    # commits: each epoch writes O(delta) rows and readers resolve
-    # ``max_by(_epoch)`` per key across segments.  Rewriting the whole
-    # episodes table per epoch (copy-on-write) would make every
-    # steady-state epoch O(corpus) — measured 14s to apply an EMPTY delta
-    # to 4.7M rows at sandbox scale, and fatal at 10^10.
-    epoch_lit = F.lit(epoch_no)
-    podcasts_new = resolve_lww(
-        ok.select(
-            F.xxhash64("podcast.rss_feed_url").alias("podcast_id"),
-            F.col("podcast.*"),
-            epoch_lit.alias("_epoch"),
-        ),
-        "rss_feed_url",
-        "_epoch",
-    )
-    episodes_new = resolve_lww(
-        explode_episodes(parsed).withColumn("_epoch", epoch_lit),
-        "guid",
-        "_epoch",
-    )
-
-    # 6. frontier update (R1-R3) + per-row stage lineage for this epoch.
-    # The outcome set is O(epoch), tiny next to a 10^10-row frontier.  Up
-    # to BROADCAST_OUTCOMES_MAX_ROWS it is broadcast: the whole update is
-    # then narrow over the snapshot scan, so the stored host_hash file
-    # layout carries over and re-bucketing would be a full-frontier
-    # shuffle for nothing (the politeness window runs its own host_hash
-    # exchange regardless).  Above it both sides shuffle (the hint keeps
-    # Spark from broadcasting a small cached side on its own), so the
-    # rewrite re-buckets the frontier by host_hash.
-    outcomes = parsed.select(
-        "url_hash", "fetch_ok", "parse_error_kind", "parse_error_message"
-    )
-    if m["total"] <= BROADCAST_OUTCOMES_MAX_ROWS:
-        new_frontier = apply_epoch_results(
-            frontier, F.broadcast(outcomes), epoch_ts, cfg
-        )
-    else:
-        new_frontier = apply_epoch_results(
-            frontier, outcomes.hint("shuffle_hash"), epoch_ts, cfg
-        ).repartition(cfg.num_partitions, "host_hash")
-    new_frontier = _stamp_stages(new_frontier, epoch_ts)
-
-    # 7. commit podcasts/episodes + PREPARE the frontier, all overlapped.
-    # Row counts and per-partition lineage come from the committed parquet
-    # footers — metrics cost no extra Spark jobs.  The three writers are
-    # independent jobs reading the same scratch, so they run concurrently
-    # from separate driver threads across the same executors.  The
-    # epoch-boundary protocol only requires the outputs to be DURABLE
-    # before the frontier manifest PUBLISHES — and the commit point of a
-    # snapshot is the manifest rename, not the data write, so the
-    # frontier's (large) parquet write overlaps the output commits and
-    # only its manifest waits (two-phase prepare/publish,
-    # plans/checkpoint.py).  An epoch with nothing parsed has an empty
-    # delta — skip both output commits (the parent snapshots remain
-    # current; retry-only epochs cost zero output writes).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _commit_out(table, updates, key):
-        # the first commit_delta (no base snapshot) writes a one-segment
-        # snapshot that reads like a plain commit
-        table.commit_delta(updates, key, "_epoch", metrics={"epoch": epoch_no})
-        # periodic rewrite: resolve cost is amortized, read
-        # amplification stays bounded by cfg.compact_segments
-        if table.num_segments() >= cfg.compact_segments:
-            table.compact(spark, metrics={"epoch": epoch_no})
-
-    # Scoped AQE override (see COMMIT_ADVISORY_BYTES).  Everything
-    # submitted inside the scope plans under these values: the
-    # podcasts/episodes commits (and any compaction they trigger) AND the
-    # frontier prepare.  The values are restored before the metrics
-    # commit runs.  spark.conf is session-global, so any other query
-    # planned concurrently in this session during the commit window sees
-    # the override too.
-    _scoped = {k: spark.conf.get(k, None) for k in _COMMIT_CONFS}
-    for k, v in _COMMIT_CONFS.items():
-        spark.conf.set(k, v)
+    # released on every exit: a raise below (a url scheduled twice, a
+    # failed commit) must not leave the scratch pinned in the session
     try:
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_front = pool.submit(state.frontier.prepare, new_frontier)
-            if m["n_parse_ok"] > 0:
-                f_pod = pool.submit(
-                    _commit_out, state.podcasts, podcasts_new, "rss_feed_url"
-                )
-                f_ep = pool.submit(
-                    _commit_out, state.episodes, episodes_new, "guid"
-                )
-                f_pod.result()
-                f_ep.result()
-            frontier_staged = f_front.result()
-    finally:
-        for k, old in _scoped.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-    if frontier_staged["row_count"] != frontier_rows_read:
-        raise RuntimeError(
-            f"epoch {epoch_no}: frontier of {frontier_rows_read} rows staged"
-            f" as {frontier_staged['row_count']}: a url was scheduled twice"
+        # materialize now so the Observation is complete and every consumer
+        # below hits the cache instead of re-running the parse
+        parsed.write.format("noop").mode("overwrite").save()
+        # the scratch write (the epoch's first action) has completed, so the
+        # observed metrics are already available
+        m = obs.get
+
+        ok = parsed.filter(F.col("parse_error_kind").isNull())
+
+        # 5. outputs: podcasts (J2 key = xxhash64(rss_feed_url)) + episodes.
+        # Within-epoch LWW dedup only — the cross-epoch merge (D1/D2, ON
+        # CONFLICT DO UPDATE parity) is carried by merge-on-read delta
+        # commits: each epoch writes O(delta) rows and readers resolve
+        # ``max_by(_epoch)`` per key across segments.  Rewriting the whole
+        # episodes table per epoch (copy-on-write) would make every
+        # steady-state epoch O(corpus) — measured 14s to apply an EMPTY delta
+        # to 4.7M rows at sandbox scale, and fatal at 10^10.
+        epoch_lit = F.lit(epoch_no)
+        podcasts_new = resolve_lww(
+            ok.select(
+                F.xxhash64("podcast.rss_feed_url").alias("podcast_id"),
+                F.col("podcast.*"),
+                epoch_lit.alias("_epoch"),
+            ),
+            "rss_feed_url",
+            "_epoch",
         )
-    pod_man = state.podcasts.manifest() or {}
-    ep_man = state.episodes.manifest() or {}
-    # manifest row_count is the RAW segment total (delta segments include
-    # superseded rows until compaction), i.e. an upper bound on the
-    # resolved table — the metric keys say so explicitly so A1-style
-    # dashboards don't read it as the live row count
-    pod_rows = pod_man.get("row_count", 0)
-    ep_rows = ep_man.get("row_count", 0)
+        episodes_new = resolve_lww(
+            explode_episodes(parsed).withColumn("_epoch", epoch_lit),
+            "guid",
+            "_epoch",
+        )
 
-    total, n_fetch_ok, n_parse_ok = m["total"], m["n_fetch_ok"], m["n_parse_ok"]
-    err_hist = {
-        t: m[f"err_{t}"] for t in ERROR_TYPES if m[f"err_{t}"]
-    }
+        # 6. frontier update (R1-R3) + per-row stage lineage for this epoch.
+        # The outcome set is O(epoch), tiny next to a 10^10-row frontier.  Up
+        # to BROADCAST_OUTCOMES_MAX_ROWS it is broadcast: the whole update is
+        # then narrow over the snapshot scan, so the stored host_hash file
+        # layout carries over and re-bucketing would be a full-frontier
+        # shuffle for nothing (the politeness window runs its own host_hash
+        # exchange regardless).  Above it both sides shuffle (the hint keeps
+        # Spark from broadcasting a small cached side on its own), so the
+        # rewrite re-buckets the frontier by host_hash.
+        outcomes = parsed.select(
+            "url_hash", "fetch_ok", "parse_error_kind", "parse_error_message"
+        )
+        if m["total"] <= BROADCAST_OUTCOMES_MAX_ROWS:
+            new_frontier = apply_epoch_results(
+                frontier, F.broadcast(outcomes), epoch_ts, cfg
+            )
+        else:
+            new_frontier = apply_epoch_results(
+                frontier, outcomes.hint("shuffle_hash"), epoch_ts, cfg
+            ).repartition(cfg.num_partitions, "host_hash")
+        new_frontier = _stamp_stages(new_frontier, epoch_ts)
 
-    metrics = {
-        "epoch": epoch_no,
-        "epoch_ts": epoch_ts.isoformat(),
-        "scheduled": total,
-        "fetched": n_fetch_ok,
-        "parsed": n_parse_ok,
-        "fetch_failures": total - n_fetch_ok,
-        "parse_failures": n_fetch_ok - n_parse_ok,
-        "error_histogram": err_hist,
-        "podcast_rows_raw": pod_rows,
-        "episode_rows_raw": ep_rows,
-        "partition_lineage": ep_man.get("files", []),
-        "wall_s": None,  # filled below
-    }
+        # 7. commit podcasts/episodes + PREPARE the frontier, all overlapped.
+        # Row counts and per-partition lineage come from the committed parquet
+        # footers — metrics cost no extra Spark jobs.  The three writers are
+        # independent jobs reading the same scratch, so they run concurrently
+        # from separate driver threads across the same executors.  The
+        # epoch-boundary protocol only requires the outputs to be DURABLE
+        # before the frontier manifest PUBLISHES — and the commit point of a
+        # snapshot is the manifest rename, not the data write, so the
+        # frontier's (large) parquet write overlaps the output commits and
+        # only its manifest waits (two-phase prepare/publish,
+        # plans/checkpoint.py).  An epoch with nothing parsed has an empty
+        # delta — skip both output commits (the parent snapshots remain
+        # current; retry-only epochs cost zero output writes).
+        from concurrent.futures import ThreadPoolExecutor
 
-    # metrics table: one row per epoch — committed driver-side via pyarrow
-    # (a Spark job per epoch for one row is pure scheduling overhead)
-    state.metrics.commit_local(
-        [{**metrics, "epoch_ts": epoch_ts.replace(tzinfo=None)}],
-        METRICS_ARROW_SCHEMA,
-        metrics={"epoch": epoch_no},
-    )
-    metrics["wall_s"] = round(time.time() - t0, 3)
-    # The epoch boundary = this manifest publish (outputs are durable).
-    state.frontier.publish(frontier_staged, metrics=metrics)
-    parsed.unpersist()
+        def _commit_out(table, updates, key):
+            # the first commit_delta (no base snapshot) writes a one-segment
+            # snapshot that reads like a plain commit
+            table.commit_delta(updates, key, "_epoch", metrics={"epoch": epoch_no})
+            # periodic rewrite: resolve cost is amortized, read
+            # amplification stays bounded by cfg.compact_segments
+            if table.num_segments() >= cfg.compact_segments:
+                table.compact(spark, metrics={"epoch": epoch_no})
+
+        # Scoped AQE override (see COMMIT_ADVISORY_BYTES).  Everything
+        # submitted inside the scope plans under these values: the
+        # podcasts/episodes commits (and any compaction they trigger) AND the
+        # frontier prepare.  The values are restored before the metrics
+        # commit runs.  spark.conf is session-global, so any other query
+        # planned concurrently in this session during the commit window sees
+        # the override too.
+        _scoped = {k: spark.conf.get(k, None) for k in _COMMIT_CONFS}
+        for k, v in _COMMIT_CONFS.items():
+            spark.conf.set(k, v)
+        try:
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                f_front = pool.submit(state.frontier.prepare, new_frontier)
+                if m["n_parse_ok"] > 0:
+                    f_pod = pool.submit(
+                        _commit_out, state.podcasts, podcasts_new, "rss_feed_url"
+                    )
+                    f_ep = pool.submit(
+                        _commit_out, state.episodes, episodes_new, "guid"
+                    )
+                    f_pod.result()
+                    f_ep.result()
+                frontier_staged = f_front.result()
+        finally:
+            for k, old in _scoped.items():
+                if old is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, old)
+        if frontier_staged["row_count"] != frontier_rows_read:
+            raise RuntimeError(
+                f"epoch {epoch_no}: frontier of {frontier_rows_read} rows staged"
+                f" as {frontier_staged['row_count']}: a url was scheduled twice"
+            )
+        pod_man = state.podcasts.manifest() or {}
+        ep_man = state.episodes.manifest() or {}
+        # manifest row_count is the RAW segment total (delta segments include
+        # superseded rows until compaction), i.e. an upper bound on the
+        # resolved table — the metric keys say so explicitly so A1-style
+        # dashboards don't read it as the live row count
+        pod_rows = pod_man.get("row_count", 0)
+        ep_rows = ep_man.get("row_count", 0)
+
+        total, n_fetch_ok, n_parse_ok = m["total"], m["n_fetch_ok"], m["n_parse_ok"]
+        err_hist = {
+            t: m[f"err_{t}"] for t in ERROR_TYPES if m[f"err_{t}"]
+        }
+
+        metrics = {
+            "epoch": epoch_no,
+            "epoch_ts": epoch_ts.isoformat(),
+            "scheduled": total,
+            "fetched": n_fetch_ok,
+            "parsed": n_parse_ok,
+            "fetch_failures": total - n_fetch_ok,
+            "parse_failures": n_fetch_ok - n_parse_ok,
+            "error_histogram": err_hist,
+            "podcast_rows_raw": pod_rows,
+            "episode_rows_raw": ep_rows,
+            "partition_lineage": ep_man.get("files", []),
+            "wall_s": None,  # filled below
+        }
+
+        # metrics table: one row per epoch — committed driver-side via pyarrow
+        # (a Spark job per epoch for one row is pure scheduling overhead)
+        state.metrics.commit_local(
+            [{**metrics, "epoch_ts": epoch_ts.replace(tzinfo=None)}],
+            METRICS_ARROW_SCHEMA,
+            metrics={"epoch": epoch_no},
+        )
+        metrics["wall_s"] = round(time.time() - t0, 3)
+        # The epoch boundary = this manifest publish (outputs are durable).
+        state.frontier.publish(frontier_staged, metrics=metrics)
+    finally:
+        parsed.unpersist()
     return metrics
 
 

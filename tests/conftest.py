@@ -23,3 +23,12 @@ def spark():
     session.sparkContext.setLogLevel("ERROR")
     yield session
     session.stop()
+
+
+@pytest.fixture
+def cache_manager(spark):
+    """The session's CacheManager, emptied first, so a test can assert
+    ``cache_manager.isEmpty()`` after the code under test to show that
+    code left no cache entry pinned in the session."""
+    spark.catalog.clearCache()
+    return spark._jsparkSession.sharedState().cacheManager()

@@ -755,6 +755,65 @@ def test_host_minhash_matches_oracle(spark):
     assert ("h0", "m0") in {(a, b) for a, b, *_ in got}
 
 
+def test_minhash_recall_audit_matches_oracle(spark):
+    """The audit's one row against its DuckDB replay on a corpus with
+    planted near-duplicates: each base doc has a twin with 0-5 tokens
+    replaced, so the twins' Jaccard spans both sides of the threshold
+    and some exact pairs miss the 4x4 banding."""
+    import random
+
+    import duckdb
+
+    from podcast_crawler_spark.operators.dedup import (
+        minhash_recall_audit,
+        recall_audit_oracle_sql,
+    )
+
+    rng = random.Random(7)
+    docs = []
+    for i in range(24):
+        toks = [f"w{rng.randrange(80)}" for _ in range(30)]
+        docs.append((i, " ".join(toks)))
+        for k in range(i % 6):
+            toks[3 + 5 * k] = f"x{i}_{k}"
+        docs.append((100 + i, " ".join(toks)))
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = [tuple(r) for r in minhash_recall_audit(df, threshold=0.5).collect()]
+    vals = ",".join(f"({i}, '{t}')" for i, t in docs)
+    sql = recall_audit_oracle_sql(f"select * from (values {vals}) v(id, text)")
+    exp = [tuple(r) for r in duckdb.sql(sql).fetchall()]
+    assert got == exp
+    n_exact, n_candidates, n_hits, recall_ppm, _ = got[0]
+    assert 0 < n_hits <= min(n_exact, n_candidates)
+    assert recall_ppm < 1_000_000
+
+
+@pytest.mark.parametrize(
+    "module, op",
+    [
+        ("dedup", "ngram_jaccard_pairs"),
+        ("dedup", "minhash_recall_audit"),
+        ("textstats", "lm_surprisal"),
+        ("textstats", "bigram_surprisal"),
+    ],
+)
+def test_operator_pins_no_cache_entry(spark, cache_manager, module, op):
+    """The operators reuse intermediate frames through eager local
+    checkpoints, which the ContextCleaner frees, never through a cache
+    entry that stays pinned in the session after the result is read."""
+    import importlib
+
+    fn = getattr(
+        importlib.import_module(f"podcast_crawler_spark.operators.{module}"), op
+    )
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d e"), (3, "a b c d f"), (4, "x y z w")],
+        "doc_id long, text string",
+    )
+    assert fn(df).collect()
+    assert cache_manager.isEmpty()
+
+
 def test_hot_shingles_python_oracle(spark):
     """Exact top-k duplicated 3-grams vs a Counter recomputation,
     including the deterministic (n_docs desc, shingle asc) tie order

@@ -242,7 +242,7 @@ def test_perfbench_session_matches_engine_conf():
 
 # Function pairs that still share a copied run of CLONE_RUN tokens, each
 # with the reason the copy stays.
-CLONE_RUN = 120
+CLONE_RUN = 80
 CLONE_ALLOWED = {}
 
 

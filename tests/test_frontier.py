@@ -215,10 +215,13 @@ def test_run_crawl_exact_agent_row_overrides_star_row(spark, tmp_path):
     )
 
 
-def test_run_epoch_rejects_unresolved_two_row_host(spark, tmp_path):
+def test_run_epoch_rejects_unresolved_two_row_host(
+    spark, tmp_path, cache_manager
+):
     """``run_epoch`` given an unresolved table (two rules rows for one
     host) would schedule that host's urls twice; the epoch raises before
-    publishing, so the crawl state does not move."""
+    publishing, so the crawl state does not move, and the raise releases
+    the epoch's parse scratch."""
     seeds = spark.createDataFrame(
         [
             (str(i), i, "show", "News", [("rss", u)])
@@ -234,6 +237,7 @@ def test_run_epoch_rejects_unresolved_two_row_host(spark, tmp_path):
         run_epoch(spark, state, pages, _two_row_robots(spark), EPOCH0, cfg)
     assert state.completed_epochs() == 0
     assert state.frontier.current_snapshot_id() == snap
+    assert cache_manager.isEmpty()
 
 
 def test_politeness_spacing(spark):

@@ -381,6 +381,41 @@ def test_dataset_split_rejects_bad_pcts(spark):
         dataset_split(df, "source", val_pct=50, test_pct=50)
 
 
+def test_mixture_sample_zero_total_stratum_keeps_every_row(spark):
+    """A budgeted stratum whose weights sum to 0 fits any budget: rate
+    1.0, every row kept, next to a stratum cut to half its weight."""
+    from pyspark.sql import functions as F
+
+    from podcast_crawler_spark.operators.sampling import mixture_sample
+
+    df = spark.range(200).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") < 100, "zero").otherwise("pos").alias("lang"),
+        F.when(F.col("id") < 100, 0).otherwise(1).alias("w"),
+    )
+    out = mixture_sample(df, "doc_id", "lang", "w", {"zero": 5.0, "pos": 50.0})
+    rates = {
+        r.lang: r.rate for r in out.select("lang", "rate").distinct().collect()
+    }
+    assert rates == {"zero": 1.0, "pos": 0.5}
+    assert out.filter(F.col("lang") == "zero").count() == 100
+
+
+def test_mixture_sample_null_total_stratum_raises(spark):
+    """A budgeted stratum whose weights are all null has no total to
+    divide the budget by: ``ValueError`` naming the stratum."""
+    import pytest
+
+    from podcast_crawler_spark.operators.sampling import mixture_sample
+
+    df = spark.createDataFrame(
+        [(1, "nulls", None), (2, "nulls", None), (3, "ok", 4)],
+        "doc_id long, lang string, w long",
+    )
+    with pytest.raises(ValueError, match="'nulls'"):
+        mixture_sample(df, "doc_id", "lang", "w", {"nulls": 1.0, "ok": 2.0})
+
+
 def test_temperature_mixture_flattens_to_alpha(spark):
     """Kept sizes must track n^0.5: two strata sized 400/100 (4:1) keep
     ~2:1 after flattening; the small stratum keeps everything
